@@ -47,10 +47,11 @@ def _requests_transport(method: str, url: str, params: dict,
                         data: bytes | None, auth: tuple, timeout: float) -> None:
     import requests  # lazy: not needed for parquet/test sinks
 
-    session = requests.Session()
     prepared = requests.Request(method, url, data=data, params=params,
                                 auth=auth).prepare()
-    response = session.send(prepared, timeout=timeout)
+    # one connection per POST, released when the session closes
+    with requests.Session() as session:
+        response = session.send(prepared, timeout=timeout)
     response.raise_for_status()
 
 

@@ -6,10 +6,16 @@ from __future__ import annotations
 
 import json
 import os
+import threading
+import time
 
 import pytest
 from pyspark.sql import functions as F
 
+from openedx_event_sink_clickhouse_spark.sinks.clickhouse import (
+    ClickHouseConfig,
+    ClickHouseSink,
+)
 from openedx_event_sink_clickhouse_spark.sources.tables import load_table
 from openedx_event_sink_clickhouse_spark.streaming.dispatch import (
     dispatch_batch,
@@ -24,6 +30,8 @@ from openedx_event_sink_clickhouse_spark.streaming.windows import (
     session_event_stats,
     tumbling_event_stats,
 )
+
+from tests.test_sinks import file_capture_transport, read_captures
 
 PUBLISH_SCHEMA = "model string, object_id string, ts timestamp"
 
@@ -44,6 +52,103 @@ def test_dispatch_batch_routes_and_dedups(spark, tmp_path):
     dispatch_batch(batch, handlers, on_unknown=unknown.append)
     assert calls == {"course_overviews": ["c1", "c2"], "user_profile": ["u9"]}
     assert unknown == ["unknown_model"]
+
+
+def _two_model_batch(spark):
+    return spark.createDataFrame([("a", "1"), ("b", "2")],
+                                 ["model", "object_id"])
+
+
+def test_dispatch_batch_runs_handlers_concurrently(spark):
+    # each handler waits for the other at the barrier: one run after the
+    # other breaks it (BrokenBarrierError after the timeout)
+    barrier = threading.Barrier(2, timeout=30)
+    got_a, got_b = [], []
+
+    def handler(slot):
+        def run(ids):
+            barrier.wait()
+            slot.extend(r[0] for r in ids.collect())
+        return run
+
+    dispatch_batch(_two_model_batch(spark),
+                   {"a": handler(got_a), "b": handler(got_b)})
+    assert (got_a, got_b) == (["1"], ["2"])
+
+
+def test_dispatch_batch_failure_waits_for_every_handler(spark):
+    batch = _two_model_batch(spark)
+    deduped = batch.select("model", "object_id").distinct()
+    failed = threading.Event()
+    cached_during, finished = [], []
+
+    def failing(ids):
+        cached_during.append(deduped.storageLevel.useMemory)
+        failed.set()
+        raise ValueError("handler a failed")
+
+    def slow(ids):
+        # starts its work only once the other handler has failed
+        assert failed.wait(30)
+        time.sleep(0.5)
+        finished.append(ids.count())
+
+    with pytest.raises(ValueError, match="handler a failed"):
+        dispatch_batch(batch, {"a": failing, "b": slow})
+    assert finished == [1]
+    assert cached_during == [True]
+    assert not deduped.storageLevel.useMemory
+
+
+def test_dispatch_batch_handlers_inherit_the_job_group(spark):
+    sc = spark.sparkContext
+    group = "dispatch_batch_job_group"
+    seen_group, counted = [], []
+
+    def handler(ids):
+        seen_group.append(sc.getLocalProperty("spark.jobGroup.id"))
+        counted.append(ids.count())
+
+    sc.setJobGroup(group, "handlers' jobs belong to the caller's group")
+    try:
+        dispatch_batch(_two_model_batch(spark), {"a": handler})
+    finally:
+        for key in ("spark.jobGroup.id", "spark.job.description",
+                    "spark.job.interruptOnCancel"):
+            sc.setLocalProperty(key, None)
+    assert (seen_group, counted) == ([group], [1])
+    # dispatch runs no job of its own on the caller's thread, so every
+    # job of the group is a handler's; the tracker learns of jobs
+    # through the listener bus, asynchronously
+    tracker = sc.statusTracker()
+    deadline = time.monotonic() + 30
+    while not tracker.getJobIdsForGroup(group) and \
+            time.monotonic() < deadline:
+        time.sleep(0.05)
+    assert tracker.getJobIdsForGroup(group)
+
+
+def test_dispatch_batch_absent_model_gets_empty_frame(spark, tmp_path):
+    # "b" has a handler but no rows in the batch: its handler still runs,
+    # on an empty frame, and inserting that frame sends no POST
+    batch = spark.createDataFrame([("a", "1")], ["model", "object_id"])
+    caps = {m: tmp_path / m for m in ("a", "b")}
+    counts = {m: [] for m in ("a", "b")}
+
+    def handler(model):
+        caps[model].mkdir()
+        sink = ClickHouseSink(ClickHouseConfig(),
+                              file_capture_transport(str(caps[model])))
+
+        def run(ids):
+            counts[model].append(ids.count())
+            sink.insert_df(ids, f"{model}_table")
+        return run
+
+    dispatch_batch(batch, {"a": handler("a"), "b": handler("b")})
+    assert counts == {"a": [1], "b": [0]}
+    assert len(read_captures(str(caps["a"]))) == 1
+    assert read_captures(str(caps["b"])) == []
 
 
 PUBLISH_ROWS = [("course_overviews", "c1"), ("user_profile", "u1"),
