@@ -10,6 +10,15 @@ Scale posture (designed for a 1000-executor cluster, tested on local[32]):
   and match the DuckDB oracle (naive/UTC parquet timestamps).
 - Arrow enabled for the few Pandas-UDF paths (multimodal decode); all hot
   paths are pure Column expressions inside whole-stage codegen.
+- Python workers fork from :mod:`.pyworker`, not ``pyspark.daemon``
+  (``spark.python.daemon.module``). PySpark's worker invalidates the import
+  caches on every task, and CPython 3.11/3.12 then re-read every zip on
+  the workers' path (``pyspark.zip``, the spark-core jar), ~200 ms per
+  task: a fixed cost on every ``insert_df`` POST job and every Python UDF
+  task. The daemon re-reads an archive only when it changed; on CPython
+  3.13+, which re-reads lazily, it is plain ``pyspark.daemon``. It is a
+  static conf, so :func:`tune_session` cannot apply it: an external
+  session (the driver harness's) keeps the per-task cost.
 """
 
 from __future__ import annotations
@@ -31,7 +40,13 @@ def get_spark(app_name: str = "openedx-event-sink-spark", master: str | None = N
     would silently clobber the caller's tuning — e.g. resetting
     ``shuffle.partitions`` mid-session flips bucketed-scan planning for
     every later query. Callers who WANT the engine defaults applied to an
-    external session use :func:`tune_session` explicitly."""
+    external session use :func:`tune_session` explicitly.
+
+    The builder sets ``spark.python.daemon.module`` to :mod:`.pyworker`,
+    which stops every Python-worker task from re-reading the unchanged zip
+    archives on its path (~200 ms per task on CPython 3.11/3.12, a no-op
+    on 3.13+); ``extra_conf`` can override it like any conf. It is static,
+    so :func:`tune_session` cannot give it to an external session."""
     active = SparkSession.getActiveSession()
     if active is not None:
         if master is not None or extra_conf:
@@ -59,6 +74,8 @@ def get_spark(app_name: str = "openedx-event-sink-spark", master: str | None = N
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
         .config("spark.ui.enabled", "false")
+        .config("spark.python.daemon.module",
+                "openedx_event_sink_clickhouse_spark.pyworker")
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

@@ -13,9 +13,15 @@ Spark execution model:
   ``max_rows_per_post`` rows each, the reference's S5 batch size), so
   throughput scales with the cluster and the driver never materializes
   rows; the row count comes back through an accumulator in the same
-  action. Spark task retry gives at-least-once; the dump_id-versioned
-  append schema (reference ``serializers.py:25-31``) makes replays
-  idempotent-by-versioning.
+  action. Each partition's POSTs run inside one Python-worker task.
+- Delivery is at-least-once, as in ``streaming/dispatch.py``: the
+  transport does not retry, so a failed POST fails its task, which local
+  mode does not re-run, and with it the whole call. Whatever re-runs a
+  task (a cluster's task retry) or the whole call (a replayed epoch)
+  re-sends rows already POSTed. A replayed call rebuilds its frame, whose
+  ``dump_id`` (``functions.derivations.dump_id_expr``, a uuid4 per plan)
+  is then fresh, so the dump_id-versioned schema (reference
+  ``serializers.py:25-31``) keeps both copies rather than collapsing them.
 - ``delete_where`` is a control-plane mutation: one driver-side request
   per table, mirroring the reference exactly.
 
@@ -72,7 +78,7 @@ class ClickHouseConfig:
             return self
         merged = {**self.__dict__, **{k: v for k, v in overrides.items()
                                       if k in self.__dict__}}
-        merged["insert_params"] = dict(self.insert_params)
+        merged["insert_params"] = dict(merged["insert_params"])  # never share the dict
         return ClickHouseConfig(**merged)
 
 
@@ -104,13 +110,18 @@ class ClickHouseSink:
         controls parallelism, the chunk size controls POST payloads, and
         neither requires knowing the total row count up front.
 
+        Each partition's POSTs run in one Python-worker task, so a call
+        pays at least one task's fixed cost (see ``session.py`` on the
+        worker daemon).
+
         Delivery/count semantics: the return value counts LOGICAL rows
         exactly once (Spark folds accumulator updates from re-run tasks),
-        but the POSTs themselves are at-least-once per chunk — a task
-        failing mid-partition re-sends chunks it already POSTed, at finer
-        grain than the one-POST-per-partition mode. Downstream dedup by
-        ``dump_id`` versioning keeps such replays idempotent; do not read
-        the return value as "rows landed exactly once".
+        but the POSTs are at-least-once per chunk. A failed POST fails the
+        task and the call (local mode does not re-run tasks); a re-run
+        task re-sends the chunks it already POSTed, and a replayed call
+        re-sends every row under whatever ``dump_id`` its frame carries,
+        fresh per call today. Do not read the return value as "rows
+        landed exactly once".
         """
         params = self._insert_query(table)
         cfg, transport = self.config, self.transport

@@ -113,6 +113,20 @@ def test_connection_overrides():
     assert cfg.database == "event_sink"
 
 
+def test_connection_overrides_insert_params():
+    base = ClickHouseConfig()
+    params = {"input_format_allow_errors_num": 0}
+    cfg = base.with_overrides({"insert_params": params})
+    assert cfg.insert_params == params
+    assert cfg.insert_params is not params
+    assert base.insert_params == {"input_format_allow_errors_num": 1,
+                                  "input_format_allow_errors_ratio": 0.1}
+    # without an insert_params override the copy is still private
+    other = base.with_overrides({"url": "http://other:8123"})
+    assert other.insert_params == base.insert_params
+    assert other.insert_params is not base.insert_params
+
+
 def test_registry_dispatch_and_gating():
     reg = SinkRegistry(settings={
         "EVENT_SINK_CLICKHOUSE_COURSE_OVERVIEWS_ENABLED": True,
