@@ -45,6 +45,12 @@ def deterministic_dump_id_sql(expr: str) -> str:
             f"substr({h},17,4), substr({h},21,12))")
 
 
+def quote_ident(name: str) -> str:
+    """``name`` as a SQL identifier: backtick-quoted, inner backticks
+    doubled, so spaces, dots and backticks in column names are literal."""
+    return "`" + name.replace("`", "``") + "`"
+
+
 def ingest_timestamp() -> Column:
     """P3 — ``time_last_dumped = now()`` (``serializers.py:29-31``)."""
     return F.current_timestamp()

@@ -7,11 +7,24 @@ The reference issues ONE ClickHouse round-trip PER candidate item:
 (``sinks/course_published.py:154-198``). That is O(items) network calls.
 
 Spark-first design: both sides are DataFrames, so the whole decision
-collapses into one set-oriented plan —
+collapses into one set-oriented plan. A2 has two forms with the same
+tri-state rule:
 
-    watermarks = sink.groupBy(key).agg(max(ts))          # A1, map-side partial agg
-    candidates LEFT JOIN watermarks ON key               # broadcast if small
-    WHERE last_dump IS NULL OR modified > last_dump      # A2
+- :func:`detect_changes` joins the aggregated watermark —
+
+      watermarks = sink.groupBy(key).agg(max(ts))        # A1, map-side partial agg
+      candidates LEFT JOIN watermarks ON key             # broadcast if small
+      WHERE last_dump IS NULL OR modified > last_dump    # A2
+
+  which keeps ``last_dump`` at hand for reason strings.
+- :func:`changed_since_dump` anti-joins the raw history —
+
+      candidates s LEFT ANTI JOIN sink h
+        ON s.key = h.key AND h.ts IS NOT NULL
+       AND (s.modified IS NULL OR h.ts >= s.modified)
+
+  which needs no aggregate and so no shuffle: the history is broadcast as
+  it is scanned, one job fewer per plan. The backfill's dump path uses it.
 
 At 100 TB the watermark side is |distinct keys| rows (tiny relative to the
 fact table) — Catalyst/AQE broadcasts it, so the fact side streams through
@@ -21,8 +34,10 @@ the rewrite (SURVEY.md §3 EP3).
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from ..functions.derivations import quote_ident
 
 
 def watermarks(sink_df: DataFrame, key: str, ts_col: str,
@@ -56,6 +71,9 @@ def detect_changes(candidates: DataFrame, sink_df: DataFrame, key: str,
     ``with_reason=True`` adds the reference's human-readable reason string
     (consumed by the backfill CLI's ``(obj, should_dump, reason)`` tuples,
     ``management/commands/dump_data_to_clickhouse.py:29-81``).
+
+    :func:`changed_since_dump` selects the same rows with no aggregate;
+    this form keeps the watermark, which the reason strings need.
     """
     wm = watermarks(sink_df, key, sink_ts_col)
     joined = candidates.join(wm, on=key, how="left")
@@ -72,9 +90,37 @@ def detect_changes(candidates: DataFrame, sink_df: DataFrame, key: str,
     return out.drop("last_dump")
 
 
-def change_predicate(modified_col: Column, last_dump: Column) -> Column:
-    """The bare A2 predicate, reusable inside other plans."""
-    return last_dump.isNull() | (modified_col > last_dump)
+def changed_since_dump(candidates: DataFrame, sink_df: DataFrame, key: str,
+                       modified_col: str, sink_ts_col: str) -> DataFrame:
+    """A2 as one left-anti join against the raw sink history: the rows
+    :func:`detect_changes` selects, by the same tri-state rule, without
+    the watermark aggregate.
+
+    A candidate is skipped when some history row of its key has a
+    non-NULL dump time that is not older than its ``modified``, or any
+    non-NULL dump time when ``modified`` is NULL. So a key with no history,
+    or only NULL dump times, is dumped (``last_dump IS NULL``); a NULL
+    ``modified`` with a dump time is skipped; otherwise the row is dumped
+    iff ``modified`` is strictly newer than every dump time, i.e. than
+    their max. A NULL key matches nothing and is dumped, as by the outer
+    join.
+
+    The plan is the history scan, filtered on ``ts IS NOT NULL`` and
+    broadcast when small, probed by the candidate scan: no exchange and no
+    aggregate job. Columns come back as from :func:`detect_changes`'s
+    ``USING`` join: ``key`` first, then the other candidate columns.
+    """
+    k, mod, ts = map(quote_ident, (key, modified_col, sink_ts_col))
+    out = candidates.alias("s").join(
+        sink_df.alias("h"),
+        F.expr(f"s.{k} = h.{k} AND h.{ts} IS NOT NULL "
+               f"AND (s.{mod} IS NULL OR h.{ts} >= s.{mod})"),
+        "left_anti")
+    cols = candidates.columns
+    if cols[0] == key:
+        return out
+    return out.selectExpr(quote_ident(key),
+                          *(quote_ident(c) for c in cols if c != key))
 
 
 def incremental_join_view(view_old: DataFrame | None,

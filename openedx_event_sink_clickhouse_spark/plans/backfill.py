@@ -4,8 +4,18 @@ dump_data_to_clickhouse.py``), set-oriented.
 The reference iterates pages, issuing ONE watermark query per item
 (``should_dump_item`` → HTTP round trip, ``dump_data_to_clickhouse.py:29-81``
 + ``course_published.py:165``). Here eligibility for the whole candidate
-set is one plan: scans S1-S4 → tri-state classification (A2 with reasons)
-→ L1 limit → partition-batched sink writes with L2 throttle.
+set is one plan: scans S1-S4 → A2 change detection → L1 limit →
+partition-batched sink writes with L2 throttle.
+
+With a history small enough to broadcast, a table's dump is two Spark
+jobs: the history's broadcast and the POSTs.
+:func:`run_backfill` selects its batch with
+:func:`~..operators.incremental.changed_since_dump`, a left-anti join
+against the raw history, so no watermark aggregate (a shuffle job) runs,
+and it writes the batch in the scan's own partitions, with no exchange
+before the POSTs. :func:`classify_targets` is the same decision with the
+reference's ``(item, should_dump, reason)`` annotations, for callers that
+need the reasons; it is not on the dump path.
 """
 
 from __future__ import annotations
@@ -15,7 +25,7 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..operators.incremental import watermarks
+from ..operators.incremental import changed_since_dump, watermarks
 from ..operators.scans import in_list, not_in_list, range_scan
 
 
@@ -39,12 +49,8 @@ class BackfillOptions:
             raise ValueError("The 'limit' option cannot be used with 'force'!")
 
 
-def classify_targets(source: DataFrame, sink_history: DataFrame | None, *,
-                     key: str, modified_col: str, sink_ts_col: str,
-                     opts: BackfillOptions) -> DataFrame:
-    """``fetch_target_items`` (``base_sink.py:284-306``) as one plan:
-    every candidate row annotated with ``should_dump`` + ``dump_reason``
-    — the reference's ``(item, should_be_dumped, reason)`` triples."""
+def _scope(source: DataFrame, key: str, opts: BackfillOptions) -> DataFrame:
+    """S2-S4: resume point, ``--ids`` and ``--ids_to_skip``."""
     df = source
     if opts.start_pk is not None:
         df = range_scan(df, key, opts.start_pk)
@@ -52,7 +58,29 @@ def classify_targets(source: DataFrame, sink_history: DataFrame | None, *,
         df = in_list(df, key, opts.ids)
     if opts.skip_ids:
         df = not_in_list(df, key, opts.skip_ids)
+    return df
 
+
+def _limit(eligible: DataFrame, key: str, opts: BackfillOptions) -> DataFrame:
+    """L1, applied AFTER the skip-filter
+    (``dump_data_to_clickhouse.py:70-74``: limit counts eligible items)."""
+    if opts.limit is not None:
+        eligible = eligible.orderBy(key).limit(opts.limit)
+    return eligible
+
+
+def classify_targets(source: DataFrame, sink_history: DataFrame | None, *,
+                     key: str, modified_col: str, sink_ts_col: str,
+                     opts: BackfillOptions) -> DataFrame:
+    """``fetch_target_items`` (``base_sink.py:284-306``) as one plan:
+    every candidate row annotated with ``should_dump`` + ``dump_reason``
+    — the reference's ``(item, should_be_dumped, reason)`` triples.
+
+    :func:`run_backfill` does not call it: it selects the same rows with
+    :func:`~..operators.incremental.changed_since_dump`, which needs no
+    watermark aggregate. ``select_dump_batch(classify_targets(...))`` and
+    that batch hold the same rows in the same column order."""
+    df = _scope(source, key, opts)
     if opts.force or sink_history is None:
         reason = "Force is set" if opts.force else "No reason"
         return df.withColumn("should_dump", F.lit(True)) \
@@ -90,34 +118,37 @@ def classify_targets(source: DataFrame, sink_history: DataFrame | None, *,
 
 def select_dump_batch(classified: DataFrame, key: str,
                       opts: BackfillOptions) -> DataFrame:
-    """Eligible rows, with L1 limit applied AFTER the skip-filter
-    (``dump_data_to_clickhouse.py:70-74``: limit counts eligible items)."""
+    """Eligible rows of :func:`classify_targets`, with the L1 limit."""
     eligible = classified.filter(F.col("should_dump")) \
                          .drop("should_dump", "dump_reason")
-    if opts.limit is not None:
-        eligible = eligible.orderBy(key).limit(opts.limit)
-    return eligible
+    return _limit(eligible, key, opts)
 
 
 def run_backfill(source: DataFrame, sink_history: DataFrame | None, sink,
                  table: str, *, key: str, modified_col: str, sink_ts_col: str,
                  opts: BackfillOptions | None = None,
                  serializer=None) -> int:
-    """Full EP3: classify → limit → serialize → partition-batched insert
-    with throttle. Returns the number of rows dumped."""
+    """Full EP3: scope → change-detect → limit → serialize →
+    partition-batched insert with throttle. Returns the number of rows
+    dumped.
+
+    With ``force`` or no history every scoped row is dumped; otherwise
+    the batch is :func:`~..operators.incremental.changed_since_dump` of
+    the scoped rows, ``key`` first (the column order
+    :func:`select_dump_batch` gives)."""
     opts = opts or BackfillOptions()
     opts.validate()
-    classified = classify_targets(source, sink_history, key=key,
-                                  modified_col=modified_col,
-                                  sink_ts_col=sink_ts_col, opts=opts)
-    batch = select_dump_batch(classified, key, opts)
+    batch = _scope(source, key, opts)
+    if not opts.force and sink_history is not None:
+        batch = changed_since_dump(batch, sink_history, key, modified_col,
+                                   sink_ts_col)
+    batch = _limit(batch, key, opts)
     if serializer is not None:
         batch = serializer(batch)
     # Single pass: the sink chunks each partition into batch_size-row
     # POSTs (S5) and counts rows in the same action — no separate
-    # count() scan and no repartition-by-count shuffle. The REBALANCE
-    # hint lets AQE right-size partitions (split skewed, merge tiny)
-    # without knowing the row count up front.
-    return sink.insert_df(batch.hint("rebalance"), table,
-                          throttle_secs=opts.sleep_time,
+    # count() scan. The batch keeps the source scan's partitions (file
+    # splits): a rebalance exchange in front would cost a shuffle job,
+    # and AQE coalesced it to one partition on every table measured.
+    return sink.insert_df(batch, table, throttle_secs=opts.sleep_time,
                           max_rows_per_post=opts.batch_size)

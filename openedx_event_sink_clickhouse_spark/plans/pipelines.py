@@ -21,14 +21,6 @@ from ..functions.derivations import (
 from ..operators.incremental import detect_changes
 
 
-def incremental_sink_pipeline(candidates: DataFrame, sink_df: DataFrame, *,
-                              key: str, modified_col: str,
-                              sink_ts_col: str) -> DataFrame:
-    """EP3 core — the backfill CLI's scan → watermark → change-detect →
-    serialize flow (``dump_data_to_clickhouse.py:29-81``) as one plan."""
-    return detect_changes(candidates, sink_df, key, modified_col, sink_ts_col)
-
-
 def flagship_events_incremental(events: DataFrame, dumped_before: str,
                                 deterministic: bool = True) -> DataFrame:
     """The flagship query (driver smoke + oracle target).

@@ -19,6 +19,10 @@ Scale posture (designed for a 1000-executor cluster, tested on local[32]):
   3.13+, which re-reads lazily, it is plain ``pyspark.daemon``. It is a
   static conf, so :func:`tune_session` cannot apply it: an external
   session (the driver harness's) keeps the per-task cost.
+- Python workers get the package's parent directory on their path
+  (``spark.executorEnv.PYTHONPATH``, which PySpark merges with the JVM's
+  ``PYTHONPATH``): a driver that imports the package through its own
+  ``sys.path`` alone can still start the daemon and unpickle tasks.
 """
 
 from __future__ import annotations
@@ -28,6 +32,8 @@ import os
 from pyspark.sql import SparkSession
 
 DEFAULT_SHUFFLE_PARTITIONS = os.environ.get("SPARK_GRAFT_CPUS", "32")
+# the directory the package is imported from, for the Python workers
+_PACKAGE_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def get_spark(app_name: str = "openedx-event-sink-spark", master: str | None = None,
@@ -45,8 +51,10 @@ def get_spark(app_name: str = "openedx-event-sink-spark", master: str | None = N
     The builder sets ``spark.python.daemon.module`` to :mod:`.pyworker`,
     which stops every Python-worker task from re-reading the unchanged zip
     archives on its path (~200 ms per task on CPython 3.11/3.12, a no-op
-    on 3.13+); ``extra_conf`` can override it like any conf. It is static,
-    so :func:`tune_session` cannot give it to an external session."""
+    on 3.13+), and puts the package's parent directory on the workers'
+    ``PYTHONPATH``; ``extra_conf`` can override either like any conf.
+    Both are static, so :func:`tune_session` cannot give them to an
+    external session."""
     active = SparkSession.getActiveSession()
     if active is not None:
         if master is not None or extra_conf:
@@ -76,6 +84,7 @@ def get_spark(app_name: str = "openedx-event-sink-spark", master: str | None = N
         .config("spark.ui.enabled", "false")
         .config("spark.python.daemon.module",
                 "openedx_event_sink_clickhouse_spark.pyworker")
+        .config("spark.executorEnv.PYTHONPATH", _PACKAGE_PARENT)
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

@@ -10,14 +10,27 @@ is the Catalyst-native replacement for the ORM's lazily-built SQL.
 At 100 TB these would be partitioned/bucketed datasets or catalog tables;
 the loader keeps the name → location indirection so swapping in
 ``spark.read.table(...)`` is a one-line change.
+
+Inferring a parquet schema is a Spark job (a footer read on the
+executors). A process that loads the same file again — the backfill, once
+per table per cycle — gets the schema from a per-process memo keyed by
+the file's path, ``st_mtime_ns`` and ``st_size``, and reads with
+``.schema(...)``: no job. A rewritten file has a new signature and is
+inferred again. The memo holds only ``StructType`` values, which belong
+to no session, so a restarted session cannot meet a stale py4j handle
+there. Spark still lists the files on every load. A dataset directory is
+inferred on every load, since its own stat does not change when a file
+inside is rewritten.
 """
 
 from __future__ import annotations
 
 import os
+import stat
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 TABLES = (
     "region", "nation", "customer", "supplier", "part",
@@ -36,6 +49,27 @@ NANO_TS_COLUMNS = {
 
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
+# (absolute path, st_mtime_ns, st_size) of a parquet file -> its schema
+_SCHEMAS: dict[tuple[str, int, int], StructType] = {}
+
+
+def _read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)``, inferring a file's schema once per
+    signature (module docstring)."""
+    try:
+        st = os.stat(path)
+    except OSError:  # a URI, or missing: Spark resolves or reports it
+        st = None
+    if st is None or not stat.S_ISREG(st.st_mode):
+        return spark.read.parquet(path)
+    sig = (os.path.abspath(path), st.st_mtime_ns, st.st_size)
+    schema = _SCHEMAS.get(sig)
+    if schema is not None:
+        return spark.read.schema(schema).parquet(path)
+    df = spark.read.parquet(path)
+    _SCHEMAS[sig] = df.schema
+    return df
+
 
 def load_table(spark: SparkSession, name: str, sf_dir: str | None = None) -> DataFrame:
     """Load one named table from a scale-factor directory."""
@@ -48,7 +82,7 @@ def load_table(spark: SparkSession, name: str, sf_dir: str | None = None) -> Dat
     # only when the session TZ is UTC (DuckDB treats the same values as
     # UTC-epoch).
     spark.conf.set("spark.sql.session.timeZone", "UTC")
-    df = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
+    df = _read_parquet(spark, os.path.join(sf_dir, f"{name}.parquet"))
     for c in NANO_TS_COLUMNS.get(name, ()):
         if c not in df.columns:
             continue

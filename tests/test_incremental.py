@@ -11,13 +11,21 @@ from pyspark.sql import Row
 from pyspark.sql import functions as F
 
 from openedx_event_sink_clickhouse_spark.operators.incremental import (
+    changed_since_dump,
     detect_changes,
     watermark_for,
     watermarks,
 )
+from openedx_event_sink_clickhouse_spark.plans.backfill import (
+    BackfillOptions,
+    classify_targets,
+    run_backfill,
+    select_dump_batch,
+)
 from openedx_event_sink_clickhouse_spark.plans.pipelines import (
     flagship_events_incremental,
 )
+from openedx_event_sink_clickhouse_spark.sources.tables import load_table
 
 T0 = dt.datetime(2024, 1, 1)
 T1 = dt.datetime(2024, 1, 2)
@@ -65,6 +73,128 @@ def test_change_detection_truth_table(spark):
     reasons = {r["key"]: r["dump_reason"] for r in out.collect()}
     assert reasons["new"] == "Item is not present in ClickHouse"
     assert reasons["a"].startswith("Item was modified after last dump at")
+
+
+def _truth_table(spark):
+    """Candidates ``(payload, key, modified)`` and a history covering each
+    case of the tri-state rule, with the rows the rule dumps."""
+    candidates = spark.createDataFrame([
+        ("nullkey", None, T2),      # NULL key matches nothing -> dump
+        ("nullkey0", None, None),   # ... with NULL modified too -> dump
+        ("fresh", "new", None),     # no history, NULL modified -> dump
+        ("newer", "a", T2),         # newer than max(T0, T1) -> dump
+        ("newer2", "a", T2),        # duplicate source key -> both dumped
+        ("equal", "a", T1),         # equal to the max -> skip
+        ("between", "a", T0),       # older than the max -> skip
+        ("nomod", "b", None),       # dumped, NULL modified -> skip
+        ("allnull", "c", T0),       # history ts all NULL -> dump
+        ("allnull0", "c", None),    # ... with NULL modified -> dump
+        ("older", "d", T0),         # older than its one dump -> skip
+    ], "payload string, key string, modified timestamp")
+    history = spark.createDataFrame([
+        ("a", T0), ("a", T1), ("a", T1),    # duplicate history rows
+        ("b", T0), ("c", None), ("c", None), ("d", T1), (None, T2),
+    ], "key string, time_last_dumped timestamp")
+    dumped = {"nullkey", "nullkey0", "fresh", "newer", "newer2", "allnull",
+              "allnull0"}
+    return candidates, history, dumped
+
+
+def test_anti_join_classify_and_detect_changes_agree(spark):
+    candidates, history, dumped = _truth_table(spark)
+    args = dict(key="key", modified_col="modified",
+                sink_ts_col="time_last_dumped")
+    anti = changed_since_dump(candidates, history, **args)
+    classified = select_dump_batch(
+        classify_targets(candidates, history, opts=BackfillOptions(), **args),
+        "key", BackfillOptions())
+    detected = detect_changes(candidates, history, **args)
+    rows = [sorted(map(tuple, df.collect()), key=str)
+            for df in (anti, classified, detected)]
+    assert rows[0] == rows[1] == rows[2]
+    assert sorted(r[1] for r in rows[0]) == sorted(dumped)
+    # the USING join's order: key first, then the candidate's columns
+    assert anti.columns == classified.columns == detected.columns == \
+        ["key", "payload", "modified"]
+
+
+class _Jobs:
+    """Spark jobs started by this thread inside the ``with`` block."""
+
+    def __init__(self, spark):
+        self.sc, self.ids = spark.sparkContext, []
+
+    def __enter__(self):
+        import uuid
+        self.group = f"jobs-{uuid.uuid4()}"
+        self.sc.setJobGroup(self.group, self.group)
+        return self
+
+    def __exit__(self, *exc):
+        self.sc.setLocalProperty("spark.jobGroup.id", None)
+        self.sc.setLocalProperty("spark.job.description", None)
+        self.ids = self.sc.statusTracker().getJobIdsForGroup(self.group)
+
+
+def _write_events(path, n, extra=False):
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    cols = {"event_id": pa.array(range(n), pa.int64()),
+            "ts": pa.array([T0 + dt.timedelta(hours=i) for i in range(n)],
+                           pa.timestamp("us"))}
+    if extra:
+        cols["note"] = pa.array([f"n{i}" for i in range(n)])
+    pq.write_table(pa.table(cols), path)
+
+
+def test_backfill_table_runs_two_jobs(spark, tmp_path):
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from openedx_event_sink_clickhouse_spark.sinks import (
+        ClickHouseConfig, ClickHouseSink)
+
+    _write_events(str(tmp_path / "events.parquet"), 40)
+    hist = str(tmp_path / "history.parquet")
+    pq.write_table(pa.table({
+        "event_id": pa.array(range(0, 40, 2), pa.int64()),
+        "time_last_dumped": pa.array([T2] * 20, pa.timestamp("us"))}), hist)
+    source = load_table(spark, "events", str(tmp_path))
+    history = spark.read.parquet(hist)
+
+    def noop(method, url, params, data, auth, timeout):
+        pass
+
+    with _Jobs(spark) as jobs:
+        n = run_backfill(source, history, ClickHouseSink(ClickHouseConfig(),
+                                                         noop),
+                         "events", key="event_id", modified_col="ts",
+                         sink_ts_col="time_last_dumped",
+                         opts=BackfillOptions(sleep_time=0))
+    assert n == 20                 # the odd ids were never dumped
+    assert len(jobs.ids) <= 2      # the history's broadcast, the POSTs
+    plan = changed_since_dump(source, history, "event_id", "ts",
+                              "time_last_dumped") \
+        ._jdf.queryExecution().executedPlan().toString()
+    assert "BroadcastHashJoin" in plan and "LeftAnti" in plan
+    assert "HashAggregate" not in plan and "ShuffleExchange" not in plan
+
+
+def test_load_table_infers_a_file_schema_once(spark, tmp_path):
+    path = str(tmp_path / "events.parquet")
+    _write_events(path, 10)
+    first = load_table(spark, "events", str(tmp_path))
+    with _Jobs(spark) as jobs:
+        again = load_table(spark, "events", str(tmp_path))
+    assert jobs.ids == []
+    assert again.schema == first.schema
+    assert again.count() == 10
+
+    _write_events(path, 12, extra=True)   # rewritten with a new column
+    with _Jobs(spark) as jobs:
+        rewritten = load_table(spark, "events", str(tmp_path))
+    assert len(jobs.ids) >= 1
+    assert rewritten.columns == ["event_id", "ts", "note"]
+    assert rewritten.count() == 12
 
 
 def test_flagship_runs_and_is_incremental(spark, sf_dir):

@@ -163,3 +163,36 @@ def test_spark_workers_do_not_reread_unchanged_archives(spark):
     assert max(tasks for tasks, _ in latest.values()) >= 3
     for pid, (tasks, counts) in latest.items():
         assert all(n <= 1 for n in counts.values()), (pid, tasks, counts)
+
+
+def test_driver_with_package_on_sys_path_only_runs_python_tasks(tmp_path):
+    # A driver started from another directory that reaches the package
+    # only through its own sys.path: the workers (and the pyworker daemon)
+    # import it from the path get_spark gives them.
+    import os
+    import subprocess
+    import textwrap
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(pyworker.__file__)))
+    script = tmp_path / "dump.py"
+    script.write_text(textwrap.dedent(f"""
+        import sys
+        sys.path.insert(0, {root!r})
+        from openedx_event_sink_clickhouse_spark.session import get_spark
+        from openedx_event_sink_clickhouse_spark.sinks import ClickHouseSink
+
+        def noop(method, url, params, data, auth, timeout):
+            pass
+
+        spark = get_spark("sys-path-driver", master="local[1]")
+        sent = ClickHouseSink(transport=noop).insert_df(
+            spark.range(300).toDF("id"), "t")
+        print("sent", sent)
+        spark.stop()
+    """))
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    env["SPARK_DRIVER_MEMORY"] = "1g"
+    done = subprocess.run([sys.executable, str(script)], cwd=tmp_path,
+                          env=env, capture_output=True, text=True,
+                          timeout=300)
+    assert "sent 300" in done.stdout, done.stderr[-4000:]

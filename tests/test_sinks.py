@@ -75,6 +75,57 @@ def test_csv_encode_matches_python_csv_quote_nonnumeric(spark):
     assert sorted(got) == sorted(expected)
 
 
+def _csv_line(values) -> str:
+    """One row as the reference writes it: ``csv.writer(QUOTE_NONNUMERIC)``
+    over the values, tz-aware UTC datetimes as the ORM hands them over."""
+    import datetime as dt
+    buf = io.StringIO()
+    csv.writer(buf, quoting=csv.QUOTE_NONNUMERIC, lineterminator="\n") \
+        .writerow([v.replace(tzinfo=dt.timezone.utc)
+                   if isinstance(v, dt.datetime) else v for v in values])
+    return buf.getvalue()[:-1]
+
+
+def test_csv_encode_golden_every_branch(spark):
+    # One column per branch of the encoder and per NUMERIC_TYPES member;
+    # the second row is all NULL, which csv.writer writes as "" for
+    # every type.
+    import datetime as dt
+    from decimal import Decimal
+    schema = ("flag boolean, b byte, s short, i int, l long, f float, "
+              "d double, dec decimal(10,2), ts timestamp, ts0 timestamp, "
+              "txt string")
+    rows = [
+        (True, 7, -300, 123456, 2 ** 40, 2.5, 0.125, Decimal("12.50"),
+         dt.datetime(2023, 5, 3, 15, 47, 39, 331024),
+         dt.datetime(2024, 1, 1, 0, 0, 0, 0), 'say "hi", then\nbye'),
+        (None,) * 11,
+        (False, 0, 0, -1, -(2 ** 40), -0.5, 1e-3, Decimal("-0.01"),
+         dt.datetime(1999, 12, 31, 23, 59, 59, 1),
+         dt.datetime(1970, 1, 1), ""),
+    ]
+    df = spark.createDataFrame(rows, schema)
+    got = [r["csv_line"] for r in encode_csv_lines(df).collect()]
+    assert got == [_csv_line(r) for r in rows]
+
+
+def test_csv_encode_quotes_awkward_column_names(spark):
+    df = spark.createDataFrame([(1, "a", True)],
+                               ["with space", "with.dot", "with`tick"])
+    [line] = encode_csv_lines(df).collect()
+    assert line["csv_line"] == _csv_line((1, "a", True))
+    assert encode_csv_lines(df, line_col="out`line").columns == ["out`line"]
+
+
+def test_csv_encode_columns_in_given_order(spark):
+    import datetime as dt
+    ts = dt.datetime(2024, 2, 29, 12, 0, 0, 500)
+    df = spark.createDataFrame([("x", 3, ts, False)],
+                               "a string, n int, ts timestamp, flag boolean")
+    [line] = encode_csv_lines(df, columns=["flag", "ts", "n", "a"]).collect()
+    assert line["csv_line"] == _csv_line((False, ts, 3, "x"))
+
+
 def test_insert_wire_format(spark, tmp_path):
     sink = ClickHouseSink(ClickHouseConfig(database="cool_data"),
                           file_capture_transport(str(tmp_path)))
@@ -176,9 +227,9 @@ def test_backfill_options_validation():
         BackfillOptions(limit=5, force=True).validate()
 
 
-def test_limit_counts_eligible_items_only(spark, backfill_frames):
+def test_limit_counts_eligible_items_only(spark, backfill_frames, tmp_path):
     source, history = backfill_frames
-    opts = BackfillOptions(limit=3)
+    opts = BackfillOptions(limit=3, sleep_time=0)
     classified = classify_targets(source, history, key="pk",
                                   modified_col="modified",
                                   sink_ts_col="time_last_dumped", opts=opts)
@@ -186,6 +237,17 @@ def test_limit_counts_eligible_items_only(spark, backfill_frames):
     # eligible = odd pks (modified t5 > t3) + never-dumped 6..10 → limit 3 of them
     assert batch.count() == 3
     assert all(r["pk"] in {1, 3, 5, 6, 7, 8, 9, 10} for r in batch.collect())
+    # run_backfill's anti-join batch takes the same first 3 eligible keys
+    sink = ClickHouseSink(ClickHouseConfig(),
+                          file_capture_transport(str(tmp_path)))
+    n = run_backfill(source, history, sink, "course_overviews", key="pk",
+                     modified_col="modified", sink_ts_col="time_last_dumped",
+                     opts=opts)
+    sent = sorted(line for c in read_captures(str(tmp_path)) if c["data"]
+                  for line in c["data"].splitlines())
+    assert n == 3
+    assert sent == sorted(r["csv_line"] for r in
+                          encode_csv_lines(batch).collect())
 
 
 def test_run_backfill_end_to_end(spark, backfill_frames, tmp_path):
