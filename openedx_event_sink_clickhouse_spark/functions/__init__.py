@@ -1,7 +1,5 @@
 from .derivations import (
-    dump_id_expr,
     deterministic_dump_id,
-    ingest_timestamp,
     json_pack,
     bool_flag,
     normalize_apostrophes,
@@ -11,7 +9,7 @@ from .derivations import (
 from .hashes import md5_hash32, md5_hash64
 
 __all__ = [
-    "dump_id_expr", "deterministic_dump_id", "ingest_timestamp", "json_pack",
-    "bool_flag", "normalize_apostrophes", "strip_branch_and_version",
-    "member_flag", "md5_hash32", "md5_hash64",
+    "deterministic_dump_id", "json_pack", "bool_flag",
+    "normalize_apostrophes", "strip_branch_and_version", "member_flag",
+    "md5_hash32", "md5_hash64",
 ]

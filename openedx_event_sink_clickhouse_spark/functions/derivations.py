@@ -1,4 +1,5 @@
-"""Derived-column expressions (reference operators P2–P8).
+"""Derived-column expressions (reference operators P2, P4–P8; P3's
+``time_last_dumped`` is a literal the caller stamps).
 
 All pure ``pyspark.sql.functions`` Column expressions — JVM-side, inside
 whole-stage codegen, no Python UDFs. Reference citations per function.
@@ -6,30 +7,20 @@ whole-stage codegen, no Python UDFs. Reference citations per function.
 
 from __future__ import annotations
 
-import uuid
-
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 
-def dump_id_expr(per_batch: bool = True) -> Column:
-    """P2 — lineage UUID tagged onto every emitted row.
+def deterministic_dump_id(key: Column) -> Column:
+    """P2 — the package's one dump-id form: a uuid-shaped string derived
+    from ``key``, so a dump's ids are the same on every run and
+    correctness checks can cover the dump_id plumbing. Layout matches uuid
+    hex grouping 8-4-4-4-12.
 
     The reference mints one uuid4 per serializer *instance*, i.e. one per
-    dump batch (``event_sink_clickhouse/serializers.py:25-27``); nested
-    block rows inherit the parent's (``sinks/base_sink.py:184-203``). We
-    default to that per-batch semantics (a single literal resolved at plan
-    build time); ``per_batch=False`` mints one per row via ``uuid()``.
-    """
-    if per_batch:
-        return F.lit(str(uuid.uuid4()))
-    return F.expr("uuid()")
-
-
-def deterministic_dump_id(key: Column) -> Column:
-    """Oracle-friendly stand-in for P2: a uuid-shaped string derived from
-    the row key, so correctness checks can cover the dump_id plumbing
-    without nondeterminism. Layout matches uuid hex grouping 8-4-4-4-12."""
+    dump batch (``event_sink_clickhouse/serializers.py:25-27``); a caller
+    that wants that stamps its own literal on the serializers
+    (``plans/course_publish``, ``plans/user_sinks``)."""
     h = F.md5(key.cast("string"))
     return F.concat_ws(
         "-",
@@ -49,11 +40,6 @@ def quote_ident(name: str) -> str:
     """``name`` as a SQL identifier: backtick-quoted, inner backticks
     doubled, so spaces, dots and backticks in column names are literal."""
     return "`" + name.replace("`", "``") + "`"
-
-
-def ingest_timestamp() -> Column:
-    """P3 — ``time_last_dumped = now()`` (``serializers.py:29-31``)."""
-    return F.current_timestamp()
 
 
 def json_pack(*cols: Column | str, **named: Column) -> Column:

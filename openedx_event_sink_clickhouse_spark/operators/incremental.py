@@ -7,24 +7,29 @@ The reference issues ONE ClickHouse round-trip PER candidate item:
 (``sinks/course_published.py:154-198``). That is O(items) network calls.
 
 Spark-first design: both sides are DataFrames, so the whole decision
-collapses into one set-oriented plan. A2 has two forms with the same
-tri-state rule:
+collapses into one set-oriented plan. A2 is one tri-state rule,
+``should_dump_item``'s, in two forms that select the same rows:
 
-- :func:`detect_changes` joins the aggregated watermark —
+- :func:`classify_changes` joins the aggregated watermark —
 
       watermarks = sink.groupBy(key).agg(max(ts))        # A1, map-side partial agg
-      candidates LEFT JOIN watermarks ON key             # broadcast if small
-      WHERE last_dump IS NULL OR modified > last_dump    # A2
+      candidates LEFT JOIN watermarks USING (key)        # broadcast if small
+      should_dump = last_dump IS NULL                    # never dumped
+                    OR (modified IS NOT NULL AND modified > last_dump)
 
-  which keeps ``last_dump`` at hand for reason strings.
+  and annotates every candidate with ``should_dump`` and the
+  reference's reason, which needs ``last_dump`` at hand. Aggregating
+  first bounds the broadcast to the distinct keys, so it suits a history
+  with many rows per key (the flagship query).
 - :func:`changed_since_dump` anti-joins the raw history —
 
       candidates s LEFT ANTI JOIN sink h
         ON s.key = h.key AND h.ts IS NOT NULL
        AND (s.modified IS NULL OR h.ts >= s.modified)
 
-  which needs no aggregate and so no shuffle: the history is broadcast as
-  it is scanned, one job fewer per plan. The backfill's dump path uses it.
+  which keeps only the ``should_dump`` rows and needs no aggregate, so no
+  shuffle: the history is broadcast as it is scanned, one job fewer per
+  plan. The backfill's dump path uses it.
 
 At 100 TB the watermark side is |distinct keys| rows (tiny relative to the
 fact table) — Catalyst/AQE broadcasts it, so the fact side streams through
@@ -40,61 +45,62 @@ from pyspark.sql import functions as F
 from ..functions.derivations import quote_ident
 
 
-def watermarks(sink_df: DataFrame, key: str, ts_col: str,
-               watermark_col: str = "last_dump") -> DataFrame:
-    """A1 (set-oriented) — per-entity high-water mark over the sink table.
+def watermarks(sink_df: DataFrame, key: str, ts_col: str) -> DataFrame:
+    """A1 (set-oriented) — per-entity high-water mark ``last_dump`` over
+    the sink table.
 
     Replaces the per-item filtered ``max()`` of ``base_sink.py:314-335``.
     A partial (map-side) max runs before the shuffle, so the shuffled data
     is one row per key per map task.
     """
-    return sink_df.groupBy(key).agg(F.max(ts_col).alias(watermark_col))
+    return sink_df.groupBy(key).agg(F.max(ts_col).alias("last_dump"))
 
 
-def watermark_for(sink_df: DataFrame, key: str, key_value, ts_col: str) -> DataFrame:
-    """A1 (point form, parity with the reference's one-entity query):
-    ``SELECT max(ts) WHERE key = value``. Filter is pushed to the scan."""
-    return (sink_df.filter(F.col(key) == key_value)
-            .agg(F.max(ts_col).alias("last_dump")))
+def classify_changes(candidates: DataFrame, sink_df: DataFrame, key: str,
+                     modified_col: str, sink_ts_col: str) -> DataFrame:
+    """A2 — every candidate annotated with ``should_dump`` and
+    ``dump_reason``: the reference's ``(item, should_dump, reason)``
+    triples (``dump_data_to_clickhouse.py:29-81``).
 
-
-def detect_changes(candidates: DataFrame, sink_df: DataFrame, key: str,
-                   modified_col: str, sink_ts_col: str,
-                   with_reason: bool = False) -> DataFrame:
-    """A2 — rows to dump: never dumped, or modified after their watermark.
-
-    Mirrors ``should_dump_item`` (``course_published.py:154-198``) tri-state:
-    never dumped → dump (even with NULL ``modified``); dumped before but
-    NULL ``modified`` → SKIP ("No last modified date", lines 174-177);
-    ``modified`` strictly newer → dump; equal/older → skip.
-
-    ``with_reason=True`` adds the reference's human-readable reason string
-    (consumed by the backfill CLI's ``(obj, should_dump, reason)`` tuples,
-    ``management/commands/dump_data_to_clickhouse.py:29-81``).
-
-    :func:`changed_since_dump` selects the same rows with no aggregate;
-    this form keeps the watermark, which the reason strings need.
+    Mirrors ``should_dump_item`` (``course_published.py:154-198``)
+    tri-state, with its reason strings: never dumped → dump (even with
+    NULL ``modified``); dumped before but NULL ``modified`` → skip;
+    ``modified`` strictly newer than the watermark → dump; equal or older
+    → skip. Columns are the ``USING`` join's: ``key`` first, then the
+    other candidate columns, then the two annotations.
     """
-    wm = watermarks(sink_df, key, sink_ts_col)
-    joined = candidates.join(wm, on=key, how="left")
+    joined = candidates.join(watermarks(sink_df, key, sink_ts_col),
+                             on=key, how="left")
     never = F.col("last_dump").isNull()
-    newer = F.col(modified_col) > F.col("last_dump")  # NULL-safe: NULL → skip
-    out = joined.filter(never | newer)
-    if with_reason:
-        out = out.withColumn(
-            "dump_reason",
-            F.when(never, F.lit("Item is not present in ClickHouse"))
-             .otherwise(F.concat(F.lit("Item was modified after last dump at "),
-                                 F.col("last_dump").cast("string"))),
-        )
-    return out.drop("last_dump")
+    no_mtime = F.col(modified_col).isNull()
+    newer = F.col(modified_col) > F.col("last_dump")
+    last_dump = F.col("last_dump").cast("string")
+    modified = F.col(modified_col).cast("string")
+    return (joined
+            .withColumn("should_dump",
+                        F.when(never, True)
+                         .when(no_mtime, False)
+                         .otherwise(newer))
+            .withColumn(
+                "dump_reason",
+                F.when(never, F.lit("Course is not present in ClickHouse"))
+                 .when(no_mtime, F.lit("No last modified date in CourseOverview"))
+                 .when(newer, F.concat(
+                     F.lit("Course has been published since last dump time - "
+                           "last dumped "),
+                     last_dump, F.lit(" < last published "), modified))
+                 .otherwise(F.concat(
+                     F.lit("Course has NOT been published since last dump "
+                           "time - last dumped "),
+                     last_dump, F.lit(" >= last published "), modified)))
+            .drop("last_dump"))
 
 
 def changed_since_dump(candidates: DataFrame, sink_df: DataFrame, key: str,
                        modified_col: str, sink_ts_col: str) -> DataFrame:
-    """A2 as one left-anti join against the raw sink history: the rows
-    :func:`detect_changes` selects, by the same tri-state rule, without
-    the watermark aggregate.
+    """A2 as one left-anti join against the raw sink history: exactly the
+    ``should_dump`` rows of :func:`classify_changes`, without the
+    watermark aggregate or the annotations.
 
     A candidate is skipped when some history row of its key has a
     non-NULL dump time that is not older than its ``modified``, or any
@@ -107,8 +113,8 @@ def changed_since_dump(candidates: DataFrame, sink_df: DataFrame, key: str,
 
     The plan is the history scan, filtered on ``ts IS NOT NULL`` and
     broadcast when small, probed by the candidate scan: no exchange and no
-    aggregate job. Columns come back as from :func:`detect_changes`'s
-    ``USING`` join: ``key`` first, then the other candidate columns.
+    aggregate job. Columns come back in :func:`classify_changes`'s order:
+    ``key`` first, then the other candidate columns.
     """
     k, mod, ts = map(quote_ident, (key, modified_col, sink_ts_col))
     out = candidates.alias("s").join(

@@ -4,18 +4,19 @@ dump_data_to_clickhouse.py``), set-oriented.
 The reference iterates pages, issuing ONE watermark query per item
 (``should_dump_item`` → HTTP round trip, ``dump_data_to_clickhouse.py:29-81``
 + ``course_published.py:165``). Here eligibility for the whole candidate
-set is one plan: scans S1-S4 → A2 change detection → L1 limit →
+set is one plan: scans S3-S4 → A2 change detection → L1 limit →
 partition-batched sink writes with L2 throttle.
 
-With a history small enough to broadcast, a table's dump is two Spark
-jobs: the history's broadcast and the POSTs.
-:func:`run_backfill` selects its batch with
-:func:`~..operators.incremental.changed_since_dump`, a left-anti join
-against the raw history, so no watermark aggregate (a shuffle job) runs,
-and it writes the batch in the scan's own partitions, with no exchange
-before the POSTs. :func:`classify_targets` is the same decision with the
-reference's ``(item, should_dump, reason)`` annotations, for callers that
-need the reasons; it is not on the dump path.
+Both A2 forms of ``operators/incremental`` apply one rule. With a history
+small enough to broadcast, a table's dump is two Spark jobs: the
+history's broadcast and the POSTs. :func:`run_backfill` selects its batch
+with :func:`~..operators.incremental.changed_since_dump`, a left-anti
+join against the raw history, so no watermark aggregate (a shuffle job)
+runs, and it writes the batch in the scan's own partitions, with no
+exchange before the POSTs. :func:`classify_targets` annotates the same
+decision with the reference's ``(item, should_dump, reason)`` reasons
+(:func:`~..operators.incremental.classify_changes`), for callers that
+need them; it is not on the dump path.
 """
 
 from __future__ import annotations
@@ -25,8 +26,8 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..operators.incremental import changed_since_dump, watermarks
-from ..operators.scans import in_list, not_in_list, range_scan
+from ..operators.incremental import changed_since_dump, classify_changes
+from ..operators.scans import in_list, not_in_list
 
 
 @dataclass
@@ -35,7 +36,6 @@ class BackfillOptions:
 
     ids: list | None = None          # --ids
     skip_ids: list | None = None     # --ids_to_skip
-    start_pk: object | None = None   # resume point
     force: bool = False              # --force
     limit: int | None = None         # --limit (must be > 0; not with force)
     batch_size: int = 10_000         # --batch_size
@@ -50,10 +50,8 @@ class BackfillOptions:
 
 
 def _scope(source: DataFrame, key: str, opts: BackfillOptions) -> DataFrame:
-    """S2-S4: resume point, ``--ids`` and ``--ids_to_skip``."""
+    """S3-S4: ``--ids`` and ``--ids_to_skip``."""
     df = source
-    if opts.start_pk is not None:
-        df = range_scan(df, key, opts.start_pk)
     if opts.ids:
         df = in_list(df, key, opts.ids)
     if opts.skip_ids:
@@ -73,8 +71,10 @@ def classify_targets(source: DataFrame, sink_history: DataFrame | None, *,
                      key: str, modified_col: str, sink_ts_col: str,
                      opts: BackfillOptions) -> DataFrame:
     """``fetch_target_items`` (``base_sink.py:284-306``) as one plan:
-    every candidate row annotated with ``should_dump`` + ``dump_reason``
-    — the reference's ``(item, should_be_dumped, reason)`` triples.
+    every scoped candidate row annotated with ``should_dump`` +
+    ``dump_reason`` — the reference's ``(item, should_be_dumped, reason)``
+    triples. With ``force`` or no history every row is dumped; otherwise
+    the rows are :func:`~..operators.incremental.classify_changes`.
 
     :func:`run_backfill` does not call it: it selects the same rows with
     :func:`~..operators.incremental.changed_since_dump`, which needs no
@@ -85,35 +85,7 @@ def classify_targets(source: DataFrame, sink_history: DataFrame | None, *,
         reason = "Force is set" if opts.force else "No reason"
         return df.withColumn("should_dump", F.lit(True)) \
                  .withColumn("dump_reason", F.lit(reason))
-
-    wm = watermarks(sink_history, key, sink_ts_col)
-    joined = df.join(wm, on=key, how="left")
-    never = F.col("last_dump").isNull()
-    no_mtime = F.col(modified_col).isNull()
-    newer = F.col(modified_col) > F.col("last_dump")
-    # reason strings mirror course_published.py:154-198
-    return (joined
-            .withColumn("should_dump",
-                        F.when(never, True)
-                         .when(no_mtime, False)
-                         .otherwise(newer))
-            .withColumn(
-                "dump_reason",
-                F.when(never, F.lit("Course is not present in ClickHouse"))
-                 .when(no_mtime, F.lit("No last modified date in CourseOverview"))
-                 .when(newer, F.concat(
-                     F.lit("Course has been published since last dump time - "
-                           "last dumped "),
-                     F.col("last_dump").cast("string"),
-                     F.lit(" < last published "),
-                     F.col(modified_col).cast("string")))
-                 .otherwise(F.concat(
-                     F.lit("Course has NOT been published since last dump "
-                           "time - last dumped "),
-                     F.col("last_dump").cast("string"),
-                     F.lit(" >= last published "),
-                     F.col(modified_col).cast("string"))))
-            .drop("last_dump"))
+    return classify_changes(df, sink_history, key, modified_col, sink_ts_col)
 
 
 def select_dump_batch(classified: DataFrame, key: str,
@@ -126,11 +98,9 @@ def select_dump_batch(classified: DataFrame, key: str,
 
 def run_backfill(source: DataFrame, sink_history: DataFrame | None, sink,
                  table: str, *, key: str, modified_col: str, sink_ts_col: str,
-                 opts: BackfillOptions | None = None,
-                 serializer=None) -> int:
-    """Full EP3: scope → change-detect → limit → serialize →
-    partition-batched insert with throttle. Returns the number of rows
-    dumped.
+                 opts: BackfillOptions | None = None) -> int:
+    """Full EP3: scope → change-detect → limit → partition-batched insert
+    with throttle. Returns the number of rows dumped.
 
     With ``force`` or no history every scoped row is dumped; otherwise
     the batch is :func:`~..operators.incremental.changed_since_dump` of
@@ -143,8 +113,6 @@ def run_backfill(source: DataFrame, sink_history: DataFrame | None, sink,
         batch = changed_since_dump(batch, sink_history, key, modified_col,
                                    sink_ts_col)
     batch = _limit(batch, key, opts)
-    if serializer is not None:
-        batch = serializer(batch)
     # Single pass: the sink chunks each partition into batch_size-row
     # POSTs (S5) and counts rows in the same action — no separate
     # count() scan. The batch keeps the source scan's partitions (file

@@ -73,9 +73,7 @@ def serialize_course_overviews(overviews: DataFrame, dump_id: Column,
 
 
 def serialize_course_blocks(blocks: DataFrame, dump_id: Column,
-                            time_last_dumped: Column,
-                            detached_types: tuple[str, ...] = DETACHED_XBLOCK_TYPES,
-                            ) -> DataFrame:
+                            time_last_dumped: Column) -> DataFrame:
     """Produce the ``course_blocks`` sink rows (FIXTURES.md §2) from a
     depth-ordered blocks DataFrame.
 
@@ -96,7 +94,7 @@ def serialize_course_blocks(blocks: DataFrame, dump_id: Column,
         course.alias("course"),
         run.alias("run"),
         F.col("block_type").alias("block_type"),
-        member_flag(F.col("block_type"), detached_types).alias("detached"),
+        member_flag(F.col("block_type"), DETACHED_XBLOCK_TYPES).alias("detached"),
         bool_flag(F.coalesce(F.col("graded"), F.lit(False))).alias("graded"),
         F.coalesce(F.col("completion_mode"), F.lit("unknown"))
          .alias("completion_mode"),

@@ -336,9 +336,9 @@ SELECT o_orderkey,
 FROM orders
 """)
 def _p2(spark, sf_dir):
-    # P2/P3 oracle-checkable form: dump_id derived from the key, ingest
-    # time pinned. Production paths use uuid4-per-batch + now() via
-    # functions.derivations.dump_id_expr / ingest_timestamp.
+    # P2/P3: dump_id derived from the key (the package's one dump-id
+    # form), dump time pinned. A caller that wants the reference's
+    # uuid4-per-batch + now() stamps its own literals on the serializers.
     return _t(spark, sf_dir, "orders").select(
         "o_orderkey",
         deterministic_dump_id(F.col("o_orderkey")).alias("dump_id"),

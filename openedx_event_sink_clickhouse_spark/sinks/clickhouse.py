@@ -18,10 +18,11 @@ Spark execution model:
   transport does not retry, so a failed POST fails its task, which local
   mode does not re-run, and with it the whole call. Whatever re-runs a
   task (a cluster's task retry) or the whole call (a replayed epoch)
-  re-sends rows already POSTed. A replayed call rebuilds its frame, whose
-  ``dump_id`` (``functions.derivations.dump_id_expr``, a uuid4 per plan)
-  is then fresh, so the dump_id-versioned schema (reference
-  ``serializers.py:25-31``) keeps both copies rather than collapsing them.
+  re-sends rows already POSTed. A replayed call re-sends whatever
+  ``dump_id`` its caller stamped on the frame; a caller that mints a
+  fresh uuid4 per call (as the reference does, ``serializers.py:25-31``)
+  gives the replay a new one, so the dump_id-versioned schema keeps both
+  copies rather than collapsing them.
 - ``delete_where`` is a control-plane mutation: one driver-side request
   per table, mirroring the reference exactly.
 
@@ -32,6 +33,7 @@ reference's own tests intercept POSTs with the ``responses`` library.
 
 from __future__ import annotations
 
+import re
 import time
 from collections.abc import Callable, Iterable
 from dataclasses import dataclass, field
@@ -44,6 +46,9 @@ BULK_INSERT_PARAMS = {
     "input_format_allow_errors_num": 1,
     "input_format_allow_errors_ratio": 0.1,
 }
+
+# an id that may be spliced into a DELETE's SQL text
+_DECIMAL_INT = re.compile(r"-?[0-9]+")
 
 # transport(method, url, params, data, auth, timeout) -> None (raises on error)
 Transport = Callable[[str, str, dict, bytes | None, tuple, float], None]
@@ -96,12 +101,13 @@ class ClickHouseSink:
                            f"FORMAT CSV")
         return params
 
-    def insert_df(self, df: DataFrame, table: str, columns: list[str] | None = None,
+    def insert_df(self, df: DataFrame, table: str, *,
                   throttle_secs: float = 0.0,
                   max_rows_per_post: int | None = None) -> int:
         """Bulk INSERT, streaming POSTs from the executors; returns the
         number of rows sent (accumulator-counted inside the same action,
-        so callers need no separate ``count()`` pass over the batch).
+        so callers need no separate ``count()`` pass over the batch). The
+        CSV fields are ``df``'s columns in order.
 
         ``throttle_secs`` is the reference's inter-batch sleep
         (L2, ``dump_data_to_clickhouse.py:68,158-163``) applied per POST.
@@ -119,9 +125,8 @@ class ClickHouseSink:
         but the POSTs are at-least-once per chunk. A failed POST fails the
         task and the call (local mode does not re-run tasks); a re-run
         task re-sends the chunks it already POSTed, and a replayed call
-        re-sends every row under whatever ``dump_id`` its frame carries,
-        fresh per call today. Do not read the return value as "rows
-        landed exactly once".
+        re-sends every row under whatever ``dump_id`` its frame carries.
+        Do not read the return value as "rows landed exactly once".
         """
         params = self._insert_query(table)
         cfg, transport = self.config, self.transport
@@ -146,14 +151,23 @@ class ClickHouseSink:
                     buf = []
             post(buf)
 
-        encode_csv_lines(df, columns).foreachPartition(send_partition)
+        encode_csv_lines(df).foreachPartition(send_partition)
         return acc.value
 
     def delete_where_user_ids(self, user_ids: Iterable, pii_tables: list[str]) -> list[str]:
         """D1 — PII retirement. Builds the exact reference mutation per
         table (sorted, distinct, comma-joined ids — ``user_retire.py:33-49``)
-        and sends it driver-side. Returns the issued queries (testability)."""
-        ids_str = ",".join(sorted({str(u) for u in user_ids}))
+        and sends it driver-side. Returns the issued queries (testability).
+
+        The ids are interpolated into the query text, so an id whose
+        ``str()`` is not a decimal integer raises ``ValueError`` before
+        any query is sent: ``"1) OR (1=1"`` would otherwise delete every
+        row."""
+        ids = {str(u) for u in user_ids}
+        bad = sorted(u for u in ids if not _DECIMAL_INT.fullmatch(u))
+        if bad:
+            raise ValueError(f"user ids must be decimal integers: {bad!r}")
+        ids_str = ",".join(sorted(ids))
         if not ids_str:
             # The reference would emit "... in ()" here (user_retire.py:34)
             # and let ClickHouse reject it; an empty retirement set is a

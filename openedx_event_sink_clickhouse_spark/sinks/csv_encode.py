@@ -57,12 +57,10 @@ def _encode_field(col: str, dtype: T.DataType) -> str:
     return _quoted(f"""regexp_replace(coalesce(CAST({col} AS STRING), ''), '"', '""')""")
 
 
-def encode_csv_lines(df: DataFrame, columns: list[str] | None = None,
-                     line_col: str = "csv_line") -> DataFrame:
-    """Encode each row into one ClickHouse-CSV line (positional columns,
-    QUOTE_NONNUMERIC semantics). Returns a single-column DataFrame."""
-    dtypes = {f.name: f.dataType for f in df.schema.fields}
-    fields = [_encode_field(quote_ident(c), dtypes[c])
-              for c in (columns or dtypes)]
-    return df.selectExpr(
-        f"concat_ws(',', {', '.join(fields)}) AS {quote_ident(line_col)}")
+def encode_csv_lines(df: DataFrame) -> DataFrame:
+    """Encode each row into one ClickHouse-CSV line (QUOTE_NONNUMERIC
+    semantics, fields in ``df``'s column order; ``select`` first to pick
+    or reorder them). Returns a single-column DataFrame, ``csv_line``."""
+    fields = [_encode_field(quote_ident(f.name), f.dataType)
+              for f in df.schema.fields]
+    return df.selectExpr(f"concat_ws(',', {', '.join(fields)}) AS csv_line")

@@ -38,10 +38,11 @@ from pyspark.util import inheritable_thread_target
 Handler = Callable[[DataFrame], None]
 
 
-def dispatch_batch(batch_df: DataFrame, handlers: dict[str, Handler],
-                   model_col: str = "model", id_col: str = "object_id",
+def dispatch_batch(batch_df: DataFrame, handlers: dict[str, Handler], *,
                    on_unknown: Callable[[str], None] | None = None) -> None:
-    """Route one micro-batch to per-model handlers (F2 dispatch).
+    """Route one micro-batch of publish events (``model``, ``object_id``
+    columns, as ``streaming.sources.PUBLISH_EVENT_SCHEMA``) to per-model
+    handlers (F2 dispatch).
 
     Entities are deduplicated within the batch — N publish events for one
     course in one epoch trigger ONE dump, a set-oriented improvement the
@@ -55,18 +56,18 @@ def dispatch_batch(batch_df: DataFrame, handlers: dict[str, Handler],
     extra job, paid only by callers that pass it.
     """
     session = batch_df.sparkSession
-    batch_df = batch_df.select(model_col, id_col).distinct().cache()
-    model = F.col(model_col)
+    batch_df = batch_df.select("model", "object_id").distinct().cache()
+    model = F.col("model")
     try:
         if on_unknown:
             # tasks.py logs and drops unknown sinks; surface via hook
             unknown = ~model.isin(list(handlers)) | model.isNull()
-            for row in (batch_df.filter(unknown).select(model_col)
+            for row in (batch_df.filter(unknown).select("model")
                         .distinct().collect()):
                 on_unknown(row[0])
 
         def run(name: str, handler: Handler) -> None:
-            handler(batch_df.filter(model == name).select(id_col))
+            handler(batch_df.filter(model == name).select("object_id"))
 
         with ThreadPoolExecutor(max_workers=max(1, len(handlers))) as pool:
             futures = [pool.submit(inheritable_thread_target(session)(run),
@@ -79,8 +80,7 @@ def dispatch_batch(batch_df: DataFrame, handlers: dict[str, Handler],
 
 
 def run_dispatch_stream(stream_df: DataFrame, handlers: dict[str, Handler],
-                        checkpoint_dir: str, *, model_col: str = "model",
-                        id_col: str = "object_id", trigger: dict | None = None,
+                        checkpoint_dir: str, *, trigger: dict | None = None,
                         query_name: str = "event_sink_dispatch"):
     """Wire the dispatcher onto an unbounded stream. ``trigger`` defaults
     to ``availableNow`` (drain-and-stop, used by tests/backfill catch-up);
@@ -91,6 +91,5 @@ def run_dispatch_stream(stream_df: DataFrame, handlers: dict[str, Handler],
             .queryName(query_name)
             .option("checkpointLocation", checkpoint_dir)
             .trigger(**trigger)
-            .foreachBatch(lambda df, _epoch: dispatch_batch(
-                df, handlers, model_col, id_col))
+            .foreachBatch(lambda df, _epoch: dispatch_batch(df, handlers))
             .start())

@@ -55,7 +55,7 @@ def incremental_dump_stream(events: DataFrame, key_col: str = "user_id",
 
     Streaming-only (applyInPandasWithState rejects batch inputs in
     Spark 4): the batch form of the same semantics is
-    ``operators.incremental.change_detection``. Here the watermark
+    ``operators.incremental.classify_changes``. Here the watermark
     survives in the state store between micro-batches instead of being
     recomputed from the sink.
     """

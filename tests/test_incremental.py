@@ -8,12 +8,10 @@ from __future__ import annotations
 import datetime as dt
 
 from pyspark.sql import Row
-from pyspark.sql import functions as F
 
 from openedx_event_sink_clickhouse_spark.operators.incremental import (
     changed_since_dump,
-    detect_changes,
-    watermark_for,
+    classify_changes,
     watermarks,
 )
 from openedx_event_sink_clickhouse_spark.plans.backfill import (
@@ -46,38 +44,24 @@ def test_watermarks_is_max_per_key(spark):
     assert got == {"a": T1, "b": T1}
 
 
-def test_watermark_point_form(spark):
-    row = watermark_for(_sink(spark), "key", "a", "time_last_dumped").collect()[0]
-    assert row["last_dump"] == T1
-    row = watermark_for(_sink(spark), "key", "zzz", "time_last_dumped").collect()[0]
-    assert row["last_dump"] is None
+NEVER = "Course is not present in ClickHouse"
+NO_MTIME = "No last modified date in CourseOverview"
 
 
-def test_change_detection_truth_table(spark):
-    # Mirrors should_dump_item's tri-state (course_published.py:154-198):
-    # never dumped -> dump (even with NULL modified); modified after
-    # watermark -> dump; at/before -> skip; dumped + NULL modified -> skip
-    # ("No last modified date in CourseOverview", lines 174-177).
-    candidates = spark.createDataFrame([
-        Row(key="new", modified=T0),     # no watermark -> dump
-        Row(key="new2", modified=None),  # no watermark, no mtime -> dump
-        Row(key="a", modified=T2),       # newer -> dump
-        Row(key="a", modified=T1),       # equal -> skip
-        Row(key="b", modified=T0),       # older -> skip
-        Row(key="b", modified=None),     # dumped + unknown mtime -> skip
-    ])
-    out = detect_changes(candidates, _sink(spark), "key", "modified",
-                         "time_last_dumped", with_reason=True)
-    got = {(r["key"], r["modified"]) for r in out.collect()}
-    assert got == {("new", T0), ("new2", None), ("a", T2)}
-    reasons = {r["key"]: r["dump_reason"] for r in out.collect()}
-    assert reasons["new"] == "Item is not present in ClickHouse"
-    assert reasons["a"].startswith("Item was modified after last dump at")
+def _newer(last, mod):
+    return ("Course has been published since last dump time - last dumped "
+            f"{last} < last published {mod}")
+
+
+def _not_newer(last, mod):
+    return ("Course has NOT been published since last dump time - last "
+            f"dumped {last} >= last published {mod}")
 
 
 def _truth_table(spark):
     """Candidates ``(payload, key, modified)`` and a history covering each
-    case of the tri-state rule, with the rows the rule dumps."""
+    case of the tri-state rule (``course_published.py:154-198``), with
+    the ``(should_dump, dump_reason)`` the rule gives each payload."""
     candidates = spark.createDataFrame([
         ("nullkey", None, T2),      # NULL key matches nothing -> dump
         ("nullkey0", None, None),   # ... with NULL modified too -> dump
@@ -95,26 +79,52 @@ def _truth_table(spark):
         ("a", T0), ("a", T1), ("a", T1),    # duplicate history rows
         ("b", T0), ("c", None), ("c", None), ("d", T1), (None, T2),
     ], "key string, time_last_dumped timestamp")
-    dumped = {"nullkey", "nullkey0", "fresh", "newer", "newer2", "allnull",
-              "allnull0"}
-    return candidates, history, dumped
+    t0, t1, t2 = (str(t) for t in (T0, T1, T2))
+    expected = {
+        "nullkey": (True, NEVER), "nullkey0": (True, NEVER),
+        "fresh": (True, NEVER),
+        "newer": (True, _newer(t1, t2)), "newer2": (True, _newer(t1, t2)),
+        "equal": (False, _not_newer(t1, t1)),
+        "between": (False, _not_newer(t1, t0)),
+        "nomod": (False, NO_MTIME),
+        "allnull": (True, NEVER), "allnull0": (True, NEVER),
+        "older": (False, _not_newer(t1, t0)),
+    }
+    return candidates, history, expected
 
 
-def test_anti_join_classify_and_detect_changes_agree(spark):
-    candidates, history, dumped = _truth_table(spark)
-    args = dict(key="key", modified_col="modified",
-                sink_ts_col="time_last_dumped")
-    anti = changed_since_dump(candidates, history, **args)
+ARGS = dict(key="key", modified_col="modified", sink_ts_col="time_last_dumped")
+
+
+def test_change_detection_truth_table(spark):
+    # classify_changes on every row: each of should_dump_item's four
+    # branches, with the reference's reason string for it.
+    candidates, history, expected = _truth_table(spark)
+    out = classify_changes(candidates, history, **ARGS)
+    assert out.columns == ["key", "payload", "modified", "should_dump",
+                           "dump_reason"]
+    got = {r["payload"]: (r["should_dump"], r["dump_reason"])
+           for r in out.collect()}
+    assert got == expected
+
+
+def test_change_detection_forms_agree(spark):
+    # The dump path's anti join, the backfill's classified batch and the
+    # flagship's filter select the same rows in the same column order.
+    candidates, history, expected = _truth_table(spark)
+    anti = changed_since_dump(candidates, history, **ARGS)
     classified = select_dump_batch(
-        classify_targets(candidates, history, opts=BackfillOptions(), **args),
+        classify_targets(candidates, history, opts=BackfillOptions(), **ARGS),
         "key", BackfillOptions())
-    detected = detect_changes(candidates, history, **args)
+    filtered = classify_changes(candidates, history, **ARGS) \
+        .filter("should_dump").drop("should_dump", "dump_reason")
     rows = [sorted(map(tuple, df.collect()), key=str)
-            for df in (anti, classified, detected)]
+            for df in (anti, classified, filtered)]
     assert rows[0] == rows[1] == rows[2]
-    assert sorted(r[1] for r in rows[0]) == sorted(dumped)
+    assert sorted(r[1] for r in rows[0]) == \
+        sorted(p for p, (dump, _) in expected.items() if dump)
     # the USING join's order: key first, then the candidate's columns
-    assert anti.columns == classified.columns == detected.columns == \
+    assert anti.columns == classified.columns == filtered.columns == \
         ["key", "payload", "modified"]
 
 

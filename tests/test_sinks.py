@@ -114,16 +114,6 @@ def test_csv_encode_quotes_awkward_column_names(spark):
                                ["with space", "with.dot", "with`tick"])
     [line] = encode_csv_lines(df).collect()
     assert line["csv_line"] == _csv_line((1, "a", True))
-    assert encode_csv_lines(df, line_col="out`line").columns == ["out`line"]
-
-
-def test_csv_encode_columns_in_given_order(spark):
-    import datetime as dt
-    ts = dt.datetime(2024, 2, 29, 12, 0, 0, 500)
-    df = spark.createDataFrame([("x", 3, ts, False)],
-                               "a string, n int, ts timestamp, flag boolean")
-    [line] = encode_csv_lines(df, columns=["flag", "ts", "n", "a"]).collect()
-    assert line["csv_line"] == _csv_line((False, ts, 3, "x"))
 
 
 def test_insert_wire_format(spark, tmp_path):
@@ -154,6 +144,18 @@ def test_retire_delete_wire_format():
     ]
     assert all(c["method"] == "POST" and c["data"] is None
                for c in transport.calls)
+
+
+@pytest.mark.parametrize("bad", ["1) OR (1=1", "7 ", "", "1e3", "0x1F",
+                                 "１２", None, True, 4.0])
+def test_retire_delete_rejects_non_integer_ids(bad):
+    # An id is spliced into the DELETE's SQL text, so anything but a
+    # decimal integer is refused before any query is sent.
+    transport = CaptureTransport()
+    sink = ClickHouseSink(ClickHouseConfig(database="cool_data"), transport)
+    with pytest.raises(ValueError, match="decimal integers"):
+        sink.delete_where_user_ids([42, bad], ["user_profile", "external_id"])
+    assert transport.calls == []
 
 
 def test_connection_overrides():
