@@ -9,7 +9,7 @@ location → bulk-insert ``course_blocks`` with the parent dump's
 Here the whole flow is one declarative plan over a blocks DataFrame:
 
     tree_ordinals (T1, windows)  →  projections P4-P8  →
-    last_wins_dedup (T2, max_by) →  fan-out metadata (T3)
+    last_wins_dedup (T2, max_by)
 
 The input contract is a DataFrame of blocks in depth-first pre-order:
 (course_key, org, location, display_name, block_type, graded,
@@ -29,7 +29,7 @@ from ..functions.derivations import (
     normalize_apostrophes,
     strip_branch_and_version,
 )
-from ..operators.tree import fan_out, last_wins_dedup, tree_ordinals
+from ..operators.tree import last_wins_dedup, tree_ordinals
 
 
 def serialize_course_overviews(overviews: DataFrame, dump_id: Column,
@@ -126,25 +126,16 @@ def course_publish_pipeline(overviews: DataFrame, blocks: DataFrame,
                             dump_id: Column, time_last_dumped: Column,
                             ) -> tuple[DataFrame, DataFrame]:
     """EP1 end-to-end: one call produces both sink tables for a batch of
-    published courses.
+    published courses, so a micro-batch of N courses is two writes, not
+    2·N requests.
 
-    The reference dumps the overview row, then fans out to the nested
-    XBlockSink with the SAME dump_id/time_last_dumped
-    (``base_sink.py:169-203``, ``course_published.py:39-45``). Here the
-    overview side mints the metadata and the block side inherits it by a
-    broadcast join on course_key (T3) — so a micro-batch of N courses is
-    two writes, not 2·N requests.
+    ``dump_id`` and ``time_last_dumped`` are per-call values (literals in
+    every caller) that both tables share: the reference dumps the
+    overview row, then hands the nested XBlockSink the SAME two values as
+    plain arguments (``base_sink.py:184-203``, ``course_published.py:39-45``),
+    so each serializer stamps them directly. A block whose course has no
+    row in ``overviews`` is still serialized; restrict ``blocks`` to the
+    published courses before the call.
     """
-    overview_rows = serialize_course_overviews(overviews, dump_id,
-                                               time_last_dumped)
-    meta = overview_rows.select("course_key", "dump_id", "time_last_dumped")
-    serialized = serialize_course_blocks(
-        blocks, F.lit(None).cast("string"), F.lit(None).cast("string"),
-    ).drop("dump_id", "time_last_dumped")
-    block_rows = fan_out(
-        meta, serialized, "course_key",
-        {"dump_id": "dump_id", "time_last_dumped": "time_last_dumped"},
-    ).select("org", "course_key", "location", "display_name",
-             "xblock_data_json", "order", "edited_on",
-             "dump_id", "time_last_dumped")
-    return overview_rows, block_rows
+    return (serialize_course_overviews(overviews, dump_id, time_last_dumped),
+            serialize_course_blocks(blocks, dump_id, time_last_dumped))

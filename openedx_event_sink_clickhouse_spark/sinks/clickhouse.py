@@ -36,7 +36,7 @@ from __future__ import annotations
 import re
 import time
 from collections.abc import Callable, Iterable
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 from pyspark.sql import DataFrame
 
@@ -68,23 +68,16 @@ def _requests_transport(method: str, url: str, params: dict,
 
 @dataclass
 class ClickHouseConfig:
-    """Connection settings (reference ``settings/common.py:9-19`` +
-    per-call ``connection_overrides``, ``base_sink.py:43-53``)."""
+    """Connection settings (reference ``settings/common.py:9-19``). Where
+    the reference passes per-call ``connection_overrides``
+    (``base_sink.py:43-53``), build a second config. Every INSERT sends
+    ``BULK_INSERT_PARAMS``."""
 
     url: str = "http://localhost:8123"
     username: str = "default"
     password: str = ""
     database: str = "event_sink"
     timeout_secs: float = 5.0
-    insert_params: dict = field(default_factory=lambda: dict(BULK_INSERT_PARAMS))
-
-    def with_overrides(self, overrides: dict | None) -> "ClickHouseConfig":
-        if not overrides:
-            return self
-        merged = {**self.__dict__, **{k: v for k, v in overrides.items()
-                                      if k in self.__dict__}}
-        merged["insert_params"] = dict(merged["insert_params"])  # never share the dict
-        return ClickHouseConfig(**merged)
 
 
 class ClickHouseSink:
@@ -96,10 +89,8 @@ class ClickHouseSink:
         self.transport = transport or _requests_transport
 
     def _insert_query(self, table: str) -> dict:
-        params = dict(self.config.insert_params)
-        params["query"] = (f"INSERT INTO {self.config.database}.{table} "
-                           f"FORMAT CSV")
-        return params
+        query = f"INSERT INTO {self.config.database}.{table} FORMAT CSV"
+        return {**BULK_INSERT_PARAMS, "query": query}
 
     def insert_df(self, df: DataFrame, table: str, *,
                   throttle_secs: float = 0.0,

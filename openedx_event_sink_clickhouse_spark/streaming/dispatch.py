@@ -38,8 +38,7 @@ from pyspark.util import inheritable_thread_target
 Handler = Callable[[DataFrame], None]
 
 
-def dispatch_batch(batch_df: DataFrame, handlers: dict[str, Handler], *,
-                   on_unknown: Callable[[str], None] | None = None) -> None:
+def dispatch_batch(batch_df: DataFrame, handlers: dict[str, Handler]) -> None:
     """Route one micro-batch of publish events (``model``, ``object_id``
     columns, as ``streaming.sources.PUBLISH_EVENT_SCHEMA``) to per-model
     handlers (F2 dispatch).
@@ -52,20 +51,13 @@ def dispatch_batch(batch_df: DataFrame, handlers: dict[str, Handler], *,
     batch; a model absent from the batch reaches its handler as an empty
     frame. The threads inherit the caller's Spark local properties (the
     stream's job group among them). All handlers finish before the first
-    failure, in handler order, is re-raised. ``on_unknown`` costs one
-    extra job, paid only by callers that pass it.
+    failure, in handler order, is re-raised. A model without a handler
+    reaches none (``tasks.py`` drops unknown sinks).
     """
     session = batch_df.sparkSession
     batch_df = batch_df.select("model", "object_id").distinct().cache()
     model = F.col("model")
     try:
-        if on_unknown:
-            # tasks.py logs and drops unknown sinks; surface via hook
-            unknown = ~model.isin(list(handlers)) | model.isNull()
-            for row in (batch_df.filter(unknown).select("model")
-                        .distinct().collect()):
-                on_unknown(row[0])
-
         def run(name: str, handler: Handler) -> None:
             handler(batch_df.filter(model == name).select("object_id"))
 

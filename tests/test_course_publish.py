@@ -1,5 +1,5 @@
-"""EP1 course-publish pipeline: overview serializer golden row + fan-out
-metadata inheritance (reference ``serializers.py:103-153``,
+"""EP1 course-publish pipeline: overview serializer golden row + shared
+dump metadata on both tables (reference ``serializers.py:103-153``,
 ``base_sink.py:169-203``)."""
 
 from __future__ import annotations
@@ -11,9 +11,15 @@ from pyspark.sql import functions as F
 
 from openedx_event_sink_clickhouse_spark.plans.course_publish import (
     course_publish_pipeline,
+    serialize_course_blocks,
     serialize_course_overviews,
 )
+from openedx_event_sink_clickhouse_spark.sinks import (
+    ClickHouseConfig,
+    ClickHouseSink,
+)
 
+from tests.test_incremental import _Jobs
 from tests.test_tree import COLUMNS, COURSE_KEY, course_factory_rows
 
 OVERVIEW_COLUMNS = [
@@ -71,3 +77,41 @@ def test_pipeline_blocks_inherit_overview_dump_metadata(spark):
     assert bl.columns == ["org", "course_key", "location", "display_name",
                           "xblock_data_json", "order", "edited_on",
                           "dump_id", "time_last_dumped"]
+    alone = serialize_course_blocks(blocks, F.lit("dump-xyz"), F.lit(T))
+    assert alone.columns == bl.columns
+    assert sorted(rows) == sorted(alone.collect())
+
+
+def test_pipeline_blocks_plan_has_no_join(spark):
+    # the dump metadata is a per-call literal, stamped on the block rows
+    # directly rather than joined in from the overview rows
+    overviews = spark.createDataFrame([_overview_row()], OVERVIEW_COLUMNS)
+    blocks = spark.createDataFrame(course_factory_rows(), COLUMNS)
+    _, bl = course_publish_pipeline(overviews, blocks, F.lit("d"), F.lit(T))
+    plan = bl._jdf.queryExecution().executedPlan().toString()
+    assert "Join" not in plan
+
+
+def test_course_publish_handler_runs_at_most_eight_jobs(spark, tmp_path):
+    # The publish stream's course handler: restrict both sources to the
+    # published ids, then insert both tables.
+    other = "course-v1:OtherOrg+Other+Run"
+    ov_path, bl_path = str(tmp_path / "ov"), str(tmp_path / "bl")
+    spark.createDataFrame([_overview_row(), _overview_row(other)],
+                          OVERVIEW_COLUMNS).write.parquet(ov_path)
+    spark.createDataFrame(course_factory_rows(), COLUMNS) \
+        .write.parquet(bl_path)
+    sink = ClickHouseSink(ClickHouseConfig(), lambda *call: None)
+    ids = spark.createDataFrame([(COURSE_KEY,)], ["id"])
+    overviews, blocks = spark.read.parquet(ov_path), spark.read.parquet(bl_path)
+
+    with _Jobs(spark) as jobs:
+        ov = overviews.join(ids, "id", "left_semi")
+        bl = blocks.join(ids.withColumnRenamed("id", "course_key"),
+                         "course_key", "left_semi")
+        ov_rows, bl_rows = course_publish_pipeline(ov, bl, F.lit("d"),
+                                                   F.lit(T))
+        n_ov = sink.insert_df(ov_rows, "course_overviews")
+        n_bl = sink.insert_df(bl_rows, "course_blocks")
+    assert (n_ov, n_bl) == (1, 37)
+    assert len(jobs.ids) <= 8

@@ -42,16 +42,16 @@ def test_dispatch_batch_routes_and_dedups(spark, tmp_path):
          ("course_overviews", "c2"), ("user_profile", "u9"),
          ("unknown_model", "x1")],
         ["model", "object_id"])
-    calls, unknown = {}, []
+    calls = {}
     handlers = {
         "course_overviews": lambda ids: calls.setdefault(
             "course_overviews", sorted(r[0] for r in ids.collect())),
         "user_profile": lambda ids: calls.setdefault(
             "user_profile", sorted(r[0] for r in ids.collect())),
     }
-    dispatch_batch(batch, handlers, on_unknown=unknown.append)
+    dispatch_batch(batch, handlers)
+    # unknown_model has no handler and reaches none
     assert calls == {"course_overviews": ["c1", "c2"], "user_profile": ["u9"]}
-    assert unknown == ["unknown_model"]
 
 
 def _two_model_batch(spark):

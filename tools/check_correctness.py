@@ -16,10 +16,12 @@ Usage: python tools/check_correctness.py [sf_dir] [query ...]
 from __future__ import annotations
 
 import hashlib
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
-sys.path.insert(0, "/root/repo/tools")
+TOOLS = os.path.dirname(os.path.abspath(__file__))
+sys.path.insert(0, os.path.dirname(TOOLS))
+sys.path.insert(0, TOOLS)
 
 from strictcmp import strict_cell as norm_cell  # noqa: E402
 
