@@ -10,17 +10,17 @@ command (``management/commands/dump_data_to_clickhouse.py:84-207``):
 
 Option names, validation messages, and semantics mirror the reference
 (limit>0, limit×force mutually exclusive, --object required). The sink is
-parquet-by-default so the command is runnable in this container; passing
-``--url`` switches to the ClickHouse HTTP sink, matching the reference's
-connection overrides (lines 96-136).
+parquet by default, so the command runs without a ClickHouse server;
+passing ``--url`` switches to the ClickHouse HTTP sink, matching the
+reference's connection overrides (lines 96-136). ``--sleep_time`` is a
+pause after each ClickHouse POST only: the parquet sink ignores it and
+writes ``--batch_size`` as each file's ``maxRecordsPerFile``.
 """
 
 from __future__ import annotations
 
 import argparse
 import sys
-
-from pyspark.sql import functions as F
 
 from .plans.backfill import BackfillOptions, run_backfill
 from .session import get_spark
@@ -66,15 +66,19 @@ def build_parser() -> argparse.ArgumentParser:
     p.add_argument("--ids_to_skip", nargs="*", type=int, default=None)
     p.add_argument("--force", action="store_true")
     p.add_argument("--limit", type=int, default=None)
-    p.add_argument("--batch_size", type=int, default=10_000)
-    p.add_argument("--sleep_time", type=float, default=1.0)
+    p.add_argument("--batch_size", type=int, default=10_000,
+                   help="rows per ClickHouse POST, or per parquet file")
+    p.add_argument("--sleep_time", type=float, default=1.0,
+                   help="seconds to sleep after each ClickHouse POST "
+                        "(ignored by the parquet sink)")
     p.add_argument("--url", default=None, help="ClickHouse HTTP endpoint")
     p.add_argument("--database", default="event_sink")
     return p
 
 
-# key/modified-column registry per source table (the reference resolves
-# this from sink class attributes, base_sink.py:82-131)
+# F2 for the backfill: each source table's key and modified column (None:
+# the table has none), which the reference reads from its sink class
+# attributes (base_sink.py:82-131)
 TABLE_KEYS = {
     "events": ("event_id", "ts"),
     "orders": ("o_orderkey", "o_orderdate"),
@@ -104,9 +108,6 @@ def main(argv: list[str] | None = None) -> int:
     spark = get_spark("dump-cli")
     key, modified = TABLE_KEYS[args.object_name]
     source = load_table(spark, args.object_name, args.sf_dir)
-    if modified is None:
-        source = source.withColumn("_modified", F.current_timestamp())
-        modified = "_modified"
 
     if args.url:
         from .sinks.clickhouse import ClickHouseConfig, ClickHouseSink

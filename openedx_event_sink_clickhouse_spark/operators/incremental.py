@@ -8,14 +8,18 @@ The reference issues ONE ClickHouse round-trip PER candidate item:
 
 Spark-first design: both sides are DataFrames, so the whole decision
 collapses into one set-oriented plan. A2 is one tri-state rule,
-``should_dump_item``'s, in two forms that select the same rows:
+``should_dump_item``'s, written once as the SQL predicate "a dump of
+this key supersedes the row" (:func:`_superseded`)::
+
+    ts IS NOT NULL AND (modified IS NULL OR ts >= modified)
+
+and applied in two forms that select the same rows:
 
 - :func:`classify_changes` joins the aggregated watermark —
 
       watermarks = sink.groupBy(key).agg(max(ts))        # A1, map-side partial agg
       candidates LEFT JOIN watermarks USING (key)        # broadcast if small
-      should_dump = last_dump IS NULL                    # never dumped
-                    OR (modified IS NOT NULL AND modified > last_dump)
+      should_dump = NOT superseded(last_dump, modified)
 
   and annotates every candidate with ``should_dump`` and the
   reference's reason, which needs ``last_dump`` at hand. Aggregating
@@ -24,8 +28,7 @@ collapses into one set-oriented plan. A2 is one tri-state rule,
 - :func:`changed_since_dump` anti-joins the raw history —
 
       candidates s LEFT ANTI JOIN sink h
-        ON s.key = h.key AND h.ts IS NOT NULL
-       AND (s.modified IS NULL OR h.ts >= s.modified)
+        ON s.key = h.key AND superseded(h.ts, s.modified)
 
   which keeps only the ``should_dump`` rows and needs no aggregate, so no
   shuffle: the history is broadcast as it is scanned, one job fewer per
@@ -56,6 +59,14 @@ def watermarks(sink_df: DataFrame, key: str, ts_col: str) -> DataFrame:
     return sink_df.groupBy(key).agg(F.max(ts_col).alias("last_dump"))
 
 
+def _superseded(ts: str, modified: str) -> str:
+    """SQL text of the change rule: a dump at ``ts`` supersedes a row
+    modified at ``modified``. True when the dump time is non-NULL and not
+    older than ``modified``, or ``modified`` is NULL; never NULL itself.
+    A row is dumped iff no dump of its key supersedes it."""
+    return f"{ts} IS NOT NULL AND ({modified} IS NULL OR {ts} >= {modified})"
+
+
 def classify_changes(candidates: DataFrame, sink_df: DataFrame, key: str,
                      modified_col: str, sink_ts_col: str) -> DataFrame:
     """A2 — every candidate annotated with ``should_dump`` and
@@ -71,28 +82,23 @@ def classify_changes(candidates: DataFrame, sink_df: DataFrame, key: str,
     """
     joined = candidates.join(watermarks(sink_df, key, sink_ts_col),
                              on=key, how="left")
-    never = F.col("last_dump").isNull()
-    no_mtime = F.col(modified_col).isNull()
-    newer = F.col(modified_col) > F.col("last_dump")
-    last_dump = F.col("last_dump").cast("string")
-    modified = F.col(modified_col).cast("string")
+    mod = quote_ident(modified_col)
+
+    def published(since: str, op: str) -> str:
+        return (f"concat('Course has {since} published since last dump time "
+                f"- last dumped ', CAST(last_dump AS STRING), ' {op} last "
+                f"published ', CAST({mod} AS STRING))")
+
     return (joined
             .withColumn("should_dump",
-                        F.when(never, True)
-                         .when(no_mtime, False)
-                         .otherwise(newer))
-            .withColumn(
-                "dump_reason",
-                F.when(never, F.lit("Course is not present in ClickHouse"))
-                 .when(no_mtime, F.lit("No last modified date in CourseOverview"))
-                 .when(newer, F.concat(
-                     F.lit("Course has been published since last dump time - "
-                           "last dumped "),
-                     last_dump, F.lit(" < last published "), modified))
-                 .otherwise(F.concat(
-                     F.lit("Course has NOT been published since last dump "
-                           "time - last dumped "),
-                     last_dump, F.lit(" >= last published "), modified)))
+                        F.expr(f"NOT ({_superseded('last_dump', mod)})"))
+            .withColumn("dump_reason", F.expr(
+                "CASE WHEN last_dump IS NULL "
+                "THEN 'Course is not present in ClickHouse' "
+                f"WHEN {mod} IS NULL "
+                "THEN 'No last modified date in CourseOverview' "
+                f"WHEN should_dump THEN {published('been', '<')} "
+                f"ELSE {published('NOT been', '>=')} END"))
             .drop("last_dump"))
 
 
@@ -102,14 +108,12 @@ def changed_since_dump(candidates: DataFrame, sink_df: DataFrame, key: str,
     ``should_dump`` rows of :func:`classify_changes`, without the
     watermark aggregate or the annotations.
 
-    A candidate is skipped when some history row of its key has a
-    non-NULL dump time that is not older than its ``modified``, or any
-    non-NULL dump time when ``modified`` is NULL. So a key with no history,
-    or only NULL dump times, is dumped (``last_dump IS NULL``); a NULL
-    ``modified`` with a dump time is skipped; otherwise the row is dumped
-    iff ``modified`` is strictly newer than every dump time, i.e. than
-    their max. A NULL key matches nothing and is dumped, as by the outer
-    join.
+    A candidate is skipped when some history row of its key supersedes
+    it (:func:`_superseded`). Since only non-NULL dump times supersede, a
+    key with no history, or only NULL dump times, is dumped
+    (``last_dump IS NULL``); since one dump supersedes iff the latest
+    does, the rule reads the same against the raw rows as against their
+    max. A NULL key matches nothing and is dumped, as by the outer join.
 
     The plan is the history scan, filtered on ``ts IS NOT NULL`` and
     broadcast when small, probed by the candidate scan: no exchange and no
@@ -119,8 +123,7 @@ def changed_since_dump(candidates: DataFrame, sink_df: DataFrame, key: str,
     k, mod, ts = map(quote_ident, (key, modified_col, sink_ts_col))
     out = candidates.alias("s").join(
         sink_df.alias("h"),
-        F.expr(f"s.{k} = h.{k} AND h.{ts} IS NOT NULL "
-               f"AND (s.{mod} IS NULL OR h.{ts} >= s.{mod})"),
+        F.expr(f"s.{k} = h.{k} AND {_superseded(f'h.{ts}', f's.{mod}')}"),
         "left_anti")
     cols = candidates.columns
     if cols[0] == key:

@@ -97,15 +97,19 @@ def select_dump_batch(classified: DataFrame, key: str,
 
 
 def run_backfill(source: DataFrame, sink_history: DataFrame | None, sink,
-                 table: str, *, key: str, modified_col: str, sink_ts_col: str,
+                 table: str, *, key: str, modified_col: str | None,
+                 sink_ts_col: str,
                  opts: BackfillOptions | None = None) -> int:
     """Full EP3: scope → change-detect → limit → partition-batched insert
     with throttle. Returns the number of rows dumped.
 
-    With ``force`` or no history every scoped row is dumped; otherwise
-    the batch is :func:`~..operators.incremental.changed_since_dump` of
-    the scoped rows, ``key`` first (the column order
-    :func:`select_dump_batch` gives)."""
+    With ``force`` or no history every scoped row is dumped, with the
+    source's columns; otherwise the batch is
+    :func:`~..operators.incremental.changed_since_dump` of the scoped
+    rows, ``key`` first (the column order :func:`select_dump_batch`
+    gives). ``modified_col`` and ``sink_ts_col`` are read only when there
+    is a history and no ``force``, so a caller that passes no history may
+    pass ``None`` for a source without a modified column."""
     opts = opts or BackfillOptions()
     opts.validate()
     batch = _scope(source, key, opts)

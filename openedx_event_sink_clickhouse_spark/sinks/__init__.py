@@ -1,6 +1,4 @@
 from .clickhouse import ClickHouseConfig, ClickHouseSink
 from .csv_encode import encode_csv_lines
-from .registry import SinkRegistry
 
-__all__ = ["ClickHouseConfig", "ClickHouseSink", "encode_csv_lines",
-           "SinkRegistry"]
+__all__ = ["ClickHouseConfig", "ClickHouseSink", "encode_csv_lines"]

@@ -41,7 +41,12 @@ Handler = Callable[[DataFrame], None]
 def dispatch_batch(batch_df: DataFrame, handlers: dict[str, Handler]) -> None:
     """Route one micro-batch of publish events (``model``, ``object_id``
     columns, as ``streaming.sources.PUBLISH_EVENT_SCHEMA``) to per-model
-    handlers (F2 dispatch).
+    handlers.
+
+    ``handlers`` is the reference's sink lookup and its gating in one
+    map: F2 (``get_sink_by_model_name``, ``base_sink.py:360-369``) is the
+    lookup of a model name in it, and F3 (the per-sink enabled flags,
+    ``base_sink.py:337-358``) is which handlers a deployment passes in.
 
     Entities are deduplicated within the batch — N publish events for one
     course in one epoch trigger ONE dump, a set-oriented improvement the

@@ -45,6 +45,21 @@ def test_end_to_end_dump_with_ids_and_limit(spark, tmp_path, capsys):
     assert dumped.count() == 7
 
 
+def test_dump_of_table_without_modified_column_keeps_its_columns(
+        spark, sf_dir, tmp_path, capsys):
+    # customer has no modified column: the CLI sends the source's own
+    # columns, so every CSV field lines up with the ClickHouse table
+    from openedx_event_sink_clickhouse_spark.sources.tables import load_table
+    rc = main(["--object", "customer", "--sf-dir", sf_dir,
+               "--output", str(tmp_path), "--limit", "3",
+               "--sleep_time", "0"])
+    assert rc == 0
+    assert "dumped 3 rows of customer" in capsys.readouterr().out
+    dumped = spark.read.parquet(str(tmp_path / "customer"))
+    assert dumped.columns == load_table(spark, "customer", sf_dir).columns
+    assert dumped.count() == 3
+
+
 def test_get_spark_returns_live_session_untouched(spark):
     # Library entry points must not re-apply builder confs onto a live
     # session (Spark merges a reused builder's runtime SQL confs into

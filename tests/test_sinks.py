@@ -1,4 +1,4 @@
-"""Sink framework K1-K3, D1 wire parity, F2/F3 registry/gating, EP3
+"""Sink framework K1-K3, D1 wire parity, EP3
 backfill — mirroring the reference's wire-boundary golden tests
 (``test_utils/helpers.py:179-194,240-336``, ``tests/test_user_retire.py``)."""
 
@@ -19,10 +19,8 @@ from openedx_event_sink_clickhouse_spark.plans.backfill import (
 from openedx_event_sink_clickhouse_spark.sinks import (
     ClickHouseConfig,
     ClickHouseSink,
-    SinkRegistry,
     encode_csv_lines,
 )
-from openedx_event_sink_clickhouse_spark.sinks.registry import SinkSpec
 
 
 class CaptureTransport:
@@ -156,25 +154,6 @@ def test_retire_delete_rejects_non_integer_ids(bad):
     with pytest.raises(ValueError, match="decimal integers"):
         sink.delete_where_user_ids([42, bad], ["user_profile", "external_id"])
     assert transport.calls == []
-
-
-def test_registry_dispatch_and_gating():
-    reg = SinkRegistry(settings={
-        "EVENT_SINK_CLICKHOUSE_COURSE_OVERVIEWS_ENABLED": True,
-        "event_sink_clickhouse.user_profile.enabled": True,
-    })
-    reg.register(SinkSpec("course_overviews", "course_key",
-                          "course_overviews", "time_last_dumped", "Course Overview"))
-    reg.register(SinkSpec("user_profile", "id", "user_profile",
-                          "time_last_dumped", "User Profile"))
-    reg.register(SinkSpec("external_id", "id", "external_id",
-                          "time_last_dumped", "External ID"))
-    assert reg.get_by_model_name("user_profile").table_name == "user_profile"
-    assert reg.get_by_model_name("nope") is None          # F2: unknown → None
-    assert reg.is_enabled("course_overviews")             # static flag
-    assert reg.is_enabled("user_profile")                 # dynamic flag
-    assert not reg.is_enabled("external_id")              # default False
-    assert set(reg.enabled_models()) == {"course_overviews", "user_profile"}
 
 
 @pytest.fixture()
