@@ -110,16 +110,19 @@ def serialize_course_blocks(blocks: DataFrame, dump_id: Column,
         F.col("order"),
         # str(edited_on) at the wire edge (course_published.py:122)
         F.col("edited_on").cast("string").alias("edited_on"),
-        dump_id.alias("dump_id"),
-        time_last_dumped.alias("time_last_dumped"),
     )
     # T2: duplicate canonical locations — later traversal index wins
     # (course_published.py:90-94 dict overwrite). Reselect to the sink CSV
-    # column order (course_published.py:115-125) after the dedup agg.
+    # column order (course_published.py:115-125) after the dedup agg. The
+    # dump metadata is one value per call, so it is stamped after the
+    # dedup, where the wire encoding folds it into a constant; inside the
+    # aggregate's payload a timestamp literal is compiled into generated
+    # code, so every call (every epoch) would compile a class again.
     deduped = last_wins_dedup(serialized, ["course_key", "location"], "order")
     return deduped.select("org", "course_key", "location", "display_name",
                           "xblock_data_json", "order", "edited_on",
-                          "dump_id", "time_last_dumped")
+                          dump_id.alias("dump_id"),
+                          time_last_dumped.alias("time_last_dumped"))
 
 
 def course_publish_pipeline(overviews: DataFrame, blocks: DataFrame,

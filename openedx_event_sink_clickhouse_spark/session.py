@@ -23,6 +23,16 @@ Scale posture (designed for a 1000-executor cluster, tested on local[32]):
   (``spark.executorEnv.PYTHONPATH``, which PySpark merges with the JVM's
   ``PYTHONPATH``): a driver that imports the package through its own
   ``sys.path`` alone can still start the daemon and unpickle tasks.
+- A local master lists files on the driver
+  (``spark.sql.sources.parallelPartitionDiscovery.threshold`` at its
+  maximum). A streaming file source builds a file index over each
+  micro-batch's files; above 32 paths (the default) that ran a Spark job
+  with one task per file every epoch, which in local mode only adds
+  scheduling on the driver's own cores (a publish epoch of ~95 files:
+  127 → 32 tasks). A cluster master keeps Spark's distributed listing,
+  which is faster against S3 or HDFS. The conf is held for the session's
+  whole life: a streaming query clones its session on its own thread
+  after ``start()``, so a conf set around ``start()`` does not reach it.
 """
 
 from __future__ import annotations
@@ -54,7 +64,10 @@ def get_spark(app_name: str = "openedx-event-sink-spark", master: str | None = N
     on 3.13+), and puts the package's parent directory on the workers'
     ``PYTHONPATH``; ``extra_conf`` can override either like any conf.
     Both are static, so :func:`tune_session` cannot give them to an
-    external session."""
+    external session. A local master also lists every file index on the
+    driver, where Spark would run a listing job above 32 paths (a
+    stream's micro-batch of files, every epoch); a cluster master keeps
+    Spark's distributed listing."""
     active = SparkSession.getActiveSession()
     if active is not None:
         if master is not None or extra_conf:
@@ -86,6 +99,11 @@ def get_spark(app_name: str = "openedx-event-sink-spark", master: str | None = N
                 "openedx_event_sink_clickhouse_spark.pyworker")
         .config("spark.executorEnv.PYTHONPATH", _PACKAGE_PARENT)
     )
+    if master.startswith("local"):
+        # list every file index on the driver (see the module docstring)
+        builder = builder.config(
+            "spark.sql.sources.parallelPartitionDiscovery.threshold",
+            str(2**31 - 1))
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     return builder.getOrCreate()

@@ -80,5 +80,15 @@ def kafka_publish_stream(spark: SparkSession, bootstrap_servers: str,
 
 def file_publish_stream(spark: SparkSession, path: str) -> DataFrame:
     """File-arrival publish events (backfill/catch-up, and the test
-    stand-in for the broker)."""
+    stand-in for the broker).
+
+    Each trigger lists ``path`` for new files, then builds the micro-batch
+    over a file index of exactly those files, which stats each one again.
+    Above ``spark.sql.sources.parallelPartitionDiscovery.threshold`` files
+    (32 by default) Spark runs that stat as a Spark job with one task per
+    file, every epoch: 95 of a 127-task publish epoch, and 0.4-0.9 s of
+    its trigger. A local session from ``session.get_spark`` lifts the
+    threshold, so the stat runs on the driver with no job (~15 ms); on a
+    cluster it stays a distributed job, which is faster against S3 or
+    HDFS."""
     return spark.readStream.schema(PUBLISH_EVENT_SCHEMA).parquet(path)

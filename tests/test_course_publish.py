@@ -18,6 +18,9 @@ from openedx_event_sink_clickhouse_spark.sinks import (
     ClickHouseConfig,
     ClickHouseSink,
 )
+from openedx_event_sink_clickhouse_spark.sinks.csv_encode import (
+    encode_csv_lines,
+)
 
 from tests.test_incremental import _Jobs
 from tests.test_tree import COLUMNS, COURSE_KEY, course_factory_rows
@@ -115,3 +118,20 @@ def test_course_publish_handler_runs_at_most_eight_jobs(spark, tmp_path):
         n_bl = sink.insert_df(bl_rows, "course_blocks")
     assert (n_ov, n_bl) == (1, 37)
     assert len(jobs.ids) <= 8
+
+
+def test_course_blocks_new_dump_time_compiles_no_class(spark):
+    # the dump metadata differs on every publish; a warm call with a new
+    # dump time must reuse the generated classes of the last one
+    blocks = spark.createDataFrame(course_factory_rows(), COLUMNS)
+    codegen = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+
+    def encode(i):
+        when = T + dt.timedelta(seconds=i)
+        rows = serialize_course_blocks(blocks, F.lit(f"d{i}"), F.lit(when))
+        before = codegen.METRIC_COMPILATION_TIME().getCount()
+        assert len(encode_csv_lines(rows).collect()) == 37
+        return codegen.METRIC_COMPILATION_TIME().getCount() - before
+
+    encode(0)
+    assert encode(1) == 0

@@ -6,14 +6,17 @@ factor so a regression in any operator/oracle pair fails fast."""
 
 from __future__ import annotations
 
+import sys
+from pathlib import Path
+
 import duckdb
 import pytest
 
 from openedx_event_sink_clickhouse_spark import registry
 from openedx_event_sink_clickhouse_spark.sources.tables import TABLES
 
-import sys
-sys.path.insert(0, "/root/repo")
+# this checkout's tool, whichever checkout the suite runs from
+sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 from tools.check_correctness import table_hash  # noqa: E402
 
 SF_DIR = "/root/testdata/sf0.001"

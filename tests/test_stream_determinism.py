@@ -13,12 +13,14 @@ harness session could differ from a vanilla one."""
 from __future__ import annotations
 
 import sys
+from pathlib import Path
 
 import pytest
 
 from openedx_event_sink_clickhouse_spark import registry
 
-sys.path.insert(0, "/root/repo")
+# this checkout's tool, whichever checkout the suite runs from
+sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 from tools.check_correctness import table_hash  # noqa: E402
 
 STREAM_QUERIES = [

@@ -9,6 +9,8 @@ import os
 import threading
 import time
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 
@@ -208,6 +210,39 @@ def test_run_dispatch_stream_end_to_end(spark, tmp_path, make_source):
     got = {p[:-5]: json.load(open(out / p, encoding="utf-8"))
            for p in os.listdir(out)}
     assert got == {"course_overviews": ["c1", "c2"], "user_profile": ["u1"]}
+
+
+def test_run_dispatch_stream_lists_batch_files_on_the_driver(spark, tmp_path):
+    # 40 event files is above Spark's parallel-listing threshold (32); a
+    # local session still lists the micro-batch's files on the driver,
+    # with no Spark job
+    src = tmp_path / "publish"
+    src.mkdir()
+    ids = [f"e{i:02d}" for i in range(40)]
+    for i, object_id in enumerate(ids):
+        pq.write_table(pa.table({
+            "model": [("a", "b")[i % 2]], "object_id": [object_id],
+            "ts": pa.array([0], pa.timestamp("us", tz="UTC"))}),
+            str(src / f"{object_id}.parquet"))
+    got = {"a": [], "b": []}
+
+    def handler(model):
+        return lambda batch: got[model].extend(r[0] for r in batch.collect())
+
+    q = run_dispatch_stream(file_publish_stream(spark, str(src)),
+                            {m: handler(m) for m in got},
+                            checkpoint_dir=str(tmp_path / "ckpt"))
+    assert q.awaitTermination(60)
+    assert sorted(got["a"] + got["b"]) == ids
+    assert sorted(got["a"]) == ids[::2]
+
+    jsc = spark.sparkContext._jsc.sc()
+    jsc.listenerBus().waitUntilEmpty()
+    jobs = spark.sparkContext.statusTracker().getJobIdsForGroup(str(q.runId))
+    assert jobs
+    descriptions = [jsc.statusStore().job(j).description() for j in jobs]
+    assert not [d.get() for d in descriptions
+                if d.isDefined() and d.get().startswith("Listing leaf files")]
 
 
 def test_kafka_decode_corrupt_values_dead_letter(spark):
