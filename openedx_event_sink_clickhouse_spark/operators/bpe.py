@@ -184,80 +184,3 @@ def bpe_encode_stats(docs: DataFrame, merges: list[tuple[str, str]],
     return docs.select(F.col(id_col), F.col(text_col)) \
                .mapInPandas(fn, schema=BPE_SCHEMA)
 
-
-def bpe_train_distributed(docs: DataFrame, n_merges: int = 200,
-                          text_col: str = "text") -> list[tuple[str, str]]:
-    """Fully distributed BPE trainer: the merge loop's heavy work — pair
-    counting and merge application — runs as Spark jobs over the
-    (symbols, count) vocabulary table, so the driver never holds the
-    vocabulary at all (it collects exactly ONE row per round: the
-    winning pair). This removes :func:`bpe_train`'s only driver-CPU
-    bound, O(vocab·symbols·n_merges), for corpora whose vocabulary must
-    be trained EXACTLY (no ``max_vocab`` head cut) — the open-vocabulary
-    100 TB case (VERDICT r8 "What's wrong" #3).
-
-    Per round, both jobs are vocabulary-scale, not corpus-scale:
-
-    1. **top pair**: adjacent pairs via ``transform(sequence(...))``
-       (stays one array cell per word type — no token-stream explosion),
-       weighted groupBy-sum, then a deterministic TakeOrdered(1) with
-       the driver trainer's exact tie-break (count desc, then
-       lexicographic pair).
-    2. **merge**: one ``aggregate`` HOF fold per word — greedy
-       left-to-right non-overlapping replacement (the ``prev``-carrying
-       state makes a merged product unavailable as the left element of
-       the next match, exactly :func:`_merge_word`'s ``i += 2``) —
-       followed by ``localCheckpoint`` to cut the per-round lineage
-       (the PageRank discipline in ``operators/graph.py``; without it
-       round N's plan nests N aggregate-HOF projections and Catalyst
-       analysis time explodes).
-
-    Merges are bit-identical to :func:`bpe_train` on the same corpus
-    (test-pinned); choose by vocabulary size: driver loop below
-    ``max_vocab``, this above it."""
-    spark = docs.sparkSession
-    empty = F.array().cast("array<string>")
-    sym = F.col("sym")
-    vocab = (word_frequencies(docs, text_col)
-             # chars + EOW, one array cell per word type; distinct words
-             # keep distinct symbol sequences under every merge, so no
-             # re-grouping is ever needed
-             .select(F.concat(F.split("word", ""),
-                              F.array(F.lit(EOW))).alias("sym"),
-                     F.col("c"))
-             .localCheckpoint(eager=True))
-    merges: list[tuple[str, str]] = []
-    for _ in range(n_merges):
-        # fully-merged words collapse to ONE symbol; Spark's sequence(1, 0)
-        # runs DESCENDING, so size>1 must gate the pair expansion
-        pairs = (vocab.filter(F.size(sym) > 1)
-                 .select(
-                     F.explode(F.transform(
-                         F.sequence(F.lit(1), F.size(sym) - 1),
-                         lambda i: F.struct(
-                             F.element_at(sym, i).alias("a"),
-                             F.element_at(sym, i + 1).alias("b"))))
-                     .alias("p"), "c")
-                 .groupBy(F.col("p.a").alias("a"), F.col("p.b").alias("b"))
-                 .agg(F.sum("c").alias("n")))
-        top = pairs.orderBy(F.desc("n"), "a", "b").limit(1).collect()
-        if not top or top[0]["n"] < 2:
-            break
-        a, b = top[0]["a"], top[0]["b"]
-        merges.append((a, b))
-        la, lb, prod = F.lit(a), F.lit(b), F.lit(a + b)
-        flush = lambda acc: F.when(
-            acc["prev"] != "",
-            F.concat(acc["out"], F.array(acc["prev"]))).otherwise(acc["out"])
-        merged = F.aggregate(
-            sym,
-            F.struct(empty.alias("out"), F.lit("").alias("prev")),
-            lambda acc, x: F.when(
-                (acc["prev"] == la) & (x == lb),
-                F.struct(F.concat(acc["out"], F.array(prod)).alias("out"),
-                         F.lit("").alias("prev")))
-            .otherwise(F.struct(flush(acc).alias("out"), x.alias("prev"))),
-            flush)
-        vocab = (vocab.select(merged.alias("sym"), "c")
-                 .localCheckpoint(eager=True))
-    return merges

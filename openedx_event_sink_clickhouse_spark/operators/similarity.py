@@ -1220,75 +1220,6 @@ def pq_codebooks_from_first_k(emb: DataFrame, m: int = 8,
     return [[v[s * sub:(s + 1) * sub] for v in vecs] for s in range(m)]
 
 
-def pq_codebooks_kmeans(emb: DataFrame, m: int = 8, n_centroids: int = 16,
-                        n_iter: int = 5, id_col: str = "vec_id",
-                        vec_col: str = "embedding",
-                        dim: int | None = None,
-                        sample_n: int | None = None
-                        ) -> list[list[list[float]]]:
-    """Production-quality PQ codebooks: per-subspace L2 k-means (the
-    standard PQ fit), closing :func:`pq_codebooks_from_first_k`'s
-    "swap in per-subspace k-means" promise as code. Same return shape,
-    identical search path (:func:`pq_encode` / :func:`pq_topk`).
-
-    One Spark job per Lloyd round fits ALL ``m`` subspaces at once —
-    not m separate k-means runs: vectors explode into (s, subvector)
-    rows (same total floats, m× the row count), each row argmin-assigns
-    against its OWN subspace's broadcast centroids (squared L2, ties
-    to the lower cid), and one groupBy(s, cid) emits every per-
-    component mean. Per round the shuffle carries m·k·(dim/m) = k·dim
-    doubles — the k-means communication pattern. ``sample_n`` is the
-    100 TB lever (:func:`kmeans_centroids`'s md5-ordered deterministic
-    sample, materialized once). Empty cells keep their previous
-    centroid; init = first ``n_centroids`` vectors' subvectors by id
-    (the first-k convention, so n_iter=0 degenerates to it)."""
-    dim = _vec_dim(emb, vec_col, dim)
-    if dim % m:
-        raise ValueError(f"dim {dim} not divisible by m={m}")
-    sub = dim // m
-    base = emb.select(F.col(id_col).alias("id"),
-                      as_double(F.col(vec_col)).alias("v"))
-    if sample_n is not None:
-        from ..functions.hashes import md5_hash64
-        base = (base.orderBy(md5_hash64(F.col("id").cast("string")), "id")
-                .limit(sample_n))
-    subv = base.select("id", F.explode(F.array(*[
-        F.struct(F.lit(s).alias("s"),
-                 F.slice("v", s * sub + 1, sub).alias("sv"))
-        for s in range(m)])).alias("x")).select("id", "x.s", "x.sv")
-    subv = subv.persist()
-    try:
-        head = (subv.filter(F.col("id") < n_centroids)
-                if sample_n is None else
-                subv.join(base.orderBy("id").limit(n_centroids)
-                          .select("id"), "id"))
-        init = head.orderBy("id", "s").collect()
-        books: list[list[list[float]]] = [[None] * n_centroids
-                                          for _ in range(m)]
-        for i, r in enumerate(init):
-            books[r["s"]][i // m] = [float(x) for x in r["sv"]]
-        for _ in range(n_iter):
-            lit = F.expr(_pq_cb_literal(books))
-            d2 = lambda j: F.aggregate(
-                F.zip_with(F.col("sv"), lit[F.col("s")][j],
-                           lambda a, b: (a - b) * (a - b)),
-                F.lit(0.0), lambda acc, x: acc + x)
-            best = F.array_min(F.array(*[
-                F.struct(d2(j).alias("d"), F.lit(j).alias("j"))
-                for j in range(n_centroids)]))["j"]
-            stats = (subv.withColumn("j", best)
-                     .groupBy("s", "j")
-                     .agg(*[F.avg(F.col("sv")[i]).alias(f"c{i}")
-                            for i in range(sub)]))
-            got = {(r["s"], r["j"]): [r[f"c{i}"] for i in range(sub)]
-                   for r in stats.collect()}
-            books = [[got.get((s, j), books[s][j])
-                      for j in range(n_centroids)] for s in range(m)]
-        return books
-    finally:
-        subv.unpersist()
-
-
 def _pq_cb_literal(codebooks: list[list[list[float]]]) -> str:
     """The m×k×sub codebook as ONE parsed SQL literal (see
     :func:`srp_signature` for why one string beats py4j element walks)."""

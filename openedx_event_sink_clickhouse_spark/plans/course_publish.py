@@ -25,6 +25,7 @@ from pyspark.sql import functions as F
 from ..functions.derivations import (
     DETACHED_XBLOCK_TYPES,
     bool_flag,
+    json_pack,
     member_flag,
     normalize_apostrophes,
     strip_branch_and_version,
@@ -43,18 +44,18 @@ def serialize_course_overviews(overviews: DataFrame, dump_id: Column,
     appended (P2/P3). Input contract: one row per course with the model's
     source column names.
     """
-    course_data_json = F.to_json(F.struct(
-        F.col("advertised_start"),
-        F.col("announcement"),
+    course_data_json = json_pack(
+        "advertised_start",
+        "announcement",
         F.col("lowest_passing_grade").cast("double").alias("lowest_passing_grade"),
-        F.col("invitation_only"),
-        F.col("max_student_enrollments_allowed"),
-        F.col("effort"),
-        F.col("enable_proctored_exams"),
-        F.col("entrance_exam_enabled"),
-        F.col("external_id"),
-        F.col("language"),
-    ), {"ignoreNullFields": "false"})
+        "invitation_only",
+        "max_student_enrollments_allowed",
+        "effort",
+        "enable_proctored_exams",
+        "entrance_exam_enabled",
+        "external_id",
+        "language",
+    )
     return overviews.select(
         F.col("org"),
         F.col("id").cast("string").alias("course_key"),
@@ -90,16 +91,16 @@ def serialize_course_blocks(blocks: DataFrame, dump_id: Column,
     course = F.split(key_body, r"\+").getItem(1)
     run = F.split(key_body, r"\+").getItem(2)
 
-    xblock_json = F.to_json(F.struct(
+    xblock_json = json_pack(
         course.alias("course"),
         run.alias("run"),
-        F.col("block_type").alias("block_type"),
+        "block_type",
         member_flag(F.col("block_type"), DETACHED_XBLOCK_TYPES).alias("detached"),
         bool_flag(F.coalesce(F.col("graded"), F.lit(False))).alias("graded"),
         F.coalesce(F.col("completion_mode"), F.lit("unknown"))
          .alias("completion_mode"),
-        F.col("section"), F.col("subsection"), F.col("unit"),
-    ), {"ignoreNullFields": "false"})
+        "section", "subsection", "unit",
+    )
 
     serialized = with_ordinals.select(
         F.col("org"),

@@ -42,6 +42,16 @@ import os
 from pyspark.sql import SparkSession
 
 DEFAULT_SHUFFLE_PARTITIONS = os.environ.get("SPARK_GRAFT_CPUS", "32")
+# The runtime-settable defaults: get_spark's builder sets them on a new
+# session, tune_session on an external one (a vanilla session defaults
+# to 200 shuffle partitions; AQE coalesces below the count anyway).
+_RUNTIME_CONFS = (
+    ("spark.sql.session.timeZone", "UTC"),
+    ("spark.sql.shuffle.partitions", DEFAULT_SHUFFLE_PARTITIONS),
+    ("spark.sql.adaptive.enabled", "true"),
+    ("spark.sql.adaptive.coalescePartitions.enabled", "true"),
+    ("spark.sql.adaptive.skewJoin.enabled", "true"),
+)
 # the directory the package is imported from, for the Python workers
 _PACKAGE_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
@@ -85,11 +95,7 @@ def get_spark(app_name: str = "openedx-event-sink-spark", master: str | None = N
     builder = (
         SparkSession.builder.appName(app_name)
         .master(master)
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.shuffle.partitions", DEFAULT_SHUFFLE_PARTITIONS)
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
+        .config(map=dict(_RUNTIME_CONFS))
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.parquet.filterPushdown", "true")
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
@@ -112,11 +118,6 @@ def get_spark(app_name: str = "openedx-event-sink-spark", master: str | None = N
 def tune_session(spark: SparkSession) -> SparkSession:
     """Apply the engine's runtime-settable defaults to an externally
     created session (the driver harness hands us its own SparkSession)."""
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    # runtime-settable; the driver's vanilla session defaults to 200 —
-    # size to the local core count (AQE coalesces below it anyway)
-    spark.conf.set("spark.sql.shuffle.partitions", DEFAULT_SHUFFLE_PARTITIONS)
-    spark.conf.set("spark.sql.adaptive.enabled", "true")
-    spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "true")
-    spark.conf.set("spark.sql.adaptive.skewJoin.enabled", "true")
+    for key, value in _RUNTIME_CONFS:
+        spark.conf.set(key, value)
     return spark

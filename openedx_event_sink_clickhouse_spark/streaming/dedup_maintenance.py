@@ -18,8 +18,8 @@ Replay safety (foreachBatch is at-least-once), split by write kind:
 - **survivors** and the **index epochs** are partition-overwrite
   idempotent (the ``sketch_maintenance`` reduction): a replayed epoch
   overwrites exactly its own dirs, converging to one copy.
-- **labels** are non-idempotent (a merge), so they use the
-  ``Scd2StreamMaintainer`` protocol: write-beside → atomic rename swap,
+- **labels** are non-idempotent (a merge), so they use a generation
+  swap: write-beside → atomic rename swap,
   with an EXACT-match ``_epoch`` marker as the commit point, written
   LAST — a replay of a fully-committed epoch is a no-op; a crash
   anywhere earlier replays against the pre-epoch label table. A replay
@@ -72,7 +72,7 @@ class DedupStreamMaintainer:
         self.threshold = threshold
         self.checkpoint_dir = checkpoint_dir
 
-    # -- crash recovery (the Scd2StreamMaintainer discipline) -------------
+    # -- crash recovery (a stranded .old generation renames back) ---------
 
     def _recover_stranded(self) -> None:
         if not os.path.isdir(self.labels_path):

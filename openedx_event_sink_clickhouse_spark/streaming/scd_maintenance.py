@@ -1,8 +1,7 @@
 """Streaming SCD2 history maintenance: a ``foreachBatch`` loop that
 keeps a type-2 history table fresh as log micro-batches arrive — the
-streaming twin of ``operators/scd.scd2_merge_batch``, the way
-``ann_maintenance`` twins the IVF batch append and ``dispatch`` twins
-the batch sink pipelines.
+streaming form of ``operators/scd.scd2_merge_batch``, the way
+``dispatch`` is the streaming form of the batch sink pipelines.
 
 Design at 100 TB:
 
@@ -11,13 +10,10 @@ Design at 100 TB:
   fold — see ``scd2_merge_batch``); closed intervals and untouched keys
   stream through as-is. History size never enters the per-trigger cost
   except as the pass-through write.
-- **Two rewrite shapes.** :class:`Scd2StreamMaintainer` rewrites the
-  full history per trigger (atomic tmp+rename — readers never see a
-  torn table); right while history is dimension-sized, the normal case
-  (it is the COLLAPSED view, orders of magnitude under the log).
-  :class:`Scd2BucketedMaintainer` is the scale path: history lives
+- **Partial rewrite.** :class:`Scd2BucketedMaintainer` keeps history
   partitioned by key-hash bucket and each trigger rewrites ONLY touched
-  buckets, with per-bucket epoch markers making the at-least-once
+  buckets (atomic per-bucket rename swap — readers never see a torn
+  bucket), with per-bucket epoch markers making the at-least-once
   replay safe.
 - **In-order contract, same as every stateful twin.** Per-key event-time
   ordering across micro-batches (Kafka per-key partition ordering; the
@@ -34,97 +30,14 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-class Scd2StreamMaintainer:
-    """``foreachBatch`` handler: folds each arriving log micro-batch into
-    the SCD2 history parquet at ``path`` (bootstrapping it from the
-    first batch). Use::
-
-        m = Scd2StreamMaintainer(path, "user_id", "ts", ["event_type"],
-                                 tiebreak_col="event_id")
-        stream.writeStream.foreachBatch(m).start()
-    """
-
-    def __init__(self, path: str, key_col: str, ts_col: str,
-                 attr_cols: list[str],
-                 tiebreak_col: str | None = None) -> None:
-        self.path = path
-        self.key_col = key_col
-        self.ts_col = ts_col
-        self.attr_cols = attr_cols
-        self.tiebreak_col = tiebreak_col
-
-    def _recover_stranded(self) -> None:
-        # Crash-atomicity: the swap below is two renames (path -> .old,
-        # .next -> path). A crash between them leaves self.path ABSENT
-        # with the whole history stranded in .old{epoch}; taking the
-        # bootstrap branch then would silently rebuild history from one
-        # batch. On entry, if a stranded .old* generation exists and
-        # self.path doesn't, rename it back before deciding
-        # bootstrap-vs-merge (replaying the merge is the normal
-        # at-least-once path). Leftover .next* are uncommitted scratch
-        # — drop them.
-        if not os.path.isdir(self.path):
-            stranded = sorted(
-                glob.glob(f"{self.path}.old*"),
-                key=lambda p: int(p.rsplit(".old", 1)[1]))
-            if stranded:
-                os.rename(stranded[-1], self.path)
-        # anything left over now is superseded scratch: .next* never
-        # committed; .old* (with self.path present) was committed over
-        # but its rmtree didn't finish
-        for stale in glob.glob(f"{self.path}.next*") + \
-                glob.glob(f"{self.path}.old*"):
-            shutil.rmtree(stale, ignore_errors=True)
-
-    def __call__(self, batch_df: DataFrame, epoch_id: int) -> None:
-        from ..operators.scd import scd2_history, scd2_merge_batch
-
-        if batch_df.isEmpty():
-            return
-        self._recover_stranded()
-        # epoch marker (the bucketed sibling's protocol at whole-table
-        # granularity): a replayed trigger whose epoch already committed
-        # skips, so the non-idempotent merge is never applied twice to
-        # the same generation. EXACT match only — foreachBatch replays
-        # re-fire the last uncommitted epoch; a >= guard would silently
-        # freeze the maintainer forever when an operator restarts the
-        # stream with a fresh checkpoint (epoch ids reset to 0) against
-        # an existing history path.
-        marker = os.path.join(self.path, "_epoch")
-        if os.path.isfile(marker) and int(open(marker).read()) == epoch_id:
-            return
-        spark = batch_df.sparkSession
-        if os.path.isfile(os.path.join(self.path, "_SUCCESS")):
-            hist = spark.read.parquet(self.path)
-            new_hist = scd2_merge_batch(hist, batch_df, self.key_col,
-                                        self.ts_col, self.attr_cols,
-                                        self.tiebreak_col)
-        else:
-            new_hist = scd2_history(batch_df, self.key_col, self.ts_col,
-                                    self.attr_cols, self.tiebreak_col)
-        # atomic generation swap: write beside, rename over — a reader
-        # (or a crash mid-trigger) never observes a torn history
-        tmp = f"{self.path}.next{epoch_id}"
-        new_hist.write.mode("overwrite").parquet(tmp)
-        with open(os.path.join(tmp, "_epoch"), "w") as fh:
-            fh.write(str(epoch_id))
-        old = f"{self.path}.old{epoch_id}"
-        if os.path.isdir(self.path):
-            os.rename(self.path, old)
-        os.rename(tmp, self.path)
-        shutil.rmtree(old, ignore_errors=True)
-
-    def history(self, spark) -> DataFrame:
-        return spark.read.parquet(self.path)
-
-
 class Scd2BucketedMaintainer:
-    """The PARTIAL-REWRITE form of :class:`Scd2StreamMaintainer` — the
-    scale path its pass-through sibling documents: history lives
-    partitioned by a key-hash bucket (``_bucket = pmod(xxhash64(key),
-    n_buckets)``), and each trigger rewrites ONLY the buckets containing
-    batch keys. Per-trigger IO is O(touched buckets), not O(history):
-    a batch touching 1% of keys rewrites ~1% of the table.
+    """``foreachBatch`` handler: folds each arriving log micro-batch into
+    the SCD2 history at ``path`` (bootstrapping it from the first
+    batch). History lives partitioned by a key-hash bucket (``_bucket =
+    pmod(xxhash64(key), n_buckets)``), and each trigger rewrites ONLY
+    the buckets containing batch keys. Per-trigger IO is O(touched
+    buckets), not O(history): a batch touching 1% of keys rewrites ~1%
+    of the table.
 
     Replay safety without a table format: each bucket directory carries
     an ``_epoch`` marker written AFTER its generation swap. A restarted
@@ -166,12 +79,13 @@ class Scd2BucketedMaintainer:
         # the bucket's ONLY history copy in <dst>.old with dst absent.
         # Without this recovery, the replay would (a) merge without
         # that bucket's history and (b) rmtree the stranded copy first
-        # — permanently losing every prior interval in the bucket. On
-        # entry, any <bucket>.old whose bucket dir is absent renames
-        # back. An .old WITH its bucket present splits on the marker:
-        # a dst CARRYING an _epoch marker committed (the .old is the
-        # superseded generation whose cleanup just didn't finish —
-        # drop it), but a dst WITHOUT a marker is a crash between
+        # — permanently losing every prior interval in the bucket.
+        # Before the markers are read, any <bucket>.old whose bucket
+        # dir is absent renames back. An .old WITH its bucket present
+        # splits on the marker: a dst CARRYING an _epoch marker
+        # committed (the .old is the superseded generation whose
+        # cleanup just didn't finish — drop it), but a dst WITHOUT a
+        # marker is a crash between
         # rename(src, dst) and the marker write — the merged
         # generation whose commit never happened. Keeping it would
         # double-apply the batch when the epoch replays (the
@@ -193,7 +107,6 @@ class Scd2BucketedMaintainer:
 
         from ..operators.scd import scd2_history, scd2_merge_batch
 
-        self._recover_stranded_buckets()
         spark = batch_df.sparkSession
         batch = batch_df.withColumn("_b", self._bucket(F.col(self.key_col)))
         # The touched-bucket collect doubles as the empty-batch probe:
@@ -205,13 +118,15 @@ class Scd2BucketedMaintainer:
                          batch.select("_b").distinct().collect())
         if not touched:
             return
+        # before _epoch_of: a bucket stranded in its .old copy would
+        # otherwise read as epoch -1 and merge without its history
+        self._recover_stranded_buckets()
         # at-least-once replay: skip buckets already committed this
         # EXACT epoch. Exact match, not <: foreachBatch only ever
         # re-fires the last uncommitted epoch, and an ordering guard
         # would silently freeze every bucket forever when an operator
         # restarts the stream with a fresh checkpoint (epoch ids reset
-        # to 0) against existing history — the same fix as the
-        # whole-table sibling above.
+        # to 0) against existing history.
         todo = [b for b in touched if self._epoch_of(b) != epoch_id]
         if not todo:
             return
@@ -258,7 +173,7 @@ class Scd1SnapshotMaintainer:
     """Streaming SCD TYPE-1 maintenance: a foreachBatch handler that
     folds each micro-batch CHANGELOG into an at-rest current-state
     snapshot — the streaming twin of ``operators.scd.apply_changelog``
-    and the "latest values only" sibling of the SCD2 maintainers above.
+    and the "latest values only" sibling of the SCD2 maintainer above.
 
     Replay safety comes from the DATA, not an epoch protocol: the
     snapshot carries each row's last-applied sequence, and the fold is
@@ -287,7 +202,7 @@ class Scd1SnapshotMaintainer:
         self._seed = seed
 
     def _recover_stranded(self) -> None:
-        # Crash-atomicity (the Scd2StreamMaintainer recipe): the swap
+        # Crash-atomicity: the swap
         # below is two renames (path -> .old{e}, .gen{e} -> path). A
         # crash between them leaves the whole snapshot stranded in
         # .old{e} with path absent — without recovery the next trigger

@@ -93,28 +93,3 @@ def debounce_dedup(events: DataFrame, keys: list[str] | None = None,
                     .dropDuplicatesWithinWatermark()
     return keyed.dropDuplicates()
 
-
-def stream_range_join(left: DataFrame, right: DataFrame, key: str,
-                      left_ts: str, start_ts: str,
-                      duration: str = "1 hour",
-                      watermark_delay: str = "1 hour") -> DataFrame:
-    """Stream-stream interval join: each left row matched to right rows
-    whose ``[start_ts, start_ts + duration]`` window contains ``left_ts``.
-
-    In stream mode this is Spark's native stateful stream-stream inner
-    join: BOTH sides carry a watermark and the join condition bounds
-    event time on both sides, which is exactly what lets Spark age join
-    state out instead of buffering both streams forever. In batch mode
-    the same expression is a plain theta join — correct but nested-loop;
-    the scalable batch form is ``operators.rangejoin.range_join`` (the
-    bucketed decomposition), and the two agree row-for-row, which
-    ``tests/test_streaming.py`` pins.
-    """
-    lw = left.withWatermark(left_ts, watermark_delay) \
-        if left.isStreaming else left
-    rw = right.withWatermark(start_ts, watermark_delay) \
-        if right.isStreaming else right
-    cond = ((lw[key] == rw[key]) &
-            (lw[left_ts] >= rw[start_ts]) &
-            (lw[left_ts] <= rw[start_ts] + F.expr(f"INTERVAL {duration}")))
-    return lw.join(rw, cond).drop(rw[key])

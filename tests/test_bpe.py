@@ -17,6 +17,8 @@ def test_merge_word_merges_all_occurrences():
     assert _merge_word(("a", "b", "a", "b", "c"), ("a", "b")) == \
         ("ab", "ab", "c")
     assert _merge_word(("x",), ("a", "b")) == ("x",)
+    # overlapping matches merge leftmost-first, never reusing a product
+    assert _merge_word(("a", "a", "a"), ("a", "a")) == ("aa", "a")
 
 
 def test_bpe_train_hand_computed_merges(spark):
@@ -107,26 +109,3 @@ def test_bpe_train_max_vocab_bounds_collect_with_stable_merges(spark):
     # default is bounded (100k) — same result as explicit bound here
     assert bpe_train(docs, n_merges=40) == unbounded
 
-
-def test_bpe_train_distributed_matches_driver_loop(spark, sf_dir):
-    # The distributed trainer (pair counting + merge application as
-    # Spark jobs, one collected row per round) must be BIT-IDENTICAL to
-    # the driver loop: same winners, same tie-breaks, same greedy
-    # left-to-right non-overlapping merge application — on a fixture
-    # with engineered overlaps ("aaa" under ('a','a') must merge
-    # leftmost-first) and on the real corpus.
-    from openedx_event_sink_clickhouse_spark.operators.bpe import (
-        bpe_train, bpe_train_distributed)
-
-    docs = spark.createDataFrame(
-        [(i, t) for i, t in enumerate([
-            "low lower lowest", "new newer newest", "wide wider widest",
-            "low low low new new wide", "newer lower wider",
-            "aaa aaaa aa a", "a ab abc abcd",
-        ])], "doc_id long, text string")
-    assert bpe_train_distributed(docs, n_merges=40) == \
-        bpe_train(docs, n_merges=40, max_vocab=None)
-
-    corpus = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    assert bpe_train_distributed(corpus, n_merges=15) == \
-        bpe_train(corpus, n_merges=15)

@@ -246,20 +246,3 @@ def test_compact_bucketed_table_recovers_orphaned_scratch(spark):
         for t in (tbl, f"{tbl}__compacting"):
             spark.sql(f"DROP TABLE IF EXISTS {t}")
 
-
-def test_cell_counts_skips_compaction_scratch(spark, tmp_path):
-    # IvfStreamMaintainer.cell_counts must not int('N.compact_old').
-    import os
-
-    from openedx_event_sink_clickhouse_spark.streaming.ann_maintenance import (
-        IvfStreamMaintainer)
-
-    base = str(tmp_path / "ivf")
-    spark.range(40).selectExpr("id % 2 AS cell", "id AS v") \
-        .write.partitionBy("cell").parquet(base)
-    os.makedirs(os.path.join(base, "cell=0.compact_old"))
-    m = IvfStreamMaintainer.__new__(IvfStreamMaintainer)
-    m.path = base
-    counts = m.cell_counts()
-    assert set(counts) == {0, 1}
-    assert sum(counts.values()) == 40

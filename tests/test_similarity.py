@@ -708,45 +708,6 @@ def test_cell_semantic_dedup_drops_within_cell_neardups(spark):
     assert 2 not in got and 3 not in got and 4 not in got
 
 
-def test_pq_codebooks_kmeans_beat_first_k_and_degenerate_correctly(spark, sf_dir):
-    # Per-subspace L2 k-means codebooks (the standard PQ fit, one Spark
-    # job per round for ALL subspaces): n_iter=0 must equal the
-    # deterministic first-k convention exactly; training must cut the
-    # reconstruction MSE materially (26% measured at sf0.01); the
-    # md5-sample fit must land near the full fit; fits are
-    # deterministic across runs.
-    import numpy as np
-
-    from openedx_event_sink_clickhouse_spark.operators.similarity import (
-        pq_codebooks_from_first_k, pq_codebooks_kmeans, pq_encode)
-
-    emb = _emb(spark, sf_dir)
-
-    def mse(books):
-        codes = {r["id"]: r["codes"]
-                 for r in pq_encode(emb, books).collect()}
-        tot, n = 0.0, 0
-        for r in emb.collect():
-            v = np.array(r.embedding, dtype=float)
-            rec = np.concatenate([np.array(books[s][codes[r.vec_id][s]])
-                                  for s in range(len(books))])
-            tot += float(((v - rec) ** 2).mean())
-            n += 1
-        return tot / n
-
-    fk = pq_codebooks_from_first_k(emb)
-    assert pq_codebooks_kmeans(emb, n_iter=0) == fk
-    tr = pq_codebooks_kmeans(emb, n_iter=3)
-    base, trained = mse(fk), mse(tr)
-    assert trained < 0.85 * base, (base, trained)
-    samp = pq_codebooks_kmeans(emb, n_iter=3, sample_n=400)
-    assert mse(samp) < 0.9 * base
-    tr2 = pq_codebooks_kmeans(emb, n_iter=3)
-    for s1, s2 in zip(tr, tr2):
-        for c1, c2 in zip(s1, s2):
-            assert c1 == pytest.approx(c2, abs=1e-9)
-
-
 def test_ivfpq_at_rest_prunes_cells_and_recall(spark, sf_dir, tmp_path):
     # Composed IVF-PQ: (a) the code-table scan must carry a partition
     # filter and read only the nprobe probed cell dirs; (b) returned

@@ -121,54 +121,6 @@ def test_attribution_stream_matches_batch_operator(spark, tmp_path):
     assert crossers, "fixture must exercise cross-batch state"
 
 
-def test_scd2_stream_maintenance_equals_batch_history(spark, tmp_path):
-    # foreachBatch SCD2 maintenance: the history table after draining a
-    # 3-batch time-split stream must equal scd2_history over the full
-    # log — intervals extended across batch boundaries, version counts
-    # accumulated, closed rows immutable.
-    import random
-
-    from pyspark.sql import functions as F
-
-    from openedx_event_sink_clickhouse_spark.operators.scd import (
-        scd2_history)
-    from openedx_event_sink_clickhouse_spark.streaming.scd_maintenance import (
-        Scd2StreamMaintainer)
-
-    rng = random.Random(23)
-    rows = [(i, _ts(i), 100 + (i * 5) % 4,
-             rng.choice(["a", "a", "b", "c"]), 0.0, "{}")
-            for i in range(57)]
-    src = str(tmp_path / "src")
-    os.makedirs(src)
-    for bi, (lo, hi) in enumerate([(0, 20), (20, 40), (40, 57)]):
-        batch = [r for r in rows if lo <= r[0] < hi]
-        _write_stream_file(spark, batch, src, str(tmp_path / f"s{bi}"),
-                           1_000 * (bi + 1))
-
-    hist_path = str(tmp_path / "hist")
-    m = Scd2StreamMaintainer(hist_path, "user_id", "ts", ["event_type"],
-                             tiebreak_col="event_id")
-    stream = (spark.readStream.schema(EVENT_SCHEMA)
-              .option("maxFilesPerTrigger", "1").parquet(src))
-    q = (stream.writeStream.foreachBatch(m)
-         .option("checkpointLocation", str(tmp_path / "ckpt"))
-         .trigger(availableNow=True).start())
-    assert q.awaitTermination(120)
-
-    log = spark.createDataFrame(rows, EVENT_SCHEMA) \
-        .select("user_id", "ts", "event_id", "event_type")
-    want = scd2_history(log, "user_id", "ts", ["event_type"],
-                        tiebreak_col="event_id")
-    key = lambda r: (r["user_id"], r["valid_from"])
-    got_rows = sorted(m.history(spark)
-                      .select(*want.columns).collect(), key=key)
-    want_rows = sorted(want.collect(), key=key)
-    assert [tuple(r) for r in got_rows] == [tuple(r) for r in want_rows]
-    # at least one interval must span a batch boundary with n_versions>1
-    assert any(r.n_versions > 1 for r in got_rows)
-
-
 def test_scd2_bucketed_maintainer_partial_rewrite_and_replay_safety(
         spark, tmp_path):
     # Bucketed partial rewrite: parity with the batch history, ONLY
@@ -215,54 +167,6 @@ def test_scd2_bucketed_maintainer_partial_rewrite_and_replay_safety(
                       key=key)
     assert [tuple(r) for r in got_rows] == \
         [tuple(r) for r in sorted(want.collect(), key=key)]
-
-
-def test_scd2_maintainer_recovers_stranded_generation(spark, tmp_path):
-    # Crash-atomicity: a crash between the two swap renames leaves
-    # self.path absent and the whole history stranded in .old{e}. The
-    # next trigger must restore it and MERGE (not re-bootstrap from the
-    # one replayed batch); and a replay of an epoch that already
-    # committed must be a no-op (_epoch marker).
-    from pyspark.sql import functions as F
-
-    from openedx_event_sink_clickhouse_spark.operators.scd import (
-        scd2_history)
-    from openedx_event_sink_clickhouse_spark.streaming.scd_maintenance import (
-        Scd2StreamMaintainer)
-
-    rows = [(i, _ts(i), 100 + i % 3, ["a", "b", "c"][(i // 5) % 3],
-             0.0, "{}") for i in range(30)]
-    full = spark.createDataFrame(rows, EVENT_SCHEMA) \
-        .select("user_id", "ts", "event_id", "event_type")
-    b0 = full.filter(F.col("event_id") < 15)
-    b1 = full.filter(F.col("event_id") >= 15)
-    hist_path = str(tmp_path / "hist")
-    m = Scd2StreamMaintainer(hist_path, "user_id", "ts", ["event_type"],
-                             tiebreak_col="event_id")
-    m(b0, 0)
-
-    # simulate the crash window: path renamed away, .next left behind
-    os.rename(hist_path, f"{hist_path}.old1")
-    os.makedirs(f"{hist_path}.next1")
-    open(f"{hist_path}.next1/junk", "w").write("x")
-
-    m(b1, 1)  # the replayed trigger
-    assert not glob.glob(f"{hist_path}.old*")
-    assert not glob.glob(f"{hist_path}.next*")
-    want = scd2_history(full, "user_id", "ts", ["event_type"],
-                        tiebreak_col="event_id")
-    key = lambda r: (r["user_id"], r["valid_from"])
-    got = sorted(m.history(spark).select(*want.columns).collect(), key=key)
-    assert [tuple(r) for r in got] == \
-        [tuple(r) for r in sorted(want.collect(), key=key)]
-    # history spans both batches -> the bootstrap branch was NOT taken
-    assert any(r.n_versions > 1 for r in got)
-
-    # an already-committed epoch replays as a no-op
-    import time
-    mtime = os.path.getmtime(os.path.join(hist_path, "_epoch"))
-    m(b1, 1)
-    assert os.path.getmtime(os.path.join(hist_path, "_epoch")) == mtime
 
 
 def test_epoch_partitioned_sketch_maintainer_replay_safe(spark, tmp_path):
@@ -516,13 +420,13 @@ def test_sketch_compact_crash_recovery(spark, tmp_path):
 
 def test_scd2_maintainers_survive_fresh_checkpoint_restart(spark, tmp_path):
     # Epoch ids reset to 0 when a stream restarts with a new checkpoint
-    # against EXISTING history. The exact-match replay guards must merge
+    # against EXISTING history. The exact-match replay guard must merge
     # (possibly re-applying, at-least-once semantics) — an ordering
-    # guard would silently freeze the maintainers forever.
+    # guard would silently freeze the maintainer forever.
     from pyspark.sql import functions as F
 
     from openedx_event_sink_clickhouse_spark.streaming.scd_maintenance import (
-        Scd2BucketedMaintainer, Scd2StreamMaintainer)
+        Scd2BucketedMaintainer)
 
     rows = [(i, _ts(i), 100 + i % 3, ["a", "b"][(i // 4) % 2], 0.0, "{}")
             for i in range(24)]
@@ -535,19 +439,12 @@ def test_scd2_maintainers_survive_fresh_checkpoint_restart(spark, tmp_path):
     # would still end inside b0's window (< minute 12)
     b1_start = _ts(12)
 
-    m = Scd2StreamMaintainer(str(tmp_path / "h1"), "user_id", "ts",
-                             ["event_type"], tiebreak_col="event_id")
+    m = Scd2BucketedMaintainer(str(tmp_path / "hist"), "user_id", "ts",
+                               ["event_type"], tiebreak_col="event_id",
+                               n_buckets=4)
     m(b0, 7)                     # old stream committed epoch 7
-    m(b1, 0)                     # fresh checkpoint: epoch ids restart
+    m(b1, 0)                     # fresh checkpoint: must merge, not skip
     assert m.history(spark).agg(
-        F.max("valid_from")).first()[0] >= b1_start
-
-    mb = Scd2BucketedMaintainer(str(tmp_path / "h2"), "user_id", "ts",
-                                ["event_type"], tiebreak_col="event_id",
-                                n_buckets=4)
-    mb(b0, 7)
-    mb(b1, 0)                    # must merge, not silently skip
-    assert mb.history(spark).agg(
         F.max("valid_from")).first()[0] >= b1_start
 
 
@@ -680,3 +577,46 @@ def test_scd2_bucketed_rolls_back_marker_less_swap(spark, tmp_path):
     os.makedirs(f"{bucket}.old", exist_ok=True)
     m(b1, 1)
     assert not os.path.isdir(f"{bucket}.old")
+
+
+def test_scd2_bucketed_idle_trigger_skips_recovery_glob(spark, tmp_path,
+                                                        monkeypatch):
+    # An idle trigger (empty batch) returns before the stranded-bucket
+    # recovery, so it globs nothing; a non-empty batch still recovers a
+    # stranded bucket before reading its epoch marker, and merges into
+    # its history instead of bootstrapping the bucket from the batch.
+    from pyspark.sql import functions as F
+
+    from openedx_event_sink_clickhouse_spark.operators.scd import (
+        scd2_history)
+    from openedx_event_sink_clickhouse_spark.streaming import scd_maintenance
+
+    rows = [(i, _ts(i), 100 + i % 2, ["a", "b"][(i // 4) % 2], 0.0, "{}")
+            for i in range(24)]
+    full = spark.createDataFrame(rows, EVENT_SCHEMA) \
+        .select("user_id", "ts", "event_id", "event_type")
+    b0 = full.filter(F.col("event_id") < 12)
+    b1 = full.filter(F.col("event_id") >= 12)
+    m = scd_maintenance.Scd2BucketedMaintainer(
+        str(tmp_path / "hist"), "user_id", "ts", ["event_type"],
+        tiebreak_col="event_id", n_buckets=1)
+    m(b0, 0)
+
+    calls: list[str] = []
+    real_glob = scd_maintenance.glob.glob
+    monkeypatch.setattr(scd_maintenance.glob, "glob",
+                        lambda p, *a, **k: calls.append(p)
+                        or real_glob(p, *a, **k))
+    m(full.filter(F.lit(False)), 1)
+    assert calls == []
+
+    bucket = m._bucket_dir(0)
+    os.rename(bucket, f"{bucket}.old")   # crash between the two renames
+    m(b1, 1)
+    assert calls and not os.path.isdir(f"{bucket}.old")
+    want = scd2_history(full, "user_id", "ts", ["event_type"],
+                        tiebreak_col="event_id")
+    key = lambda r: (r["user_id"], r["valid_from"])
+    got = sorted(m.history(spark).select(*want.columns).collect(), key=key)
+    assert [tuple(r) for r in got] == \
+        [tuple(r) for r in sorted(want.collect(), key=key)]

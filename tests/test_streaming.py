@@ -334,44 +334,6 @@ def test_debounce_dedup_stream_equals_batch(spark, sf_dir, tmp_path):
     assert got == batch
 
 
-def test_stream_stream_range_join_equals_batch(spark, sf_dir, tmp_path):
-    # Stream-stream interval join (watermarks both sides + time-range
-    # condition = bounded state) must produce exactly the rows of the
-    # batch bucketed range_join on the same data.
-    from openedx_event_sink_clickhouse_spark.operators.rangejoin import (
-        range_join)
-    from openedx_event_sink_clickhouse_spark.streaming.windows import (
-        stream_range_join)
-
-    events = load_table(spark, "events", sf_dir)
-    events.write.parquet(str(tmp_path / "ev"))
-
-    purchases = (events.filter(F.col("event_type") == "purchase")
-                 .select("user_id", F.col("ts").alias("p_ts"),
-                         F.col("value").alias("p_value")))
-    batch = range_join(
-        events, purchases.withColumn(
-            "p_end", F.col("p_ts") + F.expr("INTERVAL 1 HOUR")),
-        "user_id", "ts", "p_ts", "p_end")
-    batch_rows = {tuple(r) for r in batch.select(
-        "event_id", "user_id", "ts", "event_type", "p_ts", "p_value"
-    ).collect()}
-
-    src = spark.readStream.schema(events.schema).parquet(str(tmp_path / "ev"))
-    p_stream = (src.filter(F.col("event_type") == "purchase")
-                .select("user_id", F.col("ts").alias("p_ts"),
-                        F.col("value").alias("p_value")))
-    joined = stream_range_join(src, p_stream, "user_id", "ts", "p_ts",
-                               "1 hour")
-    q = (joined.select("event_id", "user_id", "ts", "event_type",
-                       "p_ts", "p_value")
-         .writeStream.format("memory").queryName("ssj_mem")
-         .outputMode("append").trigger(availableNow=True).start())
-    assert q.awaitTermination(180)
-    got = {tuple(r) for r in spark.sql("SELECT * FROM ssj_mem").collect()}
-    assert got == batch_rows
-
-
 def test_scrub_pii_runs_on_streams(spark, sf_dir, tmp_path):
     # Round-2 curation: PII scrubbing is a stateless regex Column stack,
     # so the batch function runs unchanged on a stream (same
@@ -574,92 +536,6 @@ def test_release_corpus_runs_per_batch_via_foreach_batch(spark, sf_dir,
          .trigger(availableNow=True).start())
     assert q.awaitTermination(120)
     assert sorted(out) == batch
-
-
-def test_ivf_stream_maintenance_parity_and_drift_signal(spark, sf_dir,
-                                                        tmp_path):
-    # Streaming ANN maintenance: embedding micro-batches appended via
-    # foreachBatch must leave the SAME at-rest layout as the one-shot
-    # write (same (id, cell) set, pruning intact), and the cell-skew
-    # refresh policy must stay silent on the in-distribution stream.
-    import glob as _glob
-    import shutil
-    import time as _time
-
-    from openedx_event_sink_clickhouse_spark.operators.similarity import (
-        write_ivf_partitioned)
-    from openedx_event_sink_clickhouse_spark.streaming.ann_maintenance import (
-        IvfStreamMaintainer, maintain_ivf_stream)
-
-    emb = load_table(spark, "embeddings", sf_dir)
-    old = emb.filter(F.col("vec_id") < 300)
-    path = str(tmp_path / "ivf_stream")
-    write_ivf_partitioned(old, path, n_centroids=16)
-
-    (tmp_path / "in").mkdir()
-    for tag, cond in (("a", (F.col("vec_id") >= 300) & (F.col("vec_id") < 400)),
-                      ("b", F.col("vec_id") >= 400)):
-        stage = str(tmp_path / f"stage_{tag}")
-        emb.filter(cond).coalesce(1).write.parquet(stage)
-        part = _glob.glob(stage + "/part-*.parquet")[0]
-        shutil.move(part, str(tmp_path / "in" / f"{tag}.parquet"))
-        _time.sleep(1.1)
-
-    m = IvfStreamMaintainer(emb, path, n_centroids=16,
-                            skew_refresh_ratio=4.0)
-    src = (spark.readStream.schema(emb.schema)
-           .option("maxFilesPerTrigger", "1")
-           .parquet(str(tmp_path / "in")))
-    q = maintain_ivf_stream(src, m, str(tmp_path / "ckpt"))
-    assert q.awaitTermination(180)
-
-    full_path = str(tmp_path / "ivf_full")
-    write_ivf_partitioned(emb, full_path, n_centroids=16)
-    got = sorted(tuple(r) for r in
-                 spark.read.parquet(path).select("id", "cell").collect())
-    want = sorted(tuple(r) for r in
-                  spark.read.parquet(full_path).select("id", "cell").collect())
-    assert got == want
-
-    one_cell = spark.read.parquet(path).filter(F.col("cell") == 3)
-    one_cell.count()
-    plan = one_cell._jdf.queryExecution().executedPlan().toString()
-    assert "PartitionFilters" in plan
-
-    # In-distribution stream: no refresh signal; skew tracked.
-    assert m.needs_refresh is False
-    assert m.last_skew is not None and m.last_skew >= 1.0
-
-
-def test_ivf_stream_maintenance_flags_centroid_drift(spark, sf_dir,
-                                                     tmp_path):
-    # A drifted stream (every vector lands in the probe-0 cell: we feed
-    # copies of vector 0) must push cell-size skew over the threshold
-    # and latch needs_refresh + fire on_refresh exactly once.
-    from openedx_event_sink_clickhouse_spark.operators.similarity import (
-        write_ivf_partitioned)
-    from openedx_event_sink_clickhouse_spark.streaming.ann_maintenance import (
-        IvfStreamMaintainer)
-
-    emb = load_table(spark, "embeddings", sf_dir)
-    path = str(tmp_path / "ivf_drift")
-    write_ivf_partitioned(emb, path, n_centroids=16)
-
-    v0 = emb.filter(F.col("vec_id") == 0).first().embedding
-    n = emb.count()
-    drifted = spark.createDataFrame(
-        [(10_000 + i, list(v0)) for i in range(2 * n)],
-        "vec_id long, embedding array<double>")
-
-    fired: list = []
-    m = IvfStreamMaintainer(emb, path, n_centroids=16,
-                            skew_refresh_ratio=4.0,
-                            on_refresh=fired.append)
-    m(drifted, 0)   # foreachBatch handler, called directly
-    assert m.needs_refresh is True
-    assert len(fired) == 1 and fired[0] > 4.0
-    m(drifted.limit(1), 1)  # latched: does not re-fire
-    assert len(fired) == 1
 
 
 def test_neardup_stream_maintains_index_and_labels(spark, sf_dir, tmp_path):
