@@ -40,19 +40,6 @@ def daily_sketch_table(events: DataFrame, key_col: str = "user_id",
                  .alias("sketch")))
 
 
-def rollup_estimate(sketches: DataFrame, group_cols: list[str] | None = None
-                    ) -> DataFrame:
-    """Union sketch cells up to a coarser grain (``group_cols``; None =
-    one global row) and estimate distinct keys. O(rows of the sketch
-    table), never O(events)."""
-    agg = [F.sum("n_events").alias("n_events"),
-           F.expr("hll_sketch_estimate(hll_union_agg(sketch, true))")
-           .alias("est_distinct")]
-    if group_cols:
-        return sketches.groupBy(*group_cols).agg(*agg)
-    return sketches.agg(*agg)
-
-
 def distinct_rollup_certified(events: DataFrame, key_col: str = "user_id",
                               ts_col: str = "ts", lg_k: int = 14,
                               rel_err: float = 0.05) -> DataFrame:

@@ -688,31 +688,6 @@ def prepare_corpus(docs: DataFrame, token_budget: int = 512,
         (start % token_budget).cast("bigint").alias("bin_offset"))
 
 
-def write_epoch_shards(docs: DataFrame, path: str, n_shards: int = 16,
-                       seed: int = 0, id_col: str = "doc_id") -> None:
-    """Materialize one training epoch at rest: the :func:`shuffle_shards`
-    placement written ``partitionBy(shard)``, with every shard file's
-    ROW ORDER equal to the shuffle order — a trainer streams shard
-    ``i``'s file front to back and reads the epoch in decorrelated,
-    reproducible order with zero read-time sorting.
-
-    ONE shuffle end to end: the per-shard rank window hash-partitions by
-    shard and sorts by (key, id), which is byte-for-byte the layout the
-    writer needs — rows leave the window already grouped per shard in
-    position order, and ``partitionBy`` just splits them into shard
-    directories. (The mirror of ``write_ivf_partitioned``'s role for
-    ANN: the query-side operator narrates the layout, this writes it.)"""
-    key = md5_hash64(F.col(id_col), seed=seed)
-    df = (docs.withColumn("_key", key)
-          .withColumn("shard", F.pmod(F.col("_key"),
-                                      F.lit(n_shards)).cast("int")))
-    w = Window.partitionBy("shard").orderBy("_key", id_col)
-    out = (df.withColumn("position",
-                         (F.row_number().over(w) - 1).cast("bigint"))
-           .drop("_key"))
-    out.write.partitionBy("shard").mode("overwrite").parquet(path)
-
-
 def perplexity_filter(docs: DataFrame, low_q: float = 0.05,
                       high_q: float = 0.9,
                       bounds: tuple[float, float] | None = None,
@@ -876,8 +851,9 @@ def leakage_safe_split(docs: DataFrame, labels: DataFrame,
     which is exactly the behavior you want when a dup is discovered).
     Plan: one join of the doc spine against the label table —
     O(duplicated docs), unhinted so AQE broadcasts when small — then the
-    map-only hash. At rest the labels come from the compute-once cluster
-    table (``dedup.write_cluster_table``), not a fresh LSH+CC run."""
+    map-only hash. At rest the labels come from a stored
+    :func:`dedup.connected_components` output, not a fresh LSH+CC
+    run."""
     lab = labels.select(F.col("doc_id").alias(id_col), "cluster_id")
     keyed = (docs.select(id_col).join(lab, id_col, "left")
              .select(F.col(id_col),

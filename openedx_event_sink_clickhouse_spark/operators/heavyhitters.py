@@ -94,13 +94,13 @@ def write_count_table(df: DataFrame, key_col: str, table: str,
                       buckets: int = 32, mode: str = "overwrite",
                       max_files_per_bucket: int | None = 8) -> None:
     """Materialize per-key counts at rest, BUCKETED on the key — the
-    heavy-hitter family's at-rest form, mirroring
-    ``dedup.write_digest_table``: counts are MERGEABLE partials
+    heavy-hitter family's at-rest form: counts are MERGEABLE partials
     (rows of (key, n_rows) fold by summation), so a daily ingest appends
     its batch's partial counts via :func:`append_counts_batch` and the
     raw stream is never re-scanned to answer "what's hot". Bucketing
-    makes the serve-time fold (groupBy key) exchange-free, and the same
-    post-append compaction trigger as the digest table keeps file counts
+    makes the serve-time fold (groupBy key) exchange-free, and a
+    post-append compaction trigger
+    (``sources/layout.compact_bucketed_table``) keeps file counts
     bounded as batches accumulate."""
     from .dedup import _clear_orphaned_location
 

@@ -151,7 +151,7 @@ def incremental_join_view(view_old: DataFrame | None,
     shuffles (or broadcasts — AQE decides from actual delta sizes) at
     most O(|Δ| + matched base rows), never the base×base volume; the
     result is append-only, so the at-rest view needs no rewrite, just
-    new files (pair with `sources/layout.py` compaction). Insert-only
+    new files (compact them periodically). Insert-only
     deltas assumed — updates/deletes route through the SCD operators,
     the standard IVM layering."""
     delta = (delta_a.join(b_old, on)

@@ -111,8 +111,7 @@ def png_encode(pixels: bytes, width: int, height: int,
 def png_text_chunks(data: bytes) -> dict[str, str]:
     """tEXt metadata of a PNG via a chunk WALK — the IDAT stream is
     never inflated, so reading asset metadata costs O(header), not
-    O(pixels); the dimensions short-cut :func:`png_dimensions` uses the
-    same walk. Raises ``ValueError`` on a non-PNG payload."""
+    O(pixels). Raises ``ValueError`` on a non-PNG payload."""
     if not data.startswith(_PNG_SIG):
         raise ValueError("not a PNG (bad signature)")
     out: dict[str, str] = {}
@@ -179,14 +178,6 @@ def _defilter(raw: bytes, width: int, height: int, bpp: int) -> bytes:
             raise ValueError(f"bad PNG filter type {ft} on row {r}")
         prev_start = o
     return bytes(out)
-
-
-def png_dimensions(data: bytes) -> tuple[int, int]:
-    """(width, height) from IHDR alone — no inflate, O(1)."""
-    if not data.startswith(_PNG_SIG) or data[12:16] != b"IHDR":
-        raise ValueError("not a PNG (bad signature/IHDR)")
-    w, h = struct.unpack(">II", data[16:24])
-    return w, h
 
 
 def png_decode(data: bytes) -> DecodedImage:

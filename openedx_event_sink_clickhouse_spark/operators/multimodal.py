@@ -11,8 +11,7 @@ this is the 100 TB training-data path where payloads dwarf text:
   filters on ``meta.width`` must never deserialize ``content``.
 - **Partitioning**: payload rows are large and skew-prone; callers bound
   Arrow batch size with ``spark.sql.execution.arrow.maxRecordsPerBatch``
-  (set by :func:`tune_for_media`) so one batch of big videos can't OOM an
-  executor python worker.
+  so one batch of big videos can't OOM an executor python worker.
 - **Decode dispatch**: each payload is SNIFFED by magic bytes. PNG and
   WAV payloads take the REAL decode branch (:mod:`.media_codecs` —
   stdlib zlib/wave codecs, PIL preferred when importable), so pixel/
@@ -37,7 +36,7 @@ from typing import Callable
 
 import pandas as pd
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -57,15 +56,6 @@ MEDIA_SCHEMA = T.StructType([
 ])
 
 FEATURE_BINS = 16
-
-
-def tune_for_media(spark: SparkSession,
-                   max_records_per_batch: int = 64) -> SparkSession:
-    """Bound Arrow batch size so a batch of large payloads fits executor
-    memory — the media-path analog of ``maxPartitionBytes`` sizing."""
-    spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch",
-                   str(max_records_per_batch))
-    return spark
 
 
 def _has_pil() -> bool:

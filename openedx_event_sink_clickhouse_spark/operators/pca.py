@@ -1,27 +1,15 @@
-"""Distributed covariance / PCA via sufficient statistics.
+"""Distributed covariance via sufficient statistics.
 
-The whole family reduces an embedding corpus to (n, Σx, ΣxxT) — one
-map-side-combinable pass — and derives everything else from those
-moments:
-
-- :func:`embedding_covariance` keeps the moments as EXACT decimals
-  (order-independent sums, so a DuckDB oracle can reproduce the hash
-  bit-for-bit) for a caller-chosen dim slice;
-- :func:`pca_fit` computes the full d×d Gram with numpy partials inside
-  ``mapInPandas`` (one partial row per Arrow batch — the standard
-  "sufficient statistics up, k×d model down" coordinator pattern also
-  used by :func:`similarity.kmeans_centroids`), then eigendecomposes the
-  d×d covariance on the driver — d is model-scale (64 here), never
-  corpus-scale;
-- :func:`pca_project` broadcasts the k×d components as literals and
-  scores rows JVM-side with ``zip_with``/``aggregate`` folds — no Python
-  in the projection hot path.
+:func:`embedding_covariance` reduces an embedding corpus to
+(n, Σx, ΣxxT) over a caller-chosen dim slice — one map-side-combinable
+pass — and derives the sample covariance from those moments. The moments
+stay EXACT decimals (order-independent sums), so a DuckDB oracle can
+reproduce the hash bit-for-bit; the registry's ``sim_embedding_covariance``
+query runs it.
 
 100 TB: the only data-scale pass is the moment aggregation, which
-partial-aggregates per partition (decimal path) or per Arrow batch
-(numpy path) before anything shuffles; what crosses the wire is
-O(partitions × d²) doubles, and what the driver ever holds is O(d²).
-Eigh on a 64×64 (even 4096×4096) matrix is sub-second driver math.
+partial-aggregates per partition before anything shuffles; what the
+driver ever holds is one row of O(d²) sums.
 """
 
 from __future__ import annotations
@@ -64,68 +52,3 @@ def embedding_covariance(emb: DataFrame, dims: int = 8,
                     F.col("n"), F.col("c.cov")))
 
 
-def pca_fit(emb: DataFrame, k: int = 4,
-            vec_col: str = "embedding") -> dict:
-    """Fit a PCA model: numpy partial moments per Arrow batch, driver
-    reduce + eigh. Returns ``{"n", "mean", "components", \
-    "explained_variance"}`` with components sign-fixed (largest-|.|
-    coordinate positive) and sorted by descending eigenvalue so the
-    model is deterministic up to exactly-tied eigenvalues.
-
-    The collect is bounded: one (n, d, d²) row per Arrow batch — model
-    partials, not data (same license as the kmeans centroid collect).
-    """
-    import numpy as np
-    import pandas as pd
-
-    schema = "n long, s array<double>, g array<double>"
-
-    def partials(batches):
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            m = np.stack(pdf[vec_col].to_numpy()).astype("float64")
-            yield pd.DataFrame({"n": [m.shape[0]],
-                                "s": [m.sum(axis=0).tolist()],
-                                "g": [(m.T @ m).ravel().tolist()]})
-
-    rows = emb.select(vec_col).mapInPandas(partials, schema).collect()
-    if not rows:
-        raise ValueError("pca_fit: empty input")
-    n = sum(r["n"] for r in rows)
-    s = np.sum([np.asarray(r["s"]) for r in rows], axis=0)
-    d = s.shape[0]
-    gram = np.sum([np.asarray(r["g"]).reshape(d, d) for r in rows], axis=0)
-    mean = s / n
-    cov = (gram - np.outer(s, s) / n) / (n - 1)
-    w, vecs = np.linalg.eigh(cov)
-    order = np.argsort(w)[::-1][:k]
-    comps = vecs[:, order].T
-    # sign convention: the largest-|.| coordinate of each component is
-    # positive (eigh's sign is arbitrary; ties broken by first index)
-    for c in comps:
-        j = int(np.argmax(np.abs(c)))
-        if c[j] < 0:
-            c *= -1.0
-    return {"n": int(n), "mean": mean, "components": comps,
-            "explained_variance": w[order]}
-
-
-def pca_project(emb: DataFrame, model: dict, id_col: str = "vec_id",
-                vec_col: str = "embedding") -> DataFrame:
-    """Project rows onto the fitted components: k literal zip_with/
-    aggregate dot products over the mean-centered vector, entirely
-    JVM-side (whole-stage codegen, no Python). Output:
-    (id, pc0..pc{k-1})."""
-    from ..functions.vectors import as_double
-    mean = [float(x) for x in model["mean"]]
-    centered = F.zip_with(as_double(F.col(vec_col)),
-                          F.array(*[F.lit(m) for m in mean]),
-                          lambda x, m: x - m)
-    cols = [F.col(id_col)]
-    for ci, comp in enumerate(model["components"]):
-        lit = F.array(*[F.lit(float(x)) for x in comp])
-        score = F.aggregate(F.zip_with(centered, lit, lambda x, c: x * c),
-                            F.lit(0.0), lambda acc, t: acc + t)
-        cols.append(score.alias(f"pc{ci}"))
-    return emb.select(*cols)

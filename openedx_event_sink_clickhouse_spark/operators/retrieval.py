@@ -335,60 +335,9 @@ def write_postings_index(docs: DataFrame, path: str, n_buckets: int = 64,
      .write.mode("overwrite").parquet(f"{path}/tfidf_norms"))
 
 
-def append_postings_batch(batch: DataFrame, path: str, n_buckets: int = 64,
-                          text_col: str = "text", id_col: str = "doc_id",
-                          max_files_per_bucket: int = 8) -> None:
-    """Extend the at-rest postings index with an arriving batch — the
-    retrieval twin of ``dedup.append_minhash_index`` / ``similarity.
-    ivf_append_batch``: the batch is tokenized once and its postings
-    land ``mode("append")`` inside the existing ``term_bucket``
-    partition dirs, so partition pruning keeps working and the corpus
-    is never re-tokenized; the stats table gains an incremental
-    (n_docs, dl_sum) row that readers fold (see ``_index_stats``).
-    File-count-triggered compaction folds grown buckets in place.
-
-    Invalidation contract, stated rather than hidden: BM25 served after
-    an append uses the folded (exact) corpus stats and the appended
-    postings — correct. The ``tfidf_norms`` sidecar is CORPUS-GLOBAL
-    (every document's norm shifts when df shifts), so appends leave it
-    stale by design; rebuild it on the same offline cadence as IVF
-    centroid refresh (`write_postings_index` rewrites everything). A
-    drifted-norms check belongs to the maintenance job, not the query."""
-    from ..functions.hashes import md5_hash64
-
-    terms = _doc_terms(batch, text_col, id_col)
-    (terms.withColumn("term_bucket",
-                      F.pmod(md5_hash64(F.col("term")), F.lit(n_buckets))
-                      .cast("int"))
-     .write.partitionBy("term_bucket").mode("append")
-     .parquet(f"{path}/postings"))
-    (batch.select(F.count("*").alias("n_docs"),
-                  F.sum(F.size(words(F.col(text_col))))
-                  .cast("double").alias("dl_sum"))
-     .write.mode("append").parquet(f"{path}/stats_increments"))
-    from ..sources.layout import compact_partitioned_dir
-    compact_partitioned_dir(batch.sparkSession, f"{path}/postings",
-                            max_files_per_partition=max_files_per_bucket)
-
-
 def _index_stats(spark, path: str) -> DataFrame:
-    """Fold the build-time stats row with any append increments into
-    one (n_docs, avgdl) row. avgdl folds from (n_docs, dl_sum) partial
-    sums — the mergeable form; the base stats row contributes
-    n_docs·avgdl as its dl_sum."""
-    import os
-    if not os.path.isdir(f"{path}/stats_increments"):
-        # Append-free index: pass the build row through untouched (the
-        # multiply-then-divide round trip below is last-ulp lossy).
-        return spark.read.parquet(f"{path}/stats") \
-            .select("n_docs", "avgdl")
-    base = (spark.read.parquet(f"{path}/stats")
-            .select("n_docs",
-                    (F.col("n_docs") * F.col("avgdl")).alias("dl_sum")))
-    inc = spark.read.parquet(f"{path}/stats_increments")
-    return base.unionByName(inc).agg(
-        F.sum("n_docs").alias("n_docs"),
-        (F.sum("dl_sum") / F.sum("n_docs")).alias("avgdl"))
+    """The index's 1-row (n_docs, avgdl) build-time stats table."""
+    return spark.read.parquet(f"{path}/stats").select("n_docs", "avgdl")
 
 
 def bm25_topk_from_index(spark, path: str, query_terms: list[str],
@@ -428,10 +377,6 @@ def tfidf_cosine_from_index(spark, path: str, query_terms: list[str],
             .filter(F.col("term_bucket").isin(buckets))
             .filter(F.col("term").isin(query_terms))
             .select("doc_id", "term", "tf"))
-    # _index_stats folds stats_increments left by append_postings_batch,
-    # exactly as bm25_topk_from_index does — reading the raw stats table
-    # here would mix fresh per-term df (counted from appended postings)
-    # with a stale corpus N.
     n_docs = _index_stats(spark, path).select("n_docs")
     dfs = hits.groupBy("term").agg(F.count("*").alias("df"))
     idf = F.log((F.lit(1.0) + F.col("n_docs")) / (F.lit(1.0) + F.col("df"))) \

@@ -139,13 +139,6 @@ def as_of(history: DataFrame, ts) -> DataFrame:
                              | (F.col("valid_to") > t)))
 
 
-def current_of(history: DataFrame) -> DataFrame:
-    """The latest state per key from an SCD2 history frame — equivalent
-    to last-wins dedup over the source log, but served from the (much
-    smaller) collapsed history."""
-    return history.filter(F.col("is_current"))
-
-
 def apply_changelog(base: DataFrame, changes: DataFrame, key_col: str,
                     seq_cols: list[str], op_col: str = "op",
                     update_cols: list[str] | None = None) -> DataFrame:
@@ -168,9 +161,8 @@ def apply_changelog(base: DataFrame, changes: DataFrame, key_col: str,
     max_by-style last-wins groupBy — change-scale, not base-scale),
     then ONE full-outer-shaped join against base applies the fold.
     At 100 TB base-scale this is the standard copy-on-write MERGE
-    shape; pair it with `sources/bucketing.py` to co-locate the join
-    and `layout.py`-style partition overwrite to rewrite only touched
-    partitions."""
+    shape; bucket the base on the key to co-locate the join, and
+    overwrite only the touched partitions."""
     from pyspark.sql import Window
 
     update_cols = update_cols or [

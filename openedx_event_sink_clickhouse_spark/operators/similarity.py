@@ -283,30 +283,6 @@ def cosine_neardup_pairs(emb: DataFrame, threshold: float,
             .select("id_a", "id_b", F.round("_cos", 6).alias("cosine_sim")))
 
 
-def semantic_dedup(emb: DataFrame, threshold: float = 0.3,
-                   id_col: str = "vec_id", vec_col: str = "embedding",
-                   num_planes: int = 6, num_tables: int = 2,
-                   dim: int | None = None,
-                   checkpoint_dir: str | None = None) -> DataFrame:
-    """SemDeDup-style embedding-level dedup (Abbas et al. 2023): drop
-    every member of a semantic-duplicate cluster except its minimum-id
-    survivor. Returns the surviving rows of ``emb`` unchanged.
-
-    Composed from the same scale-safe stages as the text flow
-    (:func:`~.dedup.dedup_corpus`): SRP-bucketed cosine pairs (the only
-    corpus-wide shuffle, O(candidates) — never all-pairs) →
-    min-label-propagation connected components over the PAIR set →
-    left-anti prune of the loser ids. Losers are O(duplicates) ≪ corpus,
-    so AQE broadcasts the anti-join and the corpus never re-shuffles."""
-    from .dedup import connected_components
-    pairs = cosine_neardup_pairs(emb, threshold, None, id_col, vec_col,
-                                 num_planes, num_tables, dim)
-    clusters = connected_components(pairs, checkpoint_dir=checkpoint_dir)
-    losers = (clusters.filter(~F.col("is_survivor"))
-              .select(F.col("doc_id").alias(id_col)))
-    return emb.join(losers, id_col, "left_anti")
-
-
 def _vec_base(emb: DataFrame, id_col: str, vec_col: str) -> DataFrame:
     v = as_double(F.col(vec_col))
     return emb.select(F.col(id_col).alias("id"), v.alias("v"),
@@ -394,9 +370,8 @@ def cell_semantic_dedup(emb: DataFrame, threshold: float = 0.35,
                         centroids: list[list[float]] | None = None
                         ) -> DataFrame:
     """CELL-BLOCKED semantic deduplication — the paper-faithful SemDeDup
-    shape (Abbas et al. 2023: k-means cells, pairs mined per cluster),
-    complementing :func:`semantic_dedup` above (SRP-blocked pairs +
-    full connected components): assign every embedding to a coarse
+    shape (Abbas et al. 2023: k-means cells, pairs mined per cluster):
+    assign every embedding to a coarse
     cell, mine near-duplicate pairs ONLY within cells, and keep one
     representative per duplicate relation. Returns the survivors as
     (``id_col``, cell).
@@ -673,37 +648,6 @@ def ivf_incremental_assign(batch: DataFrame, model: DataFrame,
     return (_assign(base, cents)
             .select(F.col("id").alias(id_col),
                     F.col("centroid").alias("cell")))
-
-
-def ivf_append_batch(batch: DataFrame, path: str, model: DataFrame,
-                     n_centroids: int = 16, id_col: str = "vec_id",
-                     vec_col: str = "embedding",
-                     centroids: list[list[float]] | None = None,
-                     max_files_per_cell: int | None = 8) -> None:
-    """Append an arriving batch into the cell-partitioned corpus at rest
-    (:func:`write_ivf_partitioned`): assign against the FIXED centroid
-    model, then ``mode("append").partitionBy("cell")`` — new files land
-    inside the existing cell directories, so every query's partition
-    pruning keeps working and the corpus is never rewritten. (Centroid
-    DRIFT is a refit + rewrite decision made offline, deliberately not
-    here — production ANN systems version the model for exactly that
-    reason.)
-
-    After the append, cells whose file count crept past
-    ``max_files_per_cell`` are folded in place
-    (``sources/layout.compact_partitioned_dir`` — directory structure,
-    and with it partition pruning, untouched; pass ``None`` to manage
-    compaction externally)."""
-    base = _vec_base(batch, id_col, vec_col)
-    cents = _centroid_frame(_vec_base(model, id_col, vec_col),
-                            n_centroids, centroids)
-    (_assign(base, cents)
-     .select(F.col("id"), F.col("v"), F.col("centroid").alias("cell"))
-     .write.partitionBy("cell").mode("append").parquet(path))
-    if max_files_per_cell is not None:
-        from ..sources.layout import compact_partitioned_dir
-        compact_partitioned_dir(batch.sparkSession, path,
-                                max_files_per_cell)
 
 
 def multi_probe_topk(emb: DataFrame, n_probes: int = 10, k: int = 5,

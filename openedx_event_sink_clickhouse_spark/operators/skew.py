@@ -1,17 +1,11 @@
 """Skew-mitigation operators: salting for hot keys.
 
 AQE's skew-join splitting (on in ``session.py``) handles most runtime
-skew; these are the explicit tools for the cases AQE can't fix:
-
-- :func:`salted_aggregate` — a hot grouping key overloads one reduce
-  task. Two-phase aggregation (groupBy(key, salt) → groupBy(key)) caps
-  any single task's share of a hot key at 1/``buckets``. Only valid for
-  algebraic aggregates (sum/count/min/max — re-aggregable partials).
-- :func:`salted_broadcast_join` — joining a big skewed fact against a
-  dim too large for one broadcast bucket but small enough to replicate
-  ``buckets``× : the fact side gets a DETERMINISTIC per-row salt, the
-  dim is exploded across all salts, and the join key becomes
-  (key, salt) — spreading each hot key over ``buckets`` tasks.
+skew; :func:`salted_aggregate` is the explicit tool for the case AQE
+can't fix: a hot grouping key overloads one reduce task. Two-phase
+aggregation (groupBy(key, salt) → groupBy(key)) caps any single task's
+share of a hot key at 1/``buckets``. Only valid for algebraic aggregates
+(sum/count/min/max — re-aggregable partials).
 
 Salts are derived from stable row content (xxhash64), never ``rand()``:
 deterministic plans re-execute identically under task retry —
@@ -22,7 +16,7 @@ rather than relying on exactly-once delivery).
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 AGG_FNS = {"sum": (F.sum, F.sum), "count": (F.count, F.sum),
@@ -55,21 +49,3 @@ def salted_aggregate(df: DataFrame, key: str | list[str],
     return (partial.groupBy(*keys)
             .agg(*[AGG_FNS[fn][1](out).alias(out)
                    for out, (fn, _) in aggs.items()]))
-
-
-def salted_broadcast_join(fact: DataFrame, dim: DataFrame, key: str,
-                          buckets: int = 8, how: str = "inner",
-                          salt_from: str | None = None) -> DataFrame:
-    """Join a skewed fact to a replicable dim by spreading each key over
-    ``buckets`` (key, salt) sub-keys. The dim is exploded ``buckets``× —
-    use only when buckets × |dim| is still broadcast-sized."""
-    salt_src = salt_from or key
-    salted_fact = fact.withColumn(
-        "_salt", F.pmod(F.xxhash64(*fact.columns)
-                        if salt_from is None else F.xxhash64(salt_src),
-                        F.lit(buckets)))
-    salted_dim = (dim.withColumn(
-        "_salt", F.explode(F.sequence(F.lit(0), F.lit(buckets - 1))))
-        .withColumn("_salt", F.col("_salt").cast("bigint")))
-    out = salted_fact.join(F.broadcast(salted_dim), [key, "_salt"], how)
-    return out.drop("_salt")

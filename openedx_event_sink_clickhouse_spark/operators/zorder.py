@@ -51,22 +51,45 @@ def zorder_key(cols: list[Column | str], bits: int = 16) -> Column:
     return z
 
 
-def write_zordered(df: DataFrame, path: str, cols: list[str],
-                   bits: int = 16, n_files: int = 16) -> None:
-    """Write ``df`` clustered along the Morton curve of ``cols``:
-    compute the z-key map-side, ``repartitionByRange`` on it (Spark's
-    sampled-boundary distributed sort — the scalable total order, no
-    single-partition window), sort within partitions, drop the key.
-    Each output file then covers a contiguous z-range = a small
-    hyper-rectangle of the key space, so every z-ordered column's
-    min/max footer stats are tight (pinned by
-    tests/test_zorder.py::test_zorder_skips_on_both_dimensions).
+def _normalize(col: Column, lo: int, hi: int, bits: int) -> Column:
+    """Min-max scale an integer column into [0, 2^bits). The scale
+    factor is computed driver-side in double so epoch-scale values never
+    overflow an int64 product; layout quality tolerates the last-bit
+    rounding (this feeds a sort key, not a query answer)."""
+    span = max(hi - lo + 1, 1)
+    c = F.greatest(F.least(col.cast("long"), F.lit(hi)), F.lit(lo))
+    scaled = F.floor((c - F.lit(lo)).cast("double") * ((1 << bits) / span))
+    return F.least(scaled, F.lit((1 << bits) - 1)).cast("long")
 
-    One exchange total. At 100 TB this is the same cost as any
-    sorted-table write; the payoff is every subsequent selective scan
-    on ANY clustered dimension."""
-    keyed = df.withColumn("_z", zorder_key(cols, bits))
-    (keyed.repartitionByRange(n_files, "_z")
+
+def write_zordered(df: DataFrame, path: str, zcols: list[str],
+                   bits: int = 16, num_files: int = 8,
+                   bounds: list[tuple[int, int]] | None = None) -> None:
+    """Write ``df`` as parquet clustered along the Morton curve of
+    ``zcols``: min-max normalize each column into ``[0, 2^bits)``, key
+    the rows with :func:`zorder_key`, ``repartitionByRange`` on the key
+    (Spark's sampled-boundary distributed sort — the scalable total
+    order, no single-partition window), sort within partitions, drop the
+    key. Each output file then covers a contiguous z-range = a small
+    hyper-rectangle of the key space, so every z-ordered column's
+    min/max footer stats are tight.
+
+    ``bounds`` (per-column [lo, hi]) default to a one-row min/max
+    aggregate over the input — a write-time action, amortized over every
+    future pruned scan. Normalizing keeps wide-range columns (ids, epoch
+    times) on the curve instead of wrapping their low bits. Integer
+    columns only (the interleave is integer arithmetic)."""
+    if bounds is None:
+        aggs = []
+        for c in zcols:
+            aggs += [F.min(F.col(c).cast("long")).alias(f"_lo_{c}"),
+                     F.max(F.col(c).cast("long")).alias(f"_hi_{c}")]
+        row = df.agg(*aggs).collect()[0]
+        bounds = [(row[f"_lo_{c}"], row[f"_hi_{c}"]) for c in zcols]
+    norm = [_normalize(F.col(c), lo, hi, bits)
+            for c, (lo, hi) in zip(zcols, bounds)]
+    (df.withColumn("_z", zorder_key(norm, bits))
+     .repartitionByRange(num_files, "_z")
      .sortWithinPartitions("_z")
      .drop("_z")
      .write.mode("overwrite").parquet(path))

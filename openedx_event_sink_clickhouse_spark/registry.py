@@ -146,9 +146,7 @@ def _text_cluster_labels(spark, sf_dir: str) -> DataFrame:
     under the derived-parquet cache, and `dedup_survivors`,
     `dedup_cluster_sizes`, and any future audit query serve from the
     stored table. `dedup_clusters` keeps exercising the LIVE chain, so
-    the computation itself stays driver-graded. Mirrors the at-rest role
-    of the digest table (operators/dedup.py:write_digest_table) and the
-    IVF cell layout (sim_ivf_partitioned)."""
+    the computation itself stays driver-graded."""
     def build(p):
         from .operators.dedup import connected_components, minhash_lsh_pairs
         pairs = minhash_lsh_pairs(_t(spark, sf_dir, "documents"),
@@ -1383,8 +1381,7 @@ def _simsd(spark, sf_dir):
     # SemDeDup-style prune, served from the AT-REST semantic label
     # table (SRP pairs + CC computed once per corpus by
     # _semantic_cluster_labels); this query is the broadcast anti-join
-    # alone. The live composed flow (semantic_dedup) stays pinned by
-    # tests/test_similarity.py.
+    # alone.
     from .operators.dedup import survivors_from_labels
     labels = _semantic_cluster_labels(spark, sf_dir)
     return survivors_from_labels(_t(spark, sf_dir, "embeddings"), labels,
@@ -7739,11 +7736,8 @@ SELECT o_orderkey, x, y,
 FROM b
 """)
 def _cur_zorder(spark, sf_dir):
-    # Morton z-key over (customer bucket, order day): the multi-dim
-    # clustering key behind write_zordered — bit interleave unrolled as
-    # pure codegen'd Column arithmetic, no UDF, no shuffle. The layout
-    # writer + both-dimension file-skipping property are pinned in
-    # tests/test_zorder.py (parquet footer stats, engine-agnostic).
+    # Morton z-key over (customer bucket, order day): bit interleave
+    # unrolled as pure codegen'd Column arithmetic, no UDF, no shuffle.
     from .operators.zorder import zorder_key
     o = _t(spark, sf_dir, "orders")
     b = o.select(
@@ -10365,8 +10359,7 @@ def _sim_cov(spark, sf_dir):
     # Sufficient-statistics covariance (the PCA/whitening input): ONE
     # groupBy-less aggregate with exact-decimal moments (order-free, so
     # the oracle hash is reproducible), then a 1-row literal explode to
-    # (dim_i, dim_j) grain. The full-dim eigh path is pca_fit (pytest
-    # vs numpy — eigendecomposition has no SQL twin).
+    # (dim_i, dim_j) grain.
     from .operators.pca import embedding_covariance
     return embedding_covariance(_t(spark, sf_dir, "embeddings"), dims=8)
 

@@ -1,128 +1,16 @@
-"""Ingest-time data layout: Z-order clustering and small-file compaction.
+"""Bucketed-table maintenance: the catalog location of a table and the
+post-append compaction that folds an append-grown BUCKETED table back to
+~1 file per bucket with its bucket spec intact.
 
-At 100 TB the scan you avoid is the cheapest scan: parquet row-group
-min/max statistics prune whole files, but only if the writer clustered
-the data so each file covers a NARROW range of the query columns. A sort
-on one column gives perfect pruning on that column and none on any
-other; interleaving the bits of several columns (a Z-order / Morton
-curve) gives good pruning on ALL of them at once — the standard layout
-trick behind Delta/Iceberg `OPTIMIZE ZORDER BY`.
-
-Everything here is JVM Column arithmetic (shifts/masks — whole-stage
-codegen'd); the only driver action is the optional one-row bounds
-aggregate at write time, which is an ingest-job cost, not a query cost.
+The at-rest count tables (``operators/heavyhitters.write_count_table``,
+``append_counts_batch``, ``retract_keys``) append a few files per bucket
+per batch and call :func:`compact_bucketed_table` after every append;
+readers keep their exchange-free bucketed scans across the fold.
 """
 
 from __future__ import annotations
 
-import math
-
-from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-
-
-def _normalize(col: Column, lo: int, hi: int, bits: int) -> Column:
-    """Min-max scale an integer column into [0, 2^bits). The scale
-    factor is computed driver-side in double so epoch-scale values never
-    overflow an int64 product; layout quality tolerates the last-bit
-    rounding (this feeds a sort key, not a query answer)."""
-    span = max(hi - lo + 1, 1)
-    c = F.greatest(F.least(col.cast("long"), F.lit(hi)), F.lit(lo))
-    scaled = F.floor((c - F.lit(lo)).cast("double") * ((1 << bits) / span))
-    return F.least(scaled, F.lit((1 << bits) - 1)).cast("long")
-
-
-def zvalue(cols: list[Column], bounds: list[tuple[int, int]],
-           bits: int = 16) -> Column:
-    """Morton (Z-order) value interleaving ``bits`` bits of each column,
-    normalized to its [lo, hi] bounds. Pure shift/mask Column arithmetic;
-    with n columns the result uses n*bits bits (keep ≤ 62)."""
-    n = len(cols)
-    if n * bits > 62:
-        raise ValueError("n_cols * bits must fit a signed 64-bit value")
-    norm = [_normalize(c, lo, hi, bits)
-            for c, (lo, hi) in zip(cols, bounds)]
-    z = F.lit(0).cast("long")
-    for bit in range(bits):
-        for j, c in enumerate(norm):
-            z = z + F.shiftleft(
-                F.shiftright(c, bit).bitwiseAND(F.lit(1)),
-                bit * n + j)
-    return z
-
-
-def write_zordered(df: DataFrame, path: str, zcols: list[str],
-                   bits: int = 16, num_files: int = 8,
-                   bounds: list[tuple[int, int]] | None = None) -> None:
-    """Write ``df`` as parquet clustered on the Z-order curve of
-    ``zcols``: range-partition by z (each output file owns a compact
-    curve segment) then sort within partitions, so every file's row-group
-    min/max box is tight in EVERY z column — multi-dimensional pruning
-    from one layout.
-
-    ``bounds`` (per-column [lo, hi]) default to a one-row min/max
-    aggregate over the input — a write-time action, amortized over every
-    future pruned scan. Integer/date-castable columns only (the Morton
-    interleave is integer arithmetic).
-    """
-    if bounds is None:
-        aggs = []
-        for c in zcols:
-            aggs += [F.min(F.col(c).cast("long")).alias(f"_lo_{c}"),
-                     F.max(F.col(c).cast("long")).alias(f"_hi_{c}")]
-        row = df.agg(*aggs).collect()[0]
-        bounds = [(row[f"_lo_{c}"], row[f"_hi_{c}"]) for c in zcols]
-    z = zvalue([F.col(c) for c in zcols], bounds, bits)
-    (df.withColumn("_z", z)
-       .repartitionByRange(num_files, "_z")
-       .sortWithinPartitions("_z")
-       .drop("_z")
-       .write.mode("overwrite").parquet(path))
-
-
-def file_pruning_stats(path: str, cols: list[str]) -> list[dict]:
-    """Per-file min/max of ``cols`` from parquet row-group metadata —
-    the statistics a pruning scan consults. Returns one dict per file:
-    {col: (min, max)}. Pure pyarrow metadata reads; no data pages."""
-    import glob
-    import os
-
-    import pyarrow.parquet as pq
-
-    out = []
-    for f in sorted(glob.glob(os.path.join(path, "*.parquet"))):
-        pf = pq.ParquetFile(f)
-        lo: dict[str, object] = {}
-        hi: dict[str, object] = {}
-        idx = {pf.schema_arrow.names[i]: i
-               for i in range(len(pf.schema_arrow.names))}
-        for rg in range(pf.metadata.num_row_groups):
-            for c in cols:
-                st = pf.metadata.row_group(rg).column(idx[c]).statistics
-                if st is None or not st.has_min_max:
-                    continue
-                lo[c] = st.min if c not in lo else min(lo[c], st.min)
-                hi[c] = st.max if c not in hi else max(hi[c], st.max)
-        out.append({c: (lo.get(c), hi.get(c)) for c in cols})
-    return out
-
-
-def clustering_factor(stats: list[dict], cols: list[str]) -> float:
-    """Mean normalized bounding-box volume across files — the expected
-    fraction of files a uniformly random multi-column point query must
-    open (1.0 = every file spans the full domain; → 0 = perfect
-    clustering). Numeric columns only."""
-    glo = {c: min(s[c][0] for s in stats) for c in cols}
-    ghi = {c: max(s[c][1] for s in stats) for c in cols}
-    vols = []
-    for s in stats:
-        v = 1.0
-        for c in cols:
-            span = (s[c][1] - s[c][0]) if s[c][0] is not None else 0
-            total = max(ghi[c] - glo[c], 1)
-            v *= min(1.0, (span + 1) / (total + 1))
-        vols.append(v)
-    return float(sum(vols) / max(len(vols), 1)) if vols else math.nan
 
 
 def _dir_parquet_files(path: str) -> list[str]:
@@ -146,10 +34,10 @@ def compact_bucketed_table(spark, table: str, bucket_col: str,
                            max_files_per_bucket: int = 8) -> bool:
     """Fold an append-grown BUCKETED table back to ~1 file per bucket,
     preserving the bucket/sort spec — the maintenance half of the
-    append-mode contract in ``operators/dedup.write_digest_table`` /
-    ``write_cluster_table`` (each appended batch lands a few files per
-    bucket; after enough batches the scan's task count and file-listing
-    pressure grow without bound).
+    append-mode contract in ``operators/heavyhitters.write_count_table``
+    (each appended batch lands a few files per bucket; after enough
+    batches the scan's task count and file-listing pressure grow without
+    bound).
 
     File-count trigger: no-op (False) until the table holds more than
     ``max_files_per_bucket × buckets`` parquet files, so callers can
@@ -168,17 +56,16 @@ def compact_bucketed_table(spark, table: str, bucket_col: str,
     nothing (measured: 16 → 8 files via the table scan, 16 → ``buckets``
     via the path scan).
 
-    CRASH-RECOVERY CAVEAT (single-writer assumed, like the partitioned
-    fold below): the swap is DROP TABLE then RENAME — two catalog
-    statements, not one atomic commit. A crash between them leaves no
-    table under ``table``; the data survives only in the
+    CRASH-RECOVERY CAVEAT (single-writer assumed): the swap is DROP
+    TABLE then RENAME — two catalog statements, not one atomic commit.
+    A crash between them leaves no table under ``table``; the data
+    survives only in the
     ``{table}__compacting`` scratch table. The next invocation (the
     append paths run this unconditionally after every append) recovers
     that orphan by renaming it back before doing anything else, so the
     non-atomic window heals on the usual maintenance cadence; on a
     shared production store this sequencing belongs to a table format's
-    atomic metadata commit (Delta/Iceberg), as does the partitioned
-    variant's."""
+    atomic metadata commit (Delta/Iceberg)."""
     tmp = f"{table}__compacting"
     if spark.catalog.tableExists(tmp):
         if spark.catalog.tableExists(table):
@@ -203,86 +90,3 @@ def compact_bucketed_table(spark, table: str, bucket_col: str,
     return True
 
 
-def compact_partitioned_dir(spark, path: str,
-                            max_files_per_partition: int = 8,
-                            target_mb: int = 128) -> int:
-    """Fold small files WITHIN each partition directory of a
-    partitioned parquet layout (e.g. the IVF ``cell=N`` dirs grown by
-    ``similarity.ivf_append_batch``), leaving the directory structure —
-    and with it every reader's partition pruning — intact. Returns the
-    number of partitions folded.
-
-    Per-partition trigger: only directories holding more than
-    ``max_files_per_partition`` files are rewritten, each to
-    ~``target_mb`` output files sized from its on-disk bytes. The
-    rewrite is write-scratch-then-swap per directory (the single-job
-    equivalent of a table format's compaction commit; on a shared
-    production store this sequencing belongs to Delta/Iceberg-style
-    metadata, as the README's layout notes say)."""
-    import glob
-    import os
-    import shutil
-
-    # A crashed prior run can leave `<part>.compact_tmp` / `<part>.
-    # compact_old` scratch dirs next to the live ones. Both contain '='
-    # and would otherwise be swept up as live partitions. Recover, don't
-    # just delete: if the live dir is GONE the crash hit between the two
-    # renames and a scratch dir holds the partition's only copy —
-    # promote the completed rewrite (tmp with its _SUCCESS marker) or
-    # else the renamed-away original; with the live dir present, or a
-    # tmp that never finished its write, scratch is stale.
-    scratch = glob.glob(os.path.join(path, "*=*.compact_tmp")) + \
-        glob.glob(os.path.join(path, "*=*.compact_old"))
-    for live_dir in {s.rsplit(".compact_", 1)[0] for s in scratch}:
-        tmp_d, old_d = f"{live_dir}.compact_tmp", f"{live_dir}.compact_old"
-        if not os.path.isdir(live_dir):
-            if os.path.isfile(os.path.join(tmp_d, "_SUCCESS")):
-                os.rename(tmp_d, live_dir)
-            elif os.path.isdir(old_d):
-                os.rename(old_d, live_dir)
-        shutil.rmtree(tmp_d, ignore_errors=True)
-        shutil.rmtree(old_d, ignore_errors=True)
-    folded = 0
-    live = [d for d in sorted(glob.glob(os.path.join(path, "*=*")))
-            if not os.path.basename(d).endswith((".compact_tmp",
-                                                 ".compact_old"))]
-    for part_dir in live:
-        files = _dir_parquet_files(part_dir)
-        if len(files) <= max_files_per_partition:
-            continue
-        n_bytes = sum(os.path.getsize(f) for f in files)
-        n_out = max(1, math.ceil(n_bytes / (target_mb << 20)))
-        tmp = f"{part_dir}.compact_tmp"
-        shutil.rmtree(tmp, ignore_errors=True)
-        (spark.read.parquet(part_dir)
-         .repartition(n_out)
-         .write.mode("overwrite").parquet(tmp))
-        old = f"{part_dir}.compact_old"
-        shutil.rmtree(old, ignore_errors=True)
-        os.rename(part_dir, old)
-        os.rename(tmp, part_dir)
-        shutil.rmtree(old)
-        folded += 1
-    return folded
-
-
-def compact_small_files(spark, in_path: str, out_path: str,
-                        target_mb: int = 128) -> int:
-    """Rewrite a small-file-fragmented parquet directory into
-    ~``target_mb`` files: the maintenance job that keeps scan task counts
-    (and NameNode/listing pressure) bounded as micro-batches accumulate.
-    Returns the number of output files planned.
-
-    Sizing uses the INPUT's on-disk bytes (compressed) — a metadata sum,
-    no data read — then one AQE-friendly round-robin repartition.
-    """
-    import glob
-    import os
-
-    n_bytes = sum(os.path.getsize(f)
-                  for f in glob.glob(os.path.join(in_path, "*.parquet")))
-    n_out = max(1, math.ceil(n_bytes / (target_mb << 20)))
-    (spark.read.parquet(in_path)
-        .repartition(n_out)
-        .write.mode("overwrite").parquet(out_path))
-    return n_out

@@ -99,15 +99,3 @@ def load_table(spark: SparkSession, name: str, sf_dir: str | None = None) -> Dat
             # the pinned UTC session TZ the NTZ→LTZ cast is value-identical.
             df = df.withColumn(c, F.col(c).cast("timestamp"))
     return df
-
-
-def load_tables(spark: SparkSession, sf_dir: str | None = None,
-                names: tuple[str, ...] = TABLES) -> dict[str, DataFrame]:
-    """Load several tables; also registers each as a temp view so the
-    SQL surface (``spark.sql``) sees the same catalog as the oracle."""
-    out = {}
-    for name in names:
-        df = load_table(spark, name, sf_dir)
-        df.createOrReplaceTempView(name)
-        out[name] = df
-    return out

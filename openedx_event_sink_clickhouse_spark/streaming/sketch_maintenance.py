@@ -20,7 +20,7 @@ history tables.
 State size: O(partials × epochs). For CMS that is depth·width rows per
 epoch (coordinator-scale forever); for per-key counts it grows with
 epochs — fold into a base partition periodically (:meth:`compact`) the
-way the digest/count tables compact files.
+way the count tables compact files.
 
 Compaction protocol (generation bases + atomic manifest), designed so
 every crash window and replay interleaving converges:
@@ -327,8 +327,8 @@ def hll_stream_maintainer(path: str, key_col: str = "user_id",
     the fold UNIONS same-day cells — sketch bytes merge by
     ``hll_union_agg``, not summation — so ``fold()`` is exactly the
     at-rest daily sketch table, and any coarser grain unions from there
-    (``cardinality.rollup_estimate``). Per-epoch state is O(days touched
-    by the batch)."""
+    (``hll_union_agg`` again). Per-epoch state is O(days touched by the
+    batch)."""
     from ..operators.cardinality import daily_sketch_table
 
     return EpochPartitionedAppender(
@@ -337,21 +337,6 @@ def hll_stream_maintainer(path: str, key_col: str = "user_id",
         agg_exprs=[F.sum("n_events").alias("n_events"),
                    F.expr("hll_union_agg(sketch, true)").alias("sketch")],
         auto_compact_epochs=auto_compact_epochs)
-
-
-def counts_stream_maintainer(path: str, key_col: str,
-                             auto_compact_epochs: int | None = 64
-                             ) -> EpochPartitionedAppender:
-    """Per-key exact counts kept fresh by a stream (the count table's
-    streaming twin): each trigger appends the batch's own groupBy
-    counts; fold() is the serve-side sum. Compact periodically — unlike
-    CMS, per-epoch partial size is O(batch distinct keys)."""
-    def partials(b: DataFrame) -> DataFrame:
-        return (b.filter(F.col(key_col).isNotNull())
-                .groupBy(key_col).agg(F.count("*").alias("n_rows")))
-
-    return EpochPartitionedAppender(path, partials, [key_col], ["n_rows"],
-                                    auto_compact_epochs=auto_compact_epochs)
 
 
 def histogram_stream_maintainer(path: str, value_col: str, lo: float,

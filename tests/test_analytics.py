@@ -45,7 +45,7 @@ def test_scd2_history_semantics_and_single_shuffle(spark):
     from pyspark.sql import functions as F
 
     from openedx_event_sink_clickhouse_spark.operators.scd import (
-        current_of, scd2_history)
+        scd2_history)
     log = spark.createDataFrame(
         [(1, 10, 100, "a"), (1, 20, 101, "a"),   # unchanged -> collapse
          (1, 30, 102, "b"),                       # change
@@ -62,7 +62,7 @@ def test_scd2_history_semantics_and_single_shuffle(spark):
     assert rows[(1, 40)] == ("a", None, 1, True)
     assert rows[(2, 10)] == (None, 30, 2, False)
     assert rows[(2, 30)] == ("x", None, 1, True)
-    cur = {r.k: r.attr for r in current_of(hist).collect()}
+    cur = {r.k: r.attr for r in hist.filter(F.col("is_current")).collect()}
     assert cur == {1: "a", 2: "x"}
     # One Exchange in the static plan: the change lag, the island sum,
     # the island groupBy, and the interval lead all reuse the key hash

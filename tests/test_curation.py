@@ -341,32 +341,6 @@ def test_prepare_corpus_composition(spark):
         assert bins == sorted(bins)
 
 
-def test_write_epoch_shards_files_are_in_epoch_order(spark, tmp_path):
-    from openedx_event_sink_clickhouse_spark.operators.curation import (
-        shuffle_shards, write_epoch_shards)
-    docs = _docs(spark, [(i, f"epoch doc {i}", "en", "web")
-                         for i in range(300)])
-    path = str(tmp_path / "epoch")
-    write_epoch_shards(docs, path, n_shards=8)
-    back = spark.read.parquet(path)
-    # Placement matches the query-side operator exactly.
-    want = {(r.doc_id, r.shard, r.position)
-            for r in shuffle_shards(docs, n_shards=8).collect()}
-    got = {(r.doc_id, r.shard, r.position) for r in back.collect()}
-    assert got == want
-    # The at-rest contract: within every shard file, physical row order
-    # IS position order (no read-time sort needed to stream the epoch).
-    import glob
-    import pyarrow.parquet as pq
-    for d in glob.glob(path + "/shard=*"):
-        for f in glob.glob(d + "/*.parquet"):
-            pos = pq.read_table(f, columns=["position"])["position"].to_pylist()
-            assert pos == sorted(pos)
-    # Payload rides along: full doc columns present.
-    assert {"doc_id", "text", "lang", "source", "position"} <= \
-        set(back.columns)
-
-
 def test_perplexity_filter_band_semantics(spark, sf_dir):
     from openedx_event_sink_clickhouse_spark.operators.curation import (
         perplexity_filter)

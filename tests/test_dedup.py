@@ -349,8 +349,6 @@ def test_incremental_dedup_digest_table_history_is_shuffle_free(spark):
 
     from openedx_event_sink_clickhouse_spark.operators.dedup import (
         incremental_exact_dedup,
-        read_digest_table,
-        write_digest_table,
     )
     hist_docs = spark.createDataFrame(
         [(i, f"seen document number {i}") for i in range(50)],
@@ -362,9 +360,10 @@ def test_incremental_dedup_digest_table_history_is_shuffle_free(spark):
          (103, "brand new content b")],
         ["doc_id", "text"])
     spark.sql("DROP TABLE IF EXISTS digest_history")
-    write_digest_table(
-        hist_docs.select(F.md5("text").alias("content_hash")),
-        "digest_history", buckets=8, mode="overwrite")
+    (hist_docs.select(F.md5("text").alias("content_hash"))
+     .write.mode("overwrite")
+     .bucketBy(8, "content_hash").sortBy("content_hash")
+     .saveAsTable("digest_history"))
     try:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
         spark.conf.set("spark.sql.adaptive.enabled", "false")
@@ -376,7 +375,7 @@ def test_incremental_dedup_digest_table_history_is_shuffle_free(spark):
         prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
         spark.conf.set("spark.sql.shuffle.partitions", "8")
         out = incremental_exact_dedup(
-            batch, read_digest_table(spark, "digest_history"))
+            batch, spark.table("digest_history"))
         got = {r.doc_id for r in out.collect()}
         assert got == {101, 103}        # 100 seen, 102 loses in-batch
         plan = out._jdf.queryExecution().executedPlan().toString()
@@ -395,32 +394,6 @@ def test_incremental_dedup_digest_table_history_is_shuffle_free(spark):
         spark.sql("DROP TABLE IF EXISTS digest_history")
 
 
-def test_digest_table_append_extends_history(spark):
-    from pyspark.sql import functions as F
-
-    from openedx_event_sink_clickhouse_spark.operators.dedup import (
-        incremental_exact_dedup,
-        read_digest_table,
-        write_digest_table,
-    )
-    spark.sql("DROP TABLE IF EXISTS digest_append")
-    b1 = spark.createDataFrame([(0, "alpha"), (1, "beta")],
-                               ["doc_id", "text"])
-    b2 = spark.createDataFrame([(10, "alpha"), (11, "gamma")],
-                               ["doc_id", "text"])
-    try:
-        s1 = incremental_exact_dedup(b1, None)
-        write_digest_table(s1, "digest_append", buckets=4,
-                           mode="overwrite")
-        s2 = incremental_exact_dedup(
-            b2, read_digest_table(spark, "digest_append"))
-        assert {r.doc_id for r in s2.collect()} == {11}  # alpha seen
-        write_digest_table(s2, "digest_append", buckets=4)  # append
-        assert read_digest_table(spark, "digest_append").count() == 3
-    finally:
-        spark.sql("DROP TABLE IF EXISTS digest_append")
-
-
 def test_digest_table_overwrite_qualified_and_invalid_names(spark):
     # The orphaned-location cleanup derives the path from the CATALOG
     # (owning database's locationUri), so a qualified db.tbl overwrite
@@ -429,19 +402,19 @@ def test_digest_table_overwrite_qualified_and_invalid_names(spark):
     import pytest
     from pyspark.sql import functions as F
 
-    from openedx_event_sink_clickhouse_spark.operators.dedup import (
-        read_digest_table,
-        write_digest_table,
+    from openedx_event_sink_clickhouse_spark.operators.heavyhitters import (
+        write_count_table,
     )
     hashes = spark.createDataFrame([("h1",), ("h2",)], ["content_hash"])
     with pytest.raises(ValueError, match="db.tbl"):
-        write_digest_table(hashes, "cat.db.tbl", mode="overwrite")
+        write_count_table(hashes, "content_hash", "cat.db.tbl",
+                          mode="overwrite")
     spark.sql("CREATE DATABASE IF NOT EXISTS dedup_test_db")
     try:
         spark.sql("DROP TABLE IF EXISTS dedup_test_db.digests")
-        write_digest_table(hashes, "dedup_test_db.digests", buckets=2,
-                           mode="overwrite")
-        assert read_digest_table(spark, "dedup_test_db.digests").count() == 2
+        write_count_table(hashes, "content_hash", "dedup_test_db.digests",
+                          buckets=2, mode="overwrite")
+        assert spark.table("dedup_test_db.digests").count() == 2
         # Simulate a crashed writer: drop the catalog entry but leave the
         # managed location behind; overwrite must still succeed.
         loc = spark.sql("DESCRIBE TABLE EXTENDED dedup_test_db.digests") \
@@ -451,52 +424,12 @@ def test_digest_table_overwrite_qualified_and_invalid_names(spark):
         path = loc[len("file:"):] if loc.startswith("file:") else loc
         os.makedirs(path, exist_ok=True)
         assert os.path.isdir(path)
-        write_digest_table(hashes, "dedup_test_db.digests", buckets=2,
-                           mode="overwrite")
-        assert read_digest_table(spark, "dedup_test_db.digests").count() == 2
+        write_count_table(hashes, "content_hash", "dedup_test_db.digests",
+                          buckets=2, mode="overwrite")
+        assert spark.table("dedup_test_db.digests").count() == 2
     finally:
         spark.sql("DROP TABLE IF EXISTS dedup_test_db.digests")
         spark.sql("DROP DATABASE IF EXISTS dedup_test_db")
-
-
-def test_cluster_table_roundtrip_matches_live_chain(spark, tmp_path):
-    # compute-once/serve-many: labels written at rest (bucketed on
-    # doc_id) must reproduce the live composed flow exactly —
-    # survivors, and the size histogram.
-    from openedx_event_sink_clickhouse_spark.operators.dedup import (
-        cluster_size_distribution,
-        connected_components,
-        dedup_corpus,
-        read_cluster_table,
-        survivors_from_labels,
-        write_cluster_table,
-    )
-    docs = spark.createDataFrame(
-        [(0, BASE), (1, BASE), (2, NEAR), (3, OTHER), (4, OTHER)],
-        ["doc_id", "text"])
-    pairs = minhash_lsh_pairs(docs, threshold=0.5)
-    labels = connected_components(pairs,
-                                  checkpoint_dir=str(tmp_path / "ckpt"))
-    spark.sql("DROP TABLE IF EXISTS cluster_labels_t")
-    try:
-        write_cluster_table(labels, "cluster_labels_t", buckets=4)
-        stored = read_cluster_table(spark, "cluster_labels_t")
-        # bucket spec survives the write (spark.table keeps metadata)
-        detail = spark.sql("DESCRIBE TABLE EXTENDED cluster_labels_t") \
-            .filter("col_name = 'Num Buckets'").first()
-        assert detail is not None and detail.data_type.strip() == "4"
-        got = {r.doc_id for r in
-               survivors_from_labels(docs, stored).collect()}
-        live = {r.doc_id for r in
-                dedup_corpus(docs, threshold=0.5,
-                             checkpoint_dir=str(tmp_path / "ckpt2"))
-                .collect()}
-        assert got == live == {0, 3}   # 1,2 near-dup 0; 4 exact-dups 3
-        sizes = {r.cluster_size: r.n_clusters
-                 for r in cluster_size_distribution(stored).collect()}
-        assert sizes == {3: 1, 2: 1}   # clusters {0,1,2} and {3,4}
-    finally:
-        spark.sql("DROP TABLE IF EXISTS cluster_labels_t")
 
 
 def test_incremental_neardup_matches_full_corpus_minus_index(spark, tmp_path):
@@ -918,6 +851,7 @@ def test_bands_of_hv_memo_rekeys_on_context_change(spark):
     first = dd._bands_of_hv()
     assert dd._bands_of_hv() is first          # same context -> memo hit
     live_key = dd._HV_BANDS_EXPR[0][0]
+    assert live_key is spark.sparkContext
     # simulate a recycled session: stale context identity in the memo
     dd._HV_BANDS_EXPR[0] = (object(), first)
     rebuilt = dd._bands_of_hv()

@@ -1,19 +1,61 @@
 """Data-layout tests: Z-order clustering must tighten per-file min/max
 boxes on BOTH interleaved columns (the pruning a 100 TB scan lives on),
-and compaction must bound output file counts. Verified from parquet
-row-group metadata — the same statistics a pruning scan consults."""
+and bucketed-table compaction must fold an append-grown table while
+keeping its bucket spec. Verified from parquet row-group metadata — the
+same statistics a pruning scan consults."""
 
 from __future__ import annotations
 
+import glob
+import math
+import os
+
+import pyarrow.parquet as pq
 from pyspark.sql import functions as F
 
-from openedx_event_sink_clickhouse_spark.sources.layout import (
-    clustering_factor,
-    compact_small_files,
-    file_pruning_stats,
+from openedx_event_sink_clickhouse_spark.operators.zorder import (
     write_zordered,
-    zvalue,
 )
+
+
+def file_pruning_stats(path: str, cols: list[str]) -> list[dict]:
+    """Per-file min/max of ``cols`` from parquet row-group metadata —
+    the statistics a pruning scan consults. Returns one dict per file:
+    {col: (min, max)}. Pure pyarrow metadata reads; no data pages."""
+    out = []
+    for f in sorted(glob.glob(os.path.join(path, "*.parquet"))):
+        pf = pq.ParquetFile(f)
+        lo: dict[str, object] = {}
+        hi: dict[str, object] = {}
+        idx = {pf.schema_arrow.names[i]: i
+               for i in range(len(pf.schema_arrow.names))}
+        for rg in range(pf.metadata.num_row_groups):
+            for c in cols:
+                st = pf.metadata.row_group(rg).column(idx[c]).statistics
+                if st is None or not st.has_min_max:
+                    continue
+                lo[c] = st.min if c not in lo else min(lo[c], st.min)
+                hi[c] = st.max if c not in hi else max(hi[c], st.max)
+        out.append({c: (lo.get(c), hi.get(c)) for c in cols})
+    return out
+
+
+def clustering_factor(stats: list[dict], cols: list[str]) -> float:
+    """Mean normalized bounding-box volume across files — the expected
+    fraction of files a uniformly random multi-column point query must
+    open (1.0 = every file spans the full domain; → 0 = perfect
+    clustering). Numeric columns only."""
+    glo = {c: min(s[c][0] for s in stats) for c in cols}
+    ghi = {c: max(s[c][1] for s in stats) for c in cols}
+    vols = []
+    for s in stats:
+        v = 1.0
+        for c in cols:
+            span = (s[c][1] - s[c][0]) if s[c][0] is not None else 0
+            total = max(ghi[c] - glo[c], 1)
+            v *= min(1.0, (span + 1) / (total + 1))
+        vols.append(v)
+    return float(sum(vols) / max(len(vols), 1)) if vols else math.nan
 
 
 def _events(spark, sf_dir):
@@ -21,23 +63,6 @@ def _events(spark, sf_dir):
     return (load_table(spark, "events", sf_dir)
             .select("event_id", "user_id",
                     F.dayofmonth("ts").alias("day"), "value"))
-
-
-def test_zvalue_is_the_morton_code_on_a_4x4_grid(spark):
-    df = spark.range(16).select(
-        (F.col("id") % 4).alias("x"),
-        (F.col("id") / 4).cast("int").alias("y"))
-    z = df.select("x", "y",
-                  zvalue([F.col("x"), F.col("y")],
-                         [(0, 3), (0, 3)], bits=2).alias("z")).collect()
-    got = {(r["x"], r["y"]): r["z"] for r in z}
-
-    def morton(x, y):
-        return ((x & 1) | ((y & 1) << 1)
-                | ((x >> 1 & 1) << 2) | ((y >> 1 & 1) << 3))
-
-    assert got == {(x, y): morton(x, y)
-                   for x in range(4) for y in range(4)}
 
 
 def test_zorder_layout_prunes_on_both_columns(spark, sf_dir, tmp_path):
@@ -77,28 +102,14 @@ def test_zorder_layout_prunes_on_both_columns(spark, sf_dir, tmp_path):
     assert spark.read.parquet(zord).count() == ev.count()
 
 
-def test_compact_small_files_bounds_file_count(spark, sf_dir, tmp_path):
-    ev = _events(spark, sf_dir)
-    frag = str(tmp_path / "frag")
-    out = str(tmp_path / "out")
-    ev.repartition(64).write.parquet(frag)
-    import glob
-    assert len(glob.glob(frag + "/*.parquet")) == 64
-    n = compact_small_files(spark, frag, out, target_mb=128)
-    files = glob.glob(out + "/*.parquet")
-    assert len(files) == n <= 4
-    assert spark.read.parquet(out).count() == ev.count()
-
-
 def test_compact_bucketed_table_folds_and_preserves_spec(spark):
     # Append-growth maintenance: after enough appends the trigger folds
-    # the digest table back to ~1 file per bucket; the bucket spec (and
-    # with it the exchange-free history join) and the data both survive.
-    from pyspark.sql import functions as F
-
-    from openedx_event_sink_clickhouse_spark.operators.dedup import (
-        read_digest_table,
-        write_digest_table,
+    # the count table back to ~1 file per bucket; the bucket spec (and
+    # with it the exchange-free serve-time fold) and the data both
+    # survive.
+    from openedx_event_sink_clickhouse_spark.operators.heavyhitters import (
+        append_counts_batch,
+        write_count_table,
     )
     from openedx_event_sink_clickhouse_spark.sources.layout import (
         _dir_parquet_files,
@@ -110,12 +121,12 @@ def test_compact_bucketed_table_folds_and_preserves_spec(spark):
             return spark.range(lo, hi).select(
                 F.md5(F.col("id").cast("string")).alias("content_hash"))
 
-        write_digest_table(hashes(0, 20), "digest_compact", buckets=2,
-                           mode="overwrite")
+        write_count_table(hashes(0, 20), "content_hash", "digest_compact",
+                          buckets=2, mode="overwrite")
         for i in range(1, 6):
-            write_digest_table(hashes(i * 20, i * 20 + 20),
-                               "digest_compact", buckets=2,
-                               max_files_per_bucket=2)
+            append_counts_batch(hashes(i * 20, i * 20 + 20),
+                                "content_hash", "digest_compact",
+                                buckets=2, max_files_per_bucket=2)
         files = _dir_parquet_files(table_location(spark, "digest_compact"))
         # last append ran the trigger: at most the fresh batch's files on
         # top of the 2 folded bucket files — far below the 6 appends x
@@ -124,88 +135,11 @@ def test_compact_bucketed_table_folds_and_preserves_spec(spark):
         detail = spark.sql("DESCRIBE TABLE EXTENDED digest_compact") \
             .filter("col_name = 'Num Buckets'").first()
         assert detail is not None and detail.data_type.strip() == "2"
-        assert read_digest_table(spark, "digest_compact").count() == 120
-        assert read_digest_table(spark, "digest_compact") \
+        assert spark.table("digest_compact").count() == 120
+        assert spark.table("digest_compact") \
             .select("content_hash").distinct().count() == 120
     finally:
         spark.sql("DROP TABLE IF EXISTS digest_compact")
-
-
-def test_ivf_append_compacts_cells_in_place(spark, tmp_path):
-    # Cell-dir maintenance: repeated appends fragment each cell; the
-    # post-append trigger folds oversized cells IN PLACE, so the
-    # directory layout (and partition pruning) is untouched and no row
-    # is lost or duplicated.
-    import glob
-    import os
-
-    from pyspark.sql import functions as F
-
-    from openedx_event_sink_clickhouse_spark.operators.similarity import (
-        ivf_append_batch,
-        write_ivf_partitioned,
-    )
-    from openedx_event_sink_clickhouse_spark.sources.layout import (
-        _dir_parquet_files)
-    import random
-    rng = random.Random(7)
-    rows = [(i, [rng.uniform(-1, 1) for _ in range(8)]) for i in range(120)]
-    emb = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    path = str(tmp_path / "ivf_compact")
-    write_ivf_partitioned(emb.filter(F.col("vec_id") < 40), path,
-                          n_centroids=4)
-    for lo in range(40, 120, 16):
-        batch = emb.filter((F.col("vec_id") >= lo)
-                           & (F.col("vec_id") < lo + 16))
-        ivf_append_batch(batch, path, model=emb, n_centroids=4,
-                         max_files_per_cell=2)
-    for cell_dir in glob.glob(os.path.join(path, "cell=*")):
-        assert len(_dir_parquet_files(cell_dir)) <= 2, cell_dir
-    got = spark.read.parquet(path)
-    assert got.count() == 120
-    assert got.select("id").distinct().count() == 120
-    one_cell = got.filter(F.col("cell") == 1)
-    one_cell.count()
-    plan = one_cell._jdf.queryExecution().executedPlan().toString()
-    assert "PartitionFilters" in plan
-
-
-def test_compact_partitioned_dir_recovers_crash_scratch(spark, tmp_path):
-    # Round-5 advisory: the '*=*' glob also matched cell=N.compact_tmp /
-    # .compact_old leftovers from a crashed fold, treating them as live
-    # partitions. Recovery contract: with the live dir present the
-    # scratch is stale and removed; with the live dir GONE (crash
-    # between the two renames) the completed rewrite (_SUCCESS) or the
-    # renamed-away original is promoted back — no partition lost, no
-    # scratch dir folded as data.
-    import os
-    import shutil
-
-    from openedx_event_sink_clickhouse_spark.sources.layout import (
-        compact_partitioned_dir)
-
-    base = str(tmp_path / "parts")
-    df = spark.range(60).selectExpr("id % 3 AS cell", "id AS v")
-    df.repartition(6).write.partitionBy("cell").parquet(base)
-
-    # Stale scratch next to a LIVE partition: must be cleaned, not folded.
-    shutil.copytree(os.path.join(base, "cell=0"),
-                    os.path.join(base, "cell=0.compact_old"))
-    # Crash between renames: live dir gone, original survives as .compact_old.
-    os.rename(os.path.join(base, "cell=1"),
-              os.path.join(base, "cell=1.compact_old"))
-    # Crash mid-rewrite: incomplete tmp (no _SUCCESS) plus live dir gone,
-    # old also present — old must win over the incomplete tmp.
-    os.rename(os.path.join(base, "cell=2"),
-              os.path.join(base, "cell=2.compact_old"))
-    os.makedirs(os.path.join(base, "cell=2.compact_tmp"))
-
-    compact_partitioned_dir(spark, base, max_files_per_partition=1)
-    names = sorted(os.listdir(base))
-    assert [n for n in names if ".compact" in n] == []
-    got = spark.read.parquet(base)
-    assert got.count() == 60
-    assert got.select("cell").distinct().count() == 3
 
 
 def test_compact_bucketed_table_recovers_orphaned_scratch(spark):
@@ -213,8 +147,8 @@ def test_compact_bucketed_table_recovers_orphaned_scratch(spark):
     # in {table}__compacting; the next invocation must promote it back
     # before (re)compacting, and discard a stale scratch when the live
     # table is intact.
-    from openedx_event_sink_clickhouse_spark.operators.dedup import (
-        read_digest_table, write_digest_table)
+    from openedx_event_sink_clickhouse_spark.operators.heavyhitters import (
+        append_counts_batch)
     from openedx_event_sink_clickhouse_spark.sources.layout import (
         compact_bucketed_table)
 
@@ -228,7 +162,7 @@ def test_compact_bucketed_table_recovers_orphaned_scratch(spark):
             "cast(10 AS long) AS n_bytes")
 
     try:
-        write_digest_table(hashes(0, 30), tbl, buckets=2)
+        append_counts_batch(hashes(0, 30), "content_hash", tbl, buckets=2)
         # Simulate the crash: rename the live table away to the scratch
         # name (equivalent end-state: only __compacting exists).
         spark.sql(f"ALTER TABLE {tbl} RENAME TO {tbl}__compacting")
@@ -236,12 +170,12 @@ def test_compact_bucketed_table_recovers_orphaned_scratch(spark):
         compact_bucketed_table(spark, tbl, "content_hash", buckets=2)
         assert spark.catalog.tableExists(tbl)
         assert not spark.catalog.tableExists(f"{tbl}__compacting")
-        assert read_digest_table(spark, tbl).count() == 30
+        assert spark.table(tbl).count() == 30
         # Stale scratch + intact live table: scratch dropped, table kept.
         hashes(100, 110).write.saveAsTable(f"{tbl}__compacting")
         compact_bucketed_table(spark, tbl, "content_hash", buckets=2)
         assert not spark.catalog.tableExists(f"{tbl}__compacting")
-        assert read_digest_table(spark, tbl).count() == 30
+        assert spark.table(tbl).count() == 30
     finally:
         for t in (tbl, f"{tbl}__compacting"):
             spark.sql(f"DROP TABLE IF EXISTS {t}")

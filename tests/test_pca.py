@@ -1,6 +1,5 @@
-"""PCA via sufficient statistics: pca_fit/pca_project against a numpy
-oracle (eigendecomposition has no SQL twin; sim_embedding_covariance
-carries the DuckDB-hash-checked moment path)."""
+"""Covariance via sufficient statistics against numpy
+(sim_embedding_covariance carries the DuckDB-hash-checked moment path)."""
 
 from __future__ import annotations
 
@@ -9,8 +8,6 @@ import pytest
 
 from openedx_event_sink_clickhouse_spark.operators.pca import (
     embedding_covariance,
-    pca_fit,
-    pca_project,
 )
 
 
@@ -26,33 +23,6 @@ def _np_matrix(spark, sf_dir):
             [r["vec_id"] for r in rows])
 
 
-def test_pca_fit_matches_numpy(spark, sf_dir):
-    m, _ = _np_matrix(spark, sf_dir)
-    model = pca_fit(_emb(spark, sf_dir), k=4)
-    cov = np.cov(m, rowvar=False)
-    w, v = np.linalg.eigh(cov)
-    order = np.argsort(w)[::-1][:4]
-    np.testing.assert_allclose(model["mean"], m.mean(axis=0), atol=1e-9)
-    np.testing.assert_allclose(model["explained_variance"], w[order],
-                               rtol=1e-9)
-    for got, ref in zip(model["components"], v[:, order].T):
-        ref = ref if ref[np.argmax(np.abs(ref))] > 0 else -ref
-        np.testing.assert_allclose(got, ref, atol=1e-8)
-
-
-def test_pca_project_scores_and_variance(spark, sf_dir):
-    m, ids = _np_matrix(spark, sf_dir)
-    model = pca_fit(_emb(spark, sf_dir), k=3)
-    out = pca_project(_emb(spark, sf_dir), model).collect()
-    out.sort(key=lambda r: r["vec_id"])
-    got = np.array([[r["pc0"], r["pc1"], r["pc2"]] for r in out])
-    ref = (m - m.mean(axis=0)) @ np.asarray(model["components"]).T
-    np.testing.assert_allclose(got, ref, atol=1e-8)
-    # variance along each PC equals its eigenvalue (the PCA invariant)
-    np.testing.assert_allclose(got.var(axis=0, ddof=1),
-                               model["explained_variance"], rtol=1e-6)
-
-
 def test_covariance_operator_matches_numpy(spark, sf_dir):
     m, _ = _np_matrix(spark, sf_dir)
     cov = np.cov(m[:, :8], rowvar=False)
@@ -63,9 +33,3 @@ def test_covariance_operator_matches_numpy(spark, sf_dir):
     for (i, j), c in got.items():
         # decimal(12,8) component quantization bounds the drift
         assert c == pytest.approx(cov[i, j], abs=2e-6)
-
-
-def test_pca_fit_empty_raises(spark, sf_dir):
-    empty = _emb(spark, sf_dir).filter("vec_id < 0")
-    with pytest.raises(ValueError, match="empty input"):
-        pca_fit(empty, k=2)

@@ -165,82 +165,6 @@ def test_tfidf_from_index_matches_scan_and_prunes(spark, sf_dir, tmp_path):
     assert "Generate" not in plan
 
 
-def test_postings_append_equals_full_rebuild(spark, sf_dir, tmp_path):
-    # The incremental index loop: build on 80% of the corpus, append
-    # the remaining 20% as a batch. BM25 served from the appended index
-    # must equal BM25 from a FULL rebuild (postings land in the same
-    # bucket dirs, stats fold from the increment rows), buckets stay
-    # compacted, and partition pruning survives the append.
-    import glob
-    import os
-
-    from pyspark.sql import functions as F
-
-    from openedx_event_sink_clickhouse_spark.operators.retrieval import (
-        append_postings_batch,
-        bm25_topk_from_index,
-        write_postings_index,
-    )
-    from openedx_event_sink_clickhouse_spark.sources.layout import (
-        _dir_parquet_files)
-    from openedx_event_sink_clickhouse_spark.sources.tables import load_table
-    docs = load_table(spark, "documents", sf_dir)
-    thr = int(docs.count() * 0.8)
-    inc_path = str(tmp_path / "inc")
-    write_postings_index(docs.filter(F.col("doc_id") < thr), inc_path,
-                         n_buckets=16)
-    append_postings_batch(docs.filter(F.col("doc_id") >= thr), inc_path,
-                          n_buckets=16, max_files_per_bucket=2)
-    full_path = str(tmp_path / "full")
-    write_postings_index(docs, full_path, n_buckets=16)
-    terms = ["the", "data", "model"]
-    got = bm25_topk_from_index(spark, inc_path, terms, k=10, n_buckets=16)
-    want = bm25_topk_from_index(spark, full_path, terms, k=10, n_buckets=16)
-    assert [tuple(r) for r in got.collect()] == \
-        [tuple(r) for r in want.collect()]
-    for bdir in glob.glob(os.path.join(inc_path, "postings", "*=*")):
-        assert len(_dir_parquet_files(bdir)) <= 2, bdir
-    plan = got._jdf.queryExecution().executedPlan().toString()
-    assert "PartitionFilters" in plan and "term_bucket" in plan
-    # tf-idf served from the appended index must use the FOLDED corpus N
-    # (_index_stats, as the BM25 path does) — not the stale build-time
-    # stats row. Pin it with a pure-Python replica: expected scores with
-    # N = full corpus must match, and with the stale N = pre-append
-    # count they must NOT (so a regression to the raw stats table trips
-    # this). doc_norm staleness after append is separately documented.
-    import math
-
-    from openedx_event_sink_clickhouse_spark.operators.retrieval import (
-        tfidf_cosine_from_index)
-    got_t = {r.doc_id: r.tfidf_cosine
-             for r in tfidf_cosine_from_index(spark, inc_path, terms, k=20,
-                                              n_buckets=16).collect()}
-    hits = (spark.read.parquet(f"{inc_path}/postings")
-            .filter(F.col("term").isin(terms))
-            .select("doc_id", "term", "tf").collect())
-    norms = {r.doc_id: r.doc_norm for r in
-             spark.read.parquet(f"{inc_path}/tfidf_norms").collect()}
-    dfs: dict = {}
-    for h in hits:
-        dfs[h.term] = dfs.get(h.term, 0) + 1
-
-    def replica(n_docs):
-        qw = {t: math.log((1.0 + n_docs) / (1.0 + d)) + 1.0
-              for t, d in dfs.items()}
-        qnorm = math.sqrt(sum(w * w for w in qw.values()))
-        dot: dict = {}
-        for h in hits:
-            dot[h.doc_id] = dot.get(h.doc_id, 0.0) \
-                + h.tf * qw[h.term] * qw[h.term]
-        return {d: round(v / (norms[d] * qnorm), 6)
-                for d, v in dot.items() if d in norms}
-
-    folded = replica(docs.count())
-    stale = replica(thr)
-    assert all(abs(folded[d] - s) < 2e-6 for d, s in got_t.items())
-    assert any(abs(stale[d] - s) > 1e-4 for d, s in got_t.items())
-
-
 def test_keyword_extraction_prefers_rare_terms(spark):
     # idf must push corpus-wide terms down and doc-specific terms up.
     from openedx_event_sink_clickhouse_spark.operators.retrieval import (

@@ -320,33 +320,6 @@ def test_multi_table_srp_recall(spark, sf_dir):
     assert multi >= 0.9, multi   # OR-amplification closes it
 
 
-def test_semantic_dedup_survivors_partition(spark, sf_dir):
-    from openedx_event_sink_clickhouse_spark.operators.dedup import (
-        connected_components,
-    )
-    from openedx_event_sink_clickhouse_spark.operators.similarity import (
-        semantic_dedup,
-    )
-    emb = _emb(spark, sf_dir)
-    survivors = semantic_dedup(emb, threshold=0.3, dim=64)
-    pairs = cosine_neardup_pairs(emb, threshold=0.3, dim=64)
-    clusters = {r.doc_id: r for r in connected_components(pairs).collect()}
-    kept = {r.vec_id for r in survivors.select("vec_id").collect()}
-    total = emb.count()
-    # every non-survivor cluster member is dropped; everything else kept
-    losers = {i for i, r in clusters.items() if not r.is_survivor}
-    assert losers and kept == {
-        r.vec_id for r in emb.select("vec_id").collect()} - losers
-    assert len(kept) == total - len(losers)
-    # each cluster keeps exactly its min-id member
-    by_cluster = {}
-    for i, r in clusters.items():
-        by_cluster.setdefault(r.cluster_id, []).append(i)
-    for cid, members in by_cluster.items():
-        assert min(members) in kept
-        assert all(m not in kept for m in members if m != min(members))
-
-
 def test_ivf_batch_topk_full_scan_equals_exact(spark, sf_dir):
     from openedx_event_sink_clickhouse_spark.operators.similarity import (
         ivf_batch_topk,
@@ -411,51 +384,6 @@ def test_ivf_partitioned_prunes_cells_and_matches_in_memory(
     assert n_parts == 1
     assert 0 < n_files < total_files
     plan = got._jdf.queryExecution().executedPlan().toString()
-    assert "PartitionFilters" in plan
-
-
-def test_ivf_append_batch_extends_partitioned_corpus(spark, sf_dir,
-                                                     tmp_path):
-    # Index maintenance: write the corpus MINUS a tail batch, append the
-    # batch against the same (fixed) centroid model, and the table at
-    # rest must equal the one-shot full write — same rows per cell, and
-    # partition pruning still works on the appended layout.
-    from openedx_event_sink_clickhouse_spark.operators.similarity import (
-        ivf_append_batch, ivf_incremental_assign, write_ivf_partitioned)
-    from openedx_event_sink_clickhouse_spark.sources.tables import load_table
-    emb = load_table(spark, "embeddings", sf_dir)
-    old = emb.filter(F.col("vec_id") < 450)
-    batch = emb.filter(F.col("vec_id") >= 450)
-    assert batch.count() > 0
-
-    inc_path = str(tmp_path / "ivf_inc")
-    write_ivf_partitioned(old, inc_path, n_centroids=16)
-    ivf_append_batch(batch, inc_path, model=emb, n_centroids=16)
-
-    full_path = str(tmp_path / "ivf_full")
-    write_ivf_partitioned(emb, full_path, n_centroids=16)
-
-    got = sorted(tuple(r) for r in
-                 spark.read.parquet(inc_path)
-                 .select("id", "cell").collect())
-    want = sorted(tuple(r) for r in
-                  spark.read.parquet(full_path)
-                  .select("id", "cell").collect())
-    assert got == want
-
-    # The assignment query alone matches the appended rows' cells.
-    assigned = {(r.vec_id, r.cell) for r in
-                ivf_incremental_assign(batch, emb, n_centroids=16).collect()}
-    appended = {(r.id, r.cell) for r in
-                spark.read.parquet(inc_path)
-                .filter(F.col("id") >= 450).collect()}
-    assert assigned == appended
-
-    # Pruning survives the append: a single-cell read opens only that
-    # cell's files.
-    one_cell = spark.read.parquet(inc_path).filter(F.col("cell") == 3)
-    one_cell.count()
-    plan = one_cell._jdf.queryExecution().executedPlan().toString()
     assert "PartitionFilters" in plan
 
 

@@ -1,6 +1,6 @@
 """Salting operators: results must equal the unsalted equivalents, and
-the salted plans must actually spread keys (two aggregate phases; join
-key extended with the salt)."""
+the salted plans must actually spread keys (two aggregate phases; a
+salted exchange key)."""
 
 from __future__ import annotations
 
@@ -10,7 +10,6 @@ from pyspark.sql import functions as F
 
 from openedx_event_sink_clickhouse_spark.operators.skew import (
     salted_aggregate,
-    salted_broadcast_join,
 )
 
 
@@ -46,19 +45,6 @@ def test_salted_aggregate_rejects_non_algebraic(lineitem):
     with pytest.raises(ValueError):
         salted_aggregate(lineitem, "l_returnflag",
                          {"x": ("avg", "l_quantity")})
-
-
-def test_salted_broadcast_join_matches_plain_join(spark, sf_dir, lineitem):
-    from openedx_event_sink_clickhouse_spark.sources.tables import load_table
-    orders = (load_table(spark, "orders", sf_dir)
-              .select(F.col("o_orderkey").alias("l_orderkey"), "o_orderdate"))
-    li = lineitem.select("l_orderkey", "l_linenumber", "l_quantity")
-    salted = salted_broadcast_join(li, orders, "l_orderkey", buckets=4,
-                                   salt_from="l_linenumber")
-    plain = li.join(orders, "l_orderkey")
-    assert salted.count() == plain.count()
-    assert sorted(map(tuple, salted.select(*plain.columns).collect())) == \
-           sorted(map(tuple, plain.collect()))
 
 
 def test_salting_bounds_hot_key_partition_share(spark):

@@ -45,6 +45,22 @@ def _write_stream_file(spark, rows, src_dir, stage_dir, mtime):
     return dest
 
 
+def _counts_maintainer(path, key_col, auto_compact_epochs=64):
+    """Per-key exact counts kept by an EpochPartitionedAppender: each
+    trigger appends the batch's own groupBy counts; fold() sums them."""
+    from pyspark.sql import functions as F
+
+    from openedx_event_sink_clickhouse_spark.streaming.sketch_maintenance import (
+        EpochPartitionedAppender)
+
+    def partials(b):
+        return (b.filter(F.col(key_col).isNotNull())
+                .groupBy(key_col).agg(F.count("*").alias("n_rows")))
+
+    return EpochPartitionedAppender(path, partials, [key_col], ["n_rows"],
+                                    auto_compact_epochs=auto_compact_epochs)
+
+
 def test_watermark_state_survives_micro_batches(spark, tmp_path):
     src = str(tmp_path / "src")
     os.makedirs(src)
@@ -178,7 +194,7 @@ def test_epoch_partitioned_sketch_maintainer_replay_safe(spark, tmp_path):
     from openedx_event_sink_clickhouse_spark.operators.heavyhitters import (
         cms_sketch)
     from openedx_event_sink_clickhouse_spark.streaming.sketch_maintenance import (
-        cms_stream_maintainer, counts_stream_maintainer)
+        cms_stream_maintainer)
 
     rows = [(i, _ts(i), 100 + i % 9, "e", 1.0, "{}") for i in range(60)]
     full = spark.createDataFrame(rows, EVENT_SCHEMA)
@@ -212,7 +228,7 @@ def test_epoch_partitioned_sketch_maintainer_replay_safe(spark, tmp_path):
     assert got() == want
 
     # counts maintainer: same protocol, per-key exact counts
-    c = counts_stream_maintainer(str(tmp_path / "counts"), "user_id")
+    c = _counts_maintainer(str(tmp_path / "counts"), "user_id")
     for e, b in enumerate(batches):
         c(b, e)
     c(batches[2], 2)  # replay
@@ -229,15 +245,12 @@ def test_sketch_maintainer_reset_for_new_run(spark, tmp_path):
     # never overwriting history).
     from pyspark.sql import functions as F
 
-    from openedx_event_sink_clickhouse_spark.streaming.sketch_maintenance import (
-        counts_stream_maintainer)
-
     rows = [(i, _ts(i), 100 + i % 4, "e", 1.0, "{}") for i in range(40)]
     full = spark.createDataFrame(rows, EVENT_SCHEMA)
     b0 = full.filter(F.col("event_id") < 20)
     b1 = full.filter(F.col("event_id") >= 20)
 
-    c = counts_stream_maintainer(str(tmp_path / "counts"), "user_id")
+    c = _counts_maintainer(str(tmp_path / "counts"), "user_id")
     c(b0, 0)
     c(b1, 1)
     with pytest.raises(RuntimeError, match="epoch regression"):
@@ -254,7 +267,7 @@ def test_sketch_maintainer_reset_for_new_run(spark, tmp_path):
 
     # reset with a LONE real epoch (compact() no-ops on one partition):
     # the partition must be rebased, not left for epoch 0 to overwrite
-    c2 = counts_stream_maintainer(str(tmp_path / "lone"), "user_id")
+    c2 = _counts_maintainer(str(tmp_path / "lone"), "user_id")
     c2(b0, 0)
     c2.reset_for_new_run(spark)
     c2(b0, 0)
@@ -273,13 +286,10 @@ def test_sketch_maintainer_auto_compaction_bounds_partitions(spark, tmp_path):
 
     from pyspark.sql import functions as F
 
-    from openedx_event_sink_clickhouse_spark.streaming.sketch_maintenance import (
-        counts_stream_maintainer)
-
     rows = [(i, _ts(i % 60), 100 + i % 7, "e", 1.0, "{}") for i in range(100)]
     full = spark.createDataFrame(rows, EVENT_SCHEMA)
-    c = counts_stream_maintainer(str(tmp_path / "counts"),
-                                 "user_id", auto_compact_epochs=3)
+    c = _counts_maintainer(str(tmp_path / "counts"),
+                           "user_id", auto_compact_epochs=3)
     for e in range(10):
         c(full.filter((F.col("event_id") >= e * 10)
                       & (F.col("event_id") < (e + 1) * 10)), e)
@@ -360,14 +370,11 @@ def test_sketch_compact_crash_recovery(spark, tmp_path):
 
     from pyspark.sql import functions as F
 
-    from openedx_event_sink_clickhouse_spark.streaming.sketch_maintenance import (
-        counts_stream_maintainer)
-
     rows = [(i, _ts(i), 100 + i % 5, "e", 1.0, "{}") for i in range(40)]
     full = spark.createDataFrame(rows, EVENT_SCHEMA)
     b0 = full.filter(F.col("event_id") < 20)
     b1 = full.filter(F.col("event_id") >= 20)
-    c = counts_stream_maintainer(str(tmp_path / "counts"), "user_id")
+    c = _counts_maintainer(str(tmp_path / "counts"), "user_id")
     c(b0, 0)
     c(b1, 1)
     want = sorted(map(tuple, full.groupBy("user_id")
@@ -462,8 +469,6 @@ def test_epoch_replay_correct_under_mtime_ties(spark, tmp_path):
     from pyspark.sql import functions as F
 
     from openedx_event_sink_clickhouse_spark.registry import _EpochRecorder
-    from openedx_event_sink_clickhouse_spark.streaming.sketch_maintenance import (
-        counts_stream_maintainer)
 
     rows = [(i, _ts(i % 50), 100 + i % 7,
              ["view", "click", "buy"][i % 3], 1.0, "{}") for i in range(60)]
@@ -481,7 +486,7 @@ def test_epoch_replay_correct_under_mtime_ties(spark, tmp_path):
         paths.append(dest)
     assert len({os.path.getmtime(p) for p in paths}) == 1
 
-    m = counts_stream_maintainer(str(tmp_path / "cells"), "event_type")
+    m = _counts_maintainer(str(tmp_path / "cells"), "event_type")
     rec = _EpochRecorder(m)
     stream = (spark.readStream.schema(EVENT_SCHEMA)
               .option("maxFilesPerTrigger", "1").parquet(src))

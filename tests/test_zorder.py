@@ -75,7 +75,7 @@ def test_zorder_skips_on_both_dimensions(spark, tmp_path):
     df = spark.createDataFrame(rows, "id long, x long, y long")
     zpath = str(tmp_path / "z")
     xpath = str(tmp_path / "xsort")
-    write_zordered(df, zpath, ["x", "y"], bits=6, n_files=16)
+    write_zordered(df, zpath, ["x", "y"], bits=6, num_files=16)
     (df.repartitionByRange(16, "x").sortWithinPartitions("x")
      .write.mode("overwrite").parquet(xpath))
 
@@ -99,7 +99,7 @@ def test_zorder_rows_within_file_are_sorted_by_z(spark, tmp_path):
     rows = [(i, i % 32, (i * 7) % 32) for i in range(1024)]
     df = spark.createDataFrame(rows, "id long, x long, y long")
     path = str(tmp_path / "z2")
-    write_zordered(df, path, ["x", "y"], bits=5, n_files=4)
+    write_zordered(df, path, ["x", "y"], bits=5, num_files=4)
     for name in os.listdir(path):
         if not name.endswith(".parquet"):
             continue
