@@ -40,7 +40,7 @@ def md5_hash32_sql(expr: str, seed: int = 0) -> str:
     return f"CAST('0x' || substr(md5({s}), 1, 8) AS BIGINT)"
 
 
-def md5_hash64_sql(expr: str, seed: int = 0) -> str:
+def md5_hash64_sql(expr: str) -> str:
     """DuckDB SQL text computing the same value as :func:`md5_hash64`."""
-    s = f"({expr} || '#{seed}')" if seed else f"CAST({expr} AS VARCHAR)"
-    return f"CAST('0x' || substr(md5({s}), 1, 15) AS BIGINT)"
+    return (f"CAST('0x' || substr(md5(CAST({expr} AS VARCHAR)), 1, 15) "
+            "AS BIGINT)")

@@ -107,17 +107,16 @@ def asof_join(left: DataFrame, right: DataFrame, key: str,
     return out
 
 
-def asof_nearest(left: DataFrame, right: DataFrame, key: str,
-                 left_ts: str, right_ts: str,
-                 value_cols: list[str], prefix: str = "asof_",
+def asof_nearest(left: DataFrame, right: DataFrame, key: str, left_ts: str,
+                 right_ts: str, value_cols: list[str],
                  tolerance_us: int | None = None) -> DataFrame:
     """Nearest-in-time join (pandas ``merge_asof(direction='nearest')``):
     every ``left`` row gets the ``right`` row with the SMALLEST absolute
     time distance per key — sensor/state alignment where the relevant
     snapshot may sit just after the event as well as before. Ties
     (equidistant before/after) take the earlier (backward) row, matching
-    pandas. Adds ``prefix``-named value copies plus
-    ``prefix+delta_us`` (signed: positive = matched row is earlier).
+    pandas. Adds ``asof_``-prefixed value copies plus
+    ``asof_delta_us`` (signed: positive = matched row is earlier).
 
     Same union-merge-scan shape as :func:`asof_join` — ONE shuffle on
     the key, ONE sort, with the backward candidate read from a
@@ -128,7 +127,7 @@ def asof_nearest(left: DataFrame, right: DataFrame, key: str,
     integral, never FP. ``tolerance_us`` bounds |delta| with the same
     post-filter NULL-revert semantics as ``asof_join``'s staleness
     bound."""
-    out_vals = {c: f"{prefix}{c}" for c in [right_ts, *value_cols]}
+    out_vals = {c: f"asof_{c}" for c in [right_ts, *value_cols]}
     unioned, cols = _tagged_union(left, right, key, left_ts, right_ts,
                                   value_cols, out_vals)
     # same deterministic duplicate-(key, ts) tie-break as asof_join;
@@ -160,9 +159,9 @@ def asof_nearest(left: DataFrame, right: DataFrame, key: str,
           .alias(c) for c in out_vals.values()])
     delta = (F.unix_micros(F.col(left_ts))
              - F.unix_micros(F.col(rts_out))).cast("bigint")
-    out = picked.withColumn(f"{prefix}delta_us", delta)
+    out = picked.withColumn("asof_delta_us", delta)
     if tolerance_us is not None:
-        fresh = F.abs(F.col(f"{prefix}delta_us")) <= F.lit(tolerance_us)
-        for c in [*out_vals.values(), f"{prefix}delta_us"]:
+        fresh = F.abs(F.col("asof_delta_us")) <= F.lit(tolerance_us)
+        for c in [*out_vals.values(), "asof_delta_us"]:
             out = out.withColumn(c, F.when(fresh, F.col(c)))
     return out

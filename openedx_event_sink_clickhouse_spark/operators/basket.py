@@ -65,10 +65,8 @@ def _pair_counts(lineitem: DataFrame, basket_col: str, item_col: str):
     return grid, item_n, pairs
 
 
-def basket_lift(lineitem: DataFrame, top_k: int = 50,
-                basket_col: str = "l_orderkey",
-                item_col: str = "l_partkey") -> DataFrame:
-    """Top-``top_k`` item pairs by co-occurrence count, with
+def basket_lift(lineitem: DataFrame) -> DataFrame:
+    """Top-50 item pairs by co-occurrence count, with
     support = c(a,b)/N, confidence(a→b) = c(a,b)/n(a), and
     lift = (c(a,b)·N)/(n(a)·n(b)) over N total baskets. Returns
     (item_a, item_b, pair_count, support, confidence, lift), ordered
@@ -78,7 +76,7 @@ def basket_lift(lineitem: DataFrame, top_k: int = 50,
     A basket listing the same item twice counts once (the grid dedups
     first) — without that, a reordered line inflates every pair the
     item touches."""
-    grid, item_n, raw_pairs = _pair_counts(lineitem, basket_col, item_col)
+    grid, item_n, raw_pairs = _pair_counts(lineitem, "l_orderkey", "l_partkey")
     # 1-row broadcast total (the registry's `tot` pattern) — keeps the
     # whole plan lazy instead of an eager driver-side count.
     tot = grid.agg(F.countDistinct("b").cast("double").alias("_n"))
@@ -100,15 +98,13 @@ def basket_lift(lineitem: DataFrame, top_k: int = 50,
                               * F.col("_nb").cast("double")))
                     .alias("lift"))
             .orderBy(F.col("pair_count").desc(), "item_a", "item_b")
-            .limit(top_k))
+            .limit(50))
 
 
-def item_neighbors(lineitem: DataFrame, k: int = 5,
-                   basket_col: str = "l_orderkey",
-                   item_col: str = "l_partkey") -> DataFrame:
+def item_neighbors(lineitem: DataFrame) -> DataFrame:
     """Item-item collaborative-filtering neighbor table: cosine
     similarity over basket co-occurrence, cos(a,b) =
-    c(a,b)/sqrt(n(a)·n(b)), top-``k`` neighbors per item — the
+    c(a,b)/sqrt(n(a)·n(b)), top-5 neighbors per item — the
     at-rest model behind "customers also bought" and the same
     co-occurrence shape as word-embedding co-training pairs. Returns
     (item, neighbor, pair_count, cosine, rank), both directions of
@@ -117,12 +113,12 @@ def item_neighbors(lineitem: DataFrame, k: int = 5,
     Same scale posture as :func:`basket_lift` (pair expansion bounded
     at C(basket,2) via the basket-key self-join, grid dedup exchange
     reused); ranking is a per-item WindowGroupLimit over
-    (cosine DESC, neighbor) so map tasks ship at most k rows per item.
-    The neighbor table is items × k — a broadcastable model at any
+    (cosine DESC, neighbor) so map tasks ship at most 5 rows per item.
+    The neighbor table is items × 5 — a broadcastable model at any
     corpus size."""
     from pyspark.sql import Window
 
-    _grid, item_n, pairs = _pair_counts(lineitem, basket_col, item_col)
+    _grid, item_n, pairs = _pair_counts(lineitem, "l_orderkey", "l_partkey")
     both = pairs.unionByName(
         pairs.select(F.col("ib").alias("ia"), F.col("ia").alias("ib"),
                      "pair_count"))
@@ -138,21 +134,17 @@ def item_neighbors(lineitem: DataFrame, k: int = 5,
                     F.col("ib").alias("neighbor"),
                     "pair_count", cos.alias("cosine"))
             .withColumn("rank", F.row_number().over(w).cast("long"))
-            .filter(F.col("rank") <= k))
+            .filter(F.col("rank") <= 5))
 
 
-def recommend_items(lineitem: DataFrame, k_neighbors: int = 5,
-                    k_recs: int = 3,
-                    basket_col: str = "l_orderkey",
-                    item_col: str = "l_partkey",
-                    user_col: str | None = None,
+def recommend_items(lineitem: DataFrame, user_col: str | None = None,
                     orders: DataFrame | None = None,
                     neighbors: DataFrame | None = None) -> DataFrame:
     """User→item recommendations from the item-CF neighbor table:
     candidate items are the neighbors of what the user already bought,
     scored by the SUM of cosines from the user's owned items (an item
     similar to several of their purchases outranks one similar to one),
-    already-owned items excluded, top-``k_recs`` per user. Returns
+    already-owned items excluded, top-3 per user. Returns
     (user, item, score, n_supporting, rec_rank).
 
     Plan shape: owned (user, item) grid ⋈ the items×k neighbor model
@@ -168,16 +160,16 @@ def recommend_items(lineitem: DataFrame, k_neighbors: int = 5,
     from pyspark.sql import Window
 
     nbrs = neighbors if neighbors is not None else item_neighbors(
-        lineitem, k=k_neighbors, basket_col=basket_col, item_col=item_col)
+        lineitem)
     if orders is not None and user_col is not None:
-        owned = (lineitem.select(F.col(basket_col).alias("b"),
-                                 F.col(item_col).alias("item"))
+        owned = (lineitem.select(F.col("l_orderkey").alias("b"),
+                                 F.col("l_partkey").alias("item"))
                  .join(orders.select(F.col("o_orderkey").alias("b"),
                                      F.col(user_col).alias("user")), "b")
                  .select("user", "item").distinct())
     else:
-        owned = (lineitem.select(F.col(basket_col).alias("user"),
-                                 F.col(item_col).alias("item"))
+        owned = (lineitem.select(F.col("l_orderkey").alias("user"),
+                                 F.col("l_partkey").alias("item"))
                  .distinct())
     cand = (owned.join(nbrs, "item")
             .groupBy(F.col("user"), F.col("neighbor").alias("rec_item"))
@@ -194,4 +186,4 @@ def recommend_items(lineitem: DataFrame, k_neighbors: int = 5,
                     F.round(F.col("_score").cast("double"), 6)
                     .alias("score"), "n_supporting")
             .withColumn("rec_rank", F.row_number().over(w).cast("long"))
-            .filter(F.col("rec_rank") <= k_recs))
+            .filter(F.col("rec_rank") <= 3))

@@ -32,7 +32,7 @@ from ..functions.text import words
 EOW = "</w>"
 
 
-def word_frequencies(docs: DataFrame, text_col: str = "text") -> DataFrame:
+def word_frequencies(docs: DataFrame) -> DataFrame:
     """The (word, count) table BPE trains on: one partial-aggregated
     groupBy over the exploded token stream (map-side combine soaks the
     Zipf skew — identical shuffle shape to ``unigram_logprob``'s model
@@ -40,7 +40,7 @@ def word_frequencies(docs: DataFrame, text_col: str = "text") -> DataFrame:
     sees exactly the words :func:`bpe_encode_stats` encodes — the two
     paths share one pre-tokenization: lowercase, split on ' ', discard
     empties."""
-    return (docs.select(F.explode(words(F.col(text_col))).alias("word"))
+    return (docs.select(F.explode(words(F.col("text"))).alias("word"))
             .filter(F.col("word") != "")
             .groupBy("word").agg(F.count("*").alias("c")))
 
@@ -66,7 +66,6 @@ def _merge_word(sym: tuple[str, ...], pair: tuple[str, str]) -> tuple[str, ...]:
 
 
 def bpe_train(docs: DataFrame, n_merges: int = 200,
-              text_col: str = "text",
               max_vocab: int | None = 100_000) -> list[tuple[str, str]]:
     """Learn ``n_merges`` BPE merges from the corpus. Deterministic:
     the most frequent adjacent symbol pair wins each round, ties broken
@@ -85,7 +84,7 @@ def bpe_train(docs: DataFrame, n_merges: int = 200,
 
     Returns the ordered merge list (the model — feed to
     :func:`bpe_encode_stats`)."""
-    wf = word_frequencies(docs, text_col)
+    wf = word_frequencies(docs)
     if max_vocab is not None:
         wf = wf.orderBy(F.desc("c"), "word").limit(max_vocab)
     freqs = {r.word: r.c for r in wf.collect()}
@@ -133,9 +132,8 @@ BPE_SCHEMA = T.StructType([
 ])
 
 
-def bpe_encode_stats(docs: DataFrame, merges: list[tuple[str, str]],
-                     text_col: str = "text",
-                     id_col: str = "doc_id") -> DataFrame:
+def bpe_encode_stats(docs: DataFrame,
+                     merges: list[tuple[str, str]]) -> DataFrame:
     """Per-document BPE statistics under a trained merge table:
     (doc_id, n_words, n_bpe_tokens, compression = chars+eow per token).
     Arrow-batched; the per-word encoding memoizes on the batch's
@@ -161,7 +159,7 @@ def bpe_encode_stats(docs: DataFrame, merges: list[tuple[str, str]],
 
         for pdf in batches:
             ids, nw, nt, comp = [], [], [], []
-            for doc_id, text in zip(pdf[id_col], pdf[text_col]):
+            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
                 # Same pre-tokenization as word_frequencies/words():
                 # lowercase, split on ' ' (NOT any-whitespace), drop
                 # empties — trainer and encoder see identical words.
@@ -181,6 +179,6 @@ def bpe_encode_stats(docs: DataFrame, merges: list[tuple[str, str]],
                                 "compression": pd.Series(comp,
                                                          dtype="float64")})
 
-    return docs.select(F.col(id_col), F.col(text_col)) \
+    return docs.select(F.col("doc_id"), F.col("text")) \
                .mapInPandas(fn, schema=BPE_SCHEMA)
 

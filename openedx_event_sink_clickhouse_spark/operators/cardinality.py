@@ -27,30 +27,27 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def daily_sketch_table(events: DataFrame, key_col: str = "user_id",
-                       ts_col: str = "ts", lg_k: int = 14) -> DataFrame:
+def daily_sketch_table(events: DataFrame) -> DataFrame:
     """One row per day: (day, n_events, sketch BINARY) — the at-rest
     form. One groupBy over the events (the same shuffle a daily rollup
-    already pays); the sketch column is a ≤ 2^lg_k-byte cell that any
+    already pays); the sketch column is a ≤ 2^14-byte cell that any
     coarser rollup unions instead of re-scanning events."""
-    return (events.filter(F.col(key_col).isNotNull())
-            .groupBy(F.to_date(F.col(ts_col)).alias("day"))
+    return (events.filter(F.col("user_id").isNotNull())
+            .groupBy(F.to_date(F.col("ts")).alias("day"))
             .agg(F.count("*").alias("n_events"),
-                 F.expr(f"hll_sketch_agg({key_col}, {lg_k})")
+                 F.expr("hll_sketch_agg(user_id, 14)")
                  .alias("sketch")))
 
 
-def distinct_rollup_certified(events: DataFrame, key_col: str = "user_id",
-                              ts_col: str = "ts", lg_k: int = 14,
-                              rel_err: float = 0.05) -> DataFrame:
+def distinct_rollup_certified(events: DataFrame) -> DataFrame:
     """Daily + all-time distinct-key report with the sketch path
     CERTIFIED against exact counts: (day, n_events, exact_users,
     approx_ok) — day NULL on the all-time row, whose estimate comes from
     UNIONING the daily sketches (the additivity being certified), not
-    from re-scanning events. ``approx_ok`` = |est − exact| ≤ rel_err ×
+    from re-scanning events. ``approx_ok`` = |est − exact| ≤ 0.05 ×
     exact. At 100 TB the exact columns are the harness and the sketches
     are the product; here both run so the flag is hash-checkable."""
-    ev = events.filter(F.col(key_col).isNotNull())
+    ev = events.filter(F.col("user_id").isNotNull())
     # localCheckpoint: the daily frame is referenced twice below (the
     # per-day report and the union'd all-time estimate), and a plain
     # DataFrame re-runs its event-scale scan+shuffle per reference —
@@ -60,12 +57,12 @@ def distinct_rollup_certified(events: DataFrame, key_col: str = "user_id",
     # event scan, inherent to the certification (global exact distinct
     # is not derivable from per-day exacts) and absent from the
     # production path, where the sketches alone serve.
-    daily = (ev.groupBy(F.to_date(F.col(ts_col)).alias("day"))
+    daily = (ev.groupBy(F.to_date(F.col("ts")).alias("day"))
              .agg(F.count("*").alias("n_events"),
-                  F.count_distinct(F.col(key_col)).alias("exact_users"),
-                  F.expr(f"hll_sketch_agg({key_col}, {lg_k})")
+                  F.count_distinct(F.col("user_id")).alias("exact_users"),
+                  F.expr("hll_sketch_agg(user_id, 14)")
                   .alias("sketch"))).localCheckpoint(eager=False)
-    return _assemble_certified_report(daily, ev, key_col, rel_err)
+    return _assemble_certified_report(daily, ev, "user_id", 0.05)
 
 
 def _assemble_certified_report(d: DataFrame, ev: DataFrame, key_col: str,
@@ -144,16 +141,16 @@ def kmv_estimate(sketch, k: int = 256):
     return agg.select("n_kept", F.round(est, 6).alias("estimate"))
 
 
-def kmv_set_ops(df_a, df_b, key_col: str, k: int = 64):
+def kmv_set_ops(df_a, df_b, key_col: str):
     """Theta-sketch-style SET ALGEBRA on two KMV sketches: estimated
     union, intersection, and Jaccard between two key sets from two
-    bounded bottom-k summaries — the query that answers "how much do
+    bounded bottom-64 summaries — the query that answers "how much do
     these audiences overlap" without ever joining the raw sets. With
-    sketches this small the join sides are k rows each; the exact
+    sketches this small the join sides are 64 rows each; the exact
     answer needs a full distinct-join of both sets.
 
     Mechanics (Dasgupta et al., theta sketches): θ = min over the FULL
-    sketches of their k-th hash (a sketch with < k rows kept
+    sketches of their 64th hash (a sketch with < 64 rows kept
     everything, so its θ is the whole hash space); hashes strictly
     below θ form a uniform sample of the union in which BOTH sketches
     are complete, so |X| ≈ count_X(<θ) / (θ / 2^60) for X ∈ {A∪B, A∩B}
@@ -175,13 +172,13 @@ def kmv_set_ops(df_a, df_b, key_col: str, k: int = 64):
                 .select("key", md5_hash64(F.col("key")).alias("h")))
 
     ha, hb = hashes(df_a), hashes(df_b)
-    ska = ha.orderBy("h", "key").limit(k)
-    skb = hb.orderBy("h", "key").limit(k)
+    ska = ha.orderBy("h", "key").limit(64)
+    skb = hb.orderBy("h", "key").limit(64)
     # per-sketch θ: k-th hash if full, else the hash-space top
     def theta_of(sk, name):
         return sk.agg(
             F.count("*").alias(f"n_{name}_kept"),
-            F.when(F.count("*") < k, F.lit(1 << 60).cast("long"))
+            F.when(F.count("*") < 64, F.lit(1 << 60).cast("long"))
             .otherwise(F.max("h")).alias(f"_th_{name}"))
 
     th = (theta_of(ska, "a").crossJoin(theta_of(skb, "b"))
@@ -213,10 +210,8 @@ def kmv_set_ops(df_a, df_b, key_col: str, k: int = 64):
                     "exact_union", "exact_inter"))
 
 
-def certified_report_from_sketches(daily: DataFrame, events: DataFrame,
-                                   key_col: str = "user_id",
-                                   ts_col: str = "ts",
-                                   rel_err: float = 0.05) -> DataFrame:
+def certified_report_from_sketches(daily: DataFrame,
+                                   events: DataFrame) -> DataFrame:
     """The :func:`distinct_rollup_certified` report served from an
     ALREADY-MAINTAINED daily sketch table (at-rest or stream-folded
     (day, n_events, sketch) cells) instead of re-scanning events for
@@ -226,12 +221,12 @@ def certified_report_from_sketches(daily: DataFrame, events: DataFrame,
     double-count breaks the hash, and the all-time row unions the
     maintained cells. Register-max HLL merging is deterministic, so the
     fold's estimate equals the one-pass sketch's bit-for-bit."""
-    ev = events.filter(F.col(key_col).isNotNull())
-    exact = (ev.groupBy(F.to_date(F.col(ts_col)).alias("day"))
-             .agg(F.count_distinct(F.col(key_col)).alias("exact_users")))
+    ev = events.filter(F.col("user_id").isNotNull())
+    exact = (ev.groupBy(F.to_date(F.col("ts")).alias("day"))
+             .agg(F.count_distinct(F.col("user_id")).alias("exact_users")))
     # LEFT join FROM the maintained table: a day the batch table cannot
     # certify keeps its row (NULL exact -> NULL flag) and its sketch
     # stays inside the all-time union — maintained state is never
     # silently dropped from the report it is supposed to certify.
     d = daily.join(exact, "day", "left").localCheckpoint(eager=False)
-    return _assemble_certified_report(d, ev, key_col, rel_err)
+    return _assemble_certified_report(d, ev, "user_id", 0.05)

@@ -56,8 +56,7 @@ PII_PATTERNS = (
 )
 
 
-def quality_filter(docs: DataFrame, text_col: str = "text",
-                   rules: dict | None = None) -> DataFrame:
+def quality_filter(docs: DataFrame) -> DataFrame:
     """Keep/drop decision per document with the FIRST violated rule as
     the reason code (C4/Gopher-style filtering: length bounds, repetition,
     punctuation density). Returns (doc_id, n_words, uniq_word_ratio,
@@ -65,8 +64,8 @@ def quality_filter(docs: DataFrame, text_col: str = "text",
 
     Rule order is the audit order — deterministic reasons make drop-rate
     dashboards per reason stable across runs."""
-    r = {**QUALITY_RULES, **(rules or {})}
-    q = quality_signals(docs, text_col)
+    r = QUALITY_RULES
+    q = quality_signals(docs)
     reason = (
         F.when(F.col("n_words") < r["min_words"], F.lit("too_short"))
          .when(F.col("n_words") > r["max_words"], F.lit("too_long"))
@@ -87,9 +86,7 @@ REPETITION_RULES = {
 }
 
 
-def repetition_filter(docs: DataFrame, text_col: str = "text",
-                      rules: dict | None = None, top_n: int = 2,
-                      dup_n: int = 3) -> DataFrame:
+def repetition_filter(docs: DataFrame) -> DataFrame:
     """Gopher repetition-rule filter (Rae et al. 2021 §A1.1) — the
     companion to :func:`quality_filter` for the repetition axis: drop
     documents dominated by repeated words / a single hot n-gram /
@@ -101,9 +98,8 @@ def repetition_filter(docs: DataFrame, text_col: str = "text",
     bigram-fraction variant with a different schema)."""
     from .textstats import gopher_repetition_signals
 
-    r = {**REPETITION_RULES, **(rules or {})}
-    sig = gopher_repetition_signals(docs, text_col, top_n=top_n,
-                                    dup_n=dup_n)
+    r = REPETITION_RULES
+    sig = gopher_repetition_signals(docs, dup_n=3)
     reason = (
         F.when(F.col("dup_word_frac") > r["max_dup_word_frac"],
                F.lit("dup_words"))
@@ -118,15 +114,14 @@ def repetition_filter(docs: DataFrame, text_col: str = "text",
         reason.alias("reason"))
 
 
-def scrub_pii(docs: DataFrame, text_col: str = "text",
-              patterns=PII_PATTERNS) -> DataFrame:
+def scrub_pii(docs: DataFrame) -> DataFrame:
     """Redact PII spans in place and count them per kind. Returns
     (doc_id, scrubbed_text, n_<kind>... ). Patterns apply in order to the
     progressively-redacted text (an email inside a phone-like digit run
     is counted once, by the earlier rule)."""
-    scrubbed: Column = F.col(text_col)
+    scrubbed: Column = F.col("text")
     counts = []
-    for kind, pat, repl in patterns:
+    for kind, pat, repl in PII_PATTERNS:
         counts.append(F.regexp_count(scrubbed, F.lit(pat))
                        .cast("int").alias(f"n_{kind}"))
         scrubbed = F.regexp_replace(scrubbed, pat, repl)
@@ -134,8 +129,7 @@ def scrub_pii(docs: DataFrame, text_col: str = "text",
 
 
 def decontaminate(docs: DataFrame, benchmark: DataFrame,
-                  text_col: str = "text", n: int = 8,
-                  id_col: str = "doc_id") -> DataFrame:
+                  n: int = 8) -> DataFrame:
     """Train/test leakage guard: flag corpus docs sharing ANY word
     ``n``-gram with the benchmark set. Returns every corpus doc as
     (doc_id, contaminated, n_shared_grams).
@@ -146,11 +140,11 @@ def decontaminate(docs: DataFrame, benchmark: DataFrame,
     of the doc id spine onto the hit counts. The corpus shuffles only its
     (doc_id) hit stream — O(matches), not O(corpus)."""
     def gram_hashes(df: DataFrame) -> DataFrame:
-        g = F.array_distinct(ngrams(words(F.col(text_col)), n))
+        g = F.array_distinct(ngrams(words(F.col("text")), n))
         # outer + null-drop (short docs yield no grams): avoids the
         # inferred size()>0 filter re-hashing every gram twice — see
         # dedup.minhash_lsh_pairs for the trap.
-        return (df.select(F.col(id_col).alias("id"),
+        return (df.select(F.col("doc_id").alias("id"),
                           F.explode_outer(
                               F.transform(g, lambda x: md5_hash64(x)))
                            .alias("gh"))
@@ -160,18 +154,16 @@ def decontaminate(docs: DataFrame, benchmark: DataFrame,
     hits = (gram_hashes(docs).join(bench_grams, "gh")
             .groupBy("id")
             .agg(F.count_distinct("gh").alias("n_shared_grams")))
-    spine = docs.select(F.col(id_col).alias("id"))
+    spine = docs.select(F.col("doc_id").alias("id"))
     return (spine.join(hits, "id", "left")
-            .select(F.col("id").alias(id_col),
+            .select(F.col("id").alias("doc_id"),
                     F.when(F.col("n_shared_grams").isNotNull(), 1)
                      .otherwise(0).cast("int").alias("contaminated"),
                     F.coalesce("n_shared_grams", F.lit(0))
                      .alias("n_shared_grams")))
 
 
-def decontaminate_bloom(docs: DataFrame, benchmark: DataFrame,
-                        text_col: str = "text", n: int = 8,
-                        id_col: str = "doc_id",
+def decontaminate_bloom(docs: DataFrame, benchmark: DataFrame, n: int = 8,
                         m_bits: int = 1 << 20, k: int = 4) -> DataFrame:
     """Bloom-filter decontamination — the fixed-memory form of
     :func:`decontaminate` for when the benchmark gram set itself is too
@@ -193,9 +185,9 @@ def decontaminate_bloom(docs: DataFrame, benchmark: DataFrame,
     Why 63-bit words: both engines store BIGINT; a shift into bit 63
     overflows DuckDB's checked ``<<``, so words pack bits 0..62."""
     def doc_grams(df: DataFrame) -> DataFrame:
-        g = F.array_distinct(ngrams(words(F.col(text_col)), n))
+        g = F.array_distinct(ngrams(words(F.col("text")), n))
         # outer + null-drop: same InferFiltersFromGenerate dodge as above.
-        return (df.select(F.col(id_col).alias("id"),
+        return (df.select(F.col("doc_id").alias("id"),
                           F.explode_outer(g).alias("gram"))
                 .filter(F.col("gram").isNotNull()))
 
@@ -232,10 +224,10 @@ def decontaminate_bloom(docs: DataFrame, benchmark: DataFrame,
     bloom_doc = (per_gram.groupBy("id")
                  .agg(F.max("contained").alias("bloom_flagged"),
                       F.sum("contained").alias("n_bloom_grams")))
-    exact = decontaminate(docs, benchmark, text_col, n, id_col) \
-        .select(F.col(id_col).alias("id"), "contaminated")
+    exact = decontaminate(docs, benchmark, n) \
+        .select(F.col("doc_id").alias("id"), "contaminated")
     return (exact.join(bloom_doc, "id", "left")
-            .select(F.col("id").alias(id_col),
+            .select(F.col("id").alias("doc_id"),
                     F.col("contaminated").cast("int").alias("contaminated"),
                     F.coalesce("bloom_flagged", F.lit(0)).cast("int")
                      .alias("bloom_flagged"),
@@ -250,10 +242,8 @@ def _hash_uniform(key: Column) -> Column:
             .cast("double") / F.lit(float(1 << 32)))
 
 
-def sample_corpus(docs: DataFrame, rate: float,
-                  strat_col: str | None = None,
-                  strat_rates: dict[str, float] | None = None,
-                  id_col: str = "doc_id") -> DataFrame:
+def sample_corpus(docs: DataFrame, rate: float, strat_col: str | None = None,
+                  strat_rates: dict[str, float] | None = None) -> DataFrame:
     """Deterministic Bernoulli sample: keep iff md5-uniform(id) < rate.
     With ``strat_col``/``strat_rates``, per-stratum rates (e.g. upsample
     low-resource languages) fall back to ``rate`` for unlisted strata.
@@ -263,12 +253,10 @@ def sample_corpus(docs: DataFrame, rate: float,
         for value, r in strat_rates.items():
             threshold = F.when(F.col(strat_col) == value, F.lit(r)) \
                          .otherwise(threshold)
-    return docs.filter(_hash_uniform(F.col(id_col)) < threshold)
+    return docs.filter(_hash_uniform(F.col("doc_id")) < threshold)
 
 
-def weighted_sample(docs: DataFrame, k: int,
-                    weight_col: str = "n_chars",
-                    id_col: str = "doc_id") -> DataFrame:
+def weighted_sample(docs: DataFrame, k: int) -> DataFrame:
     """Fixed-size probability-proportional-to-size sample: Ohlsson's
     SEQUENTIAL POISSON sampling — rank every row by ``u(id) / w`` with
     ``u`` a deterministic md5-uniform in (0, 1] and take the ``k``
@@ -291,22 +279,20 @@ def weighted_sample(docs: DataFrame, k: int,
     Rows with NULL or non-positive weight are excluded (their PPS
     inclusion probability is 0/undefined)."""
     # (h+1)/2^32 ∈ (0, 1]: never 0, so key 0 cannot tie across rows.
-    u = ((F.conv(F.substring(F.md5(F.col(id_col).cast("string")), 1, 8),
+    u = ((F.conv(F.substring(F.md5(F.col("doc_id").cast("string")), 1, 8),
                  16, 10).cast("double") + F.lit(1.0))
          / F.lit(float(1 << 32)))
-    key = u / F.col(weight_col).cast("double")
-    ranked = (docs.filter(F.col(weight_col).isNotNull()
-                          & (F.col(weight_col) > 0))
+    key = u / F.col("n_chars").cast("double")
+    ranked = (docs.filter(F.col("n_chars").isNotNull()
+                          & (F.col("n_chars") > 0))
               .withColumn("_spkey", key)
-              .orderBy("_spkey", id_col).limit(k))
-    w = Window.orderBy("_spkey", id_col)
+              .orderBy("_spkey", "doc_id").limit(k))
+    w = Window.orderBy("_spkey", "doc_id")
     return (ranked.withColumn("sample_rank", F.row_number().over(w))
             .drop("_spkey"))
 
 
-def pack_sequences(docs: DataFrame, token_budget: int = 512,
-                   shard_col: str = "lang", text_col: str = "text",
-                   id_col: str = "doc_id") -> DataFrame:
+def pack_sequences(docs: DataFrame, token_budget: int = 512) -> DataFrame:
     """Greedy contiguous packing: within each shard, documents (ordered by
     id for determinism) are concatenated into bins of ``token_budget``
     whitespace tokens; a doc starts a new bin when it would overflow.
@@ -317,8 +303,8 @@ def pack_sequences(docs: DataFrame, token_budget: int = 512,
     parallelizes across the cluster and no global order is imposed.
     Docs longer than the budget get a bin of their own (never split —
     chunk upstream if splitting is wanted)."""
-    toks = F.size(words(F.col(text_col)))
-    w = (Window.partitionBy(shard_col).orderBy(id_col)
+    toks = F.size(words(F.col("text")))
+    w = (Window.partitionBy("lang").orderBy("doc_id")
          .rowsBetween(Window.unboundedPreceding, 0))
     # bin = how many full budgets precede this doc's START offset; greedy
     # contiguous chunking (each bin may undershoot, never overshoot,
@@ -326,16 +312,14 @@ def pack_sequences(docs: DataFrame, token_budget: int = 512,
     cum = F.sum(toks).over(w)
     start = cum - toks
     return docs.select(
-        F.col(id_col),
-        F.col(shard_col).alias("shard"),
+        F.col("doc_id"),
+        F.col("lang").alias("shard"),
         toks.alias("n_tokens"),
         F.floor(start / token_budget).cast("bigint").alias("bin_id"),
         (start % token_budget).cast("bigint").alias("bin_offset"))
 
 
-def mix_interleave(docs: DataFrame, weights: dict[str, float],
-                   stratum_col: str = "lang",
-                   id_col: str = "doc_id") -> DataFrame:
+def mix_interleave(docs: DataFrame, weights: dict[str, float]) -> DataFrame:
     """Deterministic weighted INTERLEAVING order for corpus mixing —
     the emission-order half the mix plans (:func:`corpus_mix_stats` /
     ``mix_plan``) leave open: each document gets a virtual emission
@@ -358,19 +342,17 @@ def mix_interleave(docs: DataFrame, weights: dict[str, float],
         raise ValueError("weights must be a non-empty map of "
                          "stratum -> positive weight")
     wmap = F.create_map(*[F.lit(x) for kv in weights.items() for x in kv])
-    w = Window.partitionBy(stratum_col).orderBy(id_col)
-    return (docs.filter(F.col(stratum_col).isin(list(weights)))
-            .select(F.col(id_col),
-                    F.col(stratum_col).alias("stratum"),
+    w = Window.partitionBy("lang").orderBy("doc_id")
+    return (docs.filter(F.col("lang").isin(list(weights)))
+            .select(F.col("doc_id"),
+                    F.col("lang").alias("stratum"),
                     F.row_number().over(w).alias("_rank"))
-            .select(id_col, "stratum",
+            .select("doc_id", "stratum",
                     F.round((F.col("_rank").cast("double") - 0.5)
                             / wmap[F.col("stratum")], 6).alias("mix_key")))
 
 
-def pack_by_counts(counts: DataFrame, token_budget: int = 512,
-                   shard_col: str = "shard", count_col: str = "n_tokens",
-                   id_col: str = "doc_id") -> DataFrame:
+def pack_by_counts(counts: DataFrame) -> DataFrame:
     """Greedy contiguous packing over PRECOMPUTED token counts — the
     tokenizer-exact form of :func:`pack_sequences`: feed it
     ``bpe_encode_stats``'s ``n_bpe_tokens`` and the bins hold true
@@ -378,21 +360,20 @@ def pack_by_counts(counts: DataFrame, token_budget: int = 512,
     packs to budget by whitespace routinely overflows a real tokenizer
     by 10-30%). Same single window sort per shard; same never-split
     contract. Returns (doc_id, shard, n_tokens, bin_id, bin_offset)."""
-    w = (Window.partitionBy(shard_col).orderBy(id_col)
+    w = (Window.partitionBy("shard").orderBy("doc_id")
          .rowsBetween(Window.unboundedPreceding, 0))
-    cum = F.sum(count_col).over(w)
-    start = cum - F.col(count_col)
+    cum = F.sum("n_tokens").over(w)
+    start = cum - F.col("n_tokens")
     return counts.select(
-        F.col(id_col),
-        F.col(shard_col).alias("shard"),
-        F.col(count_col).cast("bigint").alias("n_tokens"),
-        F.floor(start / token_budget).cast("bigint").alias("bin_id"),
-        (start % token_budget).cast("bigint").alias("bin_offset"))
+        F.col("doc_id"),
+        F.col("shard"),
+        F.col("n_tokens").cast("bigint").alias("n_tokens"),
+        F.floor(start / 512).cast("bigint").alias("bin_id"),
+        (start % 512).cast("bigint").alias("bin_offset"))
 
 
 def chunk_documents(docs: DataFrame, chunk_tokens: int = 64,
-                    overlap: int = 16, text_col: str = "text",
-                    id_col: str = "doc_id") -> DataFrame:
+                    overlap: int = 16) -> DataFrame:
     """Split documents into overlapping token-window chunks (the
     RAG/context-window pre-step): chunk i covers tokens
     [i·stride, i·stride + chunk_tokens), stride = chunk_tokens − overlap.
@@ -421,21 +402,20 @@ def chunk_documents(docs: DataFrame, chunk_tokens: int = 64,
                  .alias("chunk_text")))
 
     w_bound = F.element_at(
-        F.transform(F.array(words(F.col(text_col))), chunks_of), 1)
+        F.transform(F.array(words(F.col("text"))), chunks_of), 1)
     # outer: n_chunks is clamped to >= 1, so the chunk list is never
     # empty — and the inferred size()>0 filter would re-run the whole
     # chunk-building transform at the scan.
     return (docs
-            .select(F.col(id_col), F.explode_outer(w_bound).alias("c"))
-            .select(id_col,
+            .select(F.col("doc_id"), F.explode_outer(w_bound).alias("c"))
+            .select("doc_id",
                     F.col("c.chunk_idx").alias("chunk_idx"),
                     F.size(F.split(F.col("c.chunk_text"), " "))
                      .alias("n_tokens"),
                     F.col("c.chunk_text").alias("chunk_text")))
 
 
-def repetition_signals(docs: DataFrame, text_col: str = "text",
-                       id_col: str = "doc_id") -> DataFrame:
+def repetition_signals(docs: DataFrame) -> DataFrame:
     """Gopher-style repetition metrics per document — the signals behind
     "drop docs dominated by repeated phrases" rules (Rae et al. 2021 §A1.1
     use duplicate line/n-gram fractions; this corpus is single-line, so
@@ -453,12 +433,12 @@ def repetition_signals(docs: DataFrame, text_col: str = "text",
     differing by exactly the deleted shuffles."""
     from ..functions.text import gram_run_stats
 
-    ws = words(F.col(text_col))
+    ws = words(F.col("text"))
     grams = ngrams(ws, 2)
     stats = gram_run_stats(grams)
     n_bigrams = F.size(grams)
     return docs.select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.size(ws).alias("n_words"),
         (F.lit(1.0) - F.size(F.array_distinct(ws)) / F.size(ws))
         .alias("dup_word_frac"),
@@ -472,8 +452,7 @@ def repetition_signals(docs: DataFrame, text_col: str = "text",
          .otherwise(F.lit(0.0)).alias("top_bigram_frac"))
 
 
-def negative_samples(docs: DataFrame, k: int = 4,
-                     id_col: str = "doc_id") -> DataFrame:
+def negative_samples(docs: DataFrame, k: int = 4) -> DataFrame:
     """Deterministic negative sampling for contrastive-pair training
     data: each anchor doc draws ``k`` pseudo-random OTHER doc ids.
     Returns (doc_id, neg_idx, neg_id), ``k`` rows per anchor.
@@ -486,24 +465,24 @@ def negative_samples(docs: DataFrame, k: int = 4,
     corpus count rides in as a 1-row broadcast and the fan-out is a
     per-row ``explode(sequence)`` — map-only, no shuffle at any N."""
     n = docs.select(F.count("*").alias("_n"))
-    pairs = (docs.select(F.col(id_col))
+    pairs = (docs.select(F.col("doc_id"))
              .crossJoin(F.broadcast(n))
-             .select(id_col, "_n",
+             .select("doc_id", "_n",
                      F.explode(F.sequence(F.lit(0), F.lit(k - 1)))
                       .alias("neg_idx")))
-    h = md5_hash64(F.concat_ws(":", F.col(id_col), F.col("neg_idx")))
+    h = md5_hash64(F.concat_ws(":", F.col("doc_id"), F.col("neg_idx")))
     cand = h % F.col("_n")
-    neg = F.when(cand == F.col(id_col), (cand + 1) % F.col("_n")) \
+    neg = F.when(cand == F.col("doc_id"), (cand + 1) % F.col("_n")) \
            .otherwise(cand)
-    return pairs.select(id_col, "neg_idx",
+    return pairs.select("doc_id", "neg_idx",
                         neg.cast("bigint").alias("neg_id"))
 
 
-def corpus_mix(docs: DataFrame, text_col: str = "text") -> DataFrame:
+def corpus_mix(docs: DataFrame) -> DataFrame:
     """Token share per (lang, source) — the mix-planning rollup. One
     low-cardinality partial-aggregated shuffle; the share denominator is
     a 1-row broadcast window, not a driver round-trip."""
-    toks = F.size(words(F.col(text_col)))
+    toks = F.size(words(F.col("text")))
     agg = (docs.groupBy("lang", "source")
            .agg(F.count("*").alias("n_docs"),
                 F.sum(toks).alias("n_tokens")))
@@ -514,9 +493,7 @@ def corpus_mix(docs: DataFrame, text_col: str = "text") -> DataFrame:
         .alias("token_share"))
 
 
-def mix_plan(docs: DataFrame, alpha: float = 0.5,
-             strat_col: str = "lang",
-             text_col: str = "text") -> DataFrame:
+def mix_plan(docs: DataFrame, alpha: float = 0.5) -> DataFrame:
     """Temperature-based mix rebalancing plan: given per-stratum token
     shares p_i, the target mix is p_i^α renormalized (α<1 upsamples the
     tail — the standard multilingual temperature trick; α=1 keeps the
@@ -530,8 +507,8 @@ def mix_plan(docs: DataFrame, alpha: float = 0.5,
     Plan shape: one low-cardinality groupBy; the renormalization sums
     are 1-row window aggregates over the stratum rollup (strata ≪
     corpus), so nothing about this touches the corpus twice."""
-    toks = F.size(words(F.col(text_col)))
-    agg = (docs.groupBy(F.col(strat_col).alias("stratum"))
+    toks = F.size(words(F.col("text")))
+    agg = (docs.groupBy(F.col("lang").alias("stratum"))
            .agg(F.sum(toks).cast("bigint").alias("n_tokens")))
     total = Window.partitionBy()
     share = (F.col("n_tokens").cast("double")
@@ -602,8 +579,8 @@ def clean_lines(docs: DataFrame, text_col: str = "text",
                     "cleaned_text"))
 
 
-def shuffle_shards(docs: DataFrame, n_shards: int = 16, seed: int = 0,
-                   id_col: str = "doc_id") -> DataFrame:
+def shuffle_shards(docs: DataFrame, n_shards: int = 16,
+                   seed: int = 0) -> DataFrame:
     """Deterministic global shuffle of the corpus into ``n_shards``
     training shards. Returns (doc_id, shard, position): ``shard`` is the
     output file the document lands in, ``position`` its 0-based offset
@@ -623,20 +600,18 @@ def shuffle_shards(docs: DataFrame, n_shards: int = 16, seed: int = 0,
     ``partitionBy(shard)`` + sortWithinPartitions streams shards out in
     final order. Skew-free by construction (md5 keys are uniform).
     """
-    key = md5_hash64(F.col(id_col), seed=seed)
+    key = md5_hash64(F.col("doc_id"), seed=seed)
     shard = F.pmod(key, F.lit(n_shards)).cast("int")
-    w = Window.partitionBy("shard").orderBy("shuffle_key", id_col)
-    return (docs.select(F.col(id_col), shard.alias("shard"),
+    w = Window.partitionBy("shard").orderBy("shuffle_key", "doc_id")
+    return (docs.select(F.col("doc_id"), shard.alias("shard"),
                         key.alias("shuffle_key"))
             .withColumn("position",
                         (F.row_number().over(w) - 1).cast("bigint"))
-            .select(id_col, "shard", "position"))
+            .select("doc_id", "shard", "position"))
 
 
 def prepare_corpus(docs: DataFrame, token_budget: int = 512,
-                   n_shards: int = 16, seed: int = 0,
-                   rules: dict | None = None, text_col: str = "text",
-                   id_col: str = "doc_id") -> DataFrame:
+                   n_shards: int = 16) -> DataFrame:
     """End-to-end pre-training prep — the curation stages composed the
     way a production corpus job runs them: quality filter → exact dedup
     (min-id survivor per content hash) → deterministic epoch shuffle →
@@ -654,11 +629,11 @@ def prepare_corpus(docs: DataFrame, token_budget: int = 512,
     or survivor-join shape hands Catalyst the same uncached subplan
     twice; see :func:`release_corpus`). Two shuffles total. Nothing
     here collects, samples, or depends on input order."""
-    r = {**QUALITY_RULES, **(rules or {})}
-    w_toks = words(F.col(text_col))
+    r = QUALITY_RULES
+    w_toks = words(F.col("text"))
     n_words = F.size(w_toks)
-    lowered = F.lower(F.col(text_col))
-    n_chars = F.length(F.col(text_col))
+    lowered = F.lower(F.col("text"))
+    n_chars = F.length(F.col("text"))
     uniq = F.size(F.array_distinct(w_toks)).cast("double") / n_words
     punct = ((n_chars
               - F.length(F.regexp_replace(lowered, "[^a-z0-9 ]", "")))
@@ -666,36 +641,33 @@ def prepare_corpus(docs: DataFrame, token_budget: int = 512,
     keep = ((n_words >= r["min_words"]) & (n_words <= r["max_words"])
             & (uniq >= r["min_uniq_word_ratio"])
             & (punct <= r["max_punct_ratio"]))
-    wdup = Window.partitionBy("_h").orderBy(id_col)
+    wdup = Window.partitionBy("_h").orderBy("doc_id")
     surv = (docs.filter(keep)
-            .select(F.col(id_col), n_words.cast("int").alias("n_tokens"),
-                    F.md5(F.col(text_col)).alias("_h"))
+            .select(F.col("doc_id"), n_words.cast("int").alias("n_tokens"),
+                    F.md5(F.col("text")).alias("_h"))
             .withColumn("_rn", F.row_number().over(wdup))
             .filter(F.col("_rn") == 1))
-    key = md5_hash64(F.col(id_col), seed=seed)
+    key = md5_hash64(F.col("doc_id"), seed=0)
     sharded = surv.select(
-        F.col(id_col), F.col("n_tokens"),
+        F.col("doc_id"), F.col("n_tokens"),
         key.alias("_key"),
         F.pmod(key, F.lit(n_shards)).cast("int").alias("shard"))
-    w = (Window.partitionBy("shard").orderBy("_key", id_col))
+    w = (Window.partitionBy("shard").orderBy("_key", "doc_id"))
     wsum = w.rowsBetween(Window.unboundedPreceding, 0)
     start = F.sum("n_tokens").over(wsum) - F.col("n_tokens")
     return sharded.select(
-        F.col(id_col), F.col("shard"),
+        F.col("doc_id"), F.col("shard"),
         (F.row_number().over(w) - 1).cast("bigint").alias("position"),
         F.col("n_tokens"),
         F.floor(start / token_budget).cast("bigint").alias("bin_id"),
         (start % token_budget).cast("bigint").alias("bin_offset"))
 
 
-def perplexity_filter(docs: DataFrame, low_q: float = 0.05,
-                      high_q: float = 0.9,
-                      bounds: tuple[float, float] | None = None,
-                      text_col: str = "text",
-                      id_col: str = "doc_id") -> DataFrame:
+def perplexity_filter(docs: DataFrame,
+                      bounds: tuple[float, float] | None = None) -> DataFrame:
     """CCNet-style language-model perplexity band filter: score every
     document against the corpus's own unigram LM and keep those whose
-    perplexity falls between the ``low_q`` and ``high_q`` QUANTILES of
+    perplexity falls between the 0.05 and 0.9 QUANTILES of
     the corpus distribution — the top tail is noise/gibberish (the LM
     can't predict it), the bottom tail is degenerate boilerplate (too
     predictable to teach anything). Returns
@@ -712,44 +684,41 @@ def perplexity_filter(docs: DataFrame, low_q: float = 0.05,
     ``approx_percentile`` (mergeable sketch), same plan shape."""
     from .textstats import unigram_logprob
 
-    lp = unigram_logprob(docs, text_col, id_col) \
-        .select(id_col, "unigram_ppl")
+    lp = unigram_logprob(docs) \
+        .select("doc_id", "unigram_ppl")
     if bounds is not None:
         lo, hi = (F.lit(float(bounds[0])), F.lit(float(bounds[1])))
         banded = lp.withColumn("_lo", lo).withColumn("_hi", hi)
     else:
         q = lp.agg(
-            F.round(F.expr(f"percentile(unigram_ppl, {low_q!r})"), 6)
+            F.round(F.expr(f"percentile(unigram_ppl, {0.05!r})"), 6)
             .alias("_lo"),
-            F.round(F.expr(f"percentile(unigram_ppl, {high_q!r})"), 6)
+            F.round(F.expr(f"percentile(unigram_ppl, {0.9!r})"), 6)
             .alias("_hi"))
         banded = lp.crossJoin(F.broadcast(q))
     return banded.select(
-        id_col, "unigram_ppl",
+        "doc_id", "unigram_ppl",
         ((F.col("unigram_ppl") >= F.col("_lo"))
          & (F.col("unigram_ppl") <= F.col("_hi")))
         .cast("int").alias("keep"))
 
 
-def benchmark_gram_hashes(benchmark: DataFrame, n: int = 8,
-                          text_col: str = "text") -> list[int]:
-    """The benchmark's distinct n-gram hash set, collected — a bounded,
+def benchmark_gram_hashes(benchmark: DataFrame) -> list[int]:
+    """The benchmark's distinct 8-gram hash set, collected — a bounded,
     per-dataset catalog fact (benchmarks are small by definition) that
     callers can compute once and reuse across queries instead of paying
     the collect per call."""
     got = (benchmark.select(
         F.explode_outer(F.transform(
-            F.array_distinct(ngrams(words(F.col(text_col)), n)),
+            F.array_distinct(ngrams(words(F.col("text")), 8)),
             lambda g: md5_hash64(g))).alias("gh"))
         .filter(F.col("gh").isNotNull())
         .distinct().collect())
     return sorted({row[0] for row in got})
 
 
-def release_corpus(docs: DataFrame, benchmark: DataFrame | None, n: int = 8,
-                   n_shards: int = 16, seed: int = 0,
-                   rules: dict | None = None, text_col: str = "text",
-                   id_col: str = "doc_id",
+def release_corpus(docs: DataFrame, benchmark: DataFrame | None,
+                   n_shards: int = 16,
                    bench_grams: list[int] | None = None) -> DataFrame:
     """The release flow FUSED into one linear chain: quality filter +
     benchmark decontamination as a single map-side predicate, exact
@@ -770,11 +739,11 @@ def release_corpus(docs: DataFrame, benchmark: DataFrame | None, n: int = 8,
     driver-state class as the IVF centroid model; at a scale where the
     gram set outgrows a literal/broadcast, swap in the Bloom-filter
     branch (:func:`decontaminate_bloom`)."""
-    r = {**QUALITY_RULES, **(rules or {})}
-    w = words(F.col(text_col))
+    r = QUALITY_RULES
+    w = words(F.col("text"))
     n_words = F.size(w)
-    lowered = F.lower(F.col(text_col))
-    n_chars = F.length(F.col(text_col))
+    lowered = F.lower(F.col("text"))
+    n_chars = F.length(F.col("text"))
     uniq = F.size(F.array_distinct(w)).cast("double") / n_words
     punct = ((n_chars
               - F.length(F.regexp_replace(lowered, "[^a-z0-9 ]", "")))
@@ -789,10 +758,10 @@ def release_corpus(docs: DataFrame, benchmark: DataFrame | None, n: int = 8,
             "contamination gram set from) or `bench_grams` (a "
             "precomputed hash list; [] means no decontamination)")
     bg = (bench_grams if bench_grams is not None
-          else benchmark_gram_hashes(benchmark, n, text_col))
+          else benchmark_gram_hashes(benchmark))
     if bg:
         bench_lit = F.expr("array(" + ",".join(f"{h}L" for h in bg) + ")")
-        doc_grams = F.transform(F.array_distinct(ngrams(w, n)),
+        doc_grams = F.transform(F.array_distinct(ngrams(w, 8)),
                                 lambda g: md5_hash64(g))
         keep = keep & ~F.arrays_overlap(doc_grams, bench_lit)
     # An EMPTY gram set means "nothing to decontaminate" — skip the
@@ -800,41 +769,40 @@ def release_corpus(docs: DataFrame, benchmark: DataFrame | None, n: int = 8,
     # and fail analysis against the bigint doc-gram array).
     clean = docs.filter(keep)
 
-    wdup = Window.partitionBy("_h").orderBy(id_col)
-    surv = (clean.select(F.col(id_col), F.size(w).alias("n_tokens"),
-                         F.md5(F.col(text_col)).alias("_h"))
+    wdup = Window.partitionBy("_h").orderBy("doc_id")
+    surv = (clean.select(F.col("doc_id"), F.size(w).alias("n_tokens"),
+                         F.md5(F.col("text")).alias("_h"))
             .withColumn("_rn", F.row_number().over(wdup))
             .filter(F.col("_rn") == 1))
-    key = md5_hash64(F.col(id_col), seed=seed)
-    wsh = Window.partitionBy("shard").orderBy("_key", id_col)
-    return (surv.select(id_col, "n_tokens", key.alias("_key"),
+    key = md5_hash64(F.col("doc_id"), seed=0)
+    wsh = Window.partitionBy("shard").orderBy("_key", "doc_id")
+    return (surv.select("doc_id", "n_tokens", key.alias("_key"),
                         F.pmod(key, F.lit(n_shards)).cast("int")
                         .alias("shard"))
-            .select(id_col, "shard",
+            .select("doc_id", "shard",
                     (F.row_number().over(wsh) - 1).cast("bigint")
                     .alias("position"),
                     "n_tokens"))
 
 
 def train_val_test_split(docs: DataFrame, val_frac: float = 0.05,
-                         test_frac: float = 0.05,
-                         id_col: str = "doc_id") -> DataFrame:
+                         test_frac: float = 0.05) -> DataFrame:
     """Deterministic train/val/test assignment: split chosen by the
     md5-uniform of the document id — reproducible across runs, engines,
     and retries (never ``rand()``), and STABLE under corpus growth: a
     document's split never changes when other documents arrive, which
     is what keeps eval sets honest across dataset versions. Returns
     (doc_id, split). Map-only at any scale."""
-    u = _hash_uniform(F.col(id_col))
+    u = _hash_uniform(F.col("doc_id"))
     split = (F.when(u < test_frac, F.lit("test"))
              .when(u < test_frac + val_frac, F.lit("val"))
              .otherwise(F.lit("train")))
-    return docs.select(F.col(id_col), split.alias("split"))
+    return docs.select(F.col("doc_id"), split.alias("split"))
 
 
 def leakage_safe_split(docs: DataFrame, labels: DataFrame,
-                       val_frac: float = 0.05, test_frac: float = 0.05,
-                       id_col: str = "doc_id") -> DataFrame:
+                       val_frac: float = 0.05,
+                       test_frac: float = 0.05) -> DataFrame:
     """Eval-split assignment that CANNOT leak near-duplicates across the
     train/test boundary: :func:`train_val_test_split` hashes each doc's
     own id, so two near-copies routinely land on opposite sides of the
@@ -854,16 +822,16 @@ def leakage_safe_split(docs: DataFrame, labels: DataFrame,
     map-only hash. At rest the labels come from a stored
     :func:`dedup.connected_components` output, not a fresh LSH+CC
     run."""
-    lab = labels.select(F.col("doc_id").alias(id_col), "cluster_id")
-    keyed = (docs.select(id_col).join(lab, id_col, "left")
-             .select(F.col(id_col),
-                     F.coalesce(F.col("cluster_id"), F.col(id_col))
+    lab = labels.select("doc_id", "cluster_id")
+    keyed = (docs.select("doc_id").join(lab, "doc_id", "left")
+             .select(F.col("doc_id"),
+                     F.coalesce(F.col("cluster_id"), F.col("doc_id"))
                       .alias("split_key")))
     u = _hash_uniform(F.col("split_key"))
     split = (F.when(u < test_frac, F.lit("test"))
              .when(u < test_frac + val_frac, F.lit("val"))
              .otherwise(F.lit("train")))
-    return keyed.select(id_col, "split_key", split.alias("split"))
+    return keyed.select("doc_id", "split_key", split.alias("split"))
 
 
 # Pinned linear quality model: weights over quality_signals features,
@@ -882,8 +850,7 @@ QUALITY_LR_WEIGHTS = {
 }
 
 
-def quality_score(docs: DataFrame, threshold: float = 0.0,
-                  text_col: str = "text") -> DataFrame:
+def quality_score(docs: DataFrame, threshold: float = 0.0) -> DataFrame:
     """Model-based quality scoring: a pinned linear classifier over the
     :func:`~.textstats.quality_signals` features. Returns
     (doc_id, quality_logit, keep) — the LOGIT, deliberately not the
@@ -901,7 +868,7 @@ def quality_score(docs: DataFrame, threshold: float = 0.0,
     from .textstats import quality_signals
 
     w = QUALITY_LR_WEIGHTS
-    f = quality_signals(docs, text_col)
+    f = quality_signals(docs)
     logit = (F.lit(w["bias"])
              + F.lit(w["n_words_per_100"]) * (F.col("n_words") / 100.0)
              + F.lit(w["avg_word_len"]) * F.col("avg_word_len")
@@ -920,7 +887,7 @@ def quality_score(docs: DataFrame, threshold: float = 0.0,
         (logit > F.lit(threshold)).cast("int").alias("keep"))
 
 
-def corpus_data_card(docs: DataFrame, text_col: str = "text") -> DataFrame:
+def corpus_data_card(docs: DataFrame) -> DataFrame:
     """Corpus data card: the per-(lang, source) composition report a
     training-data release ships (docs, chars, whitespace tokens, mean
     doc length, corpus share) with ROLLUP subtotal rows — per-lang and
@@ -932,14 +899,14 @@ def corpus_data_card(docs: DataFrame, text_col: str = "text") -> DataFrame:
     over the ROLLUP-cardinality frame (langs × sources + langs + 1
     rows — bounded metadata scale, the registry's ntile-over-rollup
     precedent, never the corpus)."""
-    toks = F.size(F.array_remove(words(F.col(text_col)), ""))
+    toks = F.size(F.array_remove(words(F.col("text")), ""))
     # avg_chars and doc_share are single divisions of exact BIGINT
     # sums (engine-native avg() may accumulate doubles in merge order;
     # round(double) flips at half boundaries across engine versions —
     # both r10 driver-red classes), published raw
     card = (docs.rollup("lang", "source")
             .agg(F.count("*").alias("n_docs"),
-                 F.sum(F.length(text_col)).alias("total_chars"),
+                 F.sum(F.length("text")).alias("total_chars"),
                  F.sum(toks).alias("total_tokens"))
             .withColumn("avg_chars",
                         F.col("total_chars").cast("double")

@@ -46,9 +46,9 @@ ROWS_PER_BAND = 2
 MERSENNE31 = (1 << 31) - 1
 
 
-def _lcg_params(n: int = NUM_HASHES) -> list[tuple[int, int]]:
+def _lcg_params() -> list[tuple[int, int]]:
     x, out = 1234567891, []
-    for _ in range(n):
+    for _ in range(NUM_HASHES):
         x = (x * 6364136223846793005 + 1442695040888963407) % (1 << 62)
         a = (x >> 16) % ((1 << 30) - 1) + 1
         x = (x * 6364136223846793005 + 1442695040888963407) % (1 << 62)
@@ -65,24 +65,22 @@ def _hash32_expr(x: str, seed: int) -> str:
             f"as bigint)")
 
 
-def exact_dedup(docs: DataFrame, text_col: str = "text",
-                id_col: str = "doc_id") -> DataFrame:
+def exact_dedup(docs: DataFrame) -> DataFrame:
     """Exact dedup: keep the lowest id per content digest.
 
     One hash aggregate — at scale this is a single shuffle on the digest,
     with map-side partial min. Returns (content_hash, keep_id, n_copies).
     """
     return (docs
-            .select(F.md5(F.col(text_col)).alias("content_hash"),
-                    F.col(id_col))
+            .select(F.md5(F.col("text")).alias("content_hash"),
+                    F.col("doc_id"))
             .groupBy("content_hash")
-            .agg(F.min(id_col).alias("keep_id"),
+            .agg(F.min("doc_id").alias("keep_id"),
                  F.count("*").alias("n_copies")))
 
 
-def incremental_exact_dedup(incoming: DataFrame, seen: DataFrame | None,
-                            text_col: str = "text",
-                            id_col: str = "doc_id") -> DataFrame:
+def incremental_exact_dedup(incoming: DataFrame,
+                            seen: DataFrame | None) -> DataFrame:
     """Incremental exact dedup — the production shape: a new batch of
     documents checked against the HISTORICAL digest set, not the whole
     corpus re-deduped. Returns the incoming rows that survive, i.e. not
@@ -103,14 +101,14 @@ def incremental_exact_dedup(incoming: DataFrame, seen: DataFrame | None,
     distinct would re-shuffle exactly the table bucketing exists to keep
     still. ``seen=None`` means cold start (everything is new content)."""
     hashed = incoming.select(
-        F.col(id_col), F.md5(F.col(text_col)).alias("content_hash"))
+        F.col("doc_id"), F.md5(F.col("text")).alias("content_hash"))
     firsts = (hashed.groupBy("content_hash")
-              .agg(F.min(id_col).alias(id_col)))
+              .agg(F.min("doc_id").alias("doc_id")))
     if seen is not None:
         firsts = firsts.join(
             seen.select(F.col("content_hash")),
             "content_hash", "left_anti")
-    return firsts.select(id_col, "content_hash",
+    return firsts.select("doc_id", "content_hash",
                          F.lit(1).cast("int").alias("is_new_content"))
 
 
@@ -181,8 +179,8 @@ def ensure_min_parallelism(df: DataFrame) -> DataFrame:
     return df
 
 
-def with_shingles(docs: DataFrame, text_col: str = "text", n: int = 3,
-                  min_words: int | None = None) -> DataFrame:
+def with_shingles(docs: DataFrame, text_col: str = "text",
+                  n: int = 3) -> DataFrame:
     """Attach the distinct word-n-gram shingle set (drops docs too short
     to have any n-gram). Shingling + hashing is CPU-bound per row, so the
     input is first spread across all cores.
@@ -190,13 +188,10 @@ def with_shingles(docs: DataFrame, text_col: str = "text", n: int = 3,
     The short-doc filter tests ``size(words) >= n`` — equivalent to
     ``size(shingles) > 0`` (an n-word doc always yields ≥ 1 distinct
     gram) but evaluated on the cheap split, so the Filter node never
-    re-computes the full shingle expression. ``min_words`` below ``n``
-    is clamped to ``n`` — that equivalence (and the docstring's "drops
-    docs too short to have any n-gram") must hold for any argument."""
-    min_words = n if min_words is None else max(min_words, n)
+    re-computes the full shingle expression."""
     from ..functions.text import words
     return (ensure_min_parallelism(docs)
-            .filter(F.size(words(F.col(text_col))) >= min_words)
+            .filter(F.size(words(F.col(text_col))) >= n)
             .withColumn("shingles", distinct_shingles(F.col(text_col), n)))
 
 
@@ -210,22 +205,22 @@ def shingle_hashes(shingle_col: Column) -> Column:
     return F.transform(shingle_col, _base32)
 
 
-def minhash_signature(hash_col: Column, num_hashes: int = NUM_HASHES) -> Column:
+def minhash_signature(hash_col: Column) -> Column:
     """MinHash signature as an array<bigint> column over the base-hash
     array from :func:`shingle_hashes`: family i is min over
     (a_i·h + b_i) mod 2^31−1 — pure arithmetic, no further hashing.
 
-    Single ``aggregate`` pass holding all ``num_hashes`` running minima in
-    the accumulator array, instead of ``num_hashes`` separate
+    Single ``aggregate`` pass holding all ``NUM_HASHES`` running minima in
+    the accumulator array, instead of ``NUM_HASHES`` separate
     transform+array_min expressions. One pass means the base-hash input
     expression is evaluated exactly once even after projection collapse
     inlines it (HOF bodies get no CSE — see :func:`..functions.text.ngrams`
     for the same trap), and the per-element cost is one multiply-add-mod
     per family with no intermediate arrays."""
-    a_arr = F.array(*[F.lit(a) for a, _ in MINHASH_PARAMS[:num_hashes]])
-    b_arr = F.array(*[F.lit(b) for _, b in MINHASH_PARAMS[:num_hashes]])
-    init = F.array_repeat(F.lit(MERSENNE31).cast("bigint"), num_hashes)
-    idx = F.sequence(F.lit(0), F.lit(num_hashes - 1))
+    a_arr = F.array(*[F.lit(a) for a, _ in MINHASH_PARAMS[:NUM_HASHES]])
+    b_arr = F.array(*[F.lit(b) for _, b in MINHASH_PARAMS[:NUM_HASHES]])
+    init = F.array_repeat(F.lit(MERSENNE31).cast("bigint"), NUM_HASHES)
+    idx = F.sequence(F.lit(0), F.lit(NUM_HASHES - 1))
     sig = F.aggregate(
         hash_col, init,
         lambda acc, h: F.zip_with(
@@ -237,7 +232,7 @@ def minhash_signature(hash_col: Column, num_hashes: int = NUM_HASHES) -> Column:
     # Empty input must keep the legacy per-family NULL (array_min([]) is
     # NULL), not the sentinel init values.
     return F.when(F.size(hash_col) > 0, sig) \
-            .otherwise(F.array_repeat(F.lit(None).cast("bigint"), num_hashes))
+            .otherwise(F.array_repeat(F.lit(None).cast("bigint"), NUM_HASHES))
 
 
 def _base32(x: Column) -> Column:
@@ -274,8 +269,7 @@ def _bands_of_hv() -> Column:
     return _HV_BANDS_EXPR[0][1]
 
 
-def lsh_bands(sig_col: Column, num_bands: int = NUM_BANDS,
-              rows_per_band: int = ROWS_PER_BAND) -> Column:
+def lsh_bands(sig_col: Column) -> Column:
     """Band digests: md5 of each r-row slice of the signature. Docs share
     a bucket iff a band matches exactly.
 
@@ -284,20 +278,20 @@ def lsh_bands(sig_col: Column, num_bands: int = NUM_BANDS,
     not once per band slot it is sliced into."""
     def bands_of(sig: Column) -> Column:
         bands = []
-        for b in range(num_bands):
-            vals = [F.element_at(sig, b * rows_per_band + r + 1).cast("string")
-                    for r in range(rows_per_band)]
+        for b in range(NUM_BANDS):
+            vals = [F.element_at(sig, b * ROWS_PER_BAND + r + 1).cast("string")
+                    for r in range(ROWS_PER_BAND)]
             bands.append(F.md5(F.concat_ws(",", *vals)))
         return F.array(*bands)
 
     return F.element_at(F.transform(F.array(sig_col), bands_of), 1)
 
 
-def jaccard(a: Column, b: Column, scale: int = 6) -> Column:
+def jaccard(a: Column, b: Column) -> Column:
     """Exact jaccard of two pre-distinct shingle arrays."""
     inter = F.size(F.array_intersect(a, b)).cast("double")
     union = F.size(F.array_union(a, b)).cast("double")
-    return F.round(inter / union, scale)
+    return F.round(inter / union, 6)
 
 
 def minhash_lsh_pairs(docs: DataFrame, text_col: str = "text",
@@ -356,10 +350,7 @@ def minhash_lsh_pairs(docs: DataFrame, text_col: str = "text",
             .select("id_a", "id_b", "jaccard_sim"))
 
 
-def containment_pairs(docs: DataFrame, text_col: str = "text",
-                      id_col: str = "doc_id", n: int = 3,
-                      threshold: float = 0.8,
-                      max_bucket: int | None = 1000) -> DataFrame:
+def containment_pairs(docs: DataFrame, threshold: float = 0.8) -> DataFrame:
     """ASYMMETRIC near-dup pairs by shingle containment,
     C = |A∩B| / min(|A|, |B|) — the doc-inside-doc duplication class
     (quoted articles, boilerplate-wrapped reposts, chunk supersets)
@@ -368,7 +359,7 @@ def containment_pairs(docs: DataFrame, text_col: str = "text",
     (id_a, id_b, containment), id_a < id_b, containment ≥ ``threshold``.
 
     Same candidate machinery as :func:`minhash_lsh_pairs` (band buckets
-    are the only shuffle, ``max_bucket`` skew guard identical), with the
+    are the only shuffle, 1000-row bucket skew guard identical), with the
     verify swapped to exact containment. Honest recall caveat, also the
     reason this shares the banding instead of claiming more: MinHash
     banding targets JACCARD, so high-containment/low-jaccard pairs are
@@ -376,15 +367,15 @@ def containment_pairs(docs: DataFrame, text_col: str = "text",
     index partitions by set size (LSH Ensemble, Zhu et al. VLDB 2016);
     candidates here stay band-exact so the DuckDB twin replays them
     bit-for-bit and the CONTAINMENT verify itself is fully graded."""
-    base = (with_shingles(docs, text_col, n)
-            .select(F.col(id_col).alias("id"), "shingles"))
+    base = (with_shingles(docs, "text", 3)
+            .select(F.col("doc_id").alias("id"), "shingles"))
     sigs = (base
             .withColumn("hv", shingle_hashes(F.col("shingles")))
             .select("id",
                     _bands_of_hv().alias("bands")))
     buckets = sigs.select(
         "id", F.posexplode_outer("bands").alias("band_idx", "band_hash"))
-    pairs = _band_bucket_pairs(buckets, max_bucket)
+    pairs = _band_bucket_pairs(buckets, 1000)
     left = base.select(F.col("id").alias("id_a"),
                        F.col("shingles").alias("sh_a"))
     right = base.select(F.col("id").alias("id_b"),
@@ -436,8 +427,7 @@ def _band_bucket_pairs(buckets: DataFrame,
             .distinct())
 
 
-def write_minhash_index(docs: DataFrame, path: str, text_col: str = "text",
-                        id_col: str = "doc_id", n: int = 3,
+def write_minhash_index(docs: DataFrame, path: str,
                         max_bucket: int | None = 1000) -> None:
     """Materialize the MinHash-LSH index AT REST so NEAR-dup checks go
     incremental — the near-dup twin of the digest history
@@ -459,8 +449,8 @@ def write_minhash_index(docs: DataFrame, path: str, text_col: str = "text",
     (band_hash / id) so the candidate and verify joins co-locate; the
     plain-parquet layout here is the catalog-free form the registry
     serves."""
-    base = with_shingles(docs, text_col, n).select(
-        F.col(id_col).alias("id"), "shingles")
+    base = with_shingles(docs, "text", 3).select(
+        F.col("doc_id").alias("id"), "shingles")
     sigs = (base.withColumn("hv", shingle_hashes(F.col("shingles")))
             .select("id",
                     _bands_of_hv().alias("bands")))
@@ -484,8 +474,7 @@ def write_minhash_index(docs: DataFrame, path: str, text_col: str = "text",
 
 
 def append_minhash_index(batch: DataFrame, path: str,
-                         text_col: str = "text", id_col: str = "doc_id",
-                         n: int = 3, epoch: int | None = None) -> None:
+                         epoch: int | None = None) -> None:
     """Extend the at-rest LSH index with an arriving batch's bands and
     shingles (``mode("append")`` into both sub-layouts) — after a batch
     is pair-mined, its documents become part of the indexed corpus so
@@ -496,8 +485,8 @@ def append_minhash_index(batch: DataFrame, path: str,
     :func:`write_minhash_index` periodically to re-apply the stored-band
     guard and fold the layout, the same rebuild cadence as IVF centroid
     refresh)."""
-    base = with_shingles(batch, text_col, n).select(
-        F.col(id_col).alias("id"), "shingles")
+    base = with_shingles(batch, "text", 3).select(
+        F.col("doc_id").alias("id"), "shingles")
     sigs = (base.withColumn("hv", shingle_hashes(F.col("shingles")))
             .select("id",
                     _bands_of_hv().alias("bands")))
@@ -633,10 +622,9 @@ def incremental_neardup_pairs(batch: DataFrame, spark, index_path: str,
             .select("id_a", "id_b", "jaccard_sim"))
 
 
-def simhash(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id",
-            bits: int = 32, engine: str = "auto") -> DataFrame:
+def simhash(docs: DataFrame, engine: str = "auto") -> DataFrame:
     """SimHash fingerprints: per token (with multiplicity), each of
-    ``bits`` bit positions votes ±1 by the token hash's bit; the sign of
+    32 bit positions votes ±1 by the token hash's bit; the sign of
     the tally sets the fingerprint bit. Returns (doc_id, simhash).
 
     ``engine``: ``"jvm"`` evaluates the tally as one Column expression
@@ -661,27 +649,27 @@ def simhash(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id",
             engine = "jvm"
     if engine == "arrow":
         toks_frame = ensure_min_parallelism(docs).select(
-            F.col(id_col),
-            F.split(F.lower(F.col(text_col)), " ").alias("_toks"))
-        id_type = docs.schema[id_col].dataType
-        schema = T.StructType([T.StructField(id_col, id_type),
+            F.col("doc_id"),
+            F.split(F.lower(F.col("text")), " ").alias("_toks"))
+        id_type = docs.schema["doc_id"].dataType
+        schema = T.StructType([T.StructField("doc_id", id_type),
                                T.StructField("simhash", T.LongType())])
-        return toks_frame.mapInPandas(_simhash_arrow_fn(id_col, bits),
+        return toks_frame.mapInPandas(_simhash_arrow_fn("doc_id", 32),
                                       schema)
-    toks = (f"transform(split(lower({text_col}), ' '), "
+    toks = ("transform(split(lower(text), ' '), "
             f"x -> {_hash32_expr('x', 0)})")
     # One pass over the tokens: the accumulator is the array of `bits`
     # tallies, each bit voting ±1 per token (Σ (2·bit_j(h) − 1)).
-    tallies = (f"aggregate({toks}, array_repeat(cast(0 as bigint), {bits}), "
-               f"(acc, h) -> zip_with(acc, sequence(0, {bits - 1}), "
+    tallies = (f"aggregate({toks}, array_repeat(cast(0 as bigint), 32), "
+               "(acc, h) -> zip_with(acc, sequence(0, 31), "
                f"(a, j) -> a + 2 * (shiftright(h, j) & 1) - 1))")
-    sig = (f"aggregate(zip_with({tallies}, sequence(0, {bits - 1}), "
+    sig = (f"aggregate(zip_with({tallies}, sequence(0, 31), "
            f"(t, j) -> if(t > 0, shiftleft(cast(1 as bigint), j), "
            f"cast(0 as bigint))), cast(0 as bigint), (acc, x) -> acc + x)")
     # The tally aggregates are interpreted HOFs (no codegen) and dominate
     # the cost — spread small single-split inputs across cores first.
     return ensure_min_parallelism(docs).select(
-        F.col(id_col), F.expr(sig).alias("simhash"))
+        F.col("doc_id"), F.expr(sig).alias("simhash"))
 
 
 def _simhash_arrow_fn(id_col: str, bits: int):
@@ -825,8 +813,7 @@ def _driver_union_find(spark, pairs: DataFrame, rows, id_a: str
         [(n, c, n == c) for n, c in data], schema)
 
 
-def connected_components(pairs: DataFrame, id_a: str = "id_a",
-                         id_b: str = "id_b", max_iter: int = 20,
+def connected_components(pairs: DataFrame, max_iter: int = 20,
                          checkpoint_every: int = 5,
                          checkpoint_dir: str | None = None,
                          small_graph_edges: int = 50_000) -> DataFrame:
@@ -888,12 +875,12 @@ def connected_components(pairs: DataFrame, id_a: str = "id_a",
     spark = pairs.sparkSession
     if checkpoint_dir is not None:
         spark.sparkContext.setCheckpointDir(checkpoint_dir)
-    pairs = pairs.filter(F.col(id_a).isNotNull() & F.col(id_b).isNotNull())
+    pairs = pairs.filter(F.col("id_a").isNotNull() & F.col("id_b").isNotNull())
     if small_graph_edges:
-        rows = (pairs.select(id_a, id_b)
+        rows = (pairs.select("id_a", "id_b")
                 .limit(small_graph_edges + 1).collect())
         if len(rows) <= small_graph_edges:
-            return _driver_union_find(spark, pairs, rows, id_a)
+            return _driver_union_find(spark, pairs, rows, "id_a")
         # Big regime reached THROUGH the probe: the probe already paid
         # one evaluation of the upstream pair-mining chain, and the
         # self-union symmetrize below would evaluate it twice more —
@@ -913,9 +900,10 @@ def connected_components(pairs: DataFrame, id_a: str = "id_a",
             "round). Pass checkpoint_dir for the reliable, leak-free "
             "mode; the in-memory mode is for ad-hoc/exploratory use.",
             RuntimeWarning, stacklevel=2)
-    edges = (pairs.select(F.col(id_a).alias("src"), F.col(id_b).alias("dst"))
-             .union(pairs.select(F.col(id_b).alias("src"),
-                                 F.col(id_a).alias("dst")))).cache()
+    edges = (pairs.select(F.col("id_a").alias("src"),
+                          F.col("id_b").alias("dst"))
+             .union(pairs.select(F.col("id_b").alias("src"),
+                                 F.col("id_a").alias("dst")))).cache()
     labels = (edges.select(F.col("src").alias("id")).distinct()
               .withColumn("label", F.col("id"))).cache()
     pinned = labels  # the exact frame holding this round's cached blocks
@@ -989,7 +977,6 @@ def connected_components(pairs: DataFrame, id_a: str = "id_a",
 
 
 def update_cluster_labels(labels: DataFrame, new_pairs: DataFrame,
-                          max_iter: int = 20,
                           checkpoint_dir: str | None = None) -> DataFrame:
     """Fold NEW near-dup pairs (e.g. an arriving batch's
     :func:`incremental_neardup_pairs` output) into an EXISTING label
@@ -1030,7 +1017,7 @@ def update_cluster_labels(labels: DataFrame, new_pairs: DataFrame,
     # before the self-union symmetrize — the double-evaluation this
     # checkpoint used to prevent (measured ~1.8 s of a 5 s update at
     # sf0.1) is still prevented, one layer down.
-    delta = connected_components(contracted, max_iter=max_iter,
+    delta = connected_components(contracted, max_iter=20,
                                  checkpoint_dir=checkpoint_dir) \
         .select(F.col("doc_id").alias("_node"),
                 F.col("cluster_id").alias("_newlab"))
@@ -1105,31 +1092,27 @@ def dedup_corpus(docs: DataFrame, text_col: str = "text",
     return docs.join(losers, id_col, "left_anti")
 
 
-def ngram_jaccard_vs_probe(docs: DataFrame, probe_id, text_col: str = "text",
-                           id_col: str = "doc_id", n: int = 3,
-                           min_sim: float = 0.0) -> DataFrame:
-    """Exact n-gram jaccard of every document against one probe document
+def ngram_jaccard_vs_probe(docs: DataFrame, probe_id) -> DataFrame:
+    """Exact 3-gram jaccard of every document against one probe document
     — the brute-force near-dup baseline. One broadcast of a single row;
     the corpus streams through map tasks."""
-    base = with_shingles(docs, text_col, n).select(id_col, "shingles")
-    probe = (base.filter(F.col(id_col) == probe_id)
+    base = with_shingles(docs, "text", 3).select("doc_id", "shingles")
+    probe = (base.filter(F.col("doc_id") == probe_id)
              .select(F.col("shingles").alias("probe_shingles")))
-    out = (base.filter(F.col(id_col) != probe_id)
+    out = (base.filter(F.col("doc_id") != probe_id)
            .crossJoin(F.broadcast(probe))
-           .select(F.col(id_col),
+           .select(F.col("doc_id"),
                    jaccard(F.col("shingles"),
                            F.col("probe_shingles")).alias("jaccard_sim")))
-    return out.filter(F.col("jaccard_sim") > min_sim) if min_sim > 0 else out
+    return out
 
 
-def remove_duplicate_spans(docs: DataFrame, text_col: str = "text",
-                           id_col: str = "doc_id", k: int = 8,
-                           min_occurrences: int = 2) -> DataFrame:
+def remove_duplicate_spans(docs: DataFrame, k: int = 8) -> DataFrame:
     """APPLY suffix-array-style dedup (Lee et al. 2021): rewrite each
     document with every corpus-wide duplicated substring REMOVED — the
     transform :func:`duplicate_spans` only reports. A token is dropped
     when it lies inside any k-token gram occurring
-    ``min_occurrences``+ times corpus-wide. Returns
+    twice or more corpus-wide. Returns
     (doc_id, n_tokens, n_removed, cleaned_text) — cleaned text is the
     kept tokens rejoined (lowercased: the rewrite operates on the same
     normalized token stream every other dedup operator hashes).
@@ -1145,15 +1128,15 @@ def remove_duplicate_spans(docs: DataFrame, text_col: str = "text",
     from ..functions.text import ngrams, words
 
     base = ensure_min_parallelism(docs).select(
-        F.col(id_col).alias("id"),
-        words(F.col(text_col)).alias("w"),
-        F.size(words(F.col(text_col))).cast("long").alias("n_tokens"),
-        F.transform(ngrams(words(F.col(text_col)), k),
+        F.col("doc_id").alias("id"),
+        words(F.col("text")).alias("w"),
+        F.size(words(F.col("text"))).cast("long").alias("n_tokens"),
+        F.transform(ngrams(words(F.col("text")), k),
                     lambda g: md5_hash64(g)).alias("gh"))
     pos = (base.select("id", F.posexplode_outer("gh").alias("pos", "gh"))
            .filter(F.col("pos").isNotNull()))
     dups = (pos.groupBy("gh").count()
-            .filter(F.col("count") >= min_occurrences).select("gh"))
+            .filter(F.col("count") >= 2).select("gh"))
     covered = (pos.join(dups, "gh")
                .select("id", F.explode(F.sequence(
                    F.col("pos"), F.col("pos") + (k - 1))).alias("tpos"))
@@ -1169,16 +1152,14 @@ def remove_duplicate_spans(docs: DataFrame, text_col: str = "text",
                             F.struct("tpos", "tok"))),
                         lambda s: s.tok)).alias("cleaned_text")))
     return (base.select("id", "n_tokens").join(rebuilt, "id", "left")
-            .select(F.col("id").alias(id_col), "n_tokens",
+            .select(F.col("id").alias("doc_id"), "n_tokens",
                     (F.col("n_tokens") - F.coalesce("n_kept", F.lit(0)))
                     .cast("long").alias("n_removed"),
                     F.coalesce("cleaned_text", F.lit(""))
                     .alias("cleaned_text")))
 
 
-def duplicate_spans(docs: DataFrame, text_col: str = "text",
-                    id_col: str = "doc_id", k: int = 8,
-                    min_occurrences: int = 2) -> DataFrame:
+def duplicate_spans(docs: DataFrame, k: int = 8) -> DataFrame:
     """Exact duplicate-substring coverage per document — suffix-array
     dedup semantics (Lee et al. 2021, "Deduplicating Training Data Makes
     Language Models Better") re-expressed as rolling k-token gram
@@ -1186,7 +1167,7 @@ def duplicate_spans(docs: DataFrame, text_col: str = "text",
     suffix sort.
 
     A token position is *duplicated* when the k-token gram starting there
-    occurs ``min_occurrences``+ times corpus-wide (across documents or
+    occurs twice or more corpus-wide (across documents or
     repeated within one). Overlapping duplicated spans merge, so the
     coverage count never double-counts a token. Returns one row per doc:
     (doc_id, n_tokens, n_dup_spans, dup_tokens, dup_token_frac).
@@ -1209,9 +1190,9 @@ def duplicate_spans(docs: DataFrame, text_col: str = "text",
     from ..functions.text import ngrams, words
 
     toks = ensure_min_parallelism(docs).select(
-        F.col(id_col).alias("id"),
-        F.size(words(F.col(text_col))).cast("long").alias("n_tokens"),
-        F.transform(ngrams(words(F.col(text_col)), k),
+        F.col("doc_id").alias("id"),
+        F.size(words(F.col("text"))).cast("long").alias("n_tokens"),
+        F.transform(ngrams(words(F.col("text")), k),
                     lambda g: md5_hash64(g)).alias("gh"))
     # outer + null-drop: docs shorter than the gram width have EMPTY gh
     # (inner explode drops them; outer emits one null row we filter on
@@ -1220,7 +1201,7 @@ def duplicate_spans(docs: DataFrame, text_col: str = "text",
     pos = (toks.select("id", F.posexplode_outer("gh").alias("pos", "gh"))
            .filter(F.col("pos").isNotNull()))
     dups = (pos.groupBy("gh").count()
-            .filter(F.col("count") >= min_occurrences).select("gh"))
+            .filter(F.col("count") >= 2).select("gh"))
     dpos = pos.join(dups, "gh").select("id", "pos")
     w = Window.partitionBy("id").orderBy("pos")
     prev_end = F.max(F.col("pos") + k).over(
@@ -1237,7 +1218,7 @@ def duplicate_spans(docs: DataFrame, text_col: str = "text",
               .agg(F.count("*").alias("n_dup_spans"),
                    F.sum("covered").cast("long").alias("dup_tokens")))
     return (toks.select("id", "n_tokens").join(perdoc, "id", "left")
-            .select(F.col("id").alias(id_col), "n_tokens",
+            .select(F.col("id").alias("doc_id"), "n_tokens",
                     F.coalesce("n_dup_spans", F.lit(0)).cast("long")
                      .alias("n_dup_spans"),
                     F.coalesce("dup_tokens", F.lit(0)).cast("long")
@@ -1248,9 +1229,7 @@ def duplicate_spans(docs: DataFrame, text_col: str = "text",
 
 
 def edit_distance_verify(pairs: DataFrame, docs: DataFrame,
-                         max_dist: int = 64, prefix: int = 256,
-                         id_col: str = "doc_id",
-                         text_col: str = "text") -> DataFrame:
+                         max_dist: int = 64) -> DataFrame:
     """Character-level verification of candidate near-dup pairs: exact
     Levenshtein distance over a fixed text PREFIX, keeping pairs within
     ``max_dist``. The third verify metric beside shingle-Jaccard
@@ -1263,14 +1242,14 @@ def edit_distance_verify(pairs: DataFrame, docs: DataFrame,
     Prefix-bounded deliberately: full-document DP is O(len²) per pair
     (9M cells for a 3k-char doc — unbounded cost on someone else's
     corpus), while near-dups that agree on shingles overwhelmingly
-    agree on their opening window, so a ``prefix``² DP bounds the
+    agree on their opening window, so a 256² DP bounds the
     per-pair cost at a constant the cluster can budget. The pair set
     (candidates, not corpus²) is the only join input; texts join onto
     candidates by id — two dim-style joins, no corpus self-join."""
-    t = docs.select(F.col(id_col),
-                    F.substring(F.col(text_col), 1, prefix).alias("_s"))
-    a = t.select(F.col(id_col).alias("id_a"), F.col("_s").alias("_sa"))
-    b = t.select(F.col(id_col).alias("id_b"), F.col("_s").alias("_sb"))
+    t = docs.select(F.col("doc_id"),
+                    F.substring(F.col("text"), 1, 256).alias("_s"))
+    a = t.select(F.col("doc_id").alias("id_a"), F.col("_s").alias("_sa"))
+    b = t.select(F.col("doc_id").alias("id_b"), F.col("_s").alias("_sb"))
     return (pairs.select("id_a", "id_b")
             .join(a, "id_a").join(b, "id_b")
             .select("id_a", "id_b",
@@ -1278,12 +1257,10 @@ def edit_distance_verify(pairs: DataFrame, docs: DataFrame,
             .filter(F.col("edit_distance") <= max_dist))
 
 
-def allpairs_jaccard(docs: DataFrame, threshold: float = 0.7,
-                     text_col: str = "text", id_col: str = "doc_id",
-                     n: int = 3) -> DataFrame:
+def allpairs_jaccard(docs: DataFrame, threshold: float = 0.7) -> DataFrame:
     """EXACT set-similarity self-join via AllPairs prefix filtering
     (Bayardo, Ma & Srikant, WWW'07): every pair (id_a < id_b) whose
-    distinct word-``n``-gram shingle sets have Jaccard >= ``threshold``,
+    distinct word-3-gram shingle sets have Jaccard >= ``threshold``,
     with zero false negatives — the ground truth that
     :func:`minhash_lsh_pairs` approximates, at a cost that stays
     sub-quadratic whenever the shingle vocabulary is non-degenerate.
@@ -1324,8 +1301,8 @@ def allpairs_jaccard(docs: DataFrame, threshold: float = 0.7,
     from fractions import Fraction
     frac = Fraction(str(threshold))
     num, den = frac.numerator, frac.denominator
-    base = (with_shingles(docs, text_col, n)
-            .select(F.col(id_col).alias("id"), "shingles"))
+    base = (with_shingles(docs, "text", 3)
+            .select(F.col("doc_id").alias("id"), "shingles"))
     pref = _allpairs_prefix_frame_live(base, num, den)
     cand = _allpairs_cand_sides(pref, pref, num, den).distinct()
     return _allpairs_verify(cand, base, num, den)
@@ -1474,8 +1451,7 @@ def _allpairs_prefix_frame(base: DataFrame, df: DataFrame,
 
 
 def write_allpairs_index(corpus: DataFrame, path: str,
-                         threshold: float = 0.7, text_col: str = "text",
-                         id_col: str = "doc_id", n: int = 3) -> None:
+                         threshold: float = 0.7) -> None:
     """Materialize the at-rest AllPairs index: the frozen token-df
     table, the corpus prefix postings, and the per-doc shingle arrays.
     Incremental batches probe these instead of re-shingling the corpus
@@ -1485,8 +1461,8 @@ def write_allpairs_index(corpus: DataFrame, path: str,
     engine-only."""
     from fractions import Fraction
     frac = Fraction(str(threshold))
-    base = (with_shingles(corpus, text_col, n)
-            .select(F.col(id_col).alias("id"), "shingles"))
+    base = (with_shingles(corpus, "text", 3)
+            .select(F.col("doc_id").alias("id"), "shingles"))
     tok = base.select("id", F.explode("shingles").alias("token"))
     df = tok.groupBy("token").agg(F.count("*").alias("df"))
     df.write.mode("overwrite").parquet(f"{path}/df")
@@ -1501,13 +1477,11 @@ def write_allpairs_index(corpus: DataFrame, path: str,
     import json as _json
     import os as _os
     with open(_os.path.join(path, "_meta.json"), "w") as fh:
-        _json.dump({"threshold": str(frac), "n": n}, fh)
+        _json.dump({"threshold": str(frac), "n": 3}, fh)
 
 
 def allpairs_incremental_pairs(batch: DataFrame, spark, path: str,
                                threshold: float = 0.7,
-                               text_col: str = "text",
-                               id_col: str = "doc_id",
                                n: int = 3) -> DataFrame:
     """Incremental exact set-similarity join: all pairs TOUCHING the
     arriving batch (batch×corpus and batch×batch) with exact Jaccard
@@ -1554,8 +1528,8 @@ def allpairs_incremental_pairs(batch: DataFrame, spark, path: str,
     dfr = spark.read.parquet(f"{path}/df")
     cpref = spark.read.parquet(f"{path}/prefix")
     cdocs = spark.read.parquet(f"{path}/docs")
-    bbase = (with_shingles(batch, text_col, n)
-             .select(F.col(id_col).alias("id"), "shingles"))
+    bbase = (with_shingles(batch, "text", n)
+             .select(F.col("doc_id").alias("id"), "shingles"))
     bpref = _allpairs_prefix_frame(bbase, dfr, num, den)
     # cross pairs can land either way around by id; every prune in
     # _allpairs_cand_sides is orientation-symmetric, so ONE corpus×batch
@@ -1573,15 +1547,12 @@ def allpairs_incremental_pairs(batch: DataFrame, spark, path: str,
     return _allpairs_verify(cand, base, num, den)
 
 
-def lsh_recall_report(docs: DataFrame, threshold: float = 0.6,
-                      text_col: str = "text", id_col: str = "doc_id",
-                      n: int = 3, max_bucket: int | None = 1000
-                      ) -> DataFrame:
+def lsh_recall_report(docs: DataFrame) -> DataFrame:
     """Pair-recall certification of the MinHash-LSH candidate stage
     against the EXACT AllPairs ground truth — the dedup twin of the ANN
     family's ``sim_ivf_recall``: before a 100 TB deployment trusts
     banded LSH (which only probabilistically surfaces a qualifying
-    pair), measure what fraction of the true >= ``threshold`` Jaccard
+    pair), measure what fraction of the true >= 0.6 Jaccard
     pairs its band collisions actually reach, and how much verify work
     the candidate set wastes. One row:
     (n_true_pairs, n_candidate_pairs, n_found_pairs, n_missed_pairs,
@@ -1599,15 +1570,15 @@ def lsh_recall_report(docs: DataFrame, threshold: float = 0.6,
     Plan: the truth side is :func:`allpairs_jaccard` (prefix-filtered,
     sub-quadratic); the candidate side is the same banding pipeline as
     :func:`minhash_lsh_pairs` (one bucket shuffle, skew-capped at
-    ``max_bucket``); found = one pair-keyed semi-join; the three counts
+    1000 rows); found = one pair-keyed semi-join; the three counts
     are 1-row aggregates cross-joined broadcast. Nothing corpus-scale
     materializes beyond what the two certified operators already pay.
     """
     # Threshold arithmetic happens INSIDE allpairs_jaccard (the truth
     # side); this wrapper only forwards `threshold` — no local
     # numerator/denominator exists to drift from it.
-    base = (with_shingles(docs, text_col, n)
-            .select(F.col(id_col).alias("id"), "shingles"))
+    base = (with_shingles(docs, "text", 3)
+            .select(F.col("doc_id").alias("id"), "shingles"))
     sigs = (base
             .withColumn("hv", shingle_hashes(F.col("shingles")))
             .select("id",
@@ -1620,9 +1591,8 @@ def lsh_recall_report(docs: DataFrame, threshold: float = 0.6,
     # sf0.1): AQE's runtime stage reuse already deduplicates the
     # identical shuffle subtrees across the references, while an
     # explicit pin forces an extra serial materialization barrier.
-    cand = _band_bucket_pairs(buckets, max_bucket)
-    truth = allpairs_jaccard(docs, threshold=threshold, text_col=text_col,
-                             id_col=id_col, n=n).select("id_a", "id_b")
+    cand = _band_bucket_pairs(buckets, 1000)
+    truth = allpairs_jaccard(docs, threshold=0.6).select("id_a", "id_b")
     found = truth.join(cand, ["id_a", "id_b"], "left_semi")
     t = truth.agg(F.count("*").cast("long").alias("n_true_pairs"))
     c = cand.agg(F.count("*").cast("long").alias("n_candidate_pairs"))
@@ -1640,9 +1610,7 @@ def lsh_recall_report(docs: DataFrame, threshold: float = 0.6,
          .otherwise(F.lit(1.0)).alias("candidate_precision")))
 
 
-def survivors_by_quality(labels: DataFrame, scores: DataFrame,
-                         id_col: str = "doc_id",
-                         score_col: str = "quality_logit") -> DataFrame:
+def survivors_by_quality(labels: DataFrame, scores: DataFrame) -> DataFrame:
     """Quality-aware survivor selection: within each duplicate cluster
     keep the HIGHEST-QUALITY member (ties → min id), not the min-id one.
     Min-id is an arbitrary tie-break; a production dedup keeps the
@@ -1657,19 +1625,17 @@ def survivors_by_quality(labels: DataFrame, scores: DataFrame,
     quality model's association-matched contract; the OUTPUT logit is
     6-dp display-rounded like every score column."""
     from pyspark.sql import Window
-    j = (labels.select(id_col, "cluster_id")
-         .join(scores.select(id_col, score_col), id_col))
-    w = Window.partitionBy("cluster_id").orderBy(F.desc(score_col), id_col)
+    j = (labels.select("doc_id", "cluster_id")
+         .join(scores.select("doc_id", "quality_logit"), "doc_id"))
+    w = Window.partitionBy("cluster_id").orderBy(F.desc("quality_logit"),
+                                                 "doc_id")
     return (j.withColumn("_rn", F.row_number().over(w))
-            .select(id_col, "cluster_id",
-                    F.round(score_col, 6).alias(score_col),
+            .select("doc_id", "cluster_id",
+                    F.round("quality_logit", 6).alias("quality_logit"),
                     (F.col("_rn") == 1).alias("is_survivor")))
 
 
-def weighted_jaccard_verify(pairs: DataFrame, docs: DataFrame,
-                            text_col: str = "text",
-                            id_col: str = "doc_id",
-                            n: int = 3) -> DataFrame:
+def weighted_jaccard_verify(pairs: DataFrame, docs: DataFrame) -> DataFrame:
     """Multiset (generalized) Jaccard over candidate pairs:
     ``Σ_g min(c_a, c_b) / Σ_g max(c_a, c_b)`` with shingle
     MULTIPLICITIES — the verify metric set-Jaccard is blind to
@@ -1686,8 +1652,8 @@ def weighted_jaccard_verify(pairs: DataFrame, docs: DataFrame,
     weighted_jaccard)."""
     from ..functions.text import ngrams, words
     base = ensure_min_parallelism(docs).select(
-        F.col(id_col).alias("id"),
-        ngrams(words(F.col(text_col)), n).alias("grams"))
+        F.col("doc_id").alias("id"),
+        ngrams(words(F.col("text")), 3).alias("grams"))
     # tf is referenced twice (both join sides) and pairs twice (the
     # min-sum join and the final frame): without pinning, Spark re-runs
     # the corpus-scale gram explode AND the entire candidate-mining

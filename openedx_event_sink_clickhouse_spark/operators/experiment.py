@@ -38,17 +38,15 @@ from ..functions.hashes import md5_hash32
 DEC = "decimal(18,6)"
 
 
-def assign_variant(unit, n_variants: int = 2, salt: str = "exp"):
-    """Deterministic unit→variant bucket: ``md5(salt#unit) % n`` — the
+def assign_variant(unit, n_variants: int = 2):
+    """Deterministic unit→variant bucket: ``md5(exp#unit) % n`` — the
     standard hash-based randomization (stable across runs, engines, and
     retries; independent of any pre-period behavior)."""
-    key = F.concat(F.lit(f"{salt}#"), unit.cast("string"))
+    key = F.concat(F.lit("exp#"), unit.cast("string"))
     return F.pmod(md5_hash32(key), F.lit(n_variants)).cast("int")
 
 
-def srm_check(events: DataFrame, *, unit_col: str = "user_id",
-              n_variants: int = 2, salt: str = "exp",
-              chi2_crit: float | None = None) -> DataFrame:
+def srm_check(events: DataFrame) -> DataFrame:
     """Sample-ratio-mismatch guard: Pearson chi-square of the observed
     unit counts against equal expected shares. SRM is THE standard
     validity gate an experimentation pipeline runs before any readout —
@@ -57,10 +55,8 @@ def srm_check(events: DataFrame, *, unit_col: str = "user_id",
     untrustworthy. Returns one row per variant (variant, n_units,
     expected, chi2, srm_detected); chi2/flag are repeated per row —
     the whole-experiment statistic, kept per-row so the report unions
-    with other per-variant feeds. ``chi2_crit`` defaults to 3.841 (χ² at
-    p=0.05, df=1) ONLY for two variants — the cut is df-specific, so any
-    other ``n_variants`` must pass its own (silently applying the df=1
-    value to a 5-arm test would flag ~43% of healthy experiments). NULL
+    with other per-variant feeds. Two variants, so the cut is 3.841
+    (χ² at p=0.05, df=1). NULL
     units are excluded up front: a NULL would hash to a phantom NULL
     variant whose count corrupts the moments (the chi2 can even go
     negative) — and broken exposure logging is exactly what this gate
@@ -68,18 +64,11 @@ def srm_check(events: DataFrame, *, unit_col: str = "user_id",
 
     Determinism: integer counts + one double formula (the family
     recipe). O(variants) after the distinct-unit pass."""
-    if chi2_crit is None:
-        if n_variants != 2:
-            raise ValueError(
-                "chi2_crit defaults to the df=1 value (3.841); pass the "
-                f"df={n_variants - 1} critical value explicitly for "
-                f"n_variants={n_variants}")
-        chi2_crit = 3.841
-    unit = F.col(unit_col)
+    unit = F.col("user_id")
     pv = (events.select(unit.alias("unit"))
           .filter(F.col("unit").isNotNull()).distinct()
           .withColumn("variant", assign_variant(F.col("unit"),
-                                                n_variants, salt))
+                                                2))
           .groupBy("variant").agg(F.count("*").alias("n_units")))
     tot = pv.agg(F.sum("n_units").alias("_n"),
                  F.sum(F.col("n_units") * F.col("n_units")).alias("_sq"))
@@ -87,24 +76,21 @@ def srm_check(events: DataFrame, *, unit_col: str = "user_id",
     # chi2 = sum((obs - n/k)^2) / (n/k) = (k*sum(obs^2) - n^2) / n
     # (equal expected shares let the per-variant sum collapse to moments
     # both engines compute from the same integers)
-    chi2 = (F.lit(float(n_variants)) * F.col("_sq").cast("double")
+    chi2 = (F.lit(2.0) * F.col("_sq").cast("double")
             - n * n) / n
     return (pv.crossJoin(F.broadcast(tot))
             .select("variant", "n_units",
                     # raw fixed-shape chains of exact integers — no
                     # round(double): the r10 half-boundary class
-                    (n / F.lit(float(n_variants))).alias("expected"),
+                    (n / F.lit(2.0)).alias("expected"),
                     chi2.alias("chi2"),
-                    (chi2 > chi2_crit).cast("int").alias("srm_detected")))
+                    (chi2 > 3.841).cast("int").alias("srm_detected")))
 
 
-def conversion_ztest(events: DataFrame, *, conversion_type: str = "purchase",
-                     unit_col: str = "user_id", type_col: str = "event_type",
-                     n_variants: int = 2, salt: str = "exp",
-                     z_crit: float = 1.96) -> DataFrame:
+def conversion_ztest(events: DataFrame) -> DataFrame:
     """Two-proportion z-test on per-unit conversion (Fleiss et al.,
     standard pooled form — public statistics): a unit converts iff it
-    has ≥ 1 ``conversion_type`` event. Returns one row per variant:
+    has ≥ 1 ``purchase`` event. Returns one row per variant:
     (variant, n_units, n_converted, conv_rate, z_score, significant) —
     z is the pairwise statistic vs variant 0 (control), NULL on the
     control row itself.
@@ -118,13 +104,13 @@ def conversion_ztest(events: DataFrame, *, conversion_type: str = "purchase",
     Plan: one groupBy(unit) max-flag pass (the per-user shuffle any
     funnel already pays) → O(variants) aggregate; the control row rides
     back as a 1-row broadcast."""
-    unit = F.col(unit_col)
+    unit = F.col("user_id")
     per_unit = (events.filter(unit.isNotNull())
                 .groupBy(unit.alias("unit"))
-                .agg(F.max(F.when(F.col(type_col) == conversion_type, 1)
+                .agg(F.max(F.when(F.col("event_type") == "purchase", 1)
                            .otherwise(0)).alias("converted"))
                 .withColumn("variant", assign_variant(F.col("unit"),
-                                                      n_variants, salt)))
+                                                      2)))
     pv = per_unit.groupBy("variant").agg(
         F.count("*").alias("n_units"),
         F.sum("converted").cast("long").alias("n_converted"))
@@ -150,14 +136,11 @@ def conversion_ztest(events: DataFrame, *, conversion_type: str = "purchase",
                     (x1 / n1).alias("conv_rate"),
                     F.round(z, 6).alias("z_score"),
                     F.when(z.isNull(), F.lit(None).cast("int"))
-                     .otherwise((F.abs(z) > z_crit).cast("int"))
+                     .otherwise((F.abs(z) > 1.96).cast("int"))
                      .alias("significant")))
 
 
-def cuped_adjusted_means(events: DataFrame, cutoff, *,
-                         unit_col: str = "user_id", ts_col: str = "ts",
-                         value_col: str = "value", n_variants: int = 2,
-                         salt: str = "exp") -> DataFrame:
+def cuped_adjusted_means(events: DataFrame, cutoff) -> DataFrame:
     """Per-variant experiment readout with CUPED adjustment. ``cutoff``
     splits pre-period (covariate X = the unit's value sum before it)
     from the experiment period (metric Y = the sum at/after it); units
@@ -166,9 +149,9 @@ def cuped_adjusted_means(events: DataFrame, cutoff, *,
     — theta repeated per row for auditability. θ is fit POOLED across
     variants (the standard estimator; assignment ⟂ X keeps it
     unbiased)."""
-    unit = F.col(unit_col)
-    ts = F.col(ts_col)
-    val = F.col(value_col).cast(DEC)
+    unit = F.col("user_id")
+    ts = F.col("ts")
+    val = F.col("value").cast(DEC)
     zero = F.lit(0).cast(DEC)
     # NULL units excluded (srm_check's rationale): a phantom NULL
     # variant would corrupt the pooled moments and theta
@@ -187,7 +170,7 @@ def cuped_adjusted_means(events: DataFrame, cutoff, *,
                      F.sum(F.when(ts >= F.lit(cutoff), val).otherwise(zero))
                      .alias("y"))
                 .withColumn("variant", assign_variant(F.col("unit"),
-                                                      n_variants, salt)))
+                                                      2)))
     # pooled moments: exact decimal sums -> ONE double formula for theta
     xn, yn = F.col("x").cast(DEC), F.col("y").cast(DEC)
     moments = per_unit.agg(
@@ -215,10 +198,7 @@ def cuped_adjusted_means(events: DataFrame, cutoff, *,
                     F.round(F.col("_theta"), 6).alias("theta")))
 
 
-def survival_curves(events: DataFrame, *, unit_col: str = "user_id",
-                    ts_col: str = "ts", type_col: str = "event_type",
-                    event_type: str = "purchase", n_variants: int = 2,
-                    salt: str = "exp",
+def survival_curves(events: DataFrame, *, n_variants: int = 2,
                     time_bucket_us: int | None = None) -> DataFrame:
     """Per-variant Kaplan–Meier time-to-event curves — the survival-
     analysis readout of the experimentation suite (time-to-conversion
@@ -226,7 +206,7 @@ def survival_curves(events: DataFrame, *, unit_col: str = "user_id",
     when "did they convert" z-tests throw away WHEN).
 
     Per unit: study entry = its first event of any type; event time =
-    its first ``event_type`` after entry (duration in exact epoch
+    its first ``purchase`` after entry (duration in exact epoch
     microseconds — integer, engine-stable); units that never convert
     are right-CENSORED at the corpus's last observed timestamp. Per
     variant, at each distinct event duration t:
@@ -250,16 +230,16 @@ def survival_curves(events: DataFrame, *, unit_col: str = "user_id",
     the 100 TB configuration."""
     from pyspark.sql import Window
 
-    unit, ts = F.col(unit_col), F.col(ts_col)
+    unit, ts = F.col("user_id"), F.col("ts")
     per_unit = (events.filter(unit.isNotNull())
                 .groupBy(unit.alias("unit"))
                 .agg(F.min(F.unix_micros(ts)).alias("entry_us"),
-                     F.min(F.when(F.col(type_col) == event_type,
+                     F.min(F.when(F.col("event_type") == "purchase",
                                   F.unix_micros(ts))).alias("conv_us"),
                      F.max(F.unix_micros(ts)).alias("_last_us")))
     study_end = per_unit.agg(F.max("_last_us").alias("end_us"))
     pu = (per_unit.crossJoin(F.broadcast(study_end))
-          .select(assign_variant(F.col("unit"), n_variants, salt)
+          .select(assign_variant(F.col("unit"), n_variants)
                   .alias("variant"),
                   F.coalesce(F.col("conv_us") - F.col("entry_us"),
                              F.col("end_us") - F.col("entry_us"))
@@ -298,10 +278,7 @@ def survival_curves(events: DataFrame, *, unit_col: str = "user_id",
     return curve
 
 
-def logrank_test(events: DataFrame, *, unit_col: str = "user_id",
-                 ts_col: str = "ts", type_col: str = "event_type",
-                 event_type: str = "purchase", salt: str = "exp",
-                 chi2_crit: float = 3.841) -> DataFrame:
+def logrank_test(events: DataFrame) -> DataFrame:
     """Log-rank test between the two variants' survival curves — the
     standard significance companion to :func:`survival_curves` (Mantel
     1966; public statistics): at each distinct event time, variant 0's
@@ -329,16 +306,16 @@ def logrank_test(events: DataFrame, *, unit_col: str = "user_id",
     realistic cohort."""
     from pyspark.sql import Window
 
-    unit, ts = F.col(unit_col), F.col(ts_col)
+    unit, ts = F.col("user_id"), F.col("ts")
     per_unit = (events.filter(unit.isNotNull())
                 .groupBy(unit.alias("unit"))
                 .agg(F.min(F.unix_micros(ts)).alias("entry_us"),
-                     F.min(F.when(F.col(type_col) == event_type,
+                     F.min(F.when(F.col("event_type") == "purchase",
                                   F.unix_micros(ts))).alias("conv_us"),
                      F.max(F.unix_micros(ts)).alias("_last_us")))
     study_end = per_unit.agg(F.max("_last_us").alias("end_us"))
     pu = (per_unit.crossJoin(F.broadcast(study_end))
-          .select(assign_variant(F.col("unit"), 2, salt).alias("variant"),
+          .select(assign_variant(F.col("unit"), 2).alias("variant"),
                   F.coalesce(F.col("conv_us") - F.col("entry_us"),
                              F.col("end_us") - F.col("entry_us"))
                   .alias("dur_us"),
@@ -383,19 +360,15 @@ def logrank_test(events: DataFrame, *, unit_col: str = "user_id",
                     F.col("_v").alias("variance"),
                     chi2.alias("chi2"),
                     F.when(chi2.isNull(), F.lit(None).cast("int"))
-                     .otherwise((chi2 > chi2_crit).cast("int"))
+                     .otherwise((chi2 > 3.841).cast("int"))
                      .alias("significant")))
 
 
-def jackknife_ratio_ci(events: DataFrame, *, unit_col: str = "user_id",
-                       value_col: str = "value", n_buckets: int = 20,
-                       n_variants: int = 2, salt: str = "exp",
-                       bucket_salt: str = "jk",
-                       z_crit: float = 1.96) -> DataFrame:
+def jackknife_ratio_ci(events: DataFrame) -> DataFrame:
     """Delete-one-bucket jackknife CI for the per-unit mean — the
     variance workhorse of large-scale experimentation (next to the
     z-test's closed form): the units of each variant hash into
-    ``n_buckets`` folds, and the ratio metric θ = Σvalue / Σunits is
+    20 folds, and the ratio metric θ = Σvalue / Σunits is
     recomputed with each fold deleted; the spread of those leave-one-out
     estimates IS the sampling variance, with no normality assumption on
     the per-unit distribution and no per-unit moment algebra — which is
@@ -406,20 +379,20 @@ def jackknife_ratio_ci(events: DataFrame, *, unit_col: str = "user_id",
 
     Plan shape: ONE per-unit reduce (the only event-scale shuffle, the
     same reduce every readout here starts with), then everything runs on
-    n_variants × n_buckets rows — the fold deletion is arithmetic on
+    2 × 20 rows — the fold deletion is arithmetic on
     bucket totals (θ_i = (N - n_i)/(D - d_i)), never a re-scan per fold,
     so 20 folds cost the same one pass as 1000 would. Money sums ride
     DECIMAL(18,6) so bucket totals are order-exact cross-engine; θ's
     division happens in double on those exact sums."""
-    unit = (events.filter(F.col(unit_col).isNotNull())
-            .groupBy(F.col(unit_col).alias("unit"))
-            .agg(F.sum(F.col(value_col).cast("decimal(18,6)"))
+    unit = (events.filter(F.col("user_id").isNotNull())
+            .groupBy(F.col("user_id").alias("unit"))
+            .agg(F.sum(F.col("value").cast("decimal(18,6)"))
                  .alias("uval")))
-    bkey = F.concat(F.lit(f"{bucket_salt}#"), F.col("unit").cast("string"))
+    bkey = F.concat(F.lit("jk#"), F.col("unit").cast("string"))
     per_bucket = (unit
-                  .select(assign_variant(F.col("unit"), n_variants, salt)
+                  .select(assign_variant(F.col("unit"), 2)
                           .alias("variant"),
-                          F.pmod(md5_hash32(bkey), F.lit(n_buckets))
+                          F.pmod(md5_hash32(bkey), F.lit(20))
                           .alias("bucket"),
                           F.col("uval"))
                   .groupBy("variant", "bucket")
@@ -456,24 +429,19 @@ def jackknife_ratio_ci(events: DataFrame, *, unit_col: str = "user_id",
         "variant", F.col("d_tot").cast("bigint").alias("n_units"),
         F.round(theta, 6).alias("theta"),
         F.round(se, 6).alias("se_jack"),
-        F.round(theta - z_crit * se, 6).alias("ci_lo"),
-        F.round(theta + z_crit * se, 6).alias("ci_hi"))
+        F.round(theta - 1.96 * se, 6).alias("ci_lo"),
+        F.round(theta + 1.96 * se, 6).alias("ci_hi"))
         .orderBy("variant"))
 
 
-def sequential_monitoring(events: DataFrame, *,
-                          conversion_type: str = "purchase",
-                          unit_col: str = "user_id", ts_col: str = "ts",
-                          type_col: str = "event_type",
-                          n_variants: int = 2, salt: str = "exp",
-                          obf_c: float = 2.2414) -> DataFrame:
+def sequential_monitoring(events: DataFrame) -> DataFrame:
     """Group-sequential monitoring of a two-proportion experiment: one
     row per calendar-day LOOK with the cumulative per-variant unit and
     converter counts, the pooled two-proportion z at that look, the
     information fraction, and an O'Brien-Fleming-shaped boundary
-    ``obf_c / sqrt(t)`` (the canonical conservative-early /
-    near-nominal-late spending shape; ``obf_c`` defaults to the 5-look
-    two-sided α=0.05 constant — callers tune it to their look schedule).
+    ``2.2414 / sqrt(t)`` (the canonical conservative-early /
+    near-nominal-late spending shape; 2.2414 is the 5-look two-sided
+    α=0.05 constant).
     Peeking at a fixed-horizon z every day inflates false positives
     several-fold; this is the standard correction, emitted as a
     dashboard-ready curve rather than a single end-of-test verdict.
@@ -486,13 +454,13 @@ def sequential_monitoring(events: DataFrame, *,
     windows over the ~|days| look frame. No unit×look expansion: a
     look's cumulative counts are window sums of per-day increments, so
     the cost is independent of the number of looks."""
-    day = F.col(ts_col).cast("date")
-    per_unit = (events.filter(F.col(unit_col).isNotNull())
-                .groupBy(F.col(unit_col).alias("unit"))
+    day = F.col("ts").cast("date")
+    per_unit = (events.filter(F.col("user_id").isNotNull())
+                .groupBy(F.col("user_id").alias("unit"))
                 .agg(F.min(day).alias("exposure_day"),
-                     F.min(F.when(F.col(type_col) == conversion_type, day))
+                     F.min(F.when(F.col("event_type") == "purchase", day))
                      .alias("conv_day"))
-                .select(assign_variant(F.col("unit"), n_variants, salt)
+                .select(assign_variant(F.col("unit"), 2)
                         .alias("variant"),
                         "exposure_day", "conv_day"))
     # Exposure and conversion increments in ONE pass over the per-unit
@@ -541,7 +509,7 @@ def sequential_monitoring(events: DataFrame, *,
           / (n0d + n1d))
     se = F.sqrt(pp * (1.0 - pp) * (1.0 / n0d + 1.0 / n1d))
     t = (n0d + n1d) / F.col("_ntot").cast("double")
-    bound = obf_c / F.sqrt(t)
+    bound = 2.2414 / F.sqrt(t)
     z = F.when((F.col("n_0") > 0) & (F.col("n_1") > 0) & (se > 0.0),
                (p1 - p0) / se)
     return cum.select(
@@ -553,11 +521,7 @@ def sequential_monitoring(events: DataFrame, *,
         .alias("crossed")).orderBy("look_day")
 
 
-def power_mde(events: DataFrame, *, conversion_type: str = "purchase",
-              unit_col: str = "user_id", type_col: str = "event_type",
-              n_variants: int = 2, salt: str = "exp",
-              z_alpha: float = 1.959964, z_beta: float = 0.841621
-              ) -> DataFrame:
+def power_mde(events: DataFrame) -> DataFrame:
     """Minimum detectable effect at the CURRENT sample: given the
     observed per-variant unit counts and the pooled conversion rate,
     the absolute lift a two-proportion test would detect with power
@@ -569,11 +533,11 @@ def power_mde(events: DataFrame, *, conversion_type: str = "purchase",
 
     Same single per-unit reduce as the z-test; the MDE arithmetic runs
     on one row."""
-    per_unit = (events.filter(F.col(unit_col).isNotNull())
-                .groupBy(F.col(unit_col).alias("unit"))
-                .agg(F.max((F.col(type_col) == conversion_type)
+    per_unit = (events.filter(F.col("user_id").isNotNull())
+                .groupBy(F.col("user_id").alias("unit"))
+                .agg(F.max((F.col("event_type") == "purchase")
                            .cast("int")).alias("converted"))
-                .select(assign_variant(F.col("unit"), n_variants, salt)
+                .select(assign_variant(F.col("unit"), 2)
                         .alias("variant"), "converted"))
     v0, v1 = F.col("variant") == 0, F.col("variant") == 1
     row = per_unit.agg(
@@ -583,7 +547,7 @@ def power_mde(events: DataFrame, *, conversion_type: str = "purchase",
     n0d, n1d = F.col("n_0").cast("double"), F.col("n_1").cast("double")
     p = F.col("n_conv").cast("double") / (n0d + n1d)
     se = F.sqrt(p * (1.0 - p) * (1.0 / n0d + 1.0 / n1d))
-    mde = (z_alpha + z_beta) * se
+    mde = (1.959964 + 0.841621) * se
     return row.select(
         "n_0", "n_1",
         F.round(p, 6).alias("pooled_rate"),
@@ -591,9 +555,7 @@ def power_mde(events: DataFrame, *, conversion_type: str = "purchase",
         F.round(F.when(p > 0.0, mde / p), 6).alias("mde_rel"))
 
 
-def ols_two_feature(events: DataFrame, *, group_col: str = "event_type",
-                    value_col: str = "value",
-                    ts_col: str = "ts") -> DataFrame:
+def ols_two_feature(events: DataFrame) -> DataFrame:
     """Per-group two-feature OLS (value ~ hour-of-day + day-of-month)
     solved in CLOSED FORM from sufficient statistics — the distributed-
     regression pattern: ONE aggregate pass builds the exact normal-
@@ -608,11 +570,11 @@ def ols_two_feature(events: DataFrame, *, group_col: str = "event_type",
     variance. Extends :func:`timeseries.trend_fit` (one regressor) to
     the multi-feature normal-equations form used for quick covariate
     readouts at fact-table scale."""
-    y = F.col(value_col).cast(DEC)
-    x1 = F.hour(ts_col).cast("long")
-    x2 = F.dayofmonth(ts_col).cast("long")
-    g = (events.filter(F.col(value_col).isNotNull())
-         .select(F.col(group_col).alias("grp"),
+    y = F.col("value").cast(DEC)
+    x1 = F.hour("ts").cast("long")
+    x2 = F.dayofmonth("ts").cast("long")
+    g = (events.filter(F.col("value").isNotNull())
+         .select(F.col("event_type").alias("grp"),
                  x1.alias("x1"), x2.alias("x2"), y.alias("y"))
          .groupBy("grp")
          .agg(F.count("*").alias("n"),
@@ -650,16 +612,14 @@ def ols_two_feature(events: DataFrame, *, group_col: str = "event_type",
                        F.when((F.col("_det") > 0) & (F.col("_syy") > 0),
                               (F.col("beta1") * s1y
                                + F.col("beta2") * s2y) / F.col("_syy"))))
-    return out.select(F.col("grp").alias(group_col), "n",
+    return out.select(F.col("grp").alias("event_type"), "n",
                       F.round("beta0", 6).alias("beta0"),
                       F.round("beta1", 6).alias("beta1"),
                       F.round("beta2", 6).alias("beta2"),
                       F.round("r2", 6).alias("r2"))
 
 
-def did_readout(events: DataFrame, cutoff, *, unit_col: str = "user_id",
-                value_col: str = "value", ts_col: str = "ts",
-                salt: str = "exp") -> DataFrame:
+def did_readout(events: DataFrame, cutoff) -> DataFrame:
     """Difference-in-differences readout over the hash-randomized 2×2
     (variant × pre/post) design: cell means from exact-decimal sums,
     did = (treat_post − treat_pre) − (control_post − control_pre), a
@@ -674,9 +634,9 @@ def did_readout(events: DataFrame, cutoff, *, unit_col: str = "user_id",
     one double formula with the association mirrored in the oracle.
     Degenerate cells degrade softly: an empty cell NULLs the means/did,
     any cell with n<2 NULLs se/z."""
-    v = assign_variant(F.col(unit_col), 2, salt)
-    post = F.col(ts_col) >= F.lit(cutoff)
-    y = F.col(value_col).cast(DEC)
+    v = assign_variant(F.col("user_id"), 2)
+    post = F.col("ts") >= F.lit(cutoff)
+    y = F.col("value").cast(DEC)
     # Σy² follows CUPED's asymmetric-width convention exactly: Spark
     # squares the (18,6) operand ((18,6)×(18,6) → (37,12), exact),
     # while the ORACLE casts to (19,6) first because DuckDB sizes a
@@ -687,8 +647,8 @@ def did_readout(events: DataFrame, cutoff, *, unit_col: str = "user_id",
     yq = F.col("y") * F.col("y")
     zero = F.lit(0).cast(DEC)
     zeroq = F.lit(0).cast("decimal(38,12)")
-    base = (events.filter(F.col(unit_col).isNotNull()
-                          & F.col(value_col).isNotNull())
+    base = (events.filter(F.col("user_id").isNotNull()
+                          & F.col("value").isNotNull())
             .select(v.alias("vr"), post.alias("po"), y.alias("y")))
     aggs = []
     for vr in (0, 1):

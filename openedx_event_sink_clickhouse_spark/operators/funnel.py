@@ -18,8 +18,6 @@ from pyspark.sql import functions as F
 
 
 def funnel(events: DataFrame, steps: list[str],
-           user_col: str = "user_id", ts_col: str = "ts",
-           type_col: str = "event_type",
            within_seconds: int | None = None) -> DataFrame:
     """Ordered-funnel conversion: a user reaches step *i* when an event
     of type ``steps[i]`` occurs STRICTLY AFTER the timestamp at which
@@ -45,23 +43,23 @@ def funnel(events: DataFrame, steps: list[str],
     """
     if not steps:
         raise ValueError("funnel needs at least one step")
-    reached = (events.filter(F.col(type_col) == steps[0])
-               .groupBy(user_col)
-               .agg(F.min(ts_col).alias("_t")))
+    reached = (events.filter(F.col("event_type") == steps[0])
+               .groupBy("user_id")
+               .agg(F.min("ts").alias("_t")))
     reached = reached.withColumn("_t0", F.col("_t"))
     stages = [reached]
     for step in steps[1:]:
-        nxt = (events.filter(F.col(type_col) == step)
-               .join(stages[-1].select(user_col, F.col("_t").alias("_prev"),
+        nxt = (events.filter(F.col("event_type") == step)
+               .join(stages[-1].select("user_id", F.col("_t").alias("_prev"),
                                        "_t0"),
-                     user_col)
-               .filter(F.col(ts_col) > F.col("_prev")))
+                     "user_id")
+               .filter(F.col("ts") > F.col("_prev")))
         if within_seconds is not None:
             nxt = nxt.filter(
-                F.col(ts_col) <= F.col("_t0")
+                F.col("ts") <= F.col("_t0")
                 + F.expr(f"INTERVAL {int(within_seconds)} SECONDS"))
-        nxt = (nxt.groupBy(user_col)
-               .agg(F.min(ts_col).alias("_t"), F.min("_t0").alias("_t0")))
+        nxt = (nxt.groupBy("user_id")
+               .agg(F.min("ts").alias("_t"), F.min("_t0").alias("_t0")))
         stages.append(nxt)
     spark = events.sparkSession
     counts = None
@@ -78,8 +76,7 @@ def funnel(events: DataFrame, steps: list[str],
                     .alias("conversion")))
 
 
-def cohort_retention(events: DataFrame, user_col: str = "user_id",
-                     ts_col: str = "ts") -> DataFrame:
+def cohort_retention(events: DataFrame) -> DataFrame:
     """Weekly cohort retention: users are cohorted by the week of their
     first event; a cohort member is *active* in week-offset *k* when
     they have any event in the k-th week after their cohort week.
@@ -97,13 +94,13 @@ def cohort_retention(events: DataFrame, user_col: str = "user_id",
     math is engine-independent.
     """
     week = lambda c: F.date_trunc("week", c)  # noqa: E731
-    first = (events.groupBy(user_col)
-             .agg(week(F.min(ts_col)).alias("cohort_week")))
+    first = (events.groupBy("user_id")
+             .agg(week(F.min("ts")).alias("cohort_week")))
     sizes = first.groupBy("cohort_week").agg(
         F.count("*").alias("_cohort_size"))
-    act = (events.select(F.col(user_col), week(F.col(ts_col)).alias("w"))
+    act = (events.select(F.col("user_id"), week(F.col("ts")).alias("w"))
            .distinct())
-    offs = (act.join(first, user_col)
+    offs = (act.join(first, "user_id")
             .select("cohort_week",
                     ((F.col("w").cast("long")
                       - F.col("cohort_week").cast("long")) / 604800)
@@ -116,11 +113,9 @@ def cohort_retention(events: DataFrame, user_col: str = "user_id",
                      / F.col("_cohort_size")).alias("retention")))
 
 
-def top_paths(events: DataFrame, n: int = 3, k: int = 20,
-              user_col: str = "user_id", type_col: str = "event_type",
-              ts_col: str = "ts", id_col: str = "event_id") -> DataFrame:
-    """Most common length-``n`` event-type paths (user-journey n-grams):
-    per user, events ordered by (ts, id) slide an n-step window via
+def top_paths(events: DataFrame, k: int = 20) -> DataFrame:
+    """Most common length-3 event-type paths (user-journey n-grams):
+    per user, events ordered by (ts, id) slide a 3-step window via
     ``lead``; path frequencies aggregate corpus-wide and the top ``k``
     return with a total-order tie-break so the cut is deterministic.
     The Sankey/path-analysis primitive next to funnel() and
@@ -131,27 +126,21 @@ def top_paths(events: DataFrame, n: int = 3, k: int = 20,
     Two shuffles at any scale: the per-user sequence window (hash on
     user — sessions are small, no skew beyond the power-law-user case
     `skew_salted_agg` documents) and the path-key aggregation, which is
-    map-side partial over at most |types|^n distinct keys — tiny, so
-    the final exchange carries partials, not events. ``n`` is a column
-    list, not an explode: no row blow-up."""
-    w = Window.partitionBy(user_col).orderBy(ts_col, id_col)
-    steps = [F.col(type_col).alias("step1")]
-    steps += [F.lead(type_col, i).over(w).alias(f"step{i + 1}")
-              for i in range(1, n)]
-    seq = events.select(F.col(user_col), *steps) \
-                .filter(F.col(f"step{n}").isNotNull())
-    names = [f"step{i + 1}" for i in range(n)]
+    map-side partial over at most |types|^3 distinct keys — tiny, so
+    the final exchange carries partials, not events. The path is a
+    column list, not an explode: no row blow-up."""
+    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
+    steps = [F.col("event_type").alias("step1")]
+    steps += [F.lead("event_type", i).over(w).alias(f"step{i + 1}")
+              for i in range(1, 3)]
+    seq = events.select(F.col("user_id"), *steps) \
+                .filter(F.col("step3").isNotNull())
+    names = [f"step{i + 1}" for i in range(3)]
     return (seq.groupBy(*names).agg(F.count("*").alias("n_paths"))
             .orderBy(F.desc("n_paths"), *names).limit(k))
 
 
-def last_touch_attribution(events: DataFrame,
-                           conversion_type: str = "purchase",
-                           touch_types: tuple[str, ...] = ("click", "view"),
-                           user_col: str = "user_id", ts_col: str = "ts",
-                           type_col: str = "event_type",
-                           id_col: str = "event_id",
-                           value_col: str = "value") -> DataFrame:
+def last_touch_attribution(events: DataFrame) -> DataFrame:
     """Last-touch revenue attribution: each conversion event is credited
     to the user's most recent PRECEDING touch event (strictly earlier in
     the (ts, id) total order), the marketing-analytics primitive that
@@ -172,32 +161,26 @@ def last_touch_attribution(events: DataFrame,
     when it is itself a touch — a conversion row never carries the
     touch columns, so CURRENT ROW is safe to include in the frame.
     """
-    w = (Window.partitionBy(user_col).orderBy(ts_col, id_col)
+    w = (Window.partitionBy("user_id").orderBy("ts", "event_id")
          .rowsBetween(Window.unboundedPreceding, Window.currentRow))
-    is_touch = F.col(type_col).isin(*touch_types)
-    touch_ty = F.last(F.when(is_touch, F.col(type_col)),
+    is_touch = F.col("event_type").isin(*("click", "view"))
+    touch_ty = F.last(F.when(is_touch, F.col("event_type")),
                       ignorenulls=True).over(w)
-    touch_ts = F.last(F.when(is_touch, F.col(ts_col)),
+    touch_ts = F.last(F.when(is_touch, F.col("ts")),
                       ignorenulls=True).over(w)
     return (events
-            .select(F.col(id_col), F.col(user_col), F.col(ts_col),
-                    F.col(type_col), F.col(value_col),
+            .select(F.col("event_id"), F.col("user_id"), F.col("ts"),
+                    F.col("event_type"), F.col("value"),
                     touch_ty.alias("touch_type"),
                     touch_ts.alias("touch_ts"))
-            .filter(F.col(type_col) == conversion_type)
-            .select(id_col, user_col,
-                    F.col(ts_col).alias("conv_ts"),
-                    F.col(value_col).alias("conv_value"),
+            .filter(F.col("event_type") == "purchase")
+            .select("event_id", "user_id",
+                    F.col("ts").alias("conv_ts"),
+                    F.col("value").alias("conv_value"),
                     "touch_type", "touch_ts"))
 
 
-def linear_attribution(events: DataFrame,
-                       conversion_type: str = "purchase",
-                       touch_types: tuple[str, ...] = ("click", "view"),
-                       user_col: str = "user_id", ts_col: str = "ts",
-                       type_col: str = "event_type",
-                       id_col: str = "event_id",
-                       value_col: str = "value") -> DataFrame:
+def linear_attribution(events: DataFrame) -> DataFrame:
     """Multi-touch LINEAR attribution: each conversion's value splits
     equally across ALL of the user's preceding touches since their
     previous conversion — the equal-credit counterpart to
@@ -217,42 +200,39 @@ def linear_attribution(events: DataFrame,
     nothing and is dropped; conversions with no touches appear in
     :func:`last_touch_attribution` as organic, not here.
     """
-    w = (Window.partitionBy(user_col).orderBy(ts_col, id_col)
+    w = (Window.partitionBy("user_id").orderBy("ts", "event_id")
          .rowsBetween(Window.currentRow, Window.unboundedFollowing))
-    is_conv = F.col(type_col) == conversion_type
+    is_conv = F.col("event_type") == "purchase"
     conv_struct = F.when(
-        is_conv, F.struct(F.col(id_col).alias("cid"),
-                          F.col(ts_col).alias("cts"),
-                          F.col(value_col).alias("cval")))
+        is_conv, F.struct(F.col("event_id").alias("cid"),
+                          F.col("ts").alias("cts"),
+                          F.col("value").alias("cval")))
     touches = (events
-               .select(F.col(id_col), F.col(user_col), F.col(ts_col),
-                       F.col(type_col),
+               .select(F.col("event_id"), F.col("user_id"), F.col("ts"),
+                       F.col("event_type"),
                        F.first(conv_struct, ignorenulls=True).over(w)
                        .alias("_conv"))
-               .filter(F.col(type_col).isin(*touch_types))
+               .filter(F.col("event_type").isin(*("click", "view")))
                .filter(F.col("_conv").isNotNull()))
-    wc = Window.partitionBy(user_col, F.col("_conv.cid"))
+    wc = Window.partitionBy("user_id", F.col("_conv.cid"))
     return (touches
             .withColumn("n_touches", F.count("*").over(wc))
             .select(F.col("_conv.cid").alias("conv_event_id"),
-                    F.col(user_col),
+                    F.col("user_id"),
                     F.col("_conv.cval").alias("conv_value"),
                     F.col("n_touches").cast("bigint").alias("n_touches"),
-                    F.col(id_col).alias("touch_event_id"),
-                    F.col(type_col).alias("touch_type"),
+                    F.col("event_id").alias("touch_event_id"),
+                    F.col("event_type").alias("touch_type"),
                     F.round(F.col("_conv.cval") / F.col("n_touches"), 6)
                     .alias("credit")))
 
 
-def markov_transitions(events: DataFrame, user_col: str = "user_id",
-                       type_col: str = "event_type", ts_col: str = "ts",
-                       id_col: str = "event_id",
-                       end_state: str = "(end)") -> DataFrame:
+def markov_transitions(events: DataFrame) -> DataFrame:
     """First-order Markov transition matrix over per-user event
     sequences: for each ordered pair of consecutive events (total order
     (ts, id) within a user), count ``from_step → to_step`` and normalize
     each row of the matrix to a probability. A user's final event
-    transitions to the absorbing ``end_state``, so every observed event
+    transitions to the absorbing ``(end)`` state, so every observed event
     emits exactly one transition and each row of the matrix sums to 1 —
     the chain is a proper stochastic process, not a truncated one.
 
@@ -261,7 +241,7 @@ def markov_transitions(events: DataFrame, user_col: str = "user_id",
     next-step prediction, and absorbing-state analysis consume.
 
     Scale shape: identical to top_paths — one hash exchange on
-    ``user_col`` for the per-user ``lead`` window, then a groupBy over
+    ``user_id`` for the per-user ``lead`` window, then a groupBy over
     at most (|types|+1)² keys, so the final exchange carries map-side
     partials, not events. Row normalization is a window over that
     already-tiny counts frame (a broadcast-join formulation was
@@ -270,11 +250,11 @@ def markov_transitions(events: DataFrame, user_col: str = "user_id",
     one event scan where the join form did two). No explode, no
     full-stream window.
     """
-    w = Window.partitionBy(user_col).orderBy(ts_col, id_col)
+    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     pairs = (events
-             .select(F.col(type_col).alias("from_step"),
-                     F.coalesce(F.lead(type_col).over(w),
-                                F.lit(end_state)).alias("to_step")))
+             .select(F.col("event_type").alias("from_step"),
+                     F.coalesce(F.lead("event_type").over(w),
+                                F.lit("(end)")).alias("to_step")))
     counts = (pairs.groupBy("from_step", "to_step")
               .agg(F.count("*").alias("n_transitions")))
     wt = Window.partitionBy("from_step")
@@ -287,9 +267,7 @@ def markov_transitions(events: DataFrame, user_col: str = "user_id",
          / F.sum("n_transitions").over(wt)).alias("prob"))
 
 
-def funnel_latency(events: DataFrame, steps: list[str],
-                   user_col: str = "user_id", ts_col: str = "ts",
-                   type_col: str = "event_type") -> DataFrame:
+def funnel_latency(events: DataFrame, steps: list[str]) -> DataFrame:
     """Time-to-convert between consecutive funnel stages: for each user
     who reached step *i*, the delta from their step *i-1* completion to
     their step *i* completion (the same earliest-completion stage
@@ -306,25 +284,25 @@ def funnel_latency(events: DataFrame, steps: list[str],
     histogram sketch (`operators/quantiles.py`)."""
     if len(steps) < 2:
         raise ValueError("funnel_latency needs at least two steps")
-    reached = (events.filter(F.col(type_col) == steps[0])
-               .groupBy(user_col)
-               .agg(F.min(ts_col).alias("_t")))
+    reached = (events.filter(F.col("event_type") == steps[0])
+               .groupBy("user_id")
+               .agg(F.min("ts").alias("_t")))
     stages = [reached]
     for step in steps[1:]:
-        nxt = (events.filter(F.col(type_col) == step)
-               .join(stages[-1].select(user_col,
+        nxt = (events.filter(F.col("event_type") == step)
+               .join(stages[-1].select("user_id",
                                        F.col("_t").alias("_prev")),
-                     user_col)
-               .filter(F.col(ts_col) > F.col("_prev"))
-               .groupBy(user_col)
-               .agg(F.min(ts_col).alias("_t")))
+                     "user_id")
+               .filter(F.col("ts") > F.col("_prev"))
+               .groupBy("user_id")
+               .agg(F.min("ts").alias("_t")))
         stages.append(nxt)
     out = None
     for i in range(1, len(steps)):
         prev, cur = stages[i - 1], stages[i]
-        deltas = (cur.join(prev.select(user_col,
+        deltas = (cur.join(prev.select("user_id",
                                        F.col("_t").alias("_pt")),
-                           user_col)
+                           "user_id")
                   .select((F.unix_micros(F.col("_t"))
                            - F.unix_micros(F.col("_pt"))).alias("_d")))
         row = deltas.agg(
@@ -342,9 +320,7 @@ def funnel_latency(events: DataFrame, steps: list[str],
     return out
 
 
-def cohort_ltv(orders: DataFrame, cust_col: str = "o_custkey",
-               date_col: str = "o_orderdate",
-               amount_col: str = "o_totalprice") -> DataFrame:
+def cohort_ltv(orders: DataFrame) -> DataFrame:
     """Cohort lifetime-value curves: customers grouped by FIRST-order
     month, revenue accumulated by months-since-cohort — the growth
     readout behind "does a newer cohort monetize faster", and the
@@ -360,16 +336,16 @@ def cohort_ltv(orders: DataFrame, cust_col: str = "o_custkey",
     window over the small curve frame."""
     from pyspark.sql import Window
 
-    first = (orders.groupBy(F.col(cust_col).alias("_c"))
-             .agg(F.date_trunc("month", F.min(date_col)).alias("_cm")))
+    first = (orders.groupBy(F.col("o_custkey").alias("_c"))
+             .agg(F.date_trunc("month", F.min("o_orderdate")).alias("_cm")))
     sz = (first.groupBy("_cm")
           .agg(F.count("*").cast("long").alias("n_customers")))
     mi = lambda c: F.year(c) * 12 + F.month(c)
-    rev = (orders.join(first, orders[cust_col] == F.col("_c"))
+    rev = (orders.join(first, orders["o_custkey"] == F.col("_c"))
            .groupBy(F.col("_cm"),
-                    (mi(F.col(date_col)) - mi(F.col("_cm")))
+                    (mi(F.col("o_orderdate")) - mi(F.col("_cm")))
                     .cast("int").alias("age_months"))
-           .agg(F.sum(F.col(amount_col).cast("decimal(18,2)"))
+           .agg(F.sum(F.col("o_totalprice").cast("decimal(18,2)"))
                 .alias("_rev")))
     w = Window.partitionBy("_cm").orderBy("age_months")
     cum = rev.withColumn("_cum", F.sum("_rev").over(w))

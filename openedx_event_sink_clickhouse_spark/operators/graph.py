@@ -37,8 +37,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 
-def triangle_counts(edges: DataFrame, id_a: str = "id_a",
-                    id_b: str = "id_b") -> DataFrame:
+def triangle_counts(edges: DataFrame) -> DataFrame:
     """Per-node triangle support over an undirected edge list
     (``id_a < id_b``, distinct). Returns (id, degree, triangles) for
     every node incident to at least one edge — integer-exact.
@@ -57,15 +56,15 @@ def triangle_counts(edges: DataFrame, id_a: str = "id_a",
     total (degree, wedge join, closing join), all over the EDGE set —
     the corpus never enters the plan.
     """
-    und = (edges.select(F.col(id_a).alias("u"), F.col(id_b).alias("v"))
-           .union(edges.select(F.col(id_b).alias("u"),
-                               F.col(id_a).alias("v"))))
+    und = (edges.select(F.col("id_a").alias("u"), F.col("id_b").alias("v"))
+           .union(edges.select(F.col("id_b").alias("u"),
+                               F.col("id_a").alias("v"))))
     deg = und.groupBy("u").agg(F.count("*").alias("d")) \
              .select(F.col("u").alias("id"), "d")
     # Orient by (degree, id): direction is a total order, so exactly one
     # of (u→v, v→u) survives per undirected edge.
     da, db = deg.alias("da"), deg.alias("db")
-    e = (edges.select(F.col(id_a).alias("a"), F.col(id_b).alias("b"))
+    e = (edges.select(F.col("id_a").alias("a"), F.col("id_b").alias("b"))
          .join(da, F.col("a") == F.col("da.id"))
          .join(db, F.col("b") == F.col("db.id"))
          .select(
@@ -100,10 +99,7 @@ def triangle_counts(edges: DataFrame, id_a: str = "id_a",
 
 
 def seed_distances(edges: DataFrame, seeds: DataFrame, max_hops: int = 6,
-                   src: str = "src", dst: str = "dst",
-                   node_id: str = "id",
-                   checkpoint_dir: str | None = None,
-                   cut_every: int = 2) -> DataFrame:
+                   checkpoint_dir: str | None = None) -> DataFrame:
     """Bounded multi-source BFS: minimum hop count from any node in
     ``seeds``, up to ``max_hops``, over a directed edge list. Returns
     (id, hops) for every node reached within the bound — integer-exact.
@@ -118,8 +114,8 @@ def seed_distances(edges: DataFrame, seeds: DataFrame, max_hops: int = 6,
     never more than the reached set in flight. ``max_hops`` is a FIXED
     spec (replayable, and at 100 TB a hop budget is a cost decision);
     an empty frontier just makes the remaining rounds no-ops, so a
-    converged result equals the fixpoint. Lineage is cut every
-    ``cut_every`` levels like the other iterative operators (reliable
+    converged result equals the fixpoint. Lineage is cut every two
+    levels like the other iterative operators (reliable
     under ``checkpoint_dir``, localCheckpoint + superseded-frame
     unpersist otherwise)."""
     spark = edges.sparkSession
@@ -130,8 +126,8 @@ def seed_distances(edges: DataFrame, seeds: DataFrame, max_hops: int = 6,
         return df.checkpoint(eager=True) if checkpoint_dir is not None \
             else df.localCheckpoint(eager=True)
 
-    e = _cut(edges.select(F.col(src).alias("_s"), F.col(dst).alias("_t")))
-    labels = _cut(seeds.select(F.col(node_id).alias("id")).distinct()
+    e = _cut(edges.select(F.col("src").alias("_s"), F.col("dst").alias("_t")))
+    labels = _cut(seeds.select("id").distinct()
                   .withColumn("hops", F.lit(0).cast("int")))
     pinned = labels
     for i in range(max_hops):
@@ -146,7 +142,7 @@ def seed_distances(edges: DataFrame, seeds: DataFrame, max_hops: int = 6,
         # references share identical exchange subtrees (ReuseExchange),
         # and batching two levels per action halves the driver round
         # trips that dominate small-graph rounds.
-        if (i + 1) % cut_every == 0 or i == max_hops - 1:
+        if (i + 1) % 2 == 0 or i == max_hops - 1:
             prev = pinned
             labels = _cut(labels)
             pinned = labels
@@ -156,11 +152,8 @@ def seed_distances(edges: DataFrame, seeds: DataFrame, max_hops: int = 6,
 
 
 def pagerank(edges: DataFrame, nodes: DataFrame, num_iters: int = 10,
-             damping: float = 0.85, src: str = "src", dst: str = "dst",
-             node_id: str = "id", quantize: int = 7,
-             teleport: DataFrame | None = None,
-             checkpoint_dir: str | None = None,
-             cut_every: int = 2) -> DataFrame:
+             quantize: int = 7, teleport: DataFrame | None = None,
+             checkpoint_dir: str | None = None) -> DataFrame:
     """Fixed-iteration PageRank over a directed edge list, dangling mass
     redistributed along the teleport vector. Returns (id, pagerank) for
     every node in ``nodes``; the published ranks are the loop's exact
@@ -192,16 +185,16 @@ def pagerank(edges: DataFrame, nodes: DataFrame, num_iters: int = 10,
     same observation that batched the CC fixpoint's hops). Each node's
     dangling status is static (the node set never changes), so it is
     computed once and carried through the rank frame as a flag instead
-    of re-derived with a per-round anti-join. Lineage is cut every
-    ``cut_every`` rounds so plan depth stays O(cut_every) instead of one
+    of re-derived with a per-round anti-join. Lineage is cut every two
+    rounds so plan depth stays bounded instead of one
     join-layer deeper per iteration. ``num_iters`` is a FIXED spec (not
     convergence-tested): at 100 TB the iteration count is a budget
     decision, and a fixed count is also what makes the run replayable.
 
     Determinism: the recurrence is INTEGER-UNIT — ranks live in BIGINT
     ``10^-quantize`` units, every per-edge contribution is a floor
-    division ``r div deg``, the damping factor applies as the rational
-    ``round(d*1000)/1000`` in integer multiply-then-floor-divide, and
+    division ``r div deg``, the damping factor 0.85 applies as the
+    rational 850/1000 in integer multiply-then-floor-divide, and
     the teleport weight is ``SCALE div s`` units. There is NO floating
     point anywhere in the loop, so no engine's float-sum order,
     ``round()`` half-boundary rule, or libm version can perturb a
@@ -230,16 +223,17 @@ def pagerank(edges: DataFrame, nodes: DataFrame, num_iters: int = 10,
             else df.localCheckpoint(eager=True)
 
     seeds = (teleport if teleport is not None else nodes) \
-        .select(F.col(node_id).alias("id")).distinct()
+        .select("id").distinct()
     s = seeds.count()
     if s == 0:
         raise ValueError(
             "pagerank: teleport/seed set is empty — classic PageRank "
             "needs a non-empty node frame, personalized PageRank a "
             "non-empty teleport frame (1/s is undefined at s=0)")
-    outdeg = edges.groupBy(src).agg(F.count("*").alias("_d"))
-    e = _cut(edges.select(F.col(src).alias("_s"), F.col(dst).alias("_t"))
-             .join(outdeg.select(F.col(src).alias("_s"), "_d"), "_s"))
+    outdeg = edges.groupBy("src").agg(F.count("*").alias("_d"))
+    e = _cut(edges.select(F.col("src").alias("_s"),
+                          F.col("dst").alias("_t"))
+             .join(outdeg.select(F.col("src").alias("_s"), "_d"), "_s"))
     has_out = e.select(F.col("_s").alias("id")).distinct() \
                .withColumn("_has", F.lit(True))
     # Integer-unit spec: SCALE units of rank mass, damping as the
@@ -251,18 +245,13 @@ def pagerank(edges: DataFrame, nodes: DataFrame, num_iters: int = 10,
             "integer teleport weight SCALE div s would underflow to 0 "
             "and every rank with it; raise `quantize` so each seed "
             "holds at least one rank unit")
-    if not 0.0 < damping < 1.0:
-        # dden-dnum < 0 would flip the first recurrence term negative,
-        # where Spark `div` (truncate toward zero) and DuckDB `//`
-        # (floor) disagree — the cross-engine determinism contract
-        # below holds only on non-negative units.
-        raise ValueError(
-            f"pagerank: damping must be in (0, 1), got {damping!r}")
-    dnum, dden = round(damping * 1000), 1000
+    # damping 0.85 as 850/1000: dden - dnum stays non-negative, where
+    # Spark `div` (truncate toward zero) and DuckDB `//` (floor) agree.
+    dnum, dden = 850, 1000
     # (id, _dang, _w, r): the dangling flag and teleport weight ride the
     # rank frame — node, edge, and seed sets are loop invariants, so
     # both are derived once.
-    ranks = _cut(nodes.select(F.col(node_id).alias("id"))
+    ranks = _cut(nodes.select("id")
                  .join(has_out, "id", "left")
                  .join(seeds.withColumn("_seed", F.lit(True)), "id", "left")
                  .select("id",
@@ -302,7 +291,7 @@ def pagerank(edges: DataFrame, nodes: DataFrame, num_iters: int = 10,
         # exchange subtrees, so ReuseExchange computes the round once —
         # plan text triples, work does not; cut cadence keeps the
         # triplication from compounding past ``cut_every`` rounds.
-        if (i + 1) % cut_every == 0 or i == num_iters - 1:
+        if (i + 1) % 2 == 0 or i == num_iters - 1:
             prev = pinned
             ranks = _cut(ranks)
             pinned = ranks
@@ -319,8 +308,7 @@ def pagerank(edges: DataFrame, nodes: DataFrame, num_iters: int = 10,
         .alias("pagerank"))
 
 
-def clustering_coefficient(edges: DataFrame, id_a: str = "id_a",
-                           id_b: str = "id_b") -> DataFrame:
+def clustering_coefficient(edges: DataFrame) -> DataFrame:
     """Per-node LOCAL CLUSTERING COEFFICIENT over an undirected edge
     list: lcc = triangles / C(degree, 2) — the fraction of a node's
     neighbor pairs that are themselves connected. On a near-dup
@@ -337,7 +325,7 @@ def clustering_coefficient(edges: DataFrame, id_a: str = "id_a",
     and "open wedges" are different facts). Integer triangle/degree
     inputs keep the ratio bit-identical cross-engine at 6 decimals.
     """
-    base = triangle_counts(edges, id_a, id_b)
+    base = triangle_counts(edges)
     pairs = (F.col("degree").cast("double")
              * (F.col("degree") - F.lit(1)).cast("double") / F.lit(2.0))
     return base.select(
@@ -347,8 +335,7 @@ def clustering_coefficient(edges: DataFrame, id_a: str = "id_a",
         .alias("lcc"))
 
 
-def neighbor_jaccard(edges: DataFrame, id_a: str = "id_a",
-                     id_b: str = "id_b") -> DataFrame:
+def neighbor_jaccard(edges: DataFrame) -> DataFrame:
     """Per-EDGE neighbor-set Jaccard — the classic link-strength /
     link-prediction score: for an edge (a,b),
     ``|N(a)∩N(b)| / |N(a)∪N(b) − {a,b}|``. On a near-dup graph this
@@ -365,13 +352,13 @@ def neighbor_jaccard(edges: DataFrame, id_a: str = "id_a",
     division = bit-identical cross-engine. Returns
     (id_a, id_b, common_neighbors, jaccard) for every input edge,
     zero-common edges included."""
-    und = (edges.select(F.col(id_a).alias("u"), F.col(id_b).alias("v"))
-           .union(edges.select(F.col(id_b).alias("u"),
-                               F.col(id_a).alias("v"))))
+    und = (edges.select(F.col("id_a").alias("u"), F.col("id_b").alias("v"))
+           .union(edges.select(F.col("id_b").alias("u"),
+                               F.col("id_a").alias("v"))))
     deg = und.groupBy("u").agg(F.count("*").alias("d")) \
              .select(F.col("u").alias("id"), "d")
     da, db = deg.alias("da"), deg.alias("db")
-    e = (edges.select(F.col(id_a).alias("a"), F.col(id_b).alias("b"))
+    e = (edges.select(F.col("id_a").alias("a"), F.col("id_b").alias("b"))
          .join(da, F.col("a") == F.col("da.id"))
          .join(db, F.col("b") == F.col("db.id"))
          .select(
@@ -399,17 +386,17 @@ def neighbor_jaccard(edges: DataFrame, id_a: str = "id_a",
                  F.greatest("t1", "t2").alias("hi")))).alias("p"))
         .groupBy("p.lo", "p.hi")
         .agg(F.count("*").alias("common")))
-    base = (edges.select(F.least(id_a, id_b).alias("lo"),
-                         F.greatest(id_a, id_b).alias("hi"))
+    base = (edges.select(F.least("id_a", "id_b").alias("lo"),
+                         F.greatest("id_a", "id_b").alias("hi"))
             .join(per_edge, ["lo", "hi"], "left")
             .join(da, F.col("lo") == F.col("da.id"))
             .join(db, F.col("hi") == F.col("db.id"))
-            .select(F.col("lo").alias(id_a), F.col("hi").alias(id_b),
+            .select(F.col("lo").alias("id_a"), F.col("hi").alias("id_b"),
                     F.coalesce("common", F.lit(0)).alias("common"),
                     F.col("da.d").alias("d_a"), F.col("db.d").alias("d_b")))
     union_sz = (F.col("d_a") + F.col("d_b") - 2 - F.col("common"))
     return base.select(
-        id_a, id_b,
+        "id_a", "id_b",
         F.col("common").cast("bigint").alias("common_neighbors"),
         F.round(F.when(union_sz > 0,
                        F.col("common").cast("double")
@@ -417,11 +404,8 @@ def neighbor_jaccard(edges: DataFrame, id_a: str = "id_a",
                 .otherwise(F.lit(0.0)), 6).alias("jaccard"))
 
 
-def kcore(edges: DataFrame, k: int = 3, rounds: int = 8,
-          id_a: str = "id_a", id_b: str = "id_b",
-          checkpoint_dir: str | None = None,
-          cut_every: int = 2) -> DataFrame:
-    """k-core extraction by ``rounds`` PEELING iterations: repeatedly
+def kcore(edges: DataFrame, k: int = 3, cut_every: int = 2) -> DataFrame:
+    """k-core extraction by 8 PEELING iterations: repeatedly
     drop nodes whose degree within the surviving subgraph is < ``k``.
     The k-core is the classic robust-density region — unlike a raw
     degree cut, membership survives the removal of its weakest
@@ -432,46 +416,38 @@ def kcore(edges: DataFrame, k: int = 3, rounds: int = 8,
     in the surviving subgraph.
 
     FIXED-ITERATION SPEC, the pagerank discipline: the published result
-    is "``rounds`` peels", bit-reproducible in both engines (the oracle
+    is "8 peels", bit-reproducible in both engines (the oracle
     unrolls the same rounds as materialized CTEs); peeling converges in
     a handful of rounds on bounded-degeneracy graphs, and a converged
     round is a no-op so extra rounds are safe. Integer degrees — no FP
     surface at all. Each round is one semi-join (edges ⋈ survivors ×2)
     + one degree groupBy over the shrinking edge set.
 
-    The symmetrized edge frame is MATERIALIZED ONCE up front (reliable
-    checkpoint under ``checkpoint_dir``, localCheckpoint otherwise —
-    seed_distances' recipe): callers typically derive edges from a
-    join/mine (the co-purchase self-join in the registry query), and an
-    unmaterialized lineage would re-run that derivation once per round
-    per semi-join — measured 12.5 s → ~2 s at sf0.1. Survivor frames
+    The symmetrized edge frame is MATERIALIZED ONCE up front
+    (localCheckpoint, seed_distances' recipe): callers typically derive
+    edges from a join/mine (the co-purchase self-join in the registry
+    query), and an unmaterialized lineage would re-run that derivation
+    once per round per semi-join — measured 12.5 s → ~2 s at sf0.1. Survivor frames
     cut every ``cut_every`` rounds so plan depth stays bounded, with
     superseded frames unpersisted."""
-    spark = edges.sparkSession
-    if checkpoint_dir is not None:
-        spark.sparkContext.setCheckpointDir(checkpoint_dir)
-
-    def _cut(df: DataFrame) -> DataFrame:
-        return df.checkpoint(eager=True) if checkpoint_dir is not None \
-            else df.localCheckpoint(eager=True)
-
-    und = _cut(edges.select(F.col(id_a).alias("u"), F.col(id_b).alias("v"))
-               .union(edges.select(F.col(id_b).alias("u"),
-                                   F.col(id_a).alias("v"))))
+    und = (edges.select(F.col("id_a").alias("u"), F.col("id_b").alias("v"))
+           .union(edges.select(F.col("id_b").alias("u"),
+                               F.col("id_a").alias("v")))
+           .localCheckpoint(eager=True))
     deg = und.groupBy("u").agg(F.count("*").alias("d"))
     alive = deg.filter(F.col("d") >= k).select(F.col("u").alias("id"))
     pinned = None
     last_n = None
-    for r in range(1, rounds):
+    for r in range(1, 8):
         e = (und.join(alive.withColumnRenamed("id", "u"), "u", "leftsemi")
              .join(alive.withColumnRenamed("id", "v"), "v", "leftsemi"))
         deg = e.groupBy("u").agg(F.count("*").alias("d"))
         alive = deg.filter(F.col("d") >= k).select(F.col("u").alias("id"))
         if r % cut_every == 0:
             prev = pinned
-            alive = _cut(alive)
+            alive = alive.localCheckpoint(eager=True)
             pinned = alive
-            if checkpoint_dir is None and prev is not None:
+            if prev is not None:
                 prev.unpersist()
             # Early exit at the fixpoint: survivor sets only SHRINK, so
             # an unchanged count at a materialized cut IS set equality,
@@ -491,7 +467,6 @@ def kcore(edges: DataFrame, k: int = 3, rounds: int = 8,
 
 
 def label_propagation(edges: DataFrame, rounds: int = 2,
-                      checkpoint_dir: str | None = None,
                       symmetric_distinct: bool = False) -> DataFrame:
     """Synchronous label propagation for community detection, run for a
     FIXED number of rounds (pagerank's fixed-iteration discipline — LPA
@@ -534,14 +509,7 @@ def label_propagation(edges: DataFrame, rounds: int = 2,
     reuse already deduplicates the edge-mine subtree across rounds:
     an sf0.1 A/B measured the raw lineage at 3.10 s vs 3.44 s with an
     up-front reliable checkpoint (the extra write+read costs more than
-    it saves). ``checkpoint_dir`` therefore defaults OFF; pass it only
-    for deep unrolls where plan size itself becomes the problem (many
-    rounds), where it bounds the plan like kcore's cut_every."""
-    if checkpoint_dir is not None:
-        spark = edges.sparkSession
-        spark.sparkContext.setCheckpointDir(checkpoint_dir)
-        edges = edges.checkpoint(eager=True)
-
+    it saves)."""
     # argmax under the (count DESC, label ASC) total order; label is
     # unique within each node's rows, so the ordering key has no ties
     # and the pick is deterministic in any engine.
@@ -584,8 +552,7 @@ def label_propagation(edges: DataFrame, rounds: int = 2,
     return labels
 
 
-def adamic_adar(edges: DataFrame, id_a: str = "id_a",
-                id_b: str = "id_b") -> DataFrame:
+def adamic_adar(edges: DataFrame) -> DataFrame:
     """Per-edge Adamic–Adar score — the frequency-weighted
     link-prediction refinement of :func:`neighbor_jaccard`:
     ``AA(a,b) = Σ_{w ∈ N(a)∩N(b)} 1/ln(deg(w))``, so a common neighbor
@@ -602,13 +569,13 @@ def adamic_adar(edges: DataFrame, id_a: str = "id_a",
     partition order); a common neighbor has degree ≥ 2 by construction,
     so ln is never 0. The 9-dp round sits in the same accepted last-ulp
     libm-ln risk class documented at :func:`pagerank`."""
-    und = (edges.select(F.col(id_a).alias("u"), F.col(id_b).alias("v"))
-           .union(edges.select(F.col(id_b).alias("u"),
-                               F.col(id_a).alias("v"))))
+    und = (edges.select(F.col("id_a").alias("u"), F.col("id_b").alias("v"))
+           .union(edges.select(F.col("id_b").alias("u"),
+                               F.col("id_a").alias("v"))))
     deg = und.groupBy("u").agg(F.count("*").alias("d")) \
              .select(F.col("u").alias("id"), "d")
     da, db = deg.alias("da"), deg.alias("db")
-    e = (edges.select(F.col(id_a).alias("a"), F.col(id_b).alias("b"))
+    e = (edges.select(F.col("id_a").alias("a"), F.col("id_b").alias("b"))
          .join(da, F.col("a") == F.col("da.id"))
          .join(db, F.col("b") == F.col("db.id"))
          .select(
@@ -646,10 +613,10 @@ def adamic_adar(edges: DataFrame, id_a: str = "id_a",
              F.sum(F.round(F.lit(1.0) / F.log("dw"), 9)
                    .cast("decimal(18,9)")).alias("aas")))
     zero = F.lit(0).cast("decimal(18,9)")
-    return (edges.select(F.least(id_a, id_b).alias("lo"),
-                         F.greatest(id_a, id_b).alias("hi"))
+    return (edges.select(F.least("id_a", "id_b").alias("lo"),
+                         F.greatest("id_a", "id_b").alias("hi"))
             .join(per_edge, ["lo", "hi"], "left")
-            .select(F.col("lo").alias(id_a), F.col("hi").alias(id_b),
+            .select(F.col("lo").alias("id_a"), F.col("hi").alias("id_b"),
                     F.coalesce("common", F.lit(0)).cast("bigint")
                     .alias("common_neighbors"),
                     F.round(F.coalesce(F.col("aas"), zero).cast("double"),

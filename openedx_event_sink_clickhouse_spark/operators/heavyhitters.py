@@ -154,8 +154,7 @@ def heavy_hitters_from_counts(spark, table: str, key_col: str,
 
 
 def retract_keys(spark, table: str, keys: DataFrame, key_col: str,
-                 buckets: int = 32,
-                 max_files_per_bucket: int | None = 8) -> None:
+                 buckets: int = 32) -> None:
     """Propagate a deletion (user retirement, retention expiry) into the
     at-rest count table WITHOUT re-scanning the raw stream: for each
     retired key, append one NEGATIVE partial that exactly cancels its
@@ -180,10 +179,8 @@ def retract_keys(spark, table: str, keys: DataFrame, key_col: str,
     (retired.write.mode("append")
      .bucketBy(buckets, key_col).sortBy(key_col)
      .saveAsTable(table))
-    if max_files_per_bucket is not None:
-        from ..sources.layout import compact_bucketed_table
-        compact_bucketed_table(spark, table, key_col, buckets,
-                               max_files_per_bucket)
+    from ..sources.layout import compact_bucketed_table
+    compact_bucketed_table(spark, table, key_col, buckets)
 
 
 def cms_sketch(df: DataFrame, key_col: str, width: int = 1024,
@@ -252,7 +249,7 @@ def cms_estimate(sketch: DataFrame, keys: DataFrame, key_col: str,
 
 
 def cms_heavy_hitters(df: DataFrame, key_col: str, k: int = 100,
-                      width: int = 1024, depth: int = 4,
+                      width: int = 1024,
                       total: int | None = None) -> DataFrame:
     """Exact heavy hitters annotated with their count-min estimates:
     (``key_col``, exact_count, est_count, overcount). The exact pass
@@ -268,36 +265,34 @@ def cms_heavy_hitters(df: DataFrame, key_col: str, k: int = 100,
     the HH frame — DataFrames re-run their lineage per reference, so the
     join-back shape would scan the raw stream twice more."""
     hh = heavy_hitters(df, key_col, k=k, total=total)
-    est = cms_estimate(cms_sketch(df, key_col, width, depth),
-                       hh, key_col, width, depth,
-                       carry_cols=("exact_count",))
+    est = cms_estimate(cms_sketch(df, key_col, width, 4),
+                       hh, key_col, width, 4, carry_cols=("exact_count",))
     return est.select(key_col, "exact_count", "est_count",
                       (F.col("est_count") - F.col("exact_count"))
                       .alias("overcount"))
 
 
-def write_cms_table(df: DataFrame, key_col: str, table: str,
-                    width: int = 1024, depth: int = 4,
+def write_cms_table(df: DataFrame, key_col: str, table: str, width: int = 1024,
                     mode: str = "overwrite") -> None:
     """Materialize the count-min sketch at rest: cells are mergeable
     partials, so ``mode="append"`` writes a batch's OWN sketch and
     readers fold with one groupBy — ``write_count_table``'s protocol
-    with O(depth·width) state instead of O(distinct keys). No bucketing
-    or compaction machinery: the whole table is ≤ depth·width rows per
+    with O(4·width) state instead of O(distinct keys). No bucketing
+    or compaction machinery: the whole table is ≤ 4·width rows per
     appended batch, coordinator-scale by construction."""
     from .dedup import _clear_orphaned_location
 
     _clear_orphaned_location(df.sparkSession, table, mode)
-    (cms_sketch(df, key_col, width, depth)
+    (cms_sketch(df, key_col, width, 4)
      .write.mode(mode).saveAsTable(table))
 
 
 def append_cms_batch(batch: DataFrame, key_col: str, table: str,
-                     width: int = 1024, depth: int = 4) -> None:
+                     width: int = 1024) -> None:
     """Fold an arriving batch into the at-rest sketch: one batch-sized
-    narrow pass producing ≤ depth·width partial cells, appended. The
+    narrow pass producing ≤ 4·width partial cells, appended. The
     stream is never re-scanned; sketch(a ⊕ b) = cell-wise sum."""
-    write_cms_table(batch, key_col, table, width, depth, mode="append")
+    write_cms_table(batch, key_col, table, width, mode="append")
 
 
 def cms_from_table(spark, table: str) -> DataFrame:

@@ -19,9 +19,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 
-def interval_union(intervals: DataFrame, key_col: str,
-                   start_col: str = "start_ts",
-                   end_col: str = "end_ts") -> DataFrame:
+def interval_union(intervals: DataFrame, key_col: str) -> DataFrame:
     """Merge each key's (possibly overlapping) intervals into disjoint
     islands and report coverage: (key, n_intervals, n_islands,
     covered_seconds). Touching intervals (next.start == prev.end) merge
@@ -31,8 +29,8 @@ def interval_union(intervals: DataFrame, key_col: str,
     preceding rows, then a running sum for island ids) + two
     aggregates (per island, then per key). The tie-break includes the
     end so equal starts order deterministically in both engines."""
-    s = F.unix_micros(F.col(start_col))
-    e = F.unix_micros(F.col(end_col))
+    s = F.unix_micros(F.col("start_ts"))
+    e = F.unix_micros(F.col("end_ts"))
     base = intervals.select(F.col(key_col).alias("key"),
                             s.alias("_s"), e.alias("_e"))
     w = Window.partitionBy("key").orderBy("_s", "_e")

@@ -15,7 +15,7 @@ from pyspark.sql import functions as F
 
 
 def enrich(fact: DataFrame, dim: DataFrame, fact_key: str, dim_key: str,
-           pick: dict[str, str], how: str = "left") -> DataFrame:
+           pick: dict[str, str]) -> DataFrame:
     """S7/S8 — N:1 dimension prefetch (``select_related("user")`` pulling
     ``user.email`` — ``sinks/user_profile_sink.py:18-19``,
     ``serializers.py:37``; double prefetch for external_id —
@@ -27,15 +27,14 @@ def enrich(fact: DataFrame, dim: DataFrame, fact_key: str, dim_key: str,
     """
     slim = dim.select(F.col(dim_key).alias(fact_key),
                       *[F.col(c).alias(a) for c, a in pick.items()])
-    return fact.join(F.broadcast(slim), on=fact_key, how=how)
+    return fact.join(F.broadcast(slim), on=fact_key, how="left")
 
 
-def expand_children(parents: DataFrame, children: DataFrame, on,
-                    how: str = "inner") -> DataFrame:
+def expand_children(parents: DataFrame, children: DataFrame, on) -> DataFrame:
     """S9 — parent → child expansion (CCX children of a course,
     ``utils.py:62-68`` consumed at ``tasks.py:35-38``). The parent set is
     the (small) per-batch driver table → broadcast it, stream children."""
-    return children.join(F.broadcast(parents), on=on, how=how)
+    return children.join(F.broadcast(parents), on=on, how="inner")
 
 
 def bloom_prefilter_join(fact: DataFrame, dim: DataFrame,

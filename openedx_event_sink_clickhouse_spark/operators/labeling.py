@@ -25,14 +25,10 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 
-def churn_labels(events: DataFrame, cutoff, horizon_days: int = 7,
-                 feature_days: int = 14, *, unit_col: str = "user_id",
-                 ts_col: str = "ts", type_col: str = "event_type",
-                 value_col: str = "value",
-                 conversion_type: str = "purchase") -> DataFrame:
+def churn_labels(events: DataFrame, cutoff) -> DataFrame:
     """Training rows for churn prediction AS OF ``cutoff``: features
-    from the ``feature_days`` window strictly BEFORE the cutoff, the
-    label (``churned`` = zero activity) from the ``horizon_days`` window
+    from the 14-day window strictly BEFORE the cutoff, the
+    label (``churned`` = zero activity) from the 7-day window
     at/after it. Only units active in the feature window get a row — a
     never-seen unit has no features and would train a prior, not a
     model. Returns one row per eligible unit:
@@ -49,19 +45,19 @@ def churn_labels(events: DataFrame, cutoff, horizon_days: int = 7,
     ``total_value`` is bit-deterministic under ANY engine pair and ANY
     aggregation merge order; recency is whole days from the unit's last
     pre-cutoff event to the cutoff."""
-    ts, cut = F.col(ts_col), F.lit(cutoff).cast("timestamp")
-    feat_lo = F.date_sub(cut, feature_days)
-    lab_hi = F.date_add(cut, horizon_days)
+    ts, cut = F.col("ts"), F.lit(cutoff).cast("timestamp")
+    feat_lo = F.date_sub(cut, 14)
+    lab_hi = F.date_add(cut, 7)
     in_feat = (ts >= feat_lo) & (ts < cut)
     in_label = (ts >= cut) & (ts < lab_hi)
     day = ts.cast("date")
-    per_unit = (events.filter(F.col(unit_col).isNotNull())
-                .groupBy(F.col(unit_col).alias("unit"))
+    per_unit = (events.filter(F.col("user_id").isNotNull())
+                .groupBy(F.col("user_id").alias("unit"))
                 .agg(
         F.sum(in_feat.cast("long")).alias("n_events"),
-        F.sum((in_feat & (F.col(type_col) == conversion_type))
+        F.sum((in_feat & (F.col("event_type") == "purchase"))
               .cast("long")).alias("n_conversions"),
-        F.sum(F.when(in_feat, F.floor(F.col(value_col) * F.lit(1e6)
+        F.sum(F.when(in_feat, F.floor(F.col("value") * F.lit(1e6)
                                       + F.lit(0.5)))
               .otherwise(F.lit(0).cast("long")))
         .alias("_val_u"),
@@ -78,12 +74,10 @@ def churn_labels(events: DataFrame, cutoff, horizon_days: int = 7,
         (F.lit(1) - F.col("_active_in_label")).alias("churned")))
 
 
-def rfm_segments(events: DataFrame, cutoff, n_tiles: int = 5, *,
-                 unit_col: str = "user_id", ts_col: str = "ts",
-                 value_col: str = "value") -> DataFrame:
+def rfm_segments(events: DataFrame, cutoff) -> DataFrame:
     """RFM segmentation as of ``cutoff``: per-unit Recency (days since
     last pre-cutoff event), Frequency (event count), Monetary (value
-    sum) each cut into ``n_tiles`` rank tiles (1 = best: most recent /
+    sum) each cut into 5 rank tiles (1 = best: most recent /
     most frequent / highest value), plus the concatenated segment code
     ("111" = champions). Pre-cutoff only — the same point-in-time
     discipline as :func:`churn_labels`, so the segments can feed a
@@ -93,13 +87,13 @@ def rfm_segments(events: DataFrame, cutoff, n_tiles: int = 5, *,
     over the REDUCED one-row-per-user frame (not events); that frame is
     user-cardinality, the documented boundary where ntile swaps for a
     histogram-sketch cut."""
-    ts, cut = F.col(ts_col), F.lit(cutoff).cast("timestamp")
+    ts, cut = F.col("ts"), F.lit(cutoff).cast("timestamp")
     pre = ts < cut
-    per_unit = (events.filter(F.col(unit_col).isNotNull() & pre)
-                .groupBy(F.col(unit_col).alias("unit"))
+    per_unit = (events.filter(F.col("user_id").isNotNull() & pre)
+                .groupBy(F.col("user_id").alias("unit"))
                 .agg(F.max(ts.cast("date")).alias("_last_day"),
                      F.count("*").alias("frequency"),
-                     F.sum(F.col(value_col).cast("decimal(18,6)"))
+                     F.sum(F.col("value").cast("decimal(18,6)"))
                      .alias("_val")))
     base = per_unit.select(
         "unit",
@@ -111,9 +105,9 @@ def rfm_segments(events: DataFrame, cutoff, n_tiles: int = 5, *,
     f_w = Window.orderBy(F.desc("frequency"), F.asc("unit"))
     m_w = Window.orderBy(F.desc("monetary"), F.asc("unit"))
     return (base
-            .withColumn("r_tile", F.ntile(n_tiles).over(r_w))
-            .withColumn("f_tile", F.ntile(n_tiles).over(f_w))
-            .withColumn("m_tile", F.ntile(n_tiles).over(m_w))
+            .withColumn("r_tile", F.ntile(5).over(r_w))
+            .withColumn("f_tile", F.ntile(5).over(f_w))
+            .withColumn("m_tile", F.ntile(5).over(m_w))
             .withColumn("segment",
                         F.concat_ws("", F.col("r_tile"), F.col("f_tile"),
                                     F.col("m_tile"))))

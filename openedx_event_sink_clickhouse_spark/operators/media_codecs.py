@@ -236,15 +236,14 @@ def decode_image(data: bytes) -> DecodedImage:
 # WAV
 # ---------------------------------------------------------------------------
 
-def wav_encode(samples: bytes, sample_rate: int = 16000,
-               n_channels: int = 1, sample_width: int = 1) -> bytes:
+def wav_encode(samples: bytes) -> bytes:
     """PCM WAV writer via the stdlib ``wave`` module (8-bit unsigned /
     16-bit signed little-endian, per the RIFF spec)."""
     buf = io.BytesIO()
     with wave.open(buf, "wb") as w:
-        w.setnchannels(n_channels)
-        w.setsampwidth(sample_width)
-        w.setframerate(sample_rate)
+        w.setnchannels(1)
+        w.setsampwidth(1)
+        w.setframerate(16000)
         w.writeframes(samples)
     return buf.getvalue()
 

@@ -150,14 +150,14 @@ FEATURES_SCHEMA = T.StructType([
 ])
 
 
-def byte_histogram_features(media: DataFrame,
-                            bins: int = FEATURE_BINS) -> DataFrame:
-    """Feature extraction: normalized byte histogram (``bins`` buckets of
-    ``byte // (256/bins)``) as ``array<double>`` — the stand-in for an
-    image-embedding model, with the exact mapInPandas shape a real model
-    UDF would use (numpy over Arrow batches, vectorized per batch)."""
+def byte_histogram_features(media: DataFrame) -> DataFrame:
+    """Feature extraction: normalized byte histogram (``FEATURE_BINS``
+    buckets of ``byte // (256/FEATURE_BINS)``) as ``array<double>`` —
+    the stand-in for an image-embedding model, with the exact
+    mapInPandas shape a real model UDF would use (numpy over Arrow
+    batches, vectorized per batch)."""
     import numpy as np
-    width = 256 // bins
+    width = 256 // FEATURE_BINS
 
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -165,9 +165,10 @@ def byte_histogram_features(media: DataFrame,
             for buf in pdf["content"]:
                 arr = np.frombuffer(bytes(buf), dtype=np.uint8)
                 if arr.size == 0:
-                    feats.append([0.0] * bins)
+                    feats.append([0.0] * FEATURE_BINS)
                     continue
-                hist = np.bincount(arr // width, minlength=bins)[:bins]
+                hist = np.bincount(arr // width,
+                                   minlength=FEATURE_BINS)[:FEATURE_BINS]
                 feats.append((hist / arr.size).tolist())
             yield pd.DataFrame({"media_id": pdf["media_id"],
                                 "features": feats})
@@ -360,7 +361,7 @@ def png_metadata(media: DataFrame) -> DataFrame:
                           ["media_id", "content"])
 
 
-def wav_media_table(docs: DataFrame, sample_rate: int = 16000) -> DataFrame:
+def wav_media_table(docs: DataFrame) -> DataFrame:
     """Real-container corpus: document bytes as 8-bit mono PCM WAV.
     :func:`decode_stats` strips the 44-byte RIFF header through the
     real ``wave`` codec — the oracle twin pins ``n_bytes ==
@@ -372,10 +373,10 @@ def wav_media_table(docs: DataFrame, sample_rate: int = 16000) -> DataFrame:
             content, meta = [], []
             for txt in pdf["text"]:
                 data = (txt or "").encode("utf-8")
-                content.append(wav_encode(data, sample_rate))
+                content.append(wav_encode(data))
                 meta.append({"width": 0, "height": 0,
-                             "duration_ms": len(data) * 1000 // sample_rate,
-                             "sample_rate": sample_rate, "codec": "wav"})
+                             "duration_ms": len(data) * 1000 // 16000,
+                             "sample_rate": 16000, "codec": "wav"})
             yield pd.DataFrame({"media_id": pdf["doc_id"],
                                 "kind": "audio",
                                 "content": content, "meta": meta})
@@ -441,9 +442,7 @@ def _phash_arrow_udf():
     return phash
 
 
-def perceptual_hash(media: DataFrame, content_col: str = "content",
-                    id_col: str = "media_id",
-                    engine: str = "auto") -> DataFrame:
+def perceptual_hash(media: DataFrame, engine: str = "auto") -> DataFrame:
     """Difference-hash ("dHash") perceptual fingerprint of each binary
     payload: the bytes are averaged into ``PHASH_CELLS`` equal slices
     (the 1-D stand-in for a resampled pixel grid — with a real codec
@@ -480,7 +479,7 @@ def perceptual_hash(media: DataFrame, content_col: str = "content",
     if engine == "arrow":
         from .dedup import ensure_min_parallelism
         return ensure_min_parallelism(media).select(
-            F.col(id_col), _phash_arrow_udf()(content_col).alias("phash"))
+            F.col("media_id"), _phash_arrow_udf()("content").alias("phash"))
     c = PHASH_CELLS
     # The CELL MEANS array is computed ONCE and let-bound (each cell's
     # slice is disjoint, so the whole array is one O(n) pass), then the
@@ -499,7 +498,7 @@ def perceptual_hash(media: DataFrame, content_col: str = "content",
             f"element_at(cs, i + 1), "
             f"shiftleft(cast(1 as bigint), i - 1), cast(0 as bigint)))")
     expr = (f"element_at(transform(array("
-            f"transform(split(decode({content_col}, 'ISO-8859-1'), ''), "
+            "transform(split(decode(content, 'ISO-8859-1'), ''), "
             f"ch -> ascii(ch))), bs -> "
             f"element_at(transform(array(size(bs)), n -> "
             f"element_at(transform(array({cells}), cs -> {bits}), 1)), "
@@ -509,10 +508,10 @@ def perceptual_hash(media: DataFrame, content_col: str = "content",
     # CPU-heavy narrow stage here does (dedup.ensure_min_parallelism).
     from .dedup import ensure_min_parallelism
     return ensure_min_parallelism(media).select(
-        F.col(id_col), F.expr(expr).alias("phash"))
+        F.col("media_id"), F.expr(expr).alias("phash"))
 
 
-def phash_near_pairs(sigs: DataFrame, max_hamming: int = 7) -> DataFrame:
+def phash_near_pairs(sigs: DataFrame) -> DataFrame:
     """Near-duplicate payload pairs by perceptual-hash hamming distance
     — pigeonhole-exact via the SAME byte-banding machinery as text
     SimHash (8 bands of 7 bits over the 56-bit hash: hamming ≤ 7 forces
@@ -521,23 +520,21 @@ def phash_near_pairs(sigs: DataFrame, max_hamming: int = 7) -> DataFrame:
     :func:`payload_exact_dedup`'s byte-exact one."""
     from .dedup import simhash_near_pairs
     return simhash_near_pairs(sigs, id_col="media_id", sig_col="phash",
-                              max_hamming=max_hamming, num_bands=8,
+                              max_hamming=7, num_bands=8,
                               bits=PHASH_BITS)
 
 
-def phash_recall_report(sigs: DataFrame, max_hamming: int = 7,
-                        num_bands: int = 8, id_col: str = "media_id",
-                        sig_col: str = "phash") -> DataFrame:
+def phash_recall_report(sigs: DataFrame) -> DataFrame:
     """Pair-recall certification of the banded phash candidate stage
     against the brute-force hamming truth — the multimodal twin of
     ``dedup_lsh_recall``. One row: (n_true_pairs, n_candidate_pairs,
     n_found_pairs, n_missed_pairs, recall, candidate_precision).
 
-    The banding is pigeonhole-EXACT for hamming ≤ num_bands−1 (8 bands
+    The banding is pigeonhole-EXACT for hamming ≤ 7 (8 bands
     of 7 bits over the 56-bit dHash: ≤ 7 differing bits leave ≥ 1 band
     identical), so recall here must be exactly 1.0 — but a deployment
     reads the MEASURED number (a banding-width bug, a signature wider
-    than bits, or a max_hamming raised past num_bands−1 all break the
+    than bits, or a hamming bound raised past 7 all break the
     pigeonhole silently, and this query is what catches them).
     candidate_precision prices the verify work the band join wastes.
 
@@ -565,16 +562,16 @@ def phash_recall_report(sigs: DataFrame, max_hamming: int = 7,
     (id, 8-byte hash) — O(corpus) ids, never payloads."""
     from .dedup import simhash_band_candidates
 
-    sigs = sigs.select(F.col(id_col), F.col(sig_col)) \
+    sigs = sigs.select(F.col("media_id"), F.col("phash")) \
                .localCheckpoint(eager=True)
-    cand = simhash_band_candidates(sigs, id_col=id_col, sig_col=sig_col,
-                                   num_bands=num_bands, bits=PHASH_BITS)
-    left = sigs.select(F.col(id_col).alias("id_a"),
-                       F.col(sig_col).alias("_sa"))
-    right = sigs.select(F.col(id_col).alias("id_b"),
-                        F.col(sig_col).alias("_sb"))
+    cand = simhash_band_candidates(sigs, id_col="media_id", sig_col="phash",
+                                   num_bands=8, bits=PHASH_BITS)
+    left = sigs.select(F.col("media_id").alias("id_a"),
+                       F.col("phash").alias("_sa"))
+    right = sigs.select(F.col("media_id").alias("id_b"),
+                        F.col("phash").alias("_sb"))
     truth = (left.join(F.broadcast(right), F.col("id_a") < F.col("id_b"))
-             .filter(F.bit_count(F.expr("_sa ^ _sb")) <= max_hamming)
+             .filter(F.bit_count(F.expr("_sa ^ _sb")) <= 7)
              .select("id_a", "id_b"))
     found = truth.join(cand.select("id_a", "id_b"),
                        ["id_a", "id_b"], "left_semi")
@@ -593,8 +590,7 @@ def phash_recall_report(sigs: DataFrame, max_hamming: int = 7,
          .otherwise(F.lit(1.0)).alias("candidate_precision")))
 
 
-def payload_exact_dedup(media: DataFrame, content_col: str = "content",
-                        id_col: str = "media_id") -> DataFrame:
+def payload_exact_dedup(media: DataFrame) -> DataFrame:
     """Content-addressed exact dedup over the BINARY payload — the
     first pass every multimodal ingest runs (re-crawled and re-encoded
     assets are byte-identical far more often than text is). Returns
@@ -609,12 +605,12 @@ def payload_exact_dedup(media: DataFrame, content_col: str = "content",
     the filter every content-less row would collapse into one bogus
     "duplicate" group with a NULL bytes_saved. Missing content is an
     ingest-quality question (count it upstream), not a dedup one."""
-    return (media.filter(F.col(content_col).isNotNull())
-            .select(F.md5(F.col(content_col)).alias("content_hash"),
-                         F.col(id_col),
-                         F.length(F.col(content_col)).alias("_n"))
+    return (media.filter(F.col("content").isNotNull())
+            .select(F.md5(F.col("content")).alias("content_hash"),
+                         F.col("media_id"),
+                         F.length(F.col("content")).alias("_n"))
             .groupBy("content_hash")
-            .agg(F.min(id_col).alias("keep_id"),
+            .agg(F.min("media_id").alias("keep_id"),
                  F.count("*").alias("n_copies"),
                  ((F.count("*") - 1) * F.max("_n")).cast("bigint")
                  .alias("bytes_saved")))

@@ -63,8 +63,7 @@ def profile_table(df: DataFrame, numeric_cols: list[str],
             .select("p.*"))
 
 
-def grouped_moments(df: DataFrame, group_col: str = "event_type",
-                    value_col: str = "value") -> DataFrame:
+def grouped_moments(df: DataFrame) -> DataFrame:
     """Per-group mean/std/skewness/excess-kurtosis in ONE aggregate pass
     from exact integer power sums — the heavy-tail detector a quality
     pipeline runs over score distributions (perplexity, length, spend)
@@ -83,30 +82,28 @@ def grouped_moments(df: DataFrame, group_col: str = "event_type",
 
     Plan: map-side partial aggregate → tiny per-group row; no window,
     no second pass, no Python."""
-    return moment_stats(moment_sums(df, group_col, value_col), group_col)
+    return moment_stats(moment_sums(df))
 
 
-def moment_sums(df: DataFrame, group_col: str = "event_type",
-                value_col: str = "value") -> DataFrame:
+def moment_sums(df: DataFrame) -> DataFrame:
     """The MERGEABLE half of :func:`grouped_moments`: per-group exact
     integer power sums (n, Σm..Σm⁴ over milli-units as DECIMAL(38,0)).
     Plain sums are commutative/associative, so partial frames from any
     batch split fold to the one-pass result by groupBy-sum — which is
     what lets a stream maintain them per epoch partition
     (:func:`streaming.sketch_maintenance.moments_stream_maintainer`)."""
-    m = (F.col(value_col).cast("decimal(18,3)") * 1000).cast("long")
+    m = (F.col("value").cast("decimal(18,3)") * 1000).cast("long")
     md = F.col("_m").cast("decimal(38,0)")
-    base = (df.filter(F.col(value_col).isNotNull())
-            .select(F.col(group_col), m.alias("_m")))
+    base = (df.filter(F.col("value").isNotNull())
+            .select(F.col("event_type"), m.alias("_m")))
     m2 = md * md
-    return base.groupBy(group_col).agg(
+    return base.groupBy("event_type").agg(
         F.count("*").alias("n"),
         F.sum(md).alias("s1"), F.sum(m2).alias("s2"),
         F.sum(m2 * md).alias("s3"), F.sum(m2 * m2).alias("s4"))
 
 
-def moment_stats(g: DataFrame,
-                 group_col: str = "event_type") -> DataFrame:
+def moment_stats(g: DataFrame) -> DataFrame:
     """The readout half of :func:`grouped_moments`: one double formula
     per statistic over the (folded) exact power sums."""
     nd = F.col("n").cast("double")
@@ -122,7 +119,7 @@ def moment_stats(g: DataFrame,
     kurt = F.when(m2c > 0, nd * m4c / (m2c * m2c) - F.lit(3.0))
     std = F.when((F.col("n") > 1) & (m2c >= 0),
                  F.sqrt(m2c / (nd - F.lit(1.0))) / F.lit(1000.0))
-    return g.select(F.col(group_col), "n",
+    return g.select(F.col("event_type"), "n",
                     F.round(s1 / nd / F.lit(1000.0), 6).alias("mean"),
                     F.round(std, 6).alias("std"),
                     F.round(skew, 6).alias("skewness"),

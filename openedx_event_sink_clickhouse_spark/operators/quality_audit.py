@@ -206,8 +206,8 @@ def schema_drift(df: DataFrame, slice_pred, columns: list[str],
     return row.select(F.inline(F.array(*structs)))
 
 
-def snapshot_diff(old: DataFrame, new: DataFrame, key_cols: list[str],
-                  compare_cols: list[str] | None = None) -> DataFrame:
+def snapshot_diff(old: DataFrame, new: DataFrame,
+                  key_cols: list[str]) -> DataFrame:
     """Row-level diff between two snapshots of one table — the CDC /
     data-versioning audit (what changed between yesterday's load and
     today's): one row per differing key with status
@@ -219,13 +219,12 @@ def snapshot_diff(old: DataFrame, new: DataFrame, key_cols: list[str],
     both sides' natural key — co-located for bucketed snapshots), with
     the change test as a null-safe column comparison (`eqNullSafe`, so
     NULL→value and value→NULL count as changes) — no row-hash
-    materialization, no second pass. ``compare_cols`` defaults to every
+    materialization, no second pass. The compared columns are every
     non-key column shared by both schemas, so schema drift in either
     snapshot narrows the comparison instead of crashing it (pair with
     :func:`schema_drift` to audit the drift itself)."""
-    if compare_cols is None:
-        shared = [c for c in old.columns if c in set(new.columns)]
-        compare_cols = [c for c in shared if c not in set(key_cols)]
+    shared = [c for c in old.columns if c in set(new.columns)]
+    compare_cols = [c for c in shared if c not in set(key_cols)]
     o = old.select(*key_cols, *compare_cols).alias("o")
     n = new.select(*key_cols, *compare_cols).alias("n")
     cond = None
@@ -254,13 +253,12 @@ def snapshot_diff(old: DataFrame, new: DataFrame, key_cols: list[str],
                     F.array_join(changed_cols, ",").alias("changed_cols")))
 
 
-def k_anonymity_audit(df: DataFrame, qi_cols: list[str],
-                      k: int = 5) -> DataFrame:
+def k_anonymity_audit(df: DataFrame, qi_cols: list[str]) -> DataFrame:
     """k-anonymity audit over a set of quasi-identifier columns — the
     privacy/governance gate a dataset clears before release: every
     combination of quasi-identifier values must be shared by at least
-    ``k`` rows, or an attacker who knows someone's QI tuple narrows them
-    to < k candidates. Returns one row per observed QI combination:
+    k = 5 rows, or an attacker who knows someone's QI tuple narrows them
+    to < 5 candidates. Returns one row per observed QI combination:
     the equivalence-class size, a ``violates_k`` flag, and the
     re-identification risk (1 / class size). The dataset's k-anonymity
     level is ``min(class_size)`` over this report; the release decision
@@ -279,7 +277,7 @@ def k_anonymity_audit(df: DataFrame, qi_cols: list[str],
             .agg(F.count("*").alias("class_size"))
             .select(*qi_cols,
                     F.col("class_size").cast("bigint").alias("class_size"),
-                    (F.col("class_size") < k).cast("int")
+                    (F.col("class_size") < 5).cast("int")
                     .alias("violates_k"),
                     # raw single division of an exact integer — bit-
                     # identical in any engine; round() would flip at
@@ -289,8 +287,7 @@ def k_anonymity_audit(df: DataFrame, qi_cols: list[str],
                     .alias("reident_risk")))
 
 
-def benford_audit(df: DataFrame, value_col: str,
-                  chi2_crit: float = 15.507) -> DataFrame:
+def benford_audit(df: DataFrame, value_col: str) -> DataFrame:
     """Benford's-law first-significant-digit audit — the forensic
     screen for fabricated or systematically manipulated numeric columns
     (naturally-grown magnitudes follow P(d) = log10(1 + 1/d); invented
@@ -330,12 +327,12 @@ def benford_audit(df: DataFrame, value_col: str,
         .alias("observed_share"),
         F.round("expected_share", 6).alias("expected_share"),
         F.round(chi2, 6).alias("chi2"),
-        (chi2 > chi2_crit).cast("int").alias("benford_flag"))
+        (chi2 > 15.507).cast("int").alias("benford_flag"))
         .orderBy("digit"))
 
 
-def psi_drift(df: DataFrame, value_col: str, slice_pred,
-              lo: float, hi: float, n_bins: int = 10) -> DataFrame:
+def psi_drift(df: DataFrame, value_col: str, slice_pred, lo: float,
+              hi: float) -> DataFrame:
     """Population Stability Index between two slices of one column —
     the standard ML-ops drift monitor (PSI < 0.1 stable, 0.1–0.25
     drifting, > 0.25 action): bucket both slices on the same fixed
@@ -347,16 +344,16 @@ def psi_drift(df: DataFrame, value_col: str, slice_pred,
     predicate naming the REFERENCE slice; rows failing it are the
     comparison slice.
 
-    One scan, one ≤ n_bins+2-key groupBy of conditional counts; the
+    One scan, one ≤ 12-key groupBy of conditional counts; the
     PSI fold runs over the bucket frame. NULLs are excluded from both
     slices (audit completeness separately). Laplace-style smoothing
     (count+0.5 per cell) keeps the statistic defined when a bucket
     empties on one side — the alternative, dropping the bucket, hides
     exactly the novel-mass drift PSI exists to flag."""
     v = F.col(value_col).cast("double")
-    width = (hi - lo) / n_bins
+    width = (hi - lo) / 10
     bucket = (F.when(v < lo, F.lit(-1))
-              .when(v >= hi, F.lit(n_bins))
+              .when(v >= hi, F.lit(10))
               .otherwise(F.floor((v - lo) / width).cast("int")))
     counts = (df.filter(v.isNotNull())
               .select(bucket.alias("bucket"),
@@ -384,8 +381,7 @@ def psi_drift(df: DataFrame, value_col: str, slice_pred,
 
 
 def expectation_suite(df: DataFrame,
-                      expectations: list[tuple[str, "F.Column"]],
-                      n_rows_alias: str = "n_rows") -> DataFrame:
+                      expectations: list[tuple[str, "F.Column"]]) -> DataFrame:
     """Declarative data-contract audit: each expectation is
     ``(name, row_predicate)``; the report has one row per expectation
     with the violation count, violation share, and a pass flag — the
@@ -411,7 +407,7 @@ def expectation_suite(df: DataFrame,
     structs = [F.struct(
         F.lit(name).alias("expectation"),
         F.col(f"_v{i}").alias("n_violations"),
-        F.col("_n").alias(n_rows_alias),
+        F.col("_n").alias("n_rows"),
         (F.col(f"_v{i}").cast("double") / F.col("_n"))
         .alias("violation_share"),
         (F.col(f"_v{i}") == 0).cast("int").alias("passed"))
@@ -419,8 +415,7 @@ def expectation_suite(df: DataFrame,
     return row.select(F.inline(F.array(*structs)))
 
 
-def partition_completeness(events: DataFrame, ts_col: str = "ts",
-                           ) -> DataFrame:
+def partition_completeness(events: DataFrame) -> DataFrame:
     """Ingest-completeness audit at hourly-partition grain: for every
     calendar day in the table's observed range, how many hourly
     partitions SHOULD exist (24 for interior days, clipped by the
@@ -437,7 +432,7 @@ def partition_completeness(events: DataFrame, ts_col: str = "ts",
     one 1-row global-bounds aggregate; the day spine generates from the
     bounds and broadcast-joins both. All arithmetic is integer hours
     from epoch — no float until the final ratio."""
-    hr = F.date_trunc("hour", F.col(ts_col))
+    hr = F.date_trunc("hour", F.col("ts"))
     obs = (events.select(hr.alias("_h")).distinct()
            .groupBy(F.to_date("_h").alias("day"))
            .agg(F.count("*").cast("long").alias("observed_hours")))
@@ -466,8 +461,8 @@ def partition_completeness(events: DataFrame, ts_col: str = "ts",
 
 
 def l_diversity_audit(df: DataFrame, qi_cols: list[str],
-                      sensitive_col: str, l: int = 3) -> DataFrame:
-    """l-diversity audit — the companion gate to
+                      sensitive_col: str) -> DataFrame:
+    """l-diversity audit (l = 3) — the companion gate to
     :func:`k_anonymity_audit` that k-anonymity alone cannot provide: a
     class of 50 records is k-anonymous but leaks completely if all 50
     share one sensitive value (the homogeneity attack). Per
@@ -486,21 +481,20 @@ def l_diversity_audit(df: DataFrame, qi_cols: list[str],
                  F.count("*").cast("long").alias("n_sensitive"),
                  F.max("_c").alias("_mx"))
             .select(*qi_cols, "class_size", "n_sensitive",
-                    F.when(F.col("n_sensitive") < l, 1).otherwise(0)
+                    F.when(F.col("n_sensitive") < 3, 1).otherwise(0)
                     .cast("int").alias("violates_l"),
                     (F.col("_mx").cast("double")
                      / F.col("class_size"))
                     .alias("majority_share")))
 
 
-def bounded_contribution_counts(events: DataFrame, group_col: str,
-                                user_col: str = "user_id",
-                                cap: int = 5) -> DataFrame:
+def bounded_contribution_counts(events: DataFrame,
+                                group_col: str) -> DataFrame:
     """Per-group event counts with each user's contribution CAPPED at
-    ``cap`` — the sensitivity-bounding step every differential-privacy
+    5 — the sensitivity-bounding step every differential-privacy
     release pipeline runs before adding noise (unbounded, one hyper-
     active user moves a count arbitrarily; capped, the count's
-    sensitivity is exactly ``cap`` and the later noise scale is
+    sensitivity is exactly 5 and the later noise scale is
     knowable), and a robustness win on its own (the bot in the
     engagement numbers). Deterministic — the capping itself is exact
     and engine-reproducible; noise injection is the caller's layer
@@ -510,14 +504,14 @@ def bounded_contribution_counts(events: DataFrame, group_col: str,
 
     Two hash aggregates: (group, user) then group — the exchange
     carries user-group pairs, never rows."""
-    per_user = (events.groupBy(F.col(group_col), F.col(user_col))
+    per_user = (events.groupBy(F.col(group_col), F.col("user_id"))
                 .agg(F.count("*").alias("_c")))
     return (per_user.groupBy(group_col)
             .agg(F.sum("_c").cast("long").alias("raw_count"),
-                 F.sum(F.least(F.col("_c"), F.lit(cap))).cast("long")
+                 F.sum(F.least(F.col("_c"), F.lit(5))).cast("long")
                  .alias("capped_count"),
                  F.count("*").cast("long").alias("n_users"),
-                 F.sum(F.when(F.col("_c") > cap, 1).otherwise(0))
+                 F.sum(F.when(F.col("_c") > 5, 1).otherwise(0))
                  .cast("long").alias("n_capped_users"))
             .withColumn("mass_removed",
                         F.round((F.col("raw_count")
@@ -525,12 +519,9 @@ def bounded_contribution_counts(events: DataFrame, group_col: str,
                                 / F.col("raw_count"), 6)))
 
 
-def dp_laplace_release(events: DataFrame, group_col: str = "event_type",
-                       user_col: str = "user_id", cap: int = 5,
-                       epsilon: float = 1.0,
-                       salt: str = "dp") -> DataFrame:
+def dp_laplace_release(events: DataFrame, epsilon: float = 1.0) -> DataFrame:
     """Laplace-mechanism release over the sensitivity-bounded counts:
-    noisy_count = capped_count + Lap(cap/ε), the ε-DP release step that
+    noisy_count = capped_count + Lap(5/ε), the ε-DP release step that
     :func:`bounded_contribution_counts` prepares for. The noise is
     DERANDOMIZED for oracle parity — the uniform driving the inverse
     CDF comes from the md5 hash of the (salted) group key,
@@ -549,16 +540,16 @@ def dp_laplace_release(events: DataFrame, group_col: str = "event_type",
     aggregates plus a map-only noise projection — nothing new shuffles.
     """
     from ..functions.hashes import md5_hash32
-    b = float(cap) / float(epsilon)
-    g = bounded_contribution_counts(events, group_col, user_col, cap) \
-        .select(group_col, "capped_count")
-    h = md5_hash32(F.concat(F.lit(f"{salt}#"),
-                            F.col(group_col).cast("string")))
+    b = 5.0 / float(epsilon)
+    g = bounded_contribution_counts(events, "event_type") \
+        .select("event_type", "capped_count")
+    h = md5_hash32(F.concat(F.lit("dp#"),
+                            F.col("event_type").cast("string")))
     u = (h.cast("double") + F.lit(0.5)) / F.lit(4294967296.0)
     noise = (F.lit(-b) * F.signum(u - F.lit(0.5))
              * F.log(F.lit(1.0) - F.lit(2.0) * F.abs(u - F.lit(0.5))))
     return g.select(
-        group_col, "capped_count",
-        F.lit(float(cap)).alias("sensitivity"),
+        "event_type", "capped_count",
+        F.lit(5.0).alias("sensitivity"),
         F.lit(float(epsilon)).alias("epsilon"),
         F.round(F.col("capped_count") + noise, 6).alias("noisy_count"))

@@ -213,10 +213,10 @@ def grouped_histogram_quantiles(cells: DataFrame, group_cols: list[str],
             .orderBy(*group_cols, "q"))
 
 
-def winsorized_stats(df: DataFrame, group_col: str, value_col: str,
-                     lo_q: float = 0.05, hi_q: float = 0.95) -> DataFrame:
+def winsorized_stats(df: DataFrame, group_col: str,
+                     value_col: str) -> DataFrame:
     """Per-group winsorized mean: values are CAPPED at the group's
-    [lo_q, hi_q] percentiles before averaging — the robust location
+    [5th, 95th] percentiles before averaging — the robust location
     estimate for heavy-tailed metrics where trimming (dropping the
     tails) throws information away and the raw mean chases outliers.
     Returns (group, n_rows, p_lo, p_hi, n_capped_low, n_capped_high,
@@ -232,8 +232,8 @@ def winsorized_stats(df: DataFrame, group_col: str, value_col: str,
     bit-identical on this data)."""
     v = F.col(value_col).cast("double")
     cuts = (df.groupBy(F.col(group_col).alias("_g"))
-            .agg(F.expr(f"percentile({value_col}, {lo_q})").alias("_plo"),
-                 F.expr(f"percentile({value_col}, {hi_q})").alias("_phi")))
+            .agg(F.expr(f"percentile({value_col}, 0.05)").alias("_plo"),
+                 F.expr(f"percentile({value_col}, 0.95)").alias("_phi")))
     j = df.join(F.broadcast(cuts), F.col(group_col) == F.col("_g"))
     capped = F.least(F.greatest(v, F.col("_plo")), F.col("_phi"))
     dec = lambda c: F.round(c, 6).cast("decimal(28,6)")
@@ -288,12 +288,11 @@ def gini_concentration(df: DataFrame, unit_col: str,
         .alias("gini"))
 
 
-def abc_classification(df: DataFrame, unit_col: str, value_col: str,
-                       a_cut: float = 0.8,
-                       b_cut: float = 0.95) -> DataFrame:
+def abc_classification(df: DataFrame, unit_col: str,
+                       value_col: str) -> DataFrame:
     """Pareto / ABC classification: units ranked by value, classed A
-    while the running cumulative share is below ``a_cut``, B below
-    ``b_cut``, else C — the 80/20 inventory-policy primitive ("A items
+    while the running cumulative share is below 0.8, B below
+    0.95, else C — the 80/20 inventory-policy primitive ("A items
     get daily counts, C items get annual"). Returns one row per unit:
     (unit, value, value_share, cum_share, abc_class, rank).
 
@@ -302,7 +301,7 @@ def abc_classification(df: DataFrame, unit_col: str, value_col: str,
     of the UNIT frame only. The class tests the cumulative share UP TO
     AND INCLUDING the unit, so the unit that crosses a boundary takes
     the lower class — the convention that keeps class A's total share
-    >= a_cut."""
+    >= 0.8."""
     from pyspark.sql import Window
 
     per = (df.groupBy(F.col(unit_col).alias("unit"))
@@ -323,8 +322,8 @@ def abc_classification(df: DataFrame, unit_col: str, value_col: str,
                    F.col("_x").cast("double") / F.col("_t").cast("double"))
     cum = F.when(t_pos,
                  F.col("_cum").cast("double") / F.col("_t").cast("double"))
-    cls = (F.when(cum <= a_cut, "A")
-           .when(cum <= b_cut, "B").otherwise("C"))
+    cls = (F.when(cum <= 0.8, "A")
+           .when(cum <= 0.95, "B").otherwise("C"))
     return ranked.select(
         "unit", F.round(F.col("_x").cast("double"), 2).alias("value"),
         F.round(share, 6).alias("value_share"),

@@ -24,10 +24,9 @@ from pyspark.sql import functions as F
 SECONDS_PER_BUCKET = 3600
 
 
-def range_join(left: DataFrame, right: DataFrame, key: str,
-               left_ts: str, start_ts: str, end_ts: str,
-               bucket_secs: int = SECONDS_PER_BUCKET,
-               how: str = "inner") -> DataFrame:
+def range_join(left: DataFrame, right: DataFrame, key: str, left_ts: str,
+               start_ts: str, end_ts: str,
+               bucket_secs: int = SECONDS_PER_BUCKET) -> DataFrame:
     """Join each ``left`` row to every ``right`` interval containing its
     timestamp: ``key`` equality AND ``start_ts <= left_ts <= end_ts``.
     ``bucket_secs`` must be ≥ the longest interval for the ≤2-bucket
@@ -41,7 +40,7 @@ def range_join(left: DataFrame, right: DataFrame, key: str,
     right_b = (right
                .withColumn("_bucket", F.explode(F.sequence(start_b, end_b))))
 
-    out = (left_b.join(right_b, [key, "_bucket"], how)
+    out = (left_b.join(right_b, [key, "_bucket"], "inner")
            .filter((F.col(left_ts) >= F.col(start_ts)) &
                    (F.col(left_ts) <= F.col(end_ts))))
     return out.drop("_bucket")

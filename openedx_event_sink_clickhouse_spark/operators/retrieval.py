@@ -69,13 +69,12 @@ def _doc_terms(docs: DataFrame, text_col: str, id_col: str,
             .agg(F.count("*").alias("tf")))
 
 
-def inverted_index(docs: DataFrame, text_col: str = "text",
-                   id_col: str = "doc_id") -> DataFrame:
+def inverted_index(docs: DataFrame) -> DataFrame:
     """Token → (df, postings) where postings is the sorted doc-id list.
     Returns (term, doc_freq, postings_csv). The posting list is emitted
     as a comma-joined string — scalar columns survive any downstream
     comparator, and index consumers parse postings anyway."""
-    terms = _doc_terms(docs, text_col, id_col, spread=False)
+    terms = _doc_terms(docs, "text", "doc_id", spread=False)
     return (terms.groupBy("term")
             .agg(F.count("*").alias("doc_freq"),
                  F.concat_ws(",", F.transform(
@@ -83,11 +82,8 @@ def inverted_index(docs: DataFrame, text_col: str = "text",
                      lambda x: x.cast("string"))).alias("postings_csv")))
 
 
-def hybrid_rrf_topk(docs: DataFrame, emb: DataFrame,
-                    query_terms: list[str], probe_id, k: int = 10,
-                    lex_pool: int = 10, vec_pool: int = 20,
-                    rrf_c: int = 60, text_col: str = "text",
-                    id_col: str = "doc_id") -> DataFrame:
+def hybrid_rrf_topk(docs: DataFrame, emb: DataFrame, query_terms: list[str],
+                    probe_id) -> DataFrame:
     """Hybrid retrieval: reciprocal-rank fusion (Cormack et al. 2009) of
     the BM25 lexical ranking and the exact-cosine vector ranking,
     ``rrf = Σ 1/(c + rank)`` over the lists a doc appears in. Returns
@@ -100,21 +96,20 @@ def hybrid_rrf_topk(docs: DataFrame, emb: DataFrame,
     TakeOrderedAndProject), never the corpus; the fusion join is a
     tiny full-outer over the two pools."""
     from .similarity import brute_force_topk
-    lex = bm25_topk(docs, query_terms, k=lex_pool, text_col=text_col,
-                    id_col=id_col)
-    vec = brute_force_topk(emb, probe_id, k=vec_pool)
+    lex = bm25_topk(docs, query_terms, k=10)
+    vec = brute_force_topk(emb, probe_id, k=20)
     wl = Window.orderBy(F.desc("bm25"), "doc_id")
     wv = Window.orderBy(F.desc("cosine_sim"), "vec_id")
     lr = lex.select(F.col("doc_id").alias("lid"),
                     F.row_number().over(wl).alias("lex_rank"))
     vr = vec.select(F.col("vec_id").alias("vid"),
                     F.row_number().over(wv).alias("vec_rank"))
-    rrf = (F.coalesce(F.lit(1.0) / (rrf_c + F.col("lex_rank")), F.lit(0.0))
-           + F.coalesce(F.lit(1.0) / (rrf_c + F.col("vec_rank")), F.lit(0.0)))
+    rrf = (F.coalesce(F.lit(1.0) / (60 + F.col("lex_rank")), F.lit(0.0))
+           + F.coalesce(F.lit(1.0) / (60 + F.col("vec_rank")), F.lit(0.0)))
     return (lr.join(vr, lr.lid == vr.vid, "full_outer")
             .select(F.coalesce("lid", "vid").alias("doc_id"),
                     rrf.alias("_rrf"), "lex_rank", "vec_rank")
-            .orderBy(F.desc("_rrf"), "doc_id").limit(k)
+            .orderBy(F.desc("_rrf"), "doc_id").limit(10)
             .select("doc_id", F.round("_rrf", 6).alias("rrf_score"),
                     "lex_rank", "vec_rank"))
 
@@ -140,9 +135,8 @@ def _bm25_rank(hits: DataFrame, consts: DataFrame, k: int,
             .select("doc_id", F.round("_score", 6).alias("bm25")))
 
 
-def bm25_topk(docs: DataFrame, query_terms: list[str], k: int = 10,
-              text_col: str = "text", id_col: str = "doc_id",
-              k1: float = K1, b: float = B) -> DataFrame:
+def bm25_topk(docs: DataFrame, query_terms: list[str],
+              k: int = 10) -> DataFrame:
     """Okapi BM25 top-k documents for a bag of query terms. Returns
     (doc_id, bm25), ranked desc, ties broken by id.
 
@@ -153,18 +147,16 @@ def bm25_topk(docs: DataFrame, query_terms: list[str], k: int = 10,
     (O(query postings)); df per term and the corpus constants (N, avgdl)
     are tiny aggregates broadcast back in; final ranking is
     TakeOrderedAndProject."""
-    terms = _doc_terms(docs, text_col, id_col, spread=False)
+    terms = _doc_terms(docs, "text", "doc_id", spread=False)
     hits = terms.filter(F.col("term").isin(query_terms))
     consts = docs.select(
         F.count("*").alias("n_docs"),
-        F.avg(F.size(words(F.col(text_col)))).alias("avgdl"))
-    return _bm25_rank(hits, consts, k, k1, b)
+        F.avg(F.size(words(F.col("text")))).alias("avgdl"))
+    return _bm25_rank(hits, consts, k, K1, B)
 
 
-def tfidf_cosine_topk(docs: DataFrame, query_terms: list[str], k: int = 10,
-                      text_col: str = "text",
-                      id_col: str = "doc_id") -> DataFrame:
-    """TF-IDF cosine top-k — the vector-space-model ranking that
+def tfidf_cosine_topk(docs: DataFrame, query_terms: list[str]) -> DataFrame:
+    """TF-IDF cosine top-10 — the vector-space-model ranking that
     complements BM25 (probabilistic) and embedding cosine (semantic):
     w(d,t) = tf · (ln((1+N)/(1+df)) + 1), score = cos(w_d, w_q) with
     the query as a unit-tf bag of its distinct terms. Returns
@@ -191,7 +183,7 @@ def tfidf_cosine_topk(docs: DataFrame, query_terms: list[str], k: int = 10,
     whether computed for candidates or all docs, so filtering to
     candidates (``_dot`` non-null) AFTER the aggregate changes no
     value the oracle sees."""
-    terms = (_doc_terms(docs, text_col, id_col)
+    terms = (_doc_terms(docs, "text", "doc_id")
              .localCheckpoint(eager=False))
     dfs = terms.groupBy("term").agg(F.count("*").alias("df"))
     consts = docs.agg(F.count("*").alias("n_docs"))
@@ -217,13 +209,11 @@ def tfidf_cosine_topk(docs: DataFrame, query_terms: list[str], k: int = 10,
             .select("doc_id",
                     (F.col("_dot") / (F.col("_dn") * F.col("_qn")))
                     .alias("_score"))
-            .orderBy(F.desc("_score"), "doc_id").limit(k)
+            .orderBy(F.desc("_score"), "doc_id").limit(10)
             .select("doc_id", F.round("_score", 6).alias("tfidf_cosine")))
 
 
-def keyword_extraction(docs: DataFrame, k: int = 3,
-                       text_col: str = "text",
-                       id_col: str = "doc_id") -> DataFrame:
+def keyword_extraction(docs: DataFrame, k: int = 3) -> DataFrame:
     """Per-document top-``k`` keywords by tf-idf weight — the tagging /
     faceting / weak-labeling primitive (what a corpus browser shows as
     "about", and a cheap relevance signal for routing). Returns
@@ -239,7 +229,7 @@ def keyword_extraction(docs: DataFrame, k: int = 3,
     against vocab was the one avoidable exchange; pinning the postings
     was ALSO tried and measured a wash — the checkpoint write/read of
     the exploded frame costs what the second tokenize pass saves)."""
-    terms = _doc_terms(docs, text_col, id_col)
+    terms = _doc_terms(docs, "text", "doc_id")
     dfs = terms.groupBy("term").agg(F.count("*").alias("df"))
     consts = docs.agg(F.count("*").alias("n_docs"))
     idf = F.log((F.lit(1.0) + F.col("n_docs")) / (F.lit(1.0) + F.col("df"))) \
@@ -255,8 +245,8 @@ def keyword_extraction(docs: DataFrame, k: int = 3,
             .select("doc_id", "term", "tfidf_weight", "kw_rank"))
 
 
-def keywords_from_index(spark, path: str, k: int = 3) -> DataFrame:
-    """Per-doc top-``k`` tf-idf keywords served from the at-rest
+def keywords_from_index(spark, path: str) -> DataFrame:
+    """Per-doc top-3 tf-idf keywords served from the at-rest
     postings index: (tf, dl) come from the stored postings, df from one
     term-keyed aggregate over them, N from the stats table — no corpus
     tokenize (the live :func:`keyword_extraction` explodes the corpus
@@ -274,7 +264,7 @@ def keywords_from_index(spark, path: str, k: int = 3) -> DataFrame:
                         .alias("tfidf_weight")))
     w = Window.partitionBy("doc_id").orderBy(F.desc("tfidf_weight"), "term")
     return (weighted.withColumn("kw_rank", F.row_number().over(w))
-            .filter(F.col("kw_rank") <= k)
+            .filter(F.col("kw_rank") <= 3)
             .select("doc_id", "term", "tfidf_weight", "kw_rank"))
 
 
@@ -288,12 +278,10 @@ def term_bucket_of(term: str, n_buckets: int) -> int:
     return int(hashlib.md5(term.encode()).hexdigest()[:15], 16) % n_buckets
 
 
-def write_postings_index(docs: DataFrame, path: str, n_buckets: int = 64,
-                         text_col: str = "text",
-                         id_col: str = "doc_id") -> None:
+def write_postings_index(docs: DataFrame, path: str) -> None:
     """Materialize the inverted index AT REST: the exploded
     (doc_id, dl, term, tf) postings written ``partitionBy(term_bucket)``
-    (md5-derived term hash mod ``n_buckets``), plus a 1-row ``stats``
+    (md5-derived term hash mod 64), plus a 1-row ``stats``
     table (n_docs, avgdl) alongside — the retrieval twin of the IVF
     cell layout (``similarity.write_ivf_partitioned``).
 
@@ -302,20 +290,20 @@ def write_postings_index(docs: DataFrame, path: str, n_buckets: int = 64,
     bounded bucket count gives the same file-level win — a query for a
     handful of terms computes their buckets coordinator-side
     (:func:`term_bucket_of`) and the scan carries a PartitionFilter, so
-    at 100 TB the unprobed ~``(n_buckets - |q|)/n_buckets`` of the
+    at 100 TB the unprobed ~``(64 - |q|)/64`` of the
     postings never open; the residual in-bucket filter on ``term``
     pushes down to parquet row groups. Catalog-free (plain directories),
     so any session can serve it; rebuild is an idempotent layout job."""
     from ..functions.hashes import md5_hash64
 
-    terms = _doc_terms(docs, text_col, id_col)
+    terms = _doc_terms(docs, "text", "doc_id")
     (terms.withColumn("term_bucket",
-                      F.pmod(md5_hash64(F.col("term")), F.lit(n_buckets))
+                      F.pmod(md5_hash64(F.col("term")), F.lit(64))
                       .cast("int"))
      .write.partitionBy("term_bucket").mode("overwrite")
      .parquet(f"{path}/postings"))
     (docs.select(F.count("*").alias("n_docs"),
-                 F.avg(F.size(words(F.col(text_col)))).alias("avgdl"))
+                 F.avg(F.size(words(F.col("text")))).alias("avgdl"))
      .write.mode("overwrite").parquet(f"{path}/stats"))
     # tfidf_norms sidecar: each document's tf-idf vector norm, the
     # build-time artifact that makes TRUE-cosine ranking servable from
@@ -340,10 +328,9 @@ def _index_stats(spark, path: str) -> DataFrame:
     return spark.read.parquet(f"{path}/stats").select("n_docs", "avgdl")
 
 
-def bm25_topk_from_index(spark, path: str, query_terms: list[str],
-                         k: int = 10, n_buckets: int = 64,
-                         k1: float = K1, b: float = B) -> DataFrame:
-    """BM25 top-k served from the at-rest postings index
+def bm25_topk_from_index(spark, path: str,
+                         query_terms: list[str]) -> DataFrame:
+    """BM25 top-10 served from the at-rest postings index
     (:func:`write_postings_index`) — the corpus is never tokenized at
     query time. The scan reads ONLY the query terms' hash-bucket
     partitions (PartitionFilter; plan-shape-pinned) with the exact term
@@ -352,17 +339,17 @@ def bm25_topk_from_index(spark, path: str, query_terms: list[str],
     constants from the 1-row ``stats`` table. Identical scores to
     :func:`bm25_topk` on the same corpus — both share
     :func:`_bm25_rank`."""
-    buckets = sorted({term_bucket_of(t, n_buckets) for t in query_terms})
+    buckets = sorted({term_bucket_of(t, 64) for t in query_terms})
     hits = (spark.read.parquet(f"{path}/postings")
             .filter(F.col("term_bucket").isin(buckets))
             .filter(F.col("term").isin(query_terms))
             .select("doc_id", "dl", "term", "tf"))
     consts = _index_stats(spark, path)
-    return _bm25_rank(hits, consts, k, k1, b)
+    return _bm25_rank(hits, consts, 10, K1, B)
 
 
-def tfidf_cosine_from_index(spark, path: str, query_terms: list[str],
-                            k: int = 10, n_buckets: int = 64) -> DataFrame:
+def tfidf_cosine_from_index(spark, path: str,
+                            query_terms: list[str]) -> DataFrame:
     """TF-IDF cosine served from the at-rest index: the query terms'
     hash-bucket partitions provide (tf, df-by-count) for the dot
     product, the ``tfidf_norms`` sidecar provides each candidate's
@@ -372,7 +359,7 @@ def tfidf_cosine_from_index(spark, path: str, query_terms: list[str],
     pays three tokenize passes for the same answer; this is why norms
     belong in the layout). Scores reproduce the scan-time ranking —
     same idf formula, same rounding."""
-    buckets = sorted({term_bucket_of(t, n_buckets) for t in query_terms})
+    buckets = sorted({term_bucket_of(t, 64) for t in query_terms})
     hits = (spark.read.parquet(f"{path}/postings")
             .filter(F.col("term_bucket").isin(buckets))
             .filter(F.col("term").isin(query_terms))
@@ -394,27 +381,24 @@ def tfidf_cosine_from_index(spark, path: str, query_terms: list[str],
             .select("doc_id",
                     (F.col("_dot") / (F.col("doc_norm") * F.col("_qn")))
                     .alias("_score"))
-            .orderBy(F.desc("_score"), "doc_id").limit(k)
+            .orderBy(F.desc("_score"), "doc_id").limit(10)
             .select("doc_id", F.round("_score", 6).alias("tfidf_cosine")))
 
 
-def positional_postings(docs: DataFrame, text_col: str = "text",
-                        id_col: str = "doc_id") -> DataFrame:
+def positional_postings(docs: DataFrame) -> DataFrame:
     """Positional posting rows (doc_id, pos, term), 0-based — the index
     grain phrase and proximity queries need (document-level postings
     can only say "both words occur somewhere"). One posexplode, no
     aggregation: callers reduce after filtering to THEIR terms, so the
     unfiltered explode never shuffles."""
-    toks = words(F.col(text_col))
+    toks = words(F.col("text"))
     return (docs
-            .select(F.col(id_col).alias("doc_id"),
+            .select(F.col("doc_id"),
                     F.posexplode_outer(toks).alias("pos", "term"))
             .filter(F.col("term").isNotNull() & (F.col("term") != "")))
 
 
-def phrase_search(docs: DataFrame, phrase: list[str],
-                  text_col: str = "text",
-                  id_col: str = "doc_id") -> DataFrame:
+def phrase_search(docs: DataFrame, phrase: list[str]) -> DataFrame:
     """Exact consecutive-phrase search via POSITION ALGEBRA over the
     positional postings: a phrase of n terms occurs at start ``s`` iff
     term ``i`` appears at ``s + i`` for every i — so each posting row
@@ -435,7 +419,7 @@ def phrase_search(docs: DataFrame, phrase: list[str],
     spark = docs.sparkSession
     idx = spark.createDataFrame(list(enumerate(phrase)),
                                 "i int, term string")
-    pp = (positional_postings(docs, text_col, id_col)
+    pp = (positional_postings(docs)
           .filter(F.col("term").isin(phrase)))
     votes = (pp.join(F.broadcast(idx), "term")
              .select("doc_id", (F.col("pos") - F.col("i")).alias("start"),
@@ -449,10 +433,8 @@ def phrase_search(docs: DataFrame, phrase: list[str],
                  F.min("start").cast("bigint").alias("first_pos")))
 
 
-def query_likelihood_topk(docs: DataFrame, query_terms: list[str],
-                          k: int = 10, mu: float = 100.0,
-                          text_col: str = "text",
-                          id_col: str = "doc_id") -> DataFrame:
+def query_likelihood_topk(docs: DataFrame, query_terms: list[str], k: int = 10,
+                          mu: float = 100.0) -> DataFrame:
     """Language-model retrieval: Dirichlet-smoothed query likelihood
     (Zhai & Lafferty, SIGIR'01) — the third ranking family beside BM25
     and TF-IDF cosine. score(d) = Σ_t ln((tf + μ·p(t|C)) / (dl + μ))
@@ -468,10 +450,10 @@ def query_likelihood_topk(docs: DataFrame, query_terms: list[str],
     TakeOrderedAndProject. Query terms absent from the corpus drop out
     of the constants frame identically in both engines (their smoothed
     contribution would be -inf for every candidate equally)."""
-    terms = _doc_terms(docs, text_col, id_col, spread=False)
+    terms = _doc_terms(docs, "text", "doc_id", spread=False)
     hits = terms.filter(F.col("term").isin(query_terms))
     total = docs.select(
-        F.sum(F.size(words(F.col(text_col)))).cast("double").alias("c"))
+        F.sum(F.size(words(F.col("text")))).cast("double").alias("c"))
     consts = hits.groupBy("term").agg(
         F.sum("tf").cast("double").alias("cf"))
     cands = hits.select("doc_id", "dl").distinct()

@@ -16,11 +16,11 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def full_scan(df: DataFrame, order_by: str | None = None) -> DataFrame:
+def full_scan(df: DataFrame) -> DataFrame:
     """S1 — full table scan; ordered only when the consumer needs order
     (``Model.objects.all().order_by('pk')``, ``base_sink.py:159-167``).
     Global sort is a range-partition exchange — skip it unless required."""
-    return df.orderBy(order_by) if order_by else df
+    return df
 
 
 def range_scan(df: DataFrame, key: str, start_after) -> DataFrame:

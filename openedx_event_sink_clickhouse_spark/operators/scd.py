@@ -140,12 +140,12 @@ def as_of(history: DataFrame, ts) -> DataFrame:
 
 
 def apply_changelog(base: DataFrame, changes: DataFrame, key_col: str,
-                    seq_cols: list[str], op_col: str = "op",
+                    seq_cols: list[str],
                     update_cols: list[str] | None = None) -> DataFrame:
     """SCD TYPE-1 CDC apply: fold a changelog of upserts/deletes into a
     base snapshot, producing the new snapshot — the "latest state only"
     companion to the type-2 history merge above, and the core of every
-    lakehouse MERGE INTO. ``changes`` rows carry ``op_col`` ∈
+    lakehouse MERGE INTO. ``changes`` rows carry ``op`` ∈
     {'U','D'} plus new values for ``update_cols``; ``seq_cols`` is the
     total order that decides last-wins within a key (make it total —
     include a unique id — or the winner is engine-dependent).
@@ -167,14 +167,14 @@ def apply_changelog(base: DataFrame, changes: DataFrame, key_col: str,
 
     update_cols = update_cols or [
         c for c in changes.columns
-        if c not in {key_col, op_col, *seq_cols}]
+        if c not in {key_col, "op", *seq_cols}]
     w = Window.partitionBy(key_col).orderBy(
         *[F.col(c).desc() for c in seq_cols])
     last = (changes
             .withColumn("_rk", F.row_number().over(w))
             .filter(F.col("_rk") == 1)
             .select(F.col(key_col).alias("_k"),
-                    F.col(op_col).alias("_op"),
+                    F.col("op").alias("_op"),
                     *[F.col(c).alias(f"_new_{c}") for c in update_cols]))
     j = base.join(last, base[key_col] == last["_k"], "full_outer")
     keep = (F.col("_op").isNull()                     # untouched base row

@@ -17,25 +17,23 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 
-def sessionize(events: DataFrame, gap_s: int = 1800,
-               user_col: str = "user_id", ts_col: str = "ts",
-               id_col: str = "event_id") -> DataFrame:
+def sessionize(events: DataFrame) -> DataFrame:
     """Per-event session assignment: a session starts at the first event
     of a user and whenever the gap since the previous event exceeds
-    ``gap_s`` seconds. Adds (is_start, session_seq); ``session_seq``
+    30 minutes. Adds (is_start, session_seq); ``session_seq``
     numbers a user's sessions from 1 in time order.
 
-    Ordering ties on ``ts`` are broken by ``id_col`` so the running
+    Ordering ties on ``ts`` are broken by ``event_id`` so the running
     numbering is total-ordered and reproducible across engines. Gap
     arithmetic is on floor-epoch-seconds (matches DuckDB's
     ``floor(epoch(ts))``); ``unix_timestamp()`` is used instead of
     ``cast(ts as long)`` because it accepts both TIMESTAMP and
     TIMESTAMP_NTZ inputs under Spark 4."""
-    w = Window.partitionBy(user_col).orderBy(ts_col, id_col)
-    prev = F.lag(ts_col).over(w)
+    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
+    prev = F.lag("ts").over(w)
     is_start = F.when(
         prev.isNull()
-        | (F.unix_timestamp(F.col(ts_col)) - F.unix_timestamp(prev) > gap_s),
+        | (F.unix_timestamp(F.col("ts")) - F.unix_timestamp(prev) > 1800),
         1).otherwise(0)
     seq = F.sum("is_start").over(
         w.rowsBetween(Window.unboundedPreceding, 0))
@@ -44,28 +42,22 @@ def sessionize(events: DataFrame, gap_s: int = 1800,
             .withColumn("session_seq", seq))
 
 
-def session_stats(events: DataFrame, gap_s: int = 1800,
-                  user_col: str = "user_id", ts_col: str = "ts",
-                  id_col: str = "event_id",
-                  value_col: str = "value") -> DataFrame:
+def session_stats(events: DataFrame) -> DataFrame:
     """Session-level rollup: one row per (user, session) with event
     count, span, and value sum. Returns (user_id, session_seq, n_events,
     session_start, session_end, duration_s, value_sum)."""
-    s = sessionize(events, gap_s, user_col, ts_col, id_col)
-    return (s.groupBy(user_col, "session_seq")
+    s = sessionize(events)
+    return (s.groupBy("user_id", "session_seq")
             .agg(F.count("*").alias("n_events"),
-                 F.min(ts_col).alias("session_start"),
-                 F.max(ts_col).alias("session_end"),
-                 (F.max(F.unix_timestamp(F.col(ts_col)))
-                  - F.min(F.unix_timestamp(F.col(ts_col))))
+                 F.min("ts").alias("session_start"),
+                 F.max("ts").alias("session_end"),
+                 (F.max(F.unix_timestamp(F.col("ts")))
+                  - F.min(F.unix_timestamp(F.col("ts"))))
                  .alias("duration_s"),
-                 F.round(F.sum(value_col), 6).alias("value_sum")))
+                 F.round(F.sum("value"), 6).alias("value_sum")))
 
 
-def bot_signals(events: DataFrame, user_col: str = "user_id",
-                ts_col: str = "ts", id_col: str = "event_id",
-                type_col: str = "event_type",
-                gap_quantile: float = 0.05) -> DataFrame:
+def bot_signals(events: DataFrame) -> DataFrame:
     """Per-user automation/abuse signals from inter-event timing — the
     trust-and-safety readout that runs before engagement metrics are
     believed: scripted traffic shows inhumanly small and inhumanly
@@ -73,10 +65,10 @@ def bot_signals(events: DataFrame, user_col: str = "user_id",
     rate, the median inter-event gap, the gap IQR (regularity — a
     human's gaps vary, a cron's don't), distinct event types, and an
     ``is_suspect`` flag for users whose median gap sits at or below the
-    population's ``gap_quantile`` cut (a RELATIVE cut: absolute
+    population's 5% cut (a RELATIVE cut: absolute
     thresholds go stale as traffic changes). The cut is DISCRETE — the
     smallest median whose cumulative population share reaches
-    ``gap_quantile`` — i.e. an actual data value, not an interpolated
+    0.05 — i.e. an actual data value, not an interpolated
     one. Returns one row per user with >= 2 events.
 
     Determinism (the r9/r10 driver hash-flake lesson): every output is
@@ -103,8 +95,8 @@ def bot_signals(events: DataFrame, user_col: str = "user_id",
     broadcast against it."""
     from pyspark.sql import Window
 
-    w = Window.partitionBy(user_col).orderBy(ts_col, id_col)
-    us = F.unix_micros(F.col(ts_col))
+    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
+    us = F.unix_micros(F.col("ts"))
     gap = (us - F.lag(us).over(w)).alias("_gap")
 
     def _q4(mult: int) -> F.Column:
@@ -122,13 +114,13 @@ def bot_signals(events: DataFrame, user_col: str = "user_id",
                           CAST(({mult} * (size(_gl) - 1)) DIV 4 AS INT) + 2)
             END""")
 
-    g = (events.select(F.col(user_col), F.col(type_col), us.alias("_us"),
+    g = (events.select(F.col("user_id"), F.col("event_type"), us.alias("_us"),
                        gap)
-         .groupBy(user_col)
+         .groupBy("user_id")
          .agg(F.count("*").cast("long").alias("n_events"),
               F.max("_us").alias("_hi"), F.min("_us").alias("_lo"),
               F.sort_array(F.expr("collect_list(_gap)")).alias("_gl"),
-              F.count_distinct(type_col).cast("long")
+              F.count_distinct("event_type").cast("long")
               .alias("n_event_types"))
          .filter(F.col("n_events") >= 2)
          .withColumn("_med4", _q4(2))
@@ -139,13 +131,13 @@ def bot_signals(events: DataFrame, user_col: str = "user_id",
     # the same double literal cannot flip; med4/cut4 are BIGINTs.
     wq = Window.orderBy("_med4")
     cut = (g.select("_med4", F.cume_dist().over(wq).alias("_cd"))
-           .filter(F.col("_cd") >= gap_quantile)
+           .filter(F.col("_cd") >= 0.05)
            .agg(F.min("_med4").alias("_cut4")))
     span_h = (F.col("_hi") - F.col("_lo")) / F.lit(3.6e9)
     rate = F.when(F.col("_hi") > F.col("_lo"),
                   F.col("n_events") / span_h)
     return (g.crossJoin(F.broadcast(cut))
-            .select(user_col, "n_events",
+            .select("user_id", "n_events",
                     span_h.alias("span_hours"),
                     rate.alias("events_per_hour"),
                     (F.col("_med4") / F.lit(4e6)).alias("median_gap_s"),
@@ -155,8 +147,7 @@ def bot_signals(events: DataFrame, user_col: str = "user_id",
                     .otherwise(0).cast("int").alias("is_suspect")))
 
 
-def dau_mau(events: DataFrame, user_col: str = "user_id",
-            ts_col: str = "ts", period: str = "month") -> DataFrame:
+def dau_mau(events: DataFrame, period: str = "month") -> DataFrame:
     """DAU/MAU (or DAU/WAU with ``period="week"``) stickiness per
     calendar period: average daily active users over period active
     users — the engagement ratio product dashboards lead with (a
@@ -174,11 +165,11 @@ def dau_mau(events: DataFrame, user_col: str = "user_id",
     serves the same ratio approximately. ``date_trunc('week')``
     truncates to ISO Monday in both Spark and DuckDB, so the weekly
     grain is oracle-parity-safe."""
-    d = (events.filter(F.col(user_col).isNotNull())
-         .select(F.date_trunc(period, F.col(ts_col))
+    d = (events.filter(F.col("user_id").isNotNull())
+         .select(F.date_trunc(period, F.col("ts"))
                  .alias("period_start"),
-                 F.date_trunc("day", F.col(ts_col)).alias("day"),
-                 F.col(user_col).alias("_u")))
+                 F.date_trunc("day", F.col("ts")).alias("day"),
+                 F.col("user_id").alias("_u")))
     dau = (d.groupBy("period_start", "day")
            .agg(F.count_distinct("_u").alias("_dau")))
     pau = (d.groupBy("period_start")

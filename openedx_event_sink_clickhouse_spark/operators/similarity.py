@@ -35,27 +35,26 @@ def _probe(emb: DataFrame, probe_id, id_col: str, vec_col: str) -> DataFrame:
                     l2_norm(as_double(F.col(vec_col))).alias("probe_norm")))
 
 
-def brute_force_topk(emb: DataFrame, probe_id, k: int = 20,
-                     id_col: str = "vec_id", vec_col: str = "embedding",
-                     ) -> DataFrame:
+def brute_force_topk(emb: DataFrame, probe_id, k: int = 20) -> DataFrame:
     """Exact cosine top-k vs one probe vector. Broadcast of a single row;
     ranking ties broken by id for determinism. The probe's norm ships in
     the broadcast, so the corpus pass runs two array aggregates per row
     (dot + own norm), not three."""
-    scored = (emb.filter(F.col(id_col) != probe_id)
-              .select(F.col(id_col), as_double(F.col(vec_col)).alias("v"))
-              .crossJoin(F.broadcast(_probe(emb, probe_id, id_col, vec_col)))
-              .select(F.col(id_col),
+    scored = (emb.filter(F.col("vec_id") != probe_id)
+              .select(F.col("vec_id"),
+                      as_double(F.col("embedding")).alias("v"))
+              .crossJoin(F.broadcast(_probe(emb, probe_id, "vec_id",
+                                            "embedding")))
+              .select(F.col("vec_id"),
                       cosine_with_norms(F.col("v"), F.col("probe_vec"),
                                         l2_norm(F.col("v")),
                                         F.col("probe_norm")).alias("_cos")))
-    return (scored.orderBy(F.desc("_cos"), id_col).limit(k)
-            .select(id_col, F.round("_cos", 6).alias("cosine_sim")))
+    return (scored.orderBy(F.desc("_cos"), "vec_id").limit(k)
+            .select("vec_id", F.round("_cos", 6).alias("cosine_sim")))
 
 
 def radius_search(emb: DataFrame, n_probes: int = 10,
-                  threshold: float = 0.3, id_col: str = "vec_id",
-                  vec_col: str = "embedding") -> DataFrame:
+                  threshold: float = 0.3) -> DataFrame:
     """Range (radius) search: EVERY corpus vector within a cosine
     threshold of each probe (ids < ``n_probes``) — the other half of
     vector retrieval next to top-k. Top-k answers "the best k no matter
@@ -76,8 +75,8 @@ def radius_search(emb: DataFrame, n_probes: int = 10,
     Engine determinism: the threshold compares the 6-dp ROUNDED cosine
     (mirrored in the oracle), so the keep/drop boundary is quantized —
     the lesson of the r9 flag-boundary flakes applied at design time."""
-    base = emb.select(F.col(id_col).alias("id"),
-                      as_double(F.col(vec_col)).alias("v"))
+    base = emb.select(F.col("vec_id").alias("id"),
+                      as_double(F.col("embedding")).alias("v"))
     probes = (base.filter(F.col("id") < n_probes)
               .select(F.col("id").alias("probe_id"),
                       F.col("v").alias("pv"),
@@ -85,7 +84,7 @@ def radius_search(emb: DataFrame, n_probes: int = 10,
     corpus = (base.filter(F.col("id") >= n_probes)
               .withColumn("nv", l2_norm(F.col("v"))))
     return (corpus.crossJoin(F.broadcast(probes))
-            .select("probe_id", F.col("id").alias(id_col),
+            .select("probe_id", F.col("id").alias("vec_id"),
                     F.round(cosine_with_norms(F.col("v"), F.col("pv"),
                                               F.col("nv"), F.col("pn")),
                             6).alias("cosine_sim"))
@@ -93,9 +92,7 @@ def radius_search(emb: DataFrame, n_probes: int = 10,
 
 
 def mmr_diversify(emb: DataFrame, probe_id, k: int = 10, pool: int = 20,
-                  lam: float = 0.7, mu: float = 0.3,
-                  id_col: str = "vec_id",
-                  vec_col: str = "embedding") -> DataFrame:
+                  lam: float = 0.7, mu: float = 0.3) -> DataFrame:
     """Maximal Marginal Relevance re-ranking (Carbonell & Goldstein,
     SIGIR 1998): greedily pick ``k`` of the top-``pool`` candidates,
     each step maximizing ``lam·rel(d) − mu·max_{s∈selected} sim(d, s)``
@@ -121,13 +118,13 @@ def mmr_diversify(emb: DataFrame, probe_id, k: int = 10, pool: int = 20,
     are separate literals because ``1 − 0.7`` is not the double
     ``0.3``."""
     spark = emb.sparkSession
-    pool_rows = brute_force_topk(emb, probe_id, pool, id_col, vec_col) \
+    pool_rows = brute_force_topk(emb, probe_id, pool) \
         .collect()
-    rel = {r[id_col]: r["cosine_sim"] for r in pool_rows}
+    rel = {r["vec_id"]: r["cosine_sim"] for r in pool_rows}
     pool_ids = list(rel)
-    base = (emb.filter(F.col(id_col).isin(pool_ids))
-            .select(F.col(id_col).alias("ia"),
-                    as_double(F.col(vec_col)).alias("va")))
+    base = (emb.filter(F.col("vec_id").isin(pool_ids))
+            .select(F.col("vec_id").alias("ia"),
+                    as_double(F.col("embedding")).alias("va")))
     other = base.select(F.col("ia").alias("ib"), F.col("va").alias("vb"))
     sim: dict[tuple, float] = {}
     for r in (base.crossJoin(other).filter(F.col("ia") < F.col("ib"))
@@ -157,22 +154,20 @@ def mmr_diversify(emb: DataFrame, probe_id, k: int = 10, pool: int = 20,
                                    StructType)
     # The id field keeps the INPUT column's type — string ids used to
     # fail at createDataFrame against a hardcoded `long`.
-    schema = StructType([StructField(id_col, emb.schema[id_col].dataType),
+    schema = StructType([StructField("vec_id", emb.schema["vec_id"].dataType),
                          StructField("mmr_rank", IntegerType()),
                          StructField("mmr_score", DoubleType())])
     return spark.createDataFrame(selected, schema)
 
 
 def knn_graph(emb: DataFrame, k: int = 5, num_planes: int = 6,
-              num_tables: int = 2, id_col: str = "vec_id",
-              vec_col: str = "embedding",
               dim: int | None = None) -> DataFrame:
     """Blocked k-NN graph: per vector, its ``k`` nearest SRP-candidate
     neighbors by exact cosine — the graph SemDeDup-style clustering,
     label propagation, and graph-based curation consume. APPROXIMATE by
     construction and documented as such: neighbors come from the SRP
     candidate blocks (a vector whose true neighbor never shares a
-    bucket in any table misses it — recall grows with ``num_tables``,
+    bucket in either of the 2 tables misses it — recall grows with tables,
     the same OR-amplification dial the near-dup pairs use), which is
     what keeps the build O(candidates) instead of the all-pairs O(n²)
     no 100 TB corpus survives. Returns
@@ -185,8 +180,7 @@ def knn_graph(emb: DataFrame, k: int = 5, num_planes: int = 6,
     the exact ordering."""
     pairs = cosine_neardup_pairs(emb, threshold=-1.0,
                                  num_planes=num_planes,
-                                 num_tables=num_tables, id_col=id_col,
-                                 vec_col=vec_col, dim=dim)
+                                 num_tables=2, dim=dim)
     edges = (pairs.select(F.col("id_a").alias("src"),
                           F.col("id_b").alias("dst"), "cosine_sim")
              .unionByName(pairs.select(F.col("id_b").alias("src"),
@@ -195,16 +189,15 @@ def knn_graph(emb: DataFrame, k: int = 5, num_planes: int = 6,
     w = Window.partitionBy("src").orderBy(F.desc("cosine_sim"), "dst")
     return (edges.withColumn("knn_rank", F.row_number().over(w))
             .filter(F.col("knn_rank") <= k)
-            .select(F.col("src").alias(id_col),
+            .select(F.col("src").alias("vec_id"),
                     F.col("dst").alias("neighbor_id"),
                     "cosine_sim", "knn_rank"))
 
 
 def cosine_neardup_pairs(emb: DataFrame, threshold: float,
-                         block_col: str | None = None, id_col: str = "vec_id",
-                         vec_col: str = "embedding", num_planes: int = 6,
-                         num_tables: int = 2, dim: int | None = None,
-                         ) -> DataFrame:
+                         block_col: str | None = None, num_planes: int = 6,
+                         num_tables: int = 2,
+                         dim: int | None = None) -> DataFrame:
     """Embedding near-dup pairs with cosine ≥ threshold, blocked so the
     self-join is per-bucket instead of full cross. Returns
     (id_a, id_b, cosine_sim), id_a < id_b.
@@ -220,8 +213,8 @@ def cosine_neardup_pairs(emb: DataFrame, threshold: float,
     100 TB this is the bucketed form that never goes quadratic; recall is
     tuned by ``num_planes`` (bucket size) × ``num_tables`` (OR tries).
     """
-    v = as_double(F.col(vec_col))
-    base = emb.select(F.col(id_col).alias("id"), v.alias("v"),
+    v = as_double(F.col("embedding"))
+    base = emb.select(F.col("vec_id").alias("id"), v.alias("v"),
                       l2_norm(v).alias("nv"),
                       *( [F.col(block_col).alias("blk")] if block_col else [] ))
     if block_col is not None:
@@ -237,7 +230,7 @@ def cosine_neardup_pairs(emb: DataFrame, threshold: float,
                 .filter(F.col("_cos") >= threshold)
                 .select("id_a", "id_b",
                         F.round("_cos", 6).alias("cosine_sim")))
-    dim = _vec_dim(emb, vec_col, dim)
+    dim = _vec_dim(emb, "embedding", dim)
     tables = [srp_planes(num_planes, dim, table=t) for t in range(num_tables)]
     # Signature dot products are interpreted HOFs — spread small
     # single-split inputs across cores before the CPU-heavy pass.
@@ -318,9 +311,7 @@ def _assign(base: DataFrame, cents: DataFrame) -> DataFrame:
             .select("id", "v", "nv", F.col("cid").alias("centroid")))
 
 
-def ivf_assign(emb: DataFrame, n_centroids: int = 16, id_col: str = "vec_id",
-               vec_col: str = "embedding",
-               centroids: list[list[float]] | None = None) -> DataFrame:
+def ivf_assign(emb: DataFrame, n_centroids: int = 16) -> DataFrame:
     """Assign every vector to its max-cosine coarse centroid. Returns
     (id, v, nv, centroid).
 
@@ -329,14 +320,12 @@ def ivf_assign(emb: DataFrame, n_centroids: int = 16, id_col: str = "vec_id",
     computed at ingest and stored as a partition column — queries then
     prune to one cell for free.
     """
-    base = _vec_base(emb, id_col, vec_col)
-    return _assign(base, _centroid_frame(base, n_centroids, centroids))
+    base = _vec_base(emb, "vec_id", "embedding")
+    return _assign(base, _centroid_frame(base, n_centroids, None))
 
 
-def cell_balanced_sample(emb: DataFrame, cap: int, n_centroids: int = 16,
-                         id_col: str = "vec_id", vec_col: str = "embedding",
-                         centroids: list[list[float]] | None = None
-                         ) -> DataFrame:
+def cell_balanced_sample(emb: DataFrame, cap: int,
+                         n_centroids: int = 16) -> DataFrame:
     """Density-balanced corpus sampling over coarse embedding cells —
     the cluster-pruning step of an LLM data pipeline (SSL-prototypes /
     DeDup-then-balance style: dense regions of embedding space are
@@ -355,26 +344,23 @@ def cell_balanced_sample(emb: DataFrame, cap: int, n_centroids: int = 16,
     partition column (``write_ivf_partitioned``) and the rank window
     runs per cell-partition; ``cap`` bounds every cell's output, so the
     result is ≤ cap × n_centroids rows regardless of corpus size."""
-    assigned = ivf_assign(emb, n_centroids, id_col, vec_col, centroids)
+    assigned = ivf_assign(emb, n_centroids)
     w = (Window.partitionBy("centroid")
          .orderBy(md5_hash32(F.col("id")), F.col("id")))
     return (assigned.select("id", "centroid")
             .withColumn("cell_rank", F.row_number().over(w))
             .filter(F.col("cell_rank") <= cap)
-            .select(F.col("id").alias(id_col), "centroid", "cell_rank"))
+            .select(F.col("id").alias("vec_id"), "centroid", "cell_rank"))
 
 
 def cell_semantic_dedup(emb: DataFrame, threshold: float = 0.35,
-                        n_cells: int = 16, id_col: str = "vec_id",
-                        vec_col: str = "embedding",
-                        centroids: list[list[float]] | None = None
-                        ) -> DataFrame:
+                        n_cells: int = 16) -> DataFrame:
     """CELL-BLOCKED semantic deduplication — the paper-faithful SemDeDup
     shape (Abbas et al. 2023: k-means cells, pairs mined per cluster):
     assign every embedding to a coarse
     cell, mine near-duplicate pairs ONLY within cells, and keep one
     representative per duplicate relation. Returns the survivors as
-    (``id_col``, cell).
+    (vec_id, cell).
 
     Drop rule: a vector is dropped iff some SAME-CELL vector with a
     smaller id has cosine ≥ ``threshold`` to it — the deterministic
@@ -394,7 +380,7 @@ def cell_semantic_dedup(emb: DataFrame, threshold: float = 0.35,
     to the deterministic first-``n_cells`` model so an oracle can
     replicate the partitioning; pass ``kmeans_centroids`` output for
     the production fit."""
-    assigned = ivf_assign(emb, n_cells, id_col, vec_col, centroids)
+    assigned = ivf_assign(emb, n_cells)
     sim = cosine_with_norms(F.col("a.v"), F.col("b.v"),
                             F.col("a.nv"), F.col("b.nv"))
     a, b = assigned.alias("a"), assigned.alias("b")
@@ -403,15 +389,11 @@ def cell_semantic_dedup(emb: DataFrame, threshold: float = 0.35,
                .filter(sim >= threshold)
                .select(F.col("b.id").alias("id")).distinct())
     return (assigned.join(dropped, "id", "left_anti")
-            .select(F.col("id").alias(id_col),
+            .select(F.col("id").alias("vec_id"),
                     F.col("centroid").alias("cell")))
 
 
-def cell_recall_report(emb: DataFrame, threshold: float = 0.35,
-                       n_cells: int = 16, id_col: str = "vec_id",
-                       vec_col: str = "embedding",
-                       centroids: list[list[float]] | None = None
-                       ) -> DataFrame:
+def cell_recall_report(emb: DataFrame, threshold: float = 0.35) -> DataFrame:
     """Pair-recall certification of CELL blocking against the EXACT
     all-pairs cosine ground truth — the SemDeDup twin of
     ``dedup.lsh_recall_report``: before a 100 TB deployment trusts
@@ -444,7 +426,7 @@ def cell_recall_report(emb: DataFrame, threshold: float = 0.35,
     # core (measured 30s -> ~2s at sf0.1). Per-pair cosines and integer
     # counts are partitioning-invariant, so the spread is bit-free.
     from .dedup import ensure_min_parallelism
-    base = ensure_min_parallelism(_vec_base(emb, id_col, vec_col))
+    base = ensure_min_parallelism(_vec_base(emb, "vec_id", "embedding"))
     sim = cosine_with_norms(F.col("a.v"), F.col("b.v"),
                             F.col("a.nv"), F.col("b.nv"))
     a, b = base.alias("a"), base.alias("b")
@@ -452,7 +434,7 @@ def cell_recall_report(emb: DataFrame, threshold: float = 0.35,
              .filter(sim >= threshold)
              .select(F.col("a.id").alias("id_a"),
                      F.col("b.id").alias("id_b")))
-    assigned = ivf_assign(emb, n_cells, id_col, vec_col, centroids)
+    assigned = ivf_assign(emb, 16)
     ca, cb = assigned.alias("a"), assigned.alias("b")
     cand = (ca.join(cb, (F.col("a.centroid") == F.col("b.centroid"))
                         & (F.col("a.id") < F.col("b.id")))
@@ -538,15 +520,13 @@ def kmeans_centroids(emb: DataFrame, k: int = 16, n_iter: int = 5,
         base.unpersist()
 
 
-def ivf_topk(emb: DataFrame, probe_id, k: int = 20, n_centroids: int = 16,
-             nprobe: int = 1, id_col: str = "vec_id",
-             vec_col: str = "embedding",
+def ivf_topk(emb: DataFrame, probe_id, k: int = 20, nprobe: int = 1,
              centroids: list[list[float]] | None = None) -> DataFrame:
     """IVF search: exact cosine top-k within the ``nprobe`` centroid cells
-    nearest the probe. Scans ~nprobe/n_centroids of the corpus; recall
+    nearest the probe. Scans ~nprobe/16 of the corpus; recall
     rises with nprobe (and with k-means centroids via ``centroids``)."""
-    base = _vec_base(emb, id_col, vec_col)
-    cents = _centroid_frame(base, n_centroids, centroids)
+    base = _vec_base(emb, "vec_id", "embedding")
+    cents = _centroid_frame(base, 16, centroids)
     assigned = _assign(base, cents)
     probe = (base.filter(F.col("id") == probe_id)
              .select(F.col("v").alias("probe_vec"),
@@ -562,27 +542,25 @@ def ivf_topk(emb: DataFrame, probe_id, k: int = 20, n_centroids: int = 16,
     cand = (assigned.join(F.broadcast(cells), "centroid")
             .filter(F.col("id") != probe_id))
     scored = cand.select(
-        F.col("id").alias(id_col),
+        F.col("id").alias("vec_id"),
         cosine_with_norms(F.col("v"), F.col("probe_vec"),
                           F.col("nv"), F.col("probe_norm")).alias("_cos"))
-    return (scored.orderBy(F.desc("_cos"), id_col).limit(k)
-            .select(id_col, F.round("_cos", 6).alias("cosine_sim")))
+    return (scored.orderBy(F.desc("_cos"), "vec_id").limit(k)
+            .select("vec_id", F.round("_cos", 6).alias("cosine_sim")))
 
 
-def write_ivf_partitioned(emb: DataFrame, path: str, n_centroids: int = 16,
-                          id_col: str = "vec_id",
-                          vec_col: str = "embedding",
+def write_ivf_partitioned(emb: DataFrame, path: str,
                           centroids: list[list[float]] | None = None) -> None:
     """Materialize the corpus PARTITIONED BY its IVF cell — the at-rest
     layout behind 'assignment is computed at ingest and stored as a
     partition column' (ivf_assign's scale story, made real). Each cell
     becomes a parquet partition directory, so a probe that searches
-    ``nprobe`` cells prunes the other ``n_centroids - nprobe`` at FILE
+    ``nprobe`` cells prunes the other ``16 - nprobe`` at FILE
     level: the bytes are never opened, which is the whole point of IVF
     on a 100 TB corpus. Idempotent layout job, like
     ``write_quantized_codes``."""
-    base = _vec_base(emb, id_col, vec_col)
-    assigned = _assign(base, _centroid_frame(base, n_centroids, centroids))
+    base = _vec_base(emb, "vec_id", "embedding")
+    assigned = _assign(base, _centroid_frame(base, 16, centroids))
     (assigned.select(F.col("id"), F.col("v"),
                      F.col("centroid").alias("cell"))
      .write.partitionBy("cell").mode("overwrite").parquet(path))
@@ -590,13 +568,12 @@ def write_ivf_partitioned(emb: DataFrame, path: str, n_centroids: int = 16,
 
 def ivf_topk_partitioned(spark, path: str, probe_vec: list[float],
                          centroids: list[list[float]], k: int = 20,
-                         nprobe: int = 1,
                          exclude_id=None) -> DataFrame:
     """IVF search against a cell-partitioned corpus
     (:func:`write_ivf_partitioned`): the coordinator ranks cells by
     probe-to-centroid cosine in plain Python (the centroid model is
     k×dim — coordinator-resident by design, as in every ANN system),
-    then the scan filters ``cell IN (top nprobe)`` — a PARTITION filter,
+    then the scan filters ``cell IN (top 1)`` — a PARTITION filter,
     so Spark lists and reads only those directories. Exact cosine top-k
     within the probed cells; same results as :func:`ivf_topk` with the
     same centroid model."""
@@ -610,7 +587,7 @@ def ivf_topk_partitioned(spark, path: str, probe_vec: list[float],
         return d / (cn * pn) if cn and pn else 0.0
 
     ranked = sorted(enumerate(centroids), key=lambda t: (-cos(t[1]), t[0]))
-    cells = [cid for cid, _ in ranked[:nprobe]]
+    cells = [cid for cid, _ in ranked[:1]]
 
     body = ",".join(f"{float(x)!r}D" for x in probe_vec)
     pv = F.expr(f"array({body})")
@@ -625,34 +602,28 @@ def ivf_topk_partitioned(spark, path: str, probe_vec: list[float],
             .select("vec_id", F.round("_cos", 6).alias("cosine_sim")))
 
 
-def ivf_incremental_assign(batch: DataFrame, model: DataFrame,
-                           n_centroids: int = 16, id_col: str = "vec_id",
-                           vec_col: str = "embedding",
-                           centroids: list[list[float]] | None = None
-                           ) -> DataFrame:
+def ivf_incremental_assign(batch: DataFrame, model: DataFrame) -> DataFrame:
     """Assign an ARRIVING embedding batch against the EXISTING centroid
     model — the index-maintenance twin of
     :func:`~..operators.dedup.incremental_exact_dedup`: the at-rest IVF
     layout stays fresh without refitting or re-scanning the corpus.
     Returns (vec_id, cell).
 
-    ``model`` is the frame holding the model vectors when ``centroids``
-    is None (the deterministic first-``n_centroids``-by-id convention,
-    so the assignment is oracle-checkable); pass the k-means model for
-    production. Either way the batch is the only thing scanned — the
+    ``model`` is the frame holding the model vectors (the deterministic
+    first-16-by-id convention, so the assignment is oracle-checkable).
+    The batch is the only thing scanned — the
     model rides a k×dim broadcast, so daily ingest costs O(batch), not
     O(corpus)."""
-    base = _vec_base(batch, id_col, vec_col)
-    cents = _centroid_frame(_vec_base(model, id_col, vec_col),
-                            n_centroids, centroids)
+    base = _vec_base(batch, "vec_id", "embedding")
+    cents = _centroid_frame(_vec_base(model, "vec_id", "embedding"), 16,
+                            None)
     return (_assign(base, cents)
-            .select(F.col("id").alias(id_col),
+            .select(F.col("id").alias("vec_id"),
                     F.col("centroid").alias("cell")))
 
 
 def multi_probe_topk(emb: DataFrame, n_probes: int = 10, k: int = 5,
-                     id_col: str = "vec_id", vec_col: str = "embedding",
-                     ) -> DataFrame:
+                     vec_col: str = "embedding") -> DataFrame:
     """Batch ANN workload: exact cosine top-k for EVERY probe in a probe
     set (ids < n_probes) against the rest of the corpus. Returns
     (probe_id, vec_id, rank, cosine_sim).
@@ -664,7 +635,7 @@ def multi_probe_topk(emb: DataFrame, n_probes: int = 10, k: int = 5,
     (probe_id)-partitioned scored candidates. At 100 TB with millions of
     probes this flips to the IVF/LSH-bucketed plans; the window shape is
     unchanged."""
-    base = emb.select(F.col(id_col).alias("id"),
+    base = emb.select(F.col("vec_id").alias("id"),
                       as_double(F.col(vec_col)).alias("v"))
     probes = (base.filter(F.col("id") < n_probes)
               .select(F.col("id").alias("probe_id"),
@@ -673,14 +644,14 @@ def multi_probe_topk(emb: DataFrame, n_probes: int = 10, k: int = 5,
     corpus = (base.filter(F.col("id") >= n_probes)
               .withColumn("nv", l2_norm(F.col("v"))))
     scored = (corpus.crossJoin(F.broadcast(probes))
-              .select("probe_id", F.col("id").alias(id_col),
+              .select("probe_id", F.col("id").alias("vec_id"),
                       cosine_with_norms(F.col("v"), F.col("pv"),
                                         F.col("nv"), F.col("pn"))
                       .alias("_cos")))
-    w = Window.partitionBy("probe_id").orderBy(F.desc("_cos"), F.col(id_col))
+    w = Window.partitionBy("probe_id").orderBy(F.desc("_cos"), F.col("vec_id"))
     return (scored.withColumn("rank", F.row_number().over(w))
             .filter(F.col("rank") <= k)
-            .select("probe_id", id_col, "rank",
+            .select("probe_id", "vec_id", "rank",
                     F.round("_cos", 6).alias("cosine_sim")))
 
 
@@ -786,9 +757,7 @@ def quantized_codes_table(emb: DataFrame, id_col: str = "vec_id",
                            * F.col("sum_c2").cast("double")).alias("dn")))
 
 
-def write_quantized_codes(emb: DataFrame, path: str,
-                          id_col: str = "vec_id",
-                          vec_col: str = "embedding") -> None:
+def write_quantized_codes(emb: DataFrame, path: str) -> None:
     """Materialize the uint8 codes (+ scalar stats) as a slim parquet
     table — the at-rest layout that makes the quantized scan actually
     cheap: the coarse pass reads THIS table only, never the
@@ -818,7 +787,7 @@ def write_quantized_codes(emb: DataFrame, path: str,
                 lambda a: np.asarray(a, dtype=np.uint8).tobytes()))
             yield out
 
-    (quantized_codes_table(emb, id_col, vec_col)
+    (quantized_codes_table(emb, "vec_id", "embedding")
      .mapInPandas(pack, schema)
      .write.mode("overwrite").parquet(path))
 
@@ -1142,8 +1111,6 @@ def quantized_cosine_topk(emb: DataFrame, probe_id, k: int = 10,
 
 def pq_codebooks_from_first_k(emb: DataFrame, m: int = 8,
                               n_centroids: int = 16,
-                              id_col: str = "vec_id",
-                              vec_col: str = "embedding",
                               dim: int | None = None
                               ) -> list[list[list[float]]]:
     """Deterministic product-quantization codebooks: subspace ``s``'s
@@ -1154,12 +1121,12 @@ def pq_codebooks_from_first_k(emb: DataFrame, m: int = 8,
     model, like every ANN codebook); swap in per-subspace k-means
     (``kmeans_centroids`` over sliced frames) for production quality —
     the search path is identical."""
-    dim = _vec_dim(emb, vec_col, dim)
+    dim = _vec_dim(emb, "embedding", dim)
     if dim % m:
         raise ValueError(f"dim {dim} not divisible by m={m}")
     sub = dim // m
-    rows = (emb.filter(F.col(id_col) < n_centroids).orderBy(id_col)
-            .select(vec_col).collect())
+    rows = (emb.filter(F.col("vec_id") < n_centroids).orderBy("vec_id")
+            .select("embedding").collect())
     vecs = [[float(x) for x in r[0]] for r in rows]
     return [[v[s * sub:(s + 1) * sub] for v in vecs] for s in range(m)]
 
@@ -1249,7 +1216,6 @@ def _adc_score_expr(pv: list[float],
 def pq_topk(emb: DataFrame, probe_vec: list[float],
             codebooks: list[list[list[float]]], k: int = 10,
             rescore_factor: int = 5, exclude_id=None,
-            id_col: str = "vec_id", vec_col: str = "embedding",
             codes: DataFrame | None = None) -> DataFrame:
     """PQ search with asymmetric distance computation (ADC) + exact
     rescore: the coarse pass scores every vector from its ``m`` CODES
@@ -1271,23 +1237,20 @@ def pq_topk(emb: DataFrame, probe_vec: list[float],
     pv = [float(x) for x in probe_vec]
     qcos, qn = _adc_score_expr(pv, codebooks)
     if codes is None:
-        codes = pq_encode(emb, codebooks, id_col, vec_col)
+        codes = pq_encode(emb, codebooks, "vec_id", "embedding")
     coarse = codes
     if exclude_id is not None:
         coarse = coarse.filter(F.col("id") != exclude_id)
     shortlist = (coarse.select("id", F.expr(qcos).alias("_qcos"))
                  .orderBy(F.desc("_qcos"), "id")
                  .limit(rescore_factor * k)
-                 .select(F.col("id").alias(id_col)))
+                 .select(F.col("id").alias("vec_id")))
     return _rescore_with_literal_probe(emb, shortlist, pv, qn, k,
-                                       id_col, vec_col)
+                                       "vec_id", "embedding")
 
 
 def write_ivfpq_codes(emb: DataFrame, path: str,
-                      codebooks: list[list[list[float]]],
-                      n_centroids: int = 16, id_col: str = "vec_id",
-                      vec_col: str = "embedding",
-                      centroids: list[list[float]] | None = None) -> None:
+                      codebooks: list[list[list[float]]]) -> None:
     """Materialize the IVF-PQ index: every vector's ``m`` one-byte PQ
     codes, PARTITIONED BY its coarse IVF cell — the composed at-rest
     form of :func:`write_ivf_partitioned` (cell layout, full vectors)
@@ -1296,8 +1259,8 @@ def write_ivfpq_codes(emb: DataFrame, path: str,
     cells opens only those directories (partition pruning) and reads
     ~m bytes per resident vector — the two compressions multiply.
     Idempotent layout job like the other index writers."""
-    base = _vec_base(emb, id_col, vec_col)
-    assigned = _assign(base, _centroid_frame(base, n_centroids, centroids))
+    base = _vec_base(emb, "vec_id", "embedding")
+    assigned = _assign(base, _centroid_frame(base, 16, None))
     coded = pq_encode(
         assigned.select("id", "v", F.col("centroid").alias("cell")),
         codebooks, id_col="id", vec_col="v", keep=("cell",))
@@ -1306,18 +1269,15 @@ def write_ivfpq_codes(emb: DataFrame, path: str,
 
 def ivfpq_topk_at_rest(spark, path: str, probe_vec: list[float],
                        centroids: list[list[float]],
-                       codebooks: list[list[list[float]]],
-                       emb: DataFrame, k: int = 10, nprobe: int = 4,
-                       rescore_factor: int = 5, exclude_id=None,
-                       id_col: str = "vec_id",
-                       vec_col: str = "embedding") -> DataFrame:
+                       codebooks: list[list[list[float]]], emb: DataFrame,
+                       exclude_id=None) -> DataFrame:
     """IVF-PQ search against a :func:`write_ivfpq_codes` index: the
     coordinator ranks cells by probe↔centroid cosine (k×dim model,
     plain Python — the standard ANN coordinator footprint), the scan
-    reads ONLY the top-``nprobe`` cell directories (partition filter —
+    reads ONLY the top-4 cell directories (partition filter —
     plan-pinned), ADC scores residents from their codes alone via the
     shared :func:`_adc_score_expr` literal LUT, and the
-    ``rescore_factor·k`` shortlist re-ranks exactly on full-precision
+    5·10 shortlist re-ranks exactly on full-precision
     vectors. Returns (vec_id, cosine_sim) with exact scores.
 
     IO per probe = nprobe/n_centroids of the corpus × m bytes per
@@ -1336,7 +1296,7 @@ def ivfpq_topk_at_rest(spark, path: str, probe_vec: list[float],
         return d / (cn * pn) if cn and pn else 0.0
 
     ranked = sorted(enumerate(centroids), key=lambda t: (-cos(t[1]), t[0]))
-    cells = [cid for cid, _ in ranked[:nprobe]]
+    cells = [cid for cid, _ in ranked[:4]]
 
     qcos, qn = _adc_score_expr(pv, codebooks)
     codes = spark.read.parquet(path).filter(F.col("cell").isin(cells))
@@ -1344,17 +1304,16 @@ def ivfpq_topk_at_rest(spark, path: str, probe_vec: list[float],
         codes = codes.filter(F.col("id") != exclude_id)
     shortlist = (codes.select("id", F.expr(qcos).alias("_qcos"))
                  .orderBy(F.desc("_qcos"), "id")
-                 .limit(rescore_factor * k)
-                 .select(F.col("id").alias(id_col)))
-    return _rescore_with_literal_probe(emb, shortlist, pv, qn, k,
-                                       id_col, vec_col)
+                 .limit(5 * 10)
+                 .select(F.col("id").alias("vec_id")))
+    return _rescore_with_literal_probe(emb, shortlist, pv, qn, 10,
+                                       "vec_id", "embedding")
 
 
 def ivfpq_recall(spark, path: str, centroids: list[list[float]],
                  codebooks: list[list[list[float]]], emb: DataFrame,
                  n_probes: int = 8, k: int = 10, nprobe: int = 4,
-                 rescore_factor: int = 5, id_col: str = "vec_id",
-                 vec_col: str = "embedding") -> DataFrame:
+                 rescore_factor: int = 5) -> DataFrame:
     """Measured recall@k of the at-rest IVF-PQ index against the exact
     scan, per probe — the certification number a deployment reads
     before trusting the doubly-compressed path, completing the
@@ -1376,9 +1335,9 @@ def ivfpq_recall(spark, path: str, centroids: list[list[float]],
     import math
     from functools import reduce
 
-    id_type = emb.schema[id_col].dataType
-    probe_rows = (emb.filter(F.col(id_col) < n_probes)
-                  .select(id_col, vec_col).orderBy(id_col).collect())
+    id_type = emb.schema["vec_id"].dataType
+    probe_rows = (emb.filter(F.col("vec_id") < n_probes)
+                  .select("vec_id", "embedding").orderBy("vec_id").collect())
     parts = []
     for row in probe_rows:
         pid, pv = row[0], [float(x) for x in row[1]]
@@ -1398,16 +1357,16 @@ def ivfpq_recall(spark, path: str, centroids: list[list[float]],
         shortlist = (codes.select("id", F.expr(qcos).alias("_qcos"))
                      .orderBy(F.desc("_qcos"), "id")
                      .limit(rescore_factor * k)
-                     .select(F.col("id").alias(id_col)))
+                     .select(F.col("id").alias("vec_id")))
         topk = _rescore_with_literal_probe(emb, shortlist, pv, qn, k,
-                                           id_col, vec_col)
+                                           "vec_id", "embedding")
         parts.append(topk.select(
-            F.lit(pid).cast(id_type).alias("probe_id"), F.col(id_col)))
+            F.lit(pid).cast(id_type).alias("probe_id"), F.col("vec_id")))
     approx = reduce(DataFrame.unionByName, parts)
-    exact = multi_probe_topk(emb, n_probes, k, id_col, vec_col)
+    exact = multi_probe_topk(emb, n_probes, k, "embedding")
     hit = approx.withColumn("_hit", F.lit(1))
-    return (exact.select("probe_id", id_col)
-            .join(F.broadcast(hit), ["probe_id", id_col], "left")
+    return (exact.select("probe_id", "vec_id")
+            .join(F.broadcast(hit), ["probe_id", "vec_id"], "left")
             .groupBy("probe_id")
             .agg(F.count("_hit").alias("n_hits"))
             .select("probe_id", "n_hits",
@@ -1415,11 +1374,9 @@ def ivfpq_recall(spark, path: str, centroids: list[list[float]],
                     .alias("recall_at_k")))
 
 
-def hard_negative_mining(emb: DataFrame, n_probes: int = 10, k: int = 5,
-                         max_sim: float = 0.9, id_col: str = "vec_id",
-                         vec_col: str = "embedding") -> DataFrame:
+def hard_negative_mining(emb: DataFrame, max_sim: float = 0.9) -> DataFrame:
     """Hard-negative mining for contrastive training: for every probe
-    (ids < n_probes), the ``k`` MOST similar corpus vectors whose cosine
+    (ids < 10), the 5 MOST similar corpus vectors whose cosine
     stays BELOW ``max_sim`` — near the decision boundary, but not
     near-duplicates (those train nothing and leak label noise). Returns
     (probe_id, vec_id, rank, cosine_sim).
@@ -1432,28 +1389,26 @@ def hard_negative_mining(emb: DataFrame, n_probes: int = 10, k: int = 5,
     the training batch (small) and the scan parallelizes over the
     corpus; with millions of probes this flips to the IVF/LSH-bucketed
     candidate plans like every other probe workload here."""
-    base = _vec_base(emb, id_col, vec_col)
-    probes = (base.filter(F.col("id") < n_probes)
+    base = _vec_base(emb, "vec_id", "embedding")
+    probes = (base.filter(F.col("id") < 10)
               .select(F.col("id").alias("probe_id"),
                       F.col("v").alias("pv"), F.col("nv").alias("pn")))
-    corpus = base.filter(F.col("id") >= n_probes)
+    corpus = base.filter(F.col("id") >= 10)
     scored = (corpus.crossJoin(F.broadcast(probes))
-              .select("probe_id", F.col("id").alias(id_col),
+              .select("probe_id", F.col("id").alias("vec_id"),
                       cosine_with_norms(F.col("v"), F.col("pv"),
                                         F.col("nv"), F.col("pn"))
                       .alias("_cos"))
               .filter(F.col("_cos") < max_sim))
-    w = Window.partitionBy("probe_id").orderBy(F.desc("_cos"), F.col(id_col))
+    w = Window.partitionBy("probe_id").orderBy(F.desc("_cos"), F.col("vec_id"))
     return (scored.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-            .select("probe_id", id_col, "rank",
+            .filter(F.col("rank") <= 5)
+            .select("probe_id", "vec_id", "rank",
                     F.round("_cos", 6).alias("cosine_sim")))
 
 
-def srp_bucket_topk(emb: DataFrame, probe_id, k: int = 20,
-                    num_planes: int = 8, num_tables: int = 1,
-                    id_col: str = "vec_id", vec_col: str = "embedding",
-                    dim: int | None = None) -> DataFrame:
+def srp_bucket_topk(emb: DataFrame, probe_id, k: int = 20, num_planes: int = 8,
+                    num_tables: int = 1, dim: int | None = None) -> DataFrame:
     """LSH-bucketed ANN: exact cosine top-k among vectors sharing the
     probe's sign-random-projection bucket in ANY of ``num_tables``
     independent plane sets (OR-amplification). ~num_tables/2^num_planes
@@ -1463,10 +1418,10 @@ def srp_bucket_topk(emb: DataFrame, probe_id, k: int = 20,
     One map pass computes all tables' signatures; the probe row (with its
     bucket array) broadcasts, and the candidate filter is a positional
     any-match over the two bucket arrays — no shuffle at any scale."""
-    dim = _vec_dim(emb, vec_col, dim)
+    dim = _vec_dim(emb, "embedding", dim)
     tables = [srp_planes(num_planes, dim, table=t) for t in range(num_tables)]
-    v = as_double(F.col(vec_col))
-    base = emb.select(F.col(id_col).alias("id"), v.alias("v"),
+    v = as_double(F.col("embedding"))
+    base = emb.select(F.col("vec_id").alias("id"), v.alias("v"),
                       l2_norm(v).alias("nv"))
     sigs = base.withColumn(
         "buckets", F.array(*[srp_signature(F.col("v"), p) for p in tables]))
@@ -1480,18 +1435,16 @@ def srp_bucket_topk(emb: DataFrame, probe_id, k: int = 20,
         lambda x: x)
     cell = (sigs.join(F.broadcast(probe),
                       any_match & (F.col("id") != probe_id)))
-    scored = cell.select(F.col("id").alias(id_col),
+    scored = cell.select(F.col("id").alias("vec_id"),
                          cosine_with_norms(F.col("v"), F.col("probe_vec"),
                                            F.col("nv"), F.col("probe_norm"))
                          .alias("_cos"))
-    return (scored.orderBy(F.desc("_cos"), id_col).limit(k)
-            .select(id_col, F.round("_cos", 6).alias("cosine_sim")))
+    return (scored.orderBy(F.desc("_cos"), "vec_id").limit(k)
+            .select("vec_id", F.round("_cos", 6).alias("cosine_sim")))
 
 
 def ivf_batch_topk(emb: DataFrame, n_probes: int = 10, k: int = 10,
-                   n_centroids: int = 16, nprobe: int = 2,
-                   id_col: str = "vec_id", vec_col: str = "embedding",
-                   centroids: list[list[float]] | None = None) -> DataFrame:
+                   n_centroids: int = 16, nprobe: int = 2) -> DataFrame:
     """IVF search for a whole probe SET (ids < ``n_probes``) at once:
     each probe scans only its ``nprobe`` nearest centroid cells of the
     corpus (ids ≥ ``n_probes``). Returns (probe_id, vec_id, rank,
@@ -1505,8 +1458,8 @@ def ivf_batch_topk(emb: DataFrame, n_probes: int = 10, k: int = 10,
     corpus never cross-joins the probe set, so cost scales with
     nprobe/n_centroids of the corpus per probe, not with corpus×probes.
     """
-    base = _vec_base(emb, id_col, vec_col)
-    cents = _centroid_frame(base, n_centroids, centroids)
+    base = _vec_base(emb, "vec_id", "embedding")
+    cents = _centroid_frame(base, n_centroids, None)
     corpus = _assign(base.filter(F.col("id") >= n_probes), cents)
     probes = (base.filter(F.col("id") < n_probes)
               .select(F.col("id").alias("probe_id"),
@@ -1523,21 +1476,19 @@ def ivf_batch_topk(emb: DataFrame, n_probes: int = 10, k: int = 10,
              .select("probe_id", "pv", "pn",
                      F.col("cid").alias("centroid")))
     scored = (corpus.join(F.broadcast(cells), "centroid")
-              .select("probe_id", F.col("id").alias(id_col),
+              .select("probe_id", F.col("id").alias("vec_id"),
                       cosine_with_norms(F.col("v"), F.col("pv"),
                                         F.col("nv"), F.col("pn"))
                       .alias("_cos")))
-    w = Window.partitionBy("probe_id").orderBy(F.desc("_cos"), F.col(id_col))
+    w = Window.partitionBy("probe_id").orderBy(F.desc("_cos"), F.col("vec_id"))
     return (scored.withColumn("rank", F.row_number().over(w))
             .filter(F.col("rank") <= k)
-            .select("probe_id", id_col, "rank",
+            .select("probe_id", "vec_id", "rank",
                     F.round("_cos", 6).alias("cosine_sim")))
 
 
-def quantized_shortlist_recall(emb: DataFrame, n_probes: int = 8,
-                               k: int = 10, rescore_factor: int = 3,
-                               id_col: str = "vec_id",
-                               vec_col: str = "embedding") -> DataFrame:
+def quantized_shortlist_recall(emb: DataFrame, n_probes: int = 8, k: int = 10,
+                               rescore_factor: int = 3) -> DataFrame:
     """Recall@k of the QUANTIZED coarse shortlist per probe — the number
     that bounds what :func:`quantized_cosine_topk`'s exact rescore can
     recover: of the true (full-precision) top-k, how many survive into
@@ -1553,7 +1504,7 @@ def quantized_shortlist_recall(emb: DataFrame, n_probes: int = 8,
     integer-dot form is the same scores in exact arithmetic
     (the affine identity in :func:`quantized_cosine_topk`)."""
     n_cand = rescore_factor * k
-    q = quantize_embeddings(emb, id_col, vec_col)
+    q = quantize_embeddings(emb, "vec_id", "embedding")
     sc = F.when(F.col("mx") > F.col("mn"),
                 (F.col("mx") - F.col("mn")) / F.lit(255.0)) \
          .otherwise(F.lit(1.0))
@@ -1573,11 +1524,11 @@ def quantized_shortlist_recall(emb: DataFrame, n_probes: int = 8,
                          .alias("_qcos"))
                  .withColumn("_rn", F.row_number().over(w))
                  .filter(F.col("_rn") <= n_cand)
-                 .select("probe_id", F.col("id").alias(id_col),
+                 .select("probe_id", F.col("id").alias("vec_id"),
                          F.lit(1).alias("_hit")))
-    exact = multi_probe_topk(emb, n_probes, k, id_col, vec_col)
-    return (exact.select("probe_id", id_col)
-            .join(F.broadcast(shortlist), ["probe_id", id_col], "left")
+    exact = multi_probe_topk(emb, n_probes, k, "embedding")
+    return (exact.select("probe_id", "vec_id")
+            .join(F.broadcast(shortlist), ["probe_id", "vec_id"], "left")
             .groupBy("probe_id")
             .agg(F.count("_hit").alias("n_hits"))
             .select("probe_id", "n_hits",
@@ -1586,9 +1537,8 @@ def quantized_shortlist_recall(emb: DataFrame, n_probes: int = 8,
 
 
 def ivf_recall_curve(emb: DataFrame, nprobes: tuple[int, ...] = (1, 2, 4),
-                     n_probes: int = 6, k: int = 10, n_centroids: int = 8,
-                     id_col: str = "vec_id", vec_col: str = "embedding",
-                     centroids: list[list[float]] | None = None) -> DataFrame:
+                     n_probes: int = 6, k: int = 10,
+                     n_centroids: int = 8) -> DataFrame:
     """The multi-probe recall CURVE: mean recall@k across the probe set
     for each ``nprobe`` — the measurement behind IVF's core tuning
     trade (probe more cells → recall rises, scan cost rises linearly).
@@ -1599,17 +1549,16 @@ def ivf_recall_curve(emb: DataFrame, nprobes: tuple[int, ...] = (1, 2, 4),
     and broadcast. The per-branch subplans are narrow map passes over
     the corpus scan — recomputed per branch rather than pinned, per the
     engine's no-persist rule."""
-    exact = multi_probe_topk(emb, n_probes, k, id_col, vec_col) \
-        .select("probe_id", id_col)
+    exact = multi_probe_topk(emb, n_probes, k, "embedding") \
+        .select("probe_id", "vec_id")
     denom = float(n_probes * k)
     parts = []
     for np_ in nprobes:
-        approx = ivf_batch_topk(emb, n_probes, k, n_centroids, np_,
-                                id_col, vec_col, centroids)
-        hit = (approx.select("probe_id", id_col)
+        approx = ivf_batch_topk(emb, n_probes, k, n_centroids, np_)
+        hit = (approx.select("probe_id", "vec_id")
                .withColumn("_hit", F.lit(1)))
         parts.append(
-            exact.join(F.broadcast(hit), ["probe_id", id_col], "left")
+            exact.join(F.broadcast(hit), ["probe_id", "vec_id"], "left")
             .agg((F.count("_hit").cast("double") / F.lit(denom))
                  .alias("_r"))
             .select(F.lit(np_).cast("int").alias("nprobe"),
@@ -1621,9 +1570,7 @@ def ivf_recall_curve(emb: DataFrame, nprobes: tuple[int, ...] = (1, 2, 4),
 
 
 def ivf_recall(emb: DataFrame, n_probes: int = 10, k: int = 10,
-               n_centroids: int = 16, nprobe: int = 2,
-               id_col: str = "vec_id", vec_col: str = "embedding",
-               centroids: list[list[float]] | None = None) -> DataFrame:
+               n_centroids: int = 16, nprobe: int = 2) -> DataFrame:
     """Measured recall@k of the IVF index against the exact scan, per
     probe — the ANN quality metric made a first-class query instead of a
     test-only assertion. Returns (probe_id, n_hits, recall_at_k).
@@ -1631,14 +1578,13 @@ def ivf_recall(emb: DataFrame, n_probes: int = 10, k: int = 10,
     Both sides share the same probe/corpus split; the compare is a tiny
     (n_probes × k)-row join, so the cost is just the two searches.
     """
-    exact = multi_probe_topk(emb, n_probes, k, id_col, vec_col)
-    approx = ivf_batch_topk(emb, n_probes, k, n_centroids, nprobe,
-                            id_col, vec_col, centroids)
-    hit = (approx.select("probe_id", id_col).withColumn("_hit", F.lit(1)))
+    exact = multi_probe_topk(emb, n_probes, k, "embedding")
+    approx = ivf_batch_topk(emb, n_probes, k, n_centroids, nprobe)
+    hit = (approx.select("probe_id", "vec_id").withColumn("_hit", F.lit(1)))
     # The compare join is (n_probes × k) rows a side — broadcast it
     # explicitly so the static plan never falls back to sort-merge.
-    return (exact.select("probe_id", id_col)
-            .join(F.broadcast(hit), ["probe_id", id_col], "left")
+    return (exact.select("probe_id", "vec_id")
+            .join(F.broadcast(hit), ["probe_id", "vec_id"], "left")
             .groupBy("probe_id")
             .agg(F.count("_hit").alias("n_hits"))
             .select("probe_id", "n_hits",
@@ -1676,12 +1622,10 @@ def _jl_matrix(in_dim: int, out_dim: int, seed: int = 0) -> list[list[float]]:
 
 
 def random_projection(emb: DataFrame, out_dim: int = 16, seed: int = 0,
-                      id_col: str = "vec_id", vec_col: str = "embedding",
-                      dim: int | None = None,
-                      flat: bool = False) -> DataFrame:
+                      dim: int | None = None, flat: bool = False) -> DataFrame:
     """JL random projection of the embedding column to ``out_dim``
     dimensions: proj[j] = <v, R[j]>, rounded to 6 decimals. Returns
-    (``id_col``, proj array<double>), or — with ``flat=True`` — one
+    (vec_id, proj array<double>), or — with ``flat=True`` — one
     scalar double column per component (``proj_0..proj_{out_dim-1}``),
     the shape downstream columnar consumers (and value-hash harnesses)
     want. By the JL lemma pairwise distances survive within (1±ε) for
@@ -1702,20 +1646,18 @@ def random_projection(emb: DataFrame, out_dim: int = 16, seed: int = 0,
     from ..functions.vectors import as_double, dot
 
     if dim is None:
-        dim = emb.select(F.size(F.col(vec_col)).alias("d")).first()["d"]
+        dim = emb.select(F.size(F.col("embedding")).alias("d")).first()["d"]
     R = _jl_matrix(dim, out_dim, seed)
-    v = as_double(F.col(vec_col))
+    v = as_double(F.col("embedding"))
     comps = [F.round(dot(v, F.lit(row)), 6) for row in R]
     if flat:
-        return emb.select(F.col(id_col),
+        return emb.select(F.col("vec_id"),
                           *[c.alias(f"proj_{j}") for j, c in enumerate(comps)])
-    return emb.select(F.col(id_col), F.array(*comps).alias("proj"))
+    return emb.select(F.col("vec_id"), F.array(*comps).alias("proj"))
 
 
 def matryoshka_recall(emb: DataFrame, dims: tuple[int, ...] = (8, 16, 32),
-                      n_probes: int = 10, k: int = 10,
-                      id_col: str = "vec_id",
-                      vec_col: str = "embedding") -> DataFrame:
+                      n_probes: int = 10, k: int = 10) -> DataFrame:
     """Recall@k of PREFIX-TRUNCATED embeddings against the full-dim
     exact ranking — the evaluation behind matryoshka representation
     learning (Kusupati et al., NeurIPS'22): if the first d coordinates
@@ -1729,20 +1671,20 @@ def matryoshka_recall(emb: DataFrame, dims: tuple[int, ...] = (8, 16, 32),
     map pass + probe-partitioned window; compare joins are
     (probes × k)-row broadcasts. At scale the truncated pass is the
     cheap one (d/D of the FLOPs), which is the whole point."""
-    exact = multi_probe_topk(emb, n_probes, k, id_col, vec_col) \
-        .select("probe_id", id_col)
+    exact = multi_probe_topk(emb, n_probes, k, "embedding") \
+        .select("probe_id", "vec_id")
     parts = []
     for d in dims:
         trunc = emb.select(
-            F.col(id_col),
-            F.slice(as_double(F.col(vec_col)), 1, d).alias("_tv"))
-        hit = (multi_probe_topk(trunc, n_probes, k, id_col, "_tv")
-               .select("probe_id", id_col).withColumn("_hit", F.lit(1)))
+            F.col("vec_id"),
+            F.slice(as_double(F.col("embedding")), 1, d).alias("_tv"))
+        hit = (multi_probe_topk(trunc, n_probes, k, "_tv")
+               .select("probe_id", "vec_id").withColumn("_hit", F.lit(1)))
         # denominator = the ACTUAL exact-reference row count, not
         # n_probes*k: a corpus smaller than k per probe must still be
         # able to score recall 1.0 at the identity truncation
         parts.append(
-            exact.join(F.broadcast(hit), ["probe_id", id_col], "left")
+            exact.join(F.broadcast(hit), ["probe_id", "vec_id"], "left")
             .agg((F.count("_hit").cast("double")
                   / F.count("*").cast("double")).alias("_r"))
             .select(F.lit(d).cast("int").alias("dims_kept"),

@@ -43,12 +43,12 @@ def _count_in(words_col: Column, vocab: tuple[str, ...]) -> Column:
     return F.size(F.filter(words_col, lambda w: w.isin(*vocab)))
 
 
-def quality_signals(docs: DataFrame, text_col: str = "text") -> DataFrame:
+def quality_signals(docs: DataFrame) -> DataFrame:
     """Per-document quality metrics: length, word stats, punctuation /
     stopword / distinct-word ratios. Map-only — no shuffle at any scale."""
-    w = words(F.col(text_col))
-    lowered = F.lower(F.col(text_col))
-    n_chars = F.length(F.col(text_col))
+    w = words(F.col("text"))
+    lowered = F.lower(F.col("text"))
+    n_chars = F.length(F.col("text"))
     n_words = F.size(w)
     alpha_chars = F.length(F.regexp_replace(lowered, "[^a-z0-9 ]", ""))
     word_len_sum = F.aggregate(
@@ -72,15 +72,14 @@ def quality_signals(docs: DataFrame, text_col: str = "text") -> DataFrame:
     )
 
 
-def gopher_repetition_signals(docs: DataFrame, text_col: str = "text",
-                              top_n: int = 2, dup_n: int = 5) -> DataFrame:
+def gopher_repetition_signals(docs: DataFrame, dup_n: int = 5) -> DataFrame:
     """Gopher-style repetition quality signals (Rae et al. 2021 §A1.1 —
     public paper), per document:
 
     - ``dup_word_frac`` — fraction of word occurrences that repeat an
       already-seen word;
     - ``top_ngram_char_frac`` — characters covered by all occurrences of
-      the single most frequent ``top_n``-gram / total characters (ties
+      the single most frequent 2-gram / total characters (ties
       break to the lexicographically smallest gram);
     - ``dup_ngram_char_frac`` — characters covered by ``dup_n``-grams
       occurring more than once / total characters.
@@ -93,10 +92,10 @@ def gopher_repetition_signals(docs: DataFrame, text_col: str = "text",
     100 TB."""
     from ..functions.text import gram_run_stats
 
-    w = words(F.col(text_col))
-    n_chars = F.length(F.col(text_col))
+    w = words(F.col("text"))
+    n_chars = F.length(F.col("text"))
     n_words = F.size(w)
-    top_stats = gram_run_stats(ngrams(w, top_n))
+    top_stats = gram_run_stats(ngrams(w, 2))
     dup_stats = gram_run_stats(ngrams(w, dup_n))
     # zero-length guard: an empty document would otherwise divide by 0
     # — NULL under non-ANSI Spark vs inf/NaN in an IEEE oracle, and a
@@ -123,7 +122,7 @@ def gopher_repetition_signals(docs: DataFrame, text_col: str = "text",
     )
 
 
-def entropy_signals(docs: DataFrame, text_col: str = "text") -> DataFrame:
+def entropy_signals(docs: DataFrame) -> DataFrame:
     """Shannon-entropy quality signals, per document: character-level
     and word-level distribution entropy in bits (H = log2(n) − Σ cᵢ·
     log2(cᵢ)/n). Low char entropy flags repeated-glyph gibberish and
@@ -168,9 +167,9 @@ def entropy_signals(docs: DataFrame, text_col: str = "text") -> DataFrame:
                     - run_log_sum(symbols) / n.cast("double"), 6)
         ).otherwise(F.lit(0.0))
 
-    chars = F.split(F.col(text_col), "")
-    w = words(F.col(text_col))
-    n_chars = F.length(F.col(text_col))
+    chars = F.split(F.col("text"), "")
+    w = words(F.col("text"))
+    n_chars = F.length(F.col("text"))
     n_words = F.size(w)
     return docs.select(
         "doc_id",
@@ -180,26 +179,26 @@ def entropy_signals(docs: DataFrame, text_col: str = "text") -> DataFrame:
     )
 
 
-def token_counts(docs: DataFrame, text_col: str = "text") -> DataFrame:
+def token_counts(docs: DataFrame) -> DataFrame:
     """Whitespace token count plus a BPE-ish regex token count
     (letter runs / digit runs / single non-alnum marks — the classic
     pre-tokenizer split). ``regexp_count`` keeps it codegen'd."""
-    w = words(F.col(text_col))
+    w = words(F.col("text"))
     bpe_pattern = "[a-z]+|[0-9]+|[^a-z0-9\\s]"
     return docs.select(
         "doc_id",
         F.size(w).alias("ws_tokens"),
-        F.regexp_count(F.lower(F.col(text_col)), F.lit(bpe_pattern))
+        F.regexp_count(F.lower(F.col("text")), F.lit(bpe_pattern))
          .alias("bpe_tokens"),
     )
 
 
-def language_id(docs: DataFrame, text_col: str = "text") -> DataFrame:
+def language_id(docs: DataFrame) -> DataFrame:
     """Deterministic profile-based language ID: score = # marker-function-
     word hits per language; argmax wins, ties break by LANG_MARKERS order.
     (The synthetic corpus shares one vocabulary so scores — not the
     driver's ``lang`` labels — are the correctness target.)"""
-    w = words(F.col(text_col))
+    w = words(F.col("text"))
     scores = {lang: _count_in(w, marks) for lang, marks in LANG_MARKERS.items()}
     best = F.greatest(*scores.values())
     pred: Column = F.lit("und")
@@ -212,21 +211,20 @@ def language_id(docs: DataFrame, text_col: str = "text") -> DataFrame:
     return docs.select(*cols)
 
 
-def fingerprints(docs: DataFrame, text_col: str = "text",
-                 shingle_n: int = 5, k: int = 4) -> DataFrame:
+def fingerprints(docs: DataFrame) -> DataFrame:
     """Rolling-hash document fingerprint (winnowing-lite): hash every
-    ``shingle_n``-word shingle, keep the minimum as the scalar fingerprint
-    and the ``k`` smallest as the sketch. Content-defined, so shared
+    5-word shingle, keep the minimum as the scalar fingerprint
+    and the 4 smallest as the sketch. Content-defined, so shared
     passages produce shared fingerprints across documents; the sketch is
     the join key for fingerprint-level near-dup clustering at scale.
 
     The sketch is emitted as a comma-joined string, not ``array<bigint>``:
     a scalar column hashes cleanly in any downstream comparator (and the
     join key for sketch-level grouping is the whole sketch anyway)."""
-    sh = ngrams(words(F.col(text_col)), shingle_n)
+    sh = ngrams(words(F.col("text")), 5)
     hashes = F.array_sort(F.transform(sh, lambda s: md5_hash64(s)))
     sketch = F.concat_ws(
-        ",", F.transform(F.slice(hashes, 1, k), lambda x: x.cast("string")))
+        ",", F.transform(F.slice(hashes, 1, 4), lambda x: x.cast("string")))
     return docs.select(
         "doc_id",
         F.get(hashes, 0).alias("fingerprint64"),  # null-safe for <n-word docs
@@ -234,8 +232,7 @@ def fingerprints(docs: DataFrame, text_col: str = "text",
     )
 
 
-def tokenize_ids(docs: DataFrame, vocab_size: int = 32768,
-                 text_col: str = "text") -> DataFrame:
+def tokenize_ids(docs: DataFrame, vocab_size: int = 32768) -> DataFrame:
     """Hashing-trick tokenization: every whitespace token maps to a
     deterministic id in [0, vocab_size) via ``md5(token) mod V`` — the
     feature-hashing vocabulary (no trained merges, no OOV). Returns
@@ -247,7 +244,7 @@ def tokenize_ids(docs: DataFrame, vocab_size: int = 32768,
     re-tokenization). A trained BPE would need a Python tokenizer via
     ``mapInPandas``; the Spark-side shape (schema, batching, pruning)
     would match ``operators/multimodal.py``'s decode pattern."""
-    toks = words(F.col(text_col))
+    toks = words(F.col("text"))
     ids = F.transform(
         toks, lambda t: (md5_hash64(t) % vocab_size).cast("string"))
     return docs.select(
@@ -256,11 +253,11 @@ def tokenize_ids(docs: DataFrame, vocab_size: int = 32768,
         F.concat_ws(",", ids).alias("token_ids_csv"))
 
 
-def corpus_language_profile(docs: DataFrame, text_col: str = "text") -> DataFrame:
+def corpus_language_profile(docs: DataFrame) -> DataFrame:
     """Corpus rollup: documents / mean quality metrics per predicted
     language. One partial-aggregated shuffle on a low-cardinality key."""
-    lid = language_id(docs, text_col).select("doc_id", "predicted_lang")
-    q = quality_signals(docs, text_col)
+    lid = language_id(docs).select("doc_id", "predicted_lang")
+    q = quality_signals(docs)
     return (
         q.join(lid, "doc_id")
          .groupBy("predicted_lang")
@@ -271,8 +268,7 @@ def corpus_language_profile(docs: DataFrame, text_col: str = "text") -> DataFram
     )
 
 
-def ngram_diversity(docs: DataFrame, text_col: str = "text",
-                    group_col: str = "source") -> DataFrame:
+def ngram_diversity(docs: DataFrame) -> DataFrame:
     """Distinct-n corpus diversity per group: unique-to-total unigram
     and bigram ratios — the distinct-1/distinct-2 readout (Li et al.,
     NAACL 2016, "A Diversity-Promoting Objective Function") that flags
@@ -289,20 +285,20 @@ def ngram_diversity(docs: DataFrame, text_col: str = "text",
     (``operators/cardinality.py``) in the same plan."""
     from ..functions.text import ngrams, words
 
-    uni = (docs.select(F.col(group_col),
-                       F.explode(words(F.col(text_col))).alias("g"))
-           .groupBy(group_col)
+    uni = (docs.select(F.col("source"),
+                       F.explode(words(F.col("text"))).alias("g"))
+           .groupBy("source")
            .agg(F.count("*").cast("long").alias("total_unigrams"),
                 F.count_distinct("g").cast("long")
                 .alias("distinct_unigrams")))
-    bi = (docs.select(F.col(group_col),
-                      F.explode(ngrams(words(F.col(text_col)), 2))
+    bi = (docs.select(F.col("source"),
+                      F.explode(ngrams(words(F.col("text")), 2))
                       .alias("g"))
-          .groupBy(group_col)
+          .groupBy("source")
           .agg(F.count("*").cast("long").alias("total_bigrams"),
                F.count_distinct("g").cast("long").alias("distinct_bigrams")))
-    return (uni.join(bi, group_col)
-            .select(group_col, "total_unigrams", "distinct_unigrams",
+    return (uni.join(bi, "source")
+            .select("source", "total_unigrams", "distinct_unigrams",
                     F.round(F.col("distinct_unigrams")
                             / F.col("total_unigrams"), 6)
                     .alias("diversity_1"),
@@ -312,8 +308,7 @@ def ngram_diversity(docs: DataFrame, text_col: str = "text",
                     .alias("diversity_2")))
 
 
-def unigram_logprob(docs: DataFrame, text_col: str = "text",
-                    id_col: str = "doc_id") -> DataFrame:
+def unigram_logprob(docs: DataFrame) -> DataFrame:
     """Per-document unigram language-model score against the corpus's own
     word distribution — the cheap importance/quality signal behind
     DSIR-style data selection and perplexity filtering (a doc of rare
@@ -332,8 +327,8 @@ def unigram_logprob(docs: DataFrame, text_col: str = "text",
     The 1-row total remains an explicit broadcast. The document text
     itself never shuffles.
     """
-    tok = docs.select(F.col(id_col).alias("id"),
-                      F.explode(words(F.col(text_col))).alias("word"))
+    tok = docs.select(F.col("doc_id").alias("id"),
+                      F.explode(words(F.col("text"))).alias("word"))
     freq = tok.groupBy("word").agg(F.count("*").alias("c"))
     tot = freq.agg(F.sum("c").cast("double").alias("n"))
     scored = (tok.join(freq, "word")
@@ -343,13 +338,11 @@ def unigram_logprob(docs: DataFrame, text_col: str = "text",
             .agg(F.count("*").alias("n_tokens"),
                  F.round(F.avg("lp"), 6).alias("avg_logprob"),
                  F.round(F.exp(-F.avg("lp")), 6).alias("unigram_ppl"))
-            .select(F.col("id").alias(id_col), "n_tokens",
+            .select(F.col("id").alias("doc_id"), "n_tokens",
                     "avg_logprob", "unigram_ppl"))
 
 
-def dsir_importance(docs: DataFrame, target: DataFrame,
-                    text_col: str = "text",
-                    id_col: str = "doc_id") -> DataFrame:
+def dsir_importance(docs: DataFrame, target: DataFrame) -> DataFrame:
     """DSIR-style importance weights: score every corpus document by how
     much more likely its words are under the TARGET distribution (the
     domain you want more of) than under the corpus's own — per-doc
@@ -372,8 +365,8 @@ def dsir_importance(docs: DataFrame, target: DataFrame,
     never shuffles; everything downstream of the token explode is
     narrow-key aggregates."""
     def toks(df: DataFrame) -> DataFrame:
-        return df.select(F.col(id_col).alias("id"),
-                         F.explode(words(F.col(text_col))).alias("word"))
+        return df.select(F.col("doc_id").alias("id"),
+                         F.explode(words(F.col("text"))).alias("word"))
 
     ctok = toks(docs)
     cfreq = ctok.groupBy("word").agg(F.count("*").alias("cc"))
@@ -400,21 +393,19 @@ def dsir_importance(docs: DataFrame, target: DataFrame,
                  (F.round(F.avg("lr"), 6) + F.lit(0.0))
                  .alias("avg_log_ratio"),
                  F.round(F.exp(F.avg("lr")), 6).alias("importance_weight"))
-            .select(F.col("id").alias(id_col), "n_tokens",
+            .select(F.col("id").alias("doc_id"), "n_tokens",
                     "avg_log_ratio", "importance_weight"))
 
 
-def bigram_logprob(docs: DataFrame, lam: float = 0.75,
-                   text_col: str = "text",
-                   id_col: str = "doc_id") -> DataFrame:
+def bigram_logprob(docs: DataFrame) -> DataFrame:
     """Per-document interpolated-bigram LM score against the corpus's
     own distribution — one model-capacity step above
     :func:`unigram_logprob` (a doc of common words in UNCOMMON order now
     scores low, which the unigram model cannot see). Each position
-    i >= 1 contributes ln(lam * p(w_i | w_{i-1}) + (1-lam) * p(w_i)):
+    i >= 1 contributes ln(0.75 * p(w_i | w_{i-1}) + 0.25 * p(w_i)):
     Jelinek-Mercer interpolation, whose unigram floor keeps unseen
     continuations finite without Katz-style backoff bookkeeping.
-    ``lam`` defaults to a dyadic 0.75 (exact in binary FP). Returns
+    The weight 0.75 is dyadic (exact in binary FP). Returns
     (doc_id, n_bigrams, avg_logprob, bigram_ppl); one-word docs have no
     bigram and drop out, as in the DuckDB twin.
 
@@ -424,8 +415,8 @@ def bigram_logprob(docs: DataFrame, lam: float = 0.75,
     score joins, all unhinted so AQE broadcasts the vocab while it fits
     and degrades to shuffle joins at web scale. Document text never
     shuffles."""
-    w = words(F.col(text_col))
-    grams = (docs.select(F.col(id_col).alias("id"),
+    w = words(F.col("text"))
+    grams = (docs.select(F.col("doc_id").alias("id"),
                          F.explode(ngrams(w, 2)).alias("g"))
              .select("id", "g",
                      F.split("g", " ").getItem(0).alias("_w1"),
@@ -440,19 +431,17 @@ def bigram_logprob(docs: DataFrame, lam: float = 0.75,
     p_uni = F.col("_c_cur").cast("double") / F.col("n")
     scored = (grams.join(bi, "g").join(u1, "_w1").join(u2, "_w2")
               .crossJoin(F.broadcast(tot))
-              .select("id", F.log(F.lit(lam) * p_bi
-                                  + F.lit(1.0 - lam) * p_uni).alias("lp")))
+              .select("id", F.log(F.lit(0.75) * p_bi
+                                  + F.lit(0.25) * p_uni).alias("lp")))
     return (scored.groupBy("id")
             .agg(F.count("*").cast("long").alias("n_bigrams"),
                  F.round(F.avg("lp"), 6).alias("avg_logprob"),
                  F.round(F.exp(-F.avg("lp")), 6).alias("bigram_ppl"))
-            .select(F.col("id").alias(id_col), "n_bigrams",
+            .select(F.col("id").alias("doc_id"), "n_bigrams",
                     "avg_logprob", "bigram_ppl"))
 
 
-def vocab_growth(docs: DataFrame, deciles: int = 10,
-                 text_col: str = "text",
-                 id_col: str = "doc_id") -> DataFrame:
+def vocab_growth(docs: DataFrame) -> DataFrame:
     """Heaps-law vocabulary-growth curve: distinct vocabulary and total
     tokens after the first 10%, 20%, ... of the corpus (by doc id) —
     the readout that says whether a corpus is still contributing new
@@ -468,18 +457,18 @@ def vocab_growth(docs: DataFrame, deciles: int = 10,
     a broadcast threshold fan-out, never a re-scan of the corpus per
     checkpoint. Token totals fan the per-doc count frame out the same
     way. All integers until the final ratio."""
-    w = words(F.col(text_col))
-    tok = docs.select(F.col(id_col).alias("id"),
+    w = words(F.col("text"))
+    tok = docs.select(F.col("doc_id").alias("id"),
                       F.explode(w).alias("word"))
     fd = tok.groupBy("word").agg(F.min("id").alias("_fd"))
-    per_doc = docs.select(F.col(id_col).alias("id"),
+    per_doc = docs.select(F.col("doc_id").alias("id"),
                           F.size(w).cast("long").alias("_nt"))
-    thresholds = (docs.agg(F.max(F.col(id_col)).alias("_mx"))
+    thresholds = (docs.agg(F.max(F.col("doc_id")).alias("_mx"))
                   .select(F.explode(F.sequence(
-                      F.lit(1), F.lit(deciles))).alias("decile"), "_mx")
+                      F.lit(1), F.lit(10))).alias("decile"), "_mx")
                   .select("decile",
                           F.floor(F.col("_mx") * F.col("decile")
-                                  / F.lit(deciles)).cast("long")
+                                  / F.lit(10)).cast("long")
                           .alias("threshold_doc")))
     vocab = (fd.crossJoin(F.broadcast(thresholds))
              .filter(F.col("_fd") <= F.col("threshold_doc"))
@@ -496,8 +485,7 @@ def vocab_growth(docs: DataFrame, deciles: int = 10,
                     .alias("type_token_ratio")))
 
 
-def zipf_fit(docs: DataFrame, top_k: int = 100,
-             text_col: str = "text") -> DataFrame:
+def zipf_fit(docs: DataFrame, top_k: int = 100) -> DataFrame:
     """Zipf-law fit over the top-``top_k`` word frequencies: OLS slope
     of ln(freq) on ln(rank) (a healthy natural-language corpus sits
     near -1; template/boilerplate-heavy corpora flatten, spam inflates
@@ -512,7 +500,7 @@ def zipf_fit(docs: DataFrame, top_k: int = 100,
     ranking the top-k is a single-partition window over k rows, the
     standard coordinator-scale model fit."""
     from pyspark.sql import Window
-    tok = docs.select(F.explode(words(F.col(text_col))).alias("word"))
+    tok = docs.select(F.explode(words(F.col("text"))).alias("word"))
     freq = tok.groupBy("word").agg(F.count("*").alias("c"))
     top = (freq.orderBy(F.col("c").desc(), F.col("word")).limit(top_k)
            .withColumn("rk", F.row_number().over(
@@ -547,9 +535,7 @@ def zipf_fit(docs: DataFrame, top_k: int = 100,
                        / (dx * dy)), 6).alias("r2"))
 
 
-def feature_hashing(docs: DataFrame, dim: int = 16,
-                    text_col: str = "text",
-                    id_col: str = "doc_id") -> DataFrame:
+def feature_hashing(docs: DataFrame, dim: int = 16) -> DataFrame:
     """The hashing trick (Weinberger et al. 2009): fixed-dimension
     signed token-count features with NO vocabulary — each token maps to
     slot md5(token) mod dim with sign from an independent hash bit (the
@@ -565,8 +551,8 @@ def feature_hashing(docs: DataFrame, dim: int = 16,
     the doc grain, no model state anywhere."""
     from ..functions.hashes import md5_hash32, md5_hash64
 
-    tok = docs.select(F.col(id_col).alias("id"),
-                      F.explode(words(F.col(text_col))).alias("w"))
+    tok = docs.select(F.col("doc_id").alias("id"),
+                      F.explode(words(F.col("text"))).alias("w"))
     slot = (md5_hash64(F.col("w")) % dim).alias("_slot")
     sign = F.when(md5_hash32(F.col("w"), seed=1) % 2 == 0,
                   F.lit(1)).otherwise(F.lit(-1)).alias("_sign")
@@ -574,12 +560,10 @@ def feature_hashing(docs: DataFrame, dim: int = 16,
     aggs = [F.sum(F.when(F.col("_slot") == j, F.col("_sign"))
                   .otherwise(0)).cast("long").alias(f"f_{j}")
             for j in range(dim)]
-    return (hashed.groupBy(F.col("id").alias(id_col)).agg(*aggs))
+    return (hashed.groupBy(F.col("id").alias("doc_id")).agg(*aggs))
 
 
-def term_burstiness(docs: DataFrame, top_k: int = 20,
-                    text_col: str = "text",
-                    id_col: str = "doc_id") -> DataFrame:
+def term_burstiness(docs: DataFrame, top_k: int = 20) -> DataFrame:
     """Term burstiness (Church & Gale, 1995): the variance-to-mean
     ratio (Fano factor) of a term's per-document count ACROSS the whole
     corpus, zeros included — the forensic beside the Zipf/Heaps fits.
@@ -597,8 +581,8 @@ def term_burstiness(docs: DataFrame, top_k: int = 20,
     document frequency (ties to term text) via TakeOrderedAndProject —
     the stable high-signal slice, not a vocab-scale report."""
     from ..functions.text import words
-    tf = (docs.select(F.col(id_col).alias("id"),
-                      F.explode(words(F.col(text_col))).alias("w"))
+    tf = (docs.select(F.col("doc_id").alias("id"),
+                      F.explode(words(F.col("text"))).alias("w"))
           .groupBy("id", "w").agg(F.count("*").alias("c")))
     stats = tf.groupBy("w").agg(
         F.count("*").alias("df"),

@@ -18,9 +18,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 
-def resample_gapfill(events: DataFrame, key_col: str = "event_type",
-                     ts_col: str = "ts", value_col: str = "value",
-                     step: str = "1 hour") -> DataFrame:
+def resample_gapfill(events: DataFrame, step: str = "1 hour") -> DataFrame:
     """Per-key fixed-step series with gaps filled: one row per (key,
     bucket) for EVERY step between the key's first and last event,
     zeros where nothing happened. Returns
@@ -33,29 +31,28 @@ def resample_gapfill(events: DataFrame, key_col: str = "event_type",
     ``date_trunc('hour', ts)``, which is what the DuckDB oracle pins).
     The spine then steps from each key's first to last bucket by the
     same interval, so spine rows land exactly on aggregate buckets."""
-    bucket = F.window(F.col(ts_col), step).getField("start")
-    agg = (events.groupBy(F.col(key_col).alias("key"),
+    bucket = F.window(F.col("ts"), step).getField("start")
+    agg = (events.groupBy(F.col("event_type").alias("key"),
                           bucket.alias("bucket_start"))
            .agg(F.count("*").alias("n_events"),
-                F.round(F.sum(value_col), 6).alias("value_sum")))
-    bounds = (events.groupBy(F.col(key_col).alias("key"))
+                F.round(F.sum("value"), 6).alias("value_sum")))
+    bounds = (events.groupBy(F.col("event_type").alias("key"))
               .agg(F.min(bucket).alias("_lo"), F.max(bucket).alias("_hi")))
     spine = bounds.select(
         "key", F.explode(F.sequence(
             F.col("_lo"), F.col("_hi"),
             F.expr(f"INTERVAL {step}"))).alias("bucket_start"))
     return (spine.join(agg, ["key", "bucket_start"], "left")
-            .select(F.col("key").alias(key_col), "bucket_start",
+            .select(F.col("key").alias("event_type"), "bucket_start",
                     F.coalesce("n_events", F.lit(0)).cast("bigint")
                     .alias("n_events"),
                     F.coalesce("value_sum", F.lit(0.0)).alias("value_sum")))
 
 
-def zscore_flags(series: DataFrame, key_col: str, value_col: str,
-                 z_threshold: float = 3.0) -> DataFrame:
+def zscore_flags(series: DataFrame, key_col: str, value_col: str) -> DataFrame:
     """Per-key z-score outlier flags over a (regular) series — the
     monitoring step after :func:`resample_gapfill`: a bucket whose value
-    sits more than ``z_threshold`` sample standard deviations from its
+    sits more than 3 sample standard deviations from its
     key's mean is an anomaly (traffic spike, dead sensor — and BECAUSE
     the series is gap-filled, a silent outage shows up as a run of
     zero buckets that this flags, rather than as missing rows nothing
@@ -80,27 +77,23 @@ def zscore_flags(series: DataFrame, key_col: str, value_col: str,
             .withColumn("zscore",
                         F.round(F.when(var > 0, z), 6))
             .withColumn("is_anomaly",
-                        F.when(F.abs(F.col("zscore")) > z_threshold, 1)
+                        F.when(F.abs(F.col("zscore")) > 3.0, 1)
                         .otherwise(0).cast("int")))
 
 
-def with_rolling_mean(series: DataFrame, key_col: str,
-                      order_col: str, value_col: str,
-                      window: int = 3,
-                      out_col: str = "rolling_mean") -> DataFrame:
-    """Trailing ``window``-row mean over a REGULAR series (run after
+def with_rolling_mean(series: DataFrame, key_col: str, order_col: str,
+                      value_col: str) -> DataFrame:
+    """Trailing 3-row mean over a REGULAR series (run after
     :func:`resample_gapfill` — on a gappy series a row-frame window
     would silently span unequal time). One (key)-partitioned
     Exchange+Sort."""
     w = (Window.partitionBy(key_col).orderBy(order_col)
-         .rowsBetween(-(window - 1), 0))
-    return series.withColumn(out_col,
+         .rowsBetween(-2, 0))
+    return series.withColumn("rolling_mean",
                              F.round(F.avg(value_col).over(w), 6))
 
 
-def rolling_actives(events: DataFrame, window_days: int = 7,
-                    user_col: str = "user_id",
-                    ts_col: str = "ts") -> DataFrame:
+def rolling_actives(events: DataFrame, window_days: int = 7) -> DataFrame:
     """Rolling distinct actives: per calendar day, the distinct users
     active THAT day (dau), the distinct users active in the trailing
     ``window_days`` window (wau — inclusive of the day itself), and the
@@ -128,8 +121,8 @@ def rolling_actives(events: DataFrame, window_days: int = 7,
     offset-zero contributor (dau ≥ 1), while phantom trailing days past
     the data's horizon and interior gap days have dau = 0 and are
     filtered — every emitted wau covers a day that actually occurred."""
-    day = F.to_date(F.col(ts_col))
-    du = (events.select(day.alias("day"), F.col(user_col).alias("u"))
+    day = F.to_date(F.col("ts"))
+    du = (events.select(day.alias("day"), F.col("user_id").alias("u"))
           .distinct())
     fan = du.select(
         "u", F.col("day").alias("_d0"),
@@ -148,8 +141,7 @@ def rolling_actives(events: DataFrame, window_days: int = 7,
                     .alias("stickiness")))
 
 
-def mad_flags(series: DataFrame, key_col: str, value_col: str,
-              threshold: float = 3.5) -> DataFrame:
+def mad_flags(series: DataFrame, key_col: str, value_col: str) -> DataFrame:
     """Robust per-key outlier flags via MEDIAN / MAD — the companion to
     :func:`zscore_flags` for series where the anomaly itself poisons
     the moments: one hour of 100× traffic drags the mean and stddev so
@@ -157,8 +149,7 @@ def mad_flags(series: DataFrame, key_col: str, value_col: str,
     the median absolute deviation barely move (50% breakdown point vs
     0%). The standard robust z is ``0.6745 · (x − median) / MAD``
     (Iglewicz & Hoaglin's modified z-score; 0.6745 rescales MAD to σ
-    under normality), flagged above ``threshold`` (their recommended
-    3.5).
+    under normality), flagged above their recommended 3.5.
 
     Two tiny groupBys over the already-resampled series (median, then
     MAD of the joined residuals) — the series is buckets × keys,
@@ -184,19 +175,18 @@ def mad_flags(series: DataFrame, key_col: str, value_col: str,
             .withColumn("robust_z",
                         F.round(F.when(F.col("_mad") > 0, rz), 6))
             .withColumn("is_anomaly",
-                        F.when(F.abs(F.col("robust_z")) > threshold, 1)
+                        F.when(F.abs(F.col("robust_z")) > 3.5, 1)
                         .otherwise(0).cast("int"))
             .drop("_med", "_mad"))
 
 def ewma_smooth(series: DataFrame, key_col: str, order_col: str,
-                value_col: str, depth: int = 8,
-                out_col: str = "ewma") -> DataFrame:
+                value_col: str) -> DataFrame:
     """Exponentially-weighted moving average over a REGULAR series
     (run after :func:`resample_gapfill` — on a gappy series the decay
     would silently skip time). The textbook recursive EWMA is not a
     window aggregate (each output depends on the previous output), so
     the distributed formulation truncates the impulse response at
-    ``depth`` taps and evaluates it as an explicit lag convolution:
+    8 taps and evaluates it as an explicit lag convolution:
 
         ewma_t = sum_i w_i * x_{t-i} / sum_i w_i,   w_i = 2^-i
 
@@ -207,22 +197,21 @@ def ewma_smooth(series: DataFrame, key_col: str, order_col: str,
     integers — so the whole expression is bit-identical across engines
     (an arbitrary alpha works the same way but needs its weight
     literals emitted at full repr precision). Truncation error is
-    bounded by the dropped tail: 2^-depth < 0.4% of total weight at
-    the default 8 taps.
+    bounded by the dropped tail: 2^-8 < 0.4% of total weight.
 
-    Cost: ONE (key)-partitioned Exchange+Sort shared by all ``depth``
+    Cost: ONE (key)-partitioned Exchange+Sort shared by all 8
     lags — Spark evaluates the lag family over a single window frame,
     and the convolution itself is a map-side expression tree."""
     w = Window.partitionBy(key_col).orderBy(order_col)
     v = F.col(value_col).cast("double")
     num = F.lit(0.0)
     den = F.lit(0.0)
-    for i in range(depth):
+    for i in range(8):
         li = v if i == 0 else F.lag(v, i).over(w)
         wt = F.lit(2.0 ** -i)
         num = num + F.when(li.isNotNull(), li * wt).otherwise(F.lit(0.0))
         den = den + F.when(li.isNotNull(), wt).otherwise(F.lit(0.0))
-    return series.withColumn(out_col, F.round(num / den, 6))
+    return series.withColumn("ewma", F.round(num / den, 6))
 
 
 def autocorrelation(series: DataFrame, key_col: str, order_col: str,
@@ -350,19 +339,18 @@ def seasonal_profile(series: DataFrame, key_col: str, bucket_col: str,
 
 
 def forecast_backtest(series: DataFrame, key_col: str, day_col: str,
-                      value_col: str, horizon_days: int = 7,
-                      season_days: int = 7) -> DataFrame:
+                      value_col: str) -> DataFrame:
     """Backtest of the two zero-parameter forecasters every real
     forecast must beat — naive (tomorrow = today) and seasonal-naive
     (tomorrow = same weekday last week) — on each key's last
-    ``horizon_days`` of daily values. Returns (key, model, n_days,
+    7 days of daily values. Returns (key, model, n_days,
     mae): if a trained model's MAE doesn't beat the seasonal-naive
     row, its pipeline is burning compute for nothing. This is the
     standard M-competition baseline discipline, as a query.
 
     The holdout is PER KEY (the trailing window of that key's own max
     day). The lags are CALENDAR joins — the prediction for day d reads
-    the key's value at exactly d-1 / d-``season_days`` via equi-joins
+    the key's value at exactly d-1 / d-7 via equi-joins
     on (key, shifted day) — NOT row-offset window lags: on a series
     with missing days a row lag silently compares a Tuesday against
     whatever the 7th-previous OBSERVED day was, while the holdout
@@ -383,10 +371,10 @@ def forecast_backtest(series: DataFrame, key_col: str, day_col: str,
 
     lagged = (base
               .join(shifted(1, "_naive"), [key_col, day_col], "left")
-              .join(shifted(season_days, "_seasonal"),
+              .join(shifted(7, "_seasonal"),
                     [key_col, day_col], "left"))
     hold = lagged.filter(
-        F.datediff(F.col("_mx"), F.col(day_col)) < horizon_days)
+        F.datediff(F.col("_mx"), F.col(day_col)) < 7)
     stacked = (hold.select(
         F.col(key_col),
         F.explode(F.array(
@@ -482,7 +470,7 @@ def rolling_correlation(series: DataFrame, key_a: str, key_b: str,
 
 
 def cusum_changepoint(series: DataFrame, key_col: str, bucket_col: str,
-                      value_col: str, threshold: float = 3.0) -> DataFrame:
+                      value_col: str) -> DataFrame:
     """Offline CUSUM changepoint test per key: the cumulative sum of
     deviations from the key's own mean, C_t = Σ_{i<=t}(x_i − μ), peaks
     at a level shift's location — the standard "WHEN did the metric
@@ -491,7 +479,7 @@ def cusum_changepoint(series: DataFrame, key_col: str, bucket_col: str,
     but accumulates linearly in C_t. Returns one row per key:
     (changepoint_bucket, cusum_stat, significant), where cusum_stat =
     max_t |C_t| / (σ·√n) (the Brownian-bridge normalization; > ~1.36
-    is the 5% Kolmogorov line, ``threshold`` defaults stricter) and the
+    is the 5% Kolmogorov line; the flag uses a stricter 3.0) and the
     changepoint is the argmax bucket.
 
     Every sum is exact-integer; C_t, σ and the statistic are fixed
@@ -534,5 +522,5 @@ def cusum_changepoint(series: DataFrame, key_col: str, bucket_col: str,
                     F.round(F.when(F.col("_var") > 0, F.col("_stat")), 6)
                     .alias("cusum_stat"),
                     F.when((F.col("_var") > 0)
-                           & (F.col("_stat") > threshold), 1)
+                           & (F.col("_stat") > 3.0), 1)
                     .otherwise(0).cast("int").alias("significant")))

@@ -1097,7 +1097,7 @@ def _dd_edit(spark, sf_dir):
     from .operators.dedup import edit_distance_verify, minhash_lsh_pairs
     docs = _t(spark, sf_dir, "documents")
     pairs = minhash_lsh_pairs(docs, threshold=0.6)
-    return edit_distance_verify(pairs, docs, max_dist=64, prefix=256)
+    return edit_distance_verify(pairs, docs, max_dist=64)
 
 
 @register("dedup_clusters", None)  # oracle attached below (needs minhash SQL)
@@ -1186,8 +1186,7 @@ def _sim1(spark, sf_dir):
 EMB_DIM = 64  # driver embeddings table dimensionality (TESTDATA.md)
 
 
-def _srp_bucket_exprs(num_planes: int, dim: int, num_tables: int,
-                      vec: str = "v") -> list[str]:
+def _srp_bucket_exprs(num_planes: int, dim: int, num_tables: int) -> list[str]:
     """One DuckDB bucket expression per LSH table, mirroring
     operators/similarity.srp_signature over srp_planes(table=t)."""
     from .operators.similarity import srp_planes
@@ -1195,17 +1194,16 @@ def _srp_bucket_exprs(num_planes: int, dim: int, num_tables: int,
     for t in range(num_tables):
         planes = srp_planes(num_planes, dim, table=t)
         out.append(" + ".join(
-            f"(CASE WHEN list_dot_product({vec}, {plane!r}) > 0 "
+            f"(CASE WHEN list_dot_product(v, {plane!r}) > 0 "
             f"THEN CAST({1 << p} AS BIGINT) ELSE 0 END)"
             for p, plane in enumerate(planes)))
     return out
 
 
-def _srp_neardup_oracle_sql(num_planes: int = 6, num_tables: int = 2,
-                            threshold: float = 0.3) -> str:
-    bks = _srp_bucket_exprs(num_planes, EMB_DIM, num_tables)
+def _srp_neardup_oracle_sql(threshold: float = 0.3) -> str:
+    bks = _srp_bucket_exprs(6, EMB_DIM, 2)
     sig_cols = ", ".join(f"{b} AS b{t}" for t, b in enumerate(bks))
-    any_match = " OR ".join(f"a.b{t} = b.b{t}" for t in range(num_tables))
+    any_match = " OR ".join(f"a.b{t} = b.b{t}" for t in range(2))
     return f"""
 WITH e AS (SELECT vec_id AS id, embedding::DOUBLE[] AS v FROM embeddings),
 sigs AS (SELECT id, v, {sig_cols} FROM e)
@@ -1259,22 +1257,20 @@ def _sim_semdedup(spark, sf_dir):
 
 
 def _sem_cell_recall_sql() -> str:
-    # Threshold and cell count are DERIVED from cell_recall_report's
-    # own signature defaults (the registry call below passes no
-    # overrides) — the same one-source pattern as _lsh_recall_sql: a
-    # default change re-generates this SQL in lockstep instead of
-    # silently desynchronizing the twins. The assign CTE replicates
-    # dedup_semantic_survivors' first-n deterministic centroid model;
+    # The threshold is DERIVED from cell_recall_report's own signature
+    # default (the registry call below passes no override): a default
+    # change re-generates this SQL in lockstep instead of silently
+    # desynchronizing the twins. The assign CTE replicates
+    # dedup_semantic_survivors' first-16 deterministic centroid model;
     # the truth CTE is the deliberately brute-force all-pairs scan
     # (certification harness, like the exact side of sim_ivf_recall).
     import inspect
     from .operators.similarity import cell_recall_report
     params = inspect.signature(cell_recall_report).parameters
     tau = repr(params["threshold"].default)
-    n_cells = params["n_cells"].default
     return f"""
 WITH e AS (SELECT vec_id AS id, embedding::DOUBLE[] AS v FROM embeddings),
-c AS (SELECT id AS cid, v AS cv FROM e WHERE id < {n_cells}),
+c AS (SELECT id AS cid, v AS cv FROM e WHERE id < 16),
 assign AS (
   SELECT id, cell FROM (
     SELECT e.id, c.cid AS cell,
@@ -1354,7 +1350,7 @@ def _sim_knn(spark, sf_dir):
     # miner.
     from .operators.similarity import knn_graph
     return knn_graph(_t(spark, sf_dir, "embeddings"), k=5,
-                     num_planes=6, num_tables=2, dim=EMB_DIM)
+                     num_planes=6, dim=EMB_DIM)
 
 
 @register("sim_semantic_dedup", f"""
@@ -1546,7 +1542,7 @@ def _copurchase_pairs_sql() -> str:
           AND a.l_partkey < b.l_partkey""")
 
 
-def _kcore_oracle_sql(k: int = 3, rounds: int = 8) -> str:
+def _kcore_oracle_sql(k: int = 3) -> str:
     # Unrolled fixed-round peel — one (edge-restrict, degree, filter)
     # CTE pair per round, MATERIALIZED throughout (the DuckDB inline-CTE
     # exponential-replay trap pagerank's oracle documents).
@@ -1556,7 +1552,7 @@ def _kcore_oracle_sql(k: int = 3, rounds: int = 8) -> str:
              f"s1 AS MATERIALIZED (SELECT u AS id FROM und GROUP BY u"
              f" HAVING count(*) >= {k}),"]
     prev = "s1"
-    for r in range(2, rounds + 1):
+    for r in range(2, 9):
         lines.append(
             f"e{r} AS MATERIALIZED (SELECT und.u, und.v FROM und"
             f" JOIN {prev} a ON und.u = a.id"
@@ -1612,25 +1608,22 @@ def _graph_kcore(spark, sf_dir):
     from .operators.graph import kcore
     li = _t(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
     pairs = _copurchase_pairs(li)
-    # localCheckpoint cuts (no checkpoint_dir) + per-round early-exit
-    # probes: the r13 A/B measured reliable-checkpoint cuts 7.6 s,
-    # localCheckpoint 6.2 s, localCheckpoint + cut_every=1 4.4 s at
-    # sf0.1, bit-identical results — the peel converges by round ~3,
-    # so probing each round exits sooner, and local[32] has no executor
-    # churn for a reliable checkpoint to insure against (a long-lived
-    # cluster run passes checkpoint_dir back).
-    return (kcore(pairs, k=75, rounds=8, cut_every=1)
+    # localCheckpoint cuts + per-round early-exit probes: the r13 A/B
+    # measured reliable-checkpoint cuts 7.6 s, localCheckpoint 6.2 s,
+    # localCheckpoint + cut_every=1 4.4 s at sf0.1, bit-identical
+    # results — the peel converges by round ~3, so probing each round
+    # exits sooner, and local[32] has no executor churn for a reliable
+    # checkpoint to insure against.
+    return (kcore(pairs, k=75, cut_every=1)
             .select(F.col("id").alias("vec_id"), "degree")
             .orderBy("vec_id"))
 
 
-def _pagerank_oracle_sql(num_iters: int = 10, damping: float = 0.85,
-                         quantize: int = 7,
-                         seed_pred: str | None = None) -> str:
+def _pagerank_oracle_sql(seed_pred: str | None = None) -> str:
     """Unrolled fixed-iteration PageRank twin of operators/graph.pagerank
     — one CTE pair (dangling scalar, next rank vector) per iteration,
     generated programmatically so the SQL replays the EXACT integer-unit
-    spec the Spark loop implements: BIGINT 10^-quantize rank units,
+    spec the Spark loop implements: BIGINT 10^-7 rank units,
     per-edge floor division r // deg, damping as the rational
     dnum/1000 in multiply-then-floor-divide, teleport weight
     SCALE // s units — zero floating point until the final publish
@@ -1639,12 +1632,9 @@ def _pagerank_oracle_sql(num_iters: int = 10, damping: float = 0.85,
     on these non-negative units). ``seed_pred`` personalizes: restart
     mass concentrates uniformly on nodes matching the predicate
     (None = classic uniform teleport)."""
-    scale = 10 ** quantize
-    # Generation-time mirror of the Spark loop's damping guard
-    # (operators/graph.py): outside (0,1) the floor-division identity
-    # between DuckDB `//` and Spark `div` breaks on negative units.
-    assert 0.0 < damping < 1.0, f"damping must be in (0, 1): {damping!r}"
-    dnum, dden = round(damping * 1000), 1000
+    scale = 10 ** 7
+    # damping 0.85 as 850/1000, as in operators/graph.py's loop.
+    dnum, dden = 850, 1000
     # Every CTE here is MATERIALIZED: DuckDB's default is to INLINE CTE
     # references, and each iteration references the previous rank vector
     # twice (dangling scalar + contribution join) — inlined, the plan
@@ -1679,7 +1669,7 @@ def _pagerank_oracle_sql(num_iters: int = 10, damping: float = 0.85,
            "ELSE CAST(0 AS BIGINT) END AS w "
            "FROM nodes LEFT JOIN seeds ON nodes.id = seeds.id),",
            "r0 AS MATERIALIZED (SELECT id, w AS r FROM w),"]
-    for i in range(num_iters):
+    for i in range(10):
         cte.append(
             f"d{i} AS MATERIALIZED "
             f"(SELECT CAST(coalesce(sum(r), 0) AS BIGINT) AS dm FROM r{i} "
@@ -1700,7 +1690,7 @@ def _pagerank_oracle_sql(num_iters: int = 10, damping: float = 0.85,
     # of exact integer units, bit-identical in any engine.
     return (f"{body}\n"
             f"SELECT id AS vec_id, CAST(r AS DOUBLE) / {float(scale)!r} "
-            f"AS pagerank FROM r{num_iters} ORDER BY vec_id")
+            "AS pagerank FROM r10 ORDER BY vec_id")
 
 
 @register("graph_pagerank", _pagerank_oracle_sql())
@@ -1731,7 +1721,7 @@ def _graph_pr(spark, sf_dir):
     # localCheckpoint cuts (r13 A/B: 4.7 s reliable → 3.3 s local at
     # sf0.1, bit-identical; cut_every=5 measured 6.5 s — the 3×
     # re-reference compounds past ReuseExchange, keep the cadence at 2).
-    return (pagerank(edges, nodes, num_iters=10, damping=0.85)
+    return (pagerank(edges, nodes, num_iters=10)
             .select(F.col("id").alias("vec_id"), "pagerank")
             .orderBy("vec_id"))
 
@@ -1757,14 +1747,12 @@ def _graph_ppr(spark, sf_dir):
     nodes = emb.select(F.col("vec_id").alias("id"))
     seeds = nodes.filter(F.col("id") % 50 == 0)
     # same localCheckpoint-cut rationale as graph_pagerank (r13 A/B)
-    return (pagerank(edges, nodes, num_iters=10, damping=0.85,
-                     teleport=seeds)
+    return (pagerank(edges, nodes, num_iters=10, teleport=seeds)
             .select(F.col("id").alias("vec_id"), "pagerank")
             .orderBy("vec_id"))
 
 
-def _seed_distance_oracle_sql(max_hops: int = 6,
-                              seed_pred: str = "id % 10 = 0") -> str:
+def _seed_distance_oracle_sql() -> str:
     """Unrolled level-synchronous BFS twin of
     operators/graph.seed_distances — one MATERIALIZED CTE per hop
     (min over the previous table unioned with its one-hop extension);
@@ -1774,8 +1762,8 @@ def _seed_distance_oracle_sql(max_hops: int = 6,
            " UNION ALL SELECT id_b AS src, id_a AS dst FROM pairs),",
            "nodes AS MATERIALIZED (SELECT vec_id AS id FROM embeddings),",
            f"l0 AS MATERIALIZED (SELECT id, CAST(0 AS INT) AS hops "
-           f"FROM nodes WHERE {seed_pred}),"]
-    for h in range(1, max_hops + 1):
+           "FROM nodes WHERE id % 10 = 0),"]
+    for h in range(1, 7):
         cte.append(f"""l{h} AS MATERIALIZED (
   SELECT id, min(hops) AS hops FROM (
     SELECT id, hops FROM l{h - 1}
@@ -1785,7 +1773,7 @@ def _seed_distance_oracle_sql(max_hops: int = 6,
   GROUP BY id),""")
     body = "\n".join(cte).rstrip(",\n").rstrip(",")
     return (f"{body}\n"
-            f"SELECT id AS vec_id, hops FROM l{max_hops} ORDER BY vec_id")
+            "SELECT id AS vec_id, hops FROM l6 ORDER BY vec_id")
 
 
 @register("graph_seed_distance", _seed_distance_oracle_sql())
@@ -1830,8 +1818,7 @@ ORDER BY c2 DESC, id LIMIT 20
 """)
 def _sim3(spark, sf_dir):
     from .operators.similarity import ivf_topk
-    return ivf_topk(_t(spark, sf_dir, "embeddings"), probe_id=0, k=20,
-                    n_centroids=16)
+    return ivf_topk(_t(spark, sf_dir, "embeddings"), probe_id=0, k=20)
 
 
 @register("sim_mmr_diversify", f"""
@@ -1939,7 +1926,7 @@ def _sim3p(spark, sf_dir):
     tag = _sf_tag(sf_dir, "embeddings")
     path = _cached_parquet(
         f"/tmp/spark_graft_ivfpart_v1_{tag}",
-        lambda p: write_ivf_partitioned(emb, p, n_centroids=16))
+        lambda p: write_ivf_partitioned(emb, p))
     memo_key = (spark.sparkContext.applicationId, path)
     model = _QTOPK_MEMO.get(memo_key)
     if model is None:
@@ -1948,7 +1935,7 @@ def _sim3p(spark, sf_dir):
         _QTOPK_MEMO[memo_key] = model
     probe_vec = model[0]
     return ivf_topk_partitioned(spark, path, probe_vec, model, k=20,
-                                nprobe=1, exclude_id=0)
+                                exclude_id=0)
 
 
 @register("sim_ivf_incremental", f"""
@@ -1972,8 +1959,7 @@ def _sim3i(spark, sf_dir):
     # deterministic, oracle-checkable part.
     from .operators.similarity import ivf_incremental_assign
     emb = _t(spark, sf_dir, "embeddings")
-    return ivf_incremental_assign(emb.filter(F.col("vec_id") >= 450), emb,
-                                  n_centroids=16)
+    return ivf_incremental_assign(emb.filter(F.col("vec_id") >= 450), emb)
 
 
 @register("sim_pq_topk", f"""
@@ -2136,9 +2122,8 @@ def _sim_ivfpq(spark, sf_dir):
     tag = _sf_tag(sf_dir, "embeddings")
     path = _cached_parquet(
         f"/tmp/spark_graft_ivfpq_v1_{tag}",
-        lambda p: write_ivfpq_codes(emb, p, cb, n_centroids=16))
+        lambda p: write_ivfpq_codes(emb, p, cb))
     return ivfpq_topk_at_rest(spark, path, model[0], model, cb, emb,
-                              k=10, nprobe=4, rescore_factor=5,
                               exclude_id=0)
 
 
@@ -2278,17 +2263,17 @@ def _sim_ivfpq_recall(spark, sf_dir):
     tag = _sf_tag(sf_dir, "embeddings")
     path = _cached_parquet(
         f"/tmp/spark_graft_ivfpq_v1_{tag}",
-        lambda p: write_ivfpq_codes(emb, p, cb, n_centroids=16))
+        lambda p: write_ivfpq_codes(emb, p, cb))
     return ivfpq_recall(spark, path, model, cb, emb,
                         n_probes=_IVFPQ_NP, k=_IVFPQ_K,
                         nprobe=_IVFPQ_NPROBE, rescore_factor=_IVFPQ_RF)
 
 
-def _srp_oracle_sql(num_planes: int = 6, num_tables: int = 2) -> str:
-    bks = _srp_bucket_exprs(num_planes, EMB_DIM, num_tables)
+def _srp_oracle_sql() -> str:
+    bks = _srp_bucket_exprs(6, EMB_DIM, 2)
     sig_cols = ", ".join(f"{b} AS b{t}" for t, b in enumerate(bks))
-    any_match = " OR ".join(f"s.b{t} = p.pb{t}" for t in range(num_tables))
-    probe_cols = ", ".join(f"b{t} AS pb{t}" for t in range(num_tables))
+    any_match = " OR ".join(f"s.b{t} = p.pb{t}" for t in range(2))
+    probe_cols = ", ".join(f"b{t} AS pb{t}" for t in range(2))
     return f"""
 WITH e AS (SELECT vec_id AS id, embedding::DOUBLE[] AS v FROM embeddings),
 sigs AS (SELECT id, v, {sig_cols} FROM e),
@@ -2687,7 +2672,7 @@ def _sess1(spark, sf_dir):
     # Exchange+Sort; the rollup reuses the user clustering. The batch
     # twin of stream_session_stats (same 30-min gap).
     from .operators.sessions import session_stats
-    return session_stats(_t(spark, sf_dir, "events"), gap_s=1800)
+    return session_stats(_t(spark, sf_dir, "events"))
 
 
 @register("agg_rollup_events", """
@@ -3193,19 +3178,14 @@ def _mm_phash(spark, sf_dir):
     # the ArrowEvalPython hash, so unpinned the payload hashing runs
     # twice. r13 A/B at sf0.1: 1.85 s -> 1.25 s.
     return phash_near_pairs(perceptual_hash(both)
-                            .localCheckpoint(eager=False), max_hamming=7)
+                            .localCheckpoint(eager=False))
 
 
 def _phash_recall_sql() -> str:
     # Candidate pairs = the band join WITHOUT the hamming verify (each
     # pair once via DISTINCT — the count twin of the Spark side's
     # first-matching-band emission); truth = brute-force hamming over
-    # the signatures. max_hamming derives from the Spark operator's
-    # signature default, the dedup_lsh_recall single-source pattern.
-    import inspect
-    from .operators.multimodal import phash_recall_report
-    mh = inspect.signature(phash_recall_report).parameters[
-        "max_hamming"].default
+    # the signatures, at the Spark operator's hamming bound of 7.
     return f"""{_phash_base_ctes()},
 cand AS (
   SELECT DISTINCT a.media_id AS id_a, b.media_id AS id_b
@@ -3215,7 +3195,7 @@ cand AS (
 ), truth AS (
   SELECT a.media_id AS id_a, b.media_id AS id_b
   FROM sigs a JOIN sigs b ON a.media_id < b.media_id
-  WHERE bit_count(xor(a.phash, b.phash)) <= {mh}
+  WHERE bit_count(xor(a.phash, b.phash)) <= 7
 ), found AS (
   SELECT t.id_a FROM truth t JOIN cand c USING (id_a, id_b)
 ), rep AS (
@@ -3281,7 +3261,7 @@ def _phash_pair_table(spark, sf_dir) -> DataFrame:
                                  (n / 2).cast("int") + 1, n))
             .cast("binary").alias("content"))
         both = media.select("media_id", "content").unionByName(corrupted)
-        phash_near_pairs(perceptual_hash(both), max_hamming=7) \
+        phash_near_pairs(perceptual_hash(both)) \
             .write.parquet(p)
 
     path = _cached_parquet(
@@ -4829,8 +4809,7 @@ def _sim_hardneg(spark, sf_dir):
     # the ceiling provably excludes rows at sf0.01 — the semantics under
     # test, not a production threshold.)
     from .operators.similarity import hard_negative_mining
-    return hard_negative_mining(_t(spark, sf_dir, "embeddings"),
-                                n_probes=10, k=5, max_sim=0.35)
+    return hard_negative_mining(_t(spark, sf_dir, "embeddings"), max_sim=0.35)
 
 
 # --------------------------------------------------------------------------
@@ -4915,8 +4894,8 @@ def _cur2(spark, sf_dir):
     return scrub_pii(injected)
 
 
-def _gram8_sql(n: int = 8) -> str:
-    return shingles_sql("text", n)
+def _gram8_sql() -> str:
+    return shingles_sql("text", 8)
 
 
 @register("cur_decontaminate", f"""
@@ -4941,7 +4920,7 @@ def _cur3(spark, sf_dir):
     return decontaminate(docs, docs.filter(F.col("doc_id") < 5), n=8)
 
 
-def _bloom_oracle_sql(m_bits: int = 1 << 20, k: int = 4) -> str:
+def _bloom_oracle_sql() -> str:
     from .functions.hashes import md5_hash32_sql
     h1 = md5_hash32_sql("gram", 101)
     h2 = md5_hash32_sql("gram", 202)
@@ -4953,17 +4932,17 @@ WITH cgd AS (
   SELECT DISTINCT unnest({_gram8_sql()}) AS gram FROM documents
   WHERE doc_id < 5
 ), bpos AS (
-  SELECT DISTINCT ((h1 + i * (h2 * 2 + 1)) % {m_bits}) AS pos
+  SELECT DISTINCT ((h1 + i * (h2 * 2 + 1)) % {1 << 20}) AS pos
   FROM (SELECT {h1} AS h1, {h2} AS h2 FROM bg),
-       (SELECT unnest(generate_series(0, {k - 1})) AS i)
+       (SELECT unnest(generate_series(0, 3)) AS i)
 ), wt AS (
   SELECT pos // 63 AS widx,
          bit_or(1::BIGINT << CAST(pos % 63 AS INT)) AS word
   FROM bpos GROUP BY 1
 ), cp AS (
-  SELECT id, gram, ((h1 + i * (h2 * 2 + 1)) % {m_bits}) AS pos
+  SELECT id, gram, ((h1 + i * (h2 * 2 + 1)) % {1 << 20}) AS pos
   FROM (SELECT id, gram, {h1} AS h1, {h2} AS h2 FROM cgd),
-       (SELECT unnest(generate_series(0, {k - 1})) AS i)
+       (SELECT unnest(generate_series(0, 3)) AS i)
 ), hits AS (
   SELECT cp.id, cp.gram,
     CASE WHEN w.word IS NOT NULL
@@ -5031,8 +5010,7 @@ FROM c
 """)
 def _cur5(spark, sf_dir):
     from .operators.curation import pack_sequences
-    return pack_sequences(_t(spark, sf_dir, "documents"), token_budget=512,
-                          shard_col="lang")
+    return pack_sequences(_t(spark, sf_dir, "documents"), token_budget=512)
 
 
 @register("cur_corpus_mix", """
@@ -5342,7 +5320,7 @@ def _text_kw_r(spark, sf_dir):
     path = _cached_parquet(
         f"/tmp/spark_graft_postings_v3_{_sf_tag(sf_dir, 'documents')}",
         lambda p: _build_postings(docs, p))
-    return keywords_from_index(spark, path, k=3)
+    return keywords_from_index(spark, path)
 
 
 REGISTRY["text_keywords_at_rest"] = (REGISTRY["text_keywords_at_rest"][0],
@@ -5386,7 +5364,7 @@ def _ret_tfidf(spark, sf_dir):
     # stats column at rest.
     from .operators.retrieval import tfidf_cosine_topk
     return tfidf_cosine_topk(_t(spark, sf_dir, "documents"),
-                             list(BM25_QUERY_TERMS), k=10)
+                             list(BM25_QUERY_TERMS))
 
 
 @register("ret_bm25_at_rest", None)  # oracle attached below (same as live)
@@ -5402,7 +5380,7 @@ def _ret2r(spark, sf_dir):
     path = _cached_parquet(
         f"/tmp/spark_graft_postings_v3_{_sf_tag(sf_dir, 'documents')}",
         lambda p: _build_postings(docs, p))
-    return bm25_topk_from_index(spark, path, list(BM25_QUERY_TERMS), k=10)
+    return bm25_topk_from_index(spark, path, list(BM25_QUERY_TERMS))
 
 
 def _build_postings(docs, tmp):
@@ -5432,8 +5410,7 @@ def _ret_tfidf_r(spark, sf_dir):
     path = _cached_parquet(
         f"/tmp/spark_graft_postings_v3_{_sf_tag(sf_dir, 'documents')}",
         lambda p: _build_postings(docs, p))
-    return tfidf_cosine_from_index(spark, path, list(BM25_QUERY_TERMS),
-                                   k=10)
+    return tfidf_cosine_from_index(spark, path, list(BM25_QUERY_TERMS))
 
 
 REGISTRY["ret_tfidf_at_rest"] = (REGISTRY["ret_tfidf_at_rest"][0],
@@ -5466,7 +5443,7 @@ def _ret3(spark, sf_dir):
     from .operators.retrieval import hybrid_rrf_topk
     return hybrid_rrf_topk(_t(spark, sf_dir, "documents"),
                            _t(spark, sf_dir, "embeddings"),
-                           list(BM25_QUERY_TERMS), probe_id=0, k=10)
+                           list(BM25_QUERY_TERMS), probe_id=0)
 
 
 # The hybrid oracle embeds the two candidate-list oracles verbatim so the
@@ -5486,9 +5463,10 @@ REGISTRY["ret_hybrid_rrf"] = (
 _DUPSPAN_K = 8
 
 
-def _dupspan_oracle_sql(k: int = _DUPSPAN_K, min_occ: int = 2) -> str:
+def _dupspan_oracle_sql() -> str:
     from .functions.hashes import md5_hash64_sql
-    gram = " || ' ' || ".join(f"w[i+{j}]" if j else "w[i]" for j in range(k))
+    gram = " || ' ' || ".join(f"w[i+{j}]" if j else "w[i]"
+                              for j in range(_DUPSPAN_K))
     gh = md5_hash64_sql(f"({gram})")
     return f"""
 WITH toks AS (
@@ -5497,17 +5475,17 @@ WITH toks AS (
   FROM documents
 ),
 pos0 AS (
-  SELECT doc_id, unnest(generate_series(1, len(w) - {k - 1})) AS i, w
-  FROM toks WHERE len(w) >= {k}
+  SELECT doc_id, unnest(generate_series(1, len(w) - {_DUPSPAN_K - 1})) AS i, w
+  FROM toks WHERE len(w) >= {_DUPSPAN_K}
 ),
 g AS (SELECT doc_id, i - 1 AS pos, {gh} AS gh FROM pos0),
-dups AS (SELECT gh FROM g GROUP BY gh HAVING count(*) >= {min_occ}),
+dups AS (SELECT gh FROM g GROUP BY gh HAVING count(*) >= 2),
 dpos AS (SELECT g.doc_id, g.pos FROM g JOIN dups USING (gh)),
 marked AS (
   SELECT doc_id, pos,
-    CASE WHEN max(pos + {k}) OVER (PARTITION BY doc_id ORDER BY pos
+    CASE WHEN max(pos + {_DUPSPAN_K}) OVER (PARTITION BY doc_id ORDER BY pos
            ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) IS NULL
-      OR pos > max(pos + {k}) OVER (PARTITION BY doc_id ORDER BY pos
+      OR pos > max(pos + {_DUPSPAN_K}) OVER (PARTITION BY doc_id ORDER BY pos
            ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING)
     THEN 1 ELSE 0 END AS is_new
   FROM dpos),
@@ -5515,7 +5493,7 @@ isl AS (
   SELECT doc_id, pos, sum(is_new) OVER (PARTITION BY doc_id ORDER BY pos
            ROWS UNBOUNDED PRECEDING) AS island
   FROM marked),
-cov AS (SELECT doc_id, island, max(pos + {k}) - min(pos) AS covered
+cov AS (SELECT doc_id, island, max(pos + {_DUPSPAN_K}) - min(pos) AS covered
         FROM isl GROUP BY 1, 2),
 perdoc AS (
   SELECT doc_id, CAST(count(*) AS BIGINT) AS n_dup_spans,
@@ -5530,10 +5508,10 @@ FROM toks t LEFT JOIN perdoc p USING (doc_id)
 """
 
 
-def _dupspan_removal_oracle_sql(k: int = _DUPSPAN_K,
-                                min_occ: int = 2) -> str:
+def _dupspan_removal_oracle_sql() -> str:
     from .functions.hashes import md5_hash64_sql
-    gram = " || ' ' || ".join(f"w[i+{j}]" if j else "w[i]" for j in range(k))
+    gram = " || ' ' || ".join(f"w[i+{j}]" if j else "w[i]"
+                              for j in range(_DUPSPAN_K))
     gh = md5_hash64_sql(f"({gram})")
     return f"""
 WITH toks AS (
@@ -5542,14 +5520,14 @@ WITH toks AS (
   FROM documents
 ),
 pos0 AS (
-  SELECT doc_id, unnest(generate_series(1, len(w) - {k - 1})) AS i, w
-  FROM toks WHERE len(w) >= {k}
+  SELECT doc_id, unnest(generate_series(1, len(w) - {_DUPSPAN_K - 1})) AS i, w
+  FROM toks WHERE len(w) >= {_DUPSPAN_K}
 ),
 g AS (SELECT doc_id, i - 1 AS pos, {gh} AS gh FROM pos0),
-dups AS (SELECT gh FROM g GROUP BY gh HAVING count(*) >= {min_occ}),
+dups AS (SELECT gh FROM g GROUP BY gh HAVING count(*) >= 2),
 dpos AS (SELECT g.doc_id, g.pos FROM g JOIN dups USING (gh)),
 covered AS (
-  SELECT DISTINCT doc_id, unnest(generate_series(pos, pos + {k - 1}))
+  SELECT DISTINCT doc_id, unnest(generate_series(pos, pos + {_DUPSPAN_K - 1}))
            AS tpos
   FROM dpos),
 tk AS (
@@ -5810,8 +5788,7 @@ def _cur_ppl(spark, sf_dir):
     # exact-percentile broadcast over rounded ppl (rounded on BOTH
     # engines so interpolation noise can't flip a boundary doc).
     from .operators.curation import perplexity_filter
-    return perplexity_filter(_t(spark, sf_dir, "documents"),
-                             low_q=0.05, high_q=0.9)
+    return perplexity_filter(_t(spark, sf_dir, "documents"))
 
 
 # Real BPE encoder (operators/bpe.py) on a PINNED merge table — the
@@ -5929,7 +5906,7 @@ def _llm_bpe_pack(spark, sf_dir):
          .join(counts, "doc_id")
          .select("doc_id", "shard",
                  F.col("n_bpe_tokens").alias("n_tokens")))
-    return pack_by_counts(j, token_budget=512)
+    return pack_by_counts(j)
 
 
 # chain the BPE-replay oracle in after both are defined
@@ -6486,7 +6463,7 @@ def _ts_resample(spark, sf_dir):
     from .operators.timeseries import resample_gapfill, with_rolling_mean
     series = resample_gapfill(_t(spark, sf_dir, "events"))
     return with_rolling_mean(series, "event_type", "bucket_start",
-                             "value_sum", window=3)
+                             "value_sum")
 
 
 @register("profile_orders", """
@@ -6850,8 +6827,7 @@ def _evt_churn(spark, sf_dir):
     # leaking second snapshot cannot exist.
     from .operators.labeling import churn_labels
     return churn_labels(_t(spark, sf_dir, "events"),
-                        "2024-01-20 00:00:00",
-                        horizon_days=7, feature_days=14)
+                        "2024-01-20 00:00:00")
 
 
 @register("evt_rfm_segments", """
@@ -7389,7 +7365,7 @@ def _fun3(spark, sf_dir):
     # windows per user, corpus-wide path counts, top-20 under a total
     # order so the cut is deterministic.
     from .operators.funnel import top_paths
-    return top_paths(_t(spark, sf_dir, "events"), n=3, k=20)
+    return top_paths(_t(spark, sf_dir, "events"), k=20)
 
 
 _DOCS_COLS_SQL = "SELECT doc_id, text, lang, source FROM documents"
@@ -7712,9 +7688,9 @@ def _llmrel(spark, sf_dir):
     memo_key = (spark.sparkContext.applicationId, "relgrams", sf_dir)
     bg = _QTOPK_MEMO.get(memo_key)
     if bg is None:
-        bg = benchmark_gram_hashes(bench, n=8)
+        bg = benchmark_gram_hashes(bench)
         _QTOPK_MEMO[memo_key] = bg
-    return release_corpus(scrub, None, n=8, n_shards=16, bench_grams=bg)
+    return release_corpus(scrub, None, n_shards=16, bench_grams=bg)
 
 
 def _zorder_terms_sql(col: str, bits: int, n: int, offset: int) -> str:
@@ -7790,8 +7766,7 @@ def _cur_wsample(spark, sf_dir):
     # division of md5-uniforms — deliberately no ln/pow, so selection is
     # bit-identical across engines (see weighted_sample docstring).
     from .operators.curation import weighted_sample
-    return weighted_sample(_t(spark, sf_dir, "documents"), k=100,
-                           weight_col="n_chars") \
+    return weighted_sample(_t(spark, sf_dir, "documents"), k=100) \
         .select("doc_id", "lang", "n_chars", "sample_rank")
 
 
@@ -7860,7 +7835,7 @@ def _agg_cms_hh(spark, sf_dir):
              .agg(F.count("*").alias("n"),
                   F.count_distinct(F.col("user_id")).alias("k")).first())
     return cms_heavy_hitters(ev, "user_id", k=stats["k"], width=256,
-                             depth=4, total=stats["n"])
+                             total=stats["n"])
 
 
 @register("agg_cms_incremental", None)  # oracle attached below
@@ -7886,9 +7861,9 @@ def _agg_cms_inc(spark, sf_dir):
         _clear_orphaned_location(spark, tbl, "overwrite")
         cut = F.lit(FLAGSHIP_CUTOFF).cast("timestamp")
         write_cms_table(ev.filter(F.col("ts") < cut), "user_id", tmp,
-                        width=256, depth=4)
+                        width=256)
         append_cms_batch(ev.filter(F.col("ts") >= cut), "user_id", tmp,
-                         width=256, depth=4)
+                         width=256)
         spark.sql(f"ALTER TABLE {tmp} RENAME TO {tbl}")
     stats = (ev.filter(F.col("user_id").isNotNull())
              .agg(F.count("*").alias("n"),
@@ -8475,7 +8450,7 @@ def _dq_psi(spark, sf_dir):
     return psi_drift(
         _t(spark, sf_dir, "events"), "value",
         F.col("ts") < F.lit("2024-01-15 00:00:00").cast("timestamp"),
-        0.0, 100.0, n_bins=10)
+        0.0, 100.0)
 
 
 def _benford_values_sql() -> str:
@@ -8548,7 +8523,7 @@ def _dq_kanon(spark, sf_dir):
         F.floor(F.col("c_acctbal") / 2000.0).cast("int")
         .alias("acctbal_band"))
     return k_anonymity_audit(
-        cust, ["c_nationkey", "c_mktsegment", "acctbal_band"], k=5)
+        cust, ["c_nationkey", "c_mktsegment", "acctbal_band"])
 
 
 @register("evt_rolling_actives", """
@@ -9208,7 +9183,7 @@ def _dq_ldiv(spark, sf_dir):
         .alias("acctbal_band"),
         "c_mktsegment")
     return l_diversity_audit(cust, ["c_nationkey", "acctbal_band"],
-                             "c_mktsegment", l=3)
+                             "c_mktsegment")
 
 
 @register("src_orc_roundtrip", _DOCS_COLS_SQL)
@@ -9293,7 +9268,7 @@ def _kmv_setops(spark, sf_dir):
     ev = _t(spark, sf_dir, "events")
     a = ev.filter(F.col("event_type") == "click")
     b = ev.filter(F.col("event_type") == "view")
-    return kmv_set_ops(a, b, "user_id", k=64)
+    return kmv_set_ops(a, b, "user_id")
 
 
 @register("graph_label_propagation", """
@@ -9839,7 +9814,7 @@ def _dq_bounded(spark, sf_dir):
     # aggregates; the exchange carries (group, user) pairs, not rows.
     from .operators.quality_audit import bounded_contribution_counts
     return bounded_contribution_counts(_t(spark, sf_dir, "events"),
-                                       "event_type", cap=5)
+                                       "event_type")
 
 
 @register("text_term_burstiness", """
@@ -9900,8 +9875,7 @@ def _dq_dp(spark, sf_dir):
     # source, not the transform). u = (h32+0.5)/2^32 can never sit on
     # the 0.5 sign boundary or reach ln(0).
     from .operators.quality_audit import dp_laplace_release
-    return dp_laplace_release(_t(spark, sf_dir, "events"),
-                              cap=5, epsilon=1.0)
+    return dp_laplace_release(_t(spark, sf_dir, "events"), epsilon=1.0)
 
 
 @register("text_feature_hashing", """
@@ -10361,7 +10335,7 @@ def _sim_cov(spark, sf_dir):
     # the oracle hash is reproducible), then a 1-row literal explode to
     # (dim_i, dim_j) grain.
     from .operators.pca import embedding_covariance
-    return embedding_covariance(_t(spark, sf_dir, "embeddings"), dims=8)
+    return embedding_covariance(_t(spark, sf_dir, "embeddings"))
 
 
 @register("stream_moment_maintenance", None)  # oracle attached below
@@ -10471,10 +10445,10 @@ REGISTRY["dedup_survivors_by_quality"] = (
     _survivors_by_quality_oracle())
 
 
-def _matryoshka_sql(dims=(8, 16, 32), n_probes=10, k=10) -> str:
+def _matryoshka_sql() -> str:
     ts = ",\n".join(
         f"t{d} AS (SELECT id, list_slice(v, 1, {d}) AS tv FROM e)"
-        for d in dims)
+        for d in (8, 16, 32))
     aps = ",\n".join(f"""
 ap{d} AS (
   SELECT pid, id FROM (
@@ -10482,14 +10456,14 @@ ap{d} AS (
            row_number() OVER (PARTITION BY p.id
                ORDER BY {_cos_sql('x.tv', 'p.tv')} DESC, x.id) AS rn
     FROM t{d} x CROSS JOIN t{d} p
-    WHERE x.id >= {n_probes} AND p.id < {n_probes}) s
-  WHERE rn <= {k})""" for d in dims)
+    WHERE x.id >= 10 AND p.id < 10) s
+  WHERE rn <= 10)""" for d in (8, 16, 32))
     branches = "\nUNION ALL\n".join(f"""
 SELECT CAST({d} AS INT) AS dims_kept,
        CAST(count(a.id) AS DOUBLE) / CAST(count(*) AS DOUBLE)
          AS mean_recall
 FROM ex LEFT JOIN ap{d} a ON ex.pid = a.pid AND ex.id = a.id"""
-                                    for d in dims)
+                                    for d in (8, 16, 32))
     return f"""
 WITH e AS (SELECT vec_id AS id, embedding::DOUBLE[] AS v FROM embeddings),
 ex AS (
@@ -10498,8 +10472,8 @@ ex AS (
            row_number() OVER (PARTITION BY p.id
                ORDER BY {_cos_sql('x.v', 'p.v')} DESC, x.id) AS rn
     FROM e x CROSS JOIN e p
-    WHERE x.id >= {n_probes} AND p.id < {n_probes}) s
-  WHERE rn <= {k}),
+    WHERE x.id >= 10 AND p.id < 10) s
+  WHERE rn <= 10),
 {ts},
 {aps}
 {branches}
@@ -10736,21 +10710,12 @@ def _lsh_recall_sql() -> str:
     # verified-pairs oracle could leave implicit but a candidate COUNT
     # cannot); truth is the deliberately brute-force AllPairs twin.
     # Membership on both sides is the identical integer predicate
-    # isz*den >= num*union, so found ⊆ truth and every published ratio
-    # is one division of exact BIGINTs. Band count, bucket cap, and
-    # num/den are all DERIVED from the Spark operator's own constants /
-    # signature defaults (_LSH_BANDS above; lsh_recall_report's
-    # threshold and max_bucket) — the registry call below passes no
-    # overrides, so a default change re-generates this SQL in lockstep
-    # instead of silently desynchronizing the twins.
-    import inspect
-    from fractions import Fraction
+    # isz*5 >= 3*union (threshold 0.6 = 3/5), so found ⊆ truth and
+    # every published ratio is one division of exact BIGINTs. The band
+    # count is DERIVED from the Spark operator's own constant
+    # (_LSH_BANDS above); the threshold and the 1000-row bucket cap are
+    # lsh_recall_report's.
     from .functions.text import shingles_sql
-    from .operators.dedup import lsh_recall_report
-    params = inspect.signature(lsh_recall_report).parameters
-    frac = Fraction(str(params["threshold"].default))
-    num, den = frac.numerator, frac.denominator
-    max_bucket = params["max_bucket"].default
     sh = shingles_sql("text")
     return f"""
 WITH base AS (
@@ -10770,7 +10735,7 @@ WITH base AS (
   FROM sigs
 ), okb AS (
   SELECT band_idx, band_hash FROM banded
-  GROUP BY 1, 2 HAVING count(*) BETWEEN 2 AND {max_bucket}
+  GROUP BY 1, 2 HAVING count(*) BETWEEN 2 AND 1000
 ), cand AS (
   SELECT DISTINCT a.id AS id_a, b.id AS id_b
   FROM banded a
@@ -10789,7 +10754,7 @@ WITH base AS (
 ), truth AS (
   SELECT id_a, id_b
   FROM i JOIN sz sa ON i.id_a = sa.doc_id JOIN sz sb ON i.id_b = sb.doc_id
-  WHERE isz * {den} >= {num} * (sa.s + sb.s - isz)
+  WHERE isz * 5 >= 3 * (sa.s + sb.s - isz)
 ), found AS (
   SELECT t.id_a FROM truth t JOIN cand c USING (id_a, id_b)
 ), m AS (

@@ -24,7 +24,7 @@ CORRUPT_COL = "_corrupt_record"
 
 
 class TooManyErrors(Exception):
-    """Raised when bad rows exceed BOTH allow_errors_num and ratio."""
+    """Raised when bad rows exceed BOTH the row and the ratio limit."""
 
 
 @dataclass
@@ -38,14 +38,12 @@ class ToleranceReport:
 
 
 def read_csv_tolerant(spark: SparkSession, path: str, schema: T.StructType,
-                      allow_errors_num: int = 1,
-                      allow_errors_ratio: float = 0.1,
                       **csv_options) -> tuple[DataFrame, ToleranceReport]:
     """PERMISSIVE CSV read with the reference's tolerance policy.
 
     Returns (clean rows, report). Raises :class:`TooManyErrors` when the
-    bad-row count exceeds ``allow_errors_num`` AND the bad-row fraction
-    exceeds ``allow_errors_ratio`` — the ClickHouse AND-of-limits rule.
+    bad-row count exceeds 1 AND the bad-row fraction exceeds 0.1 — the
+    ClickHouse AND-of-limits rule.
     """
     full = T.StructType(schema.fields + [T.StructField(CORRUPT_COL,
                                                        T.StringType())])
@@ -59,21 +57,16 @@ def read_csv_tolerant(spark: SparkSession, path: str, schema: T.StructType,
     total = df.count()
     bad = df.filter(F.col(CORRUPT_COL).isNotNull()).count()
     report = ToleranceReport(total=total, bad=bad)
-    if bad > allow_errors_num and report.ratio > allow_errors_ratio:
+    if bad > 1 and report.ratio > 0.1:
         df.unpersist()
         raise TooManyErrors(
-            f"{bad}/{total} malformed rows exceed allow_errors_num="
-            f"{allow_errors_num} and allow_errors_ratio={allow_errors_ratio}")
+            f"{bad}/{total} malformed rows exceed both 1 row and 10%")
     return (df.filter(F.col(CORRUPT_COL).isNull()).drop(CORRUPT_COL),
             report)
 
 
-def read_jsonl_tolerant(spark: SparkSession, path: str,
-                        schema: T.StructType,
-                        allow_errors_num: int = 1,
-                        allow_errors_ratio: float = 0.1,
-                        **json_options
-                        ) -> tuple[DataFrame, ToleranceReport]:
+def read_jsonl_tolerant(spark: SparkSession, path: str, schema: T.StructType,
+                        **json_options) -> tuple[DataFrame, ToleranceReport]:
     """PERMISSIVE JSON-lines read under the same AND-of-limits
     tolerance policy as :func:`read_csv_tolerant`. JSONL is the lingua
     franca of LLM corpus interchange (one document object per line), so
@@ -93,10 +86,9 @@ def read_jsonl_tolerant(spark: SparkSession, path: str,
     total = df.count()
     bad = df.filter(F.col(CORRUPT_COL).isNotNull()).count()
     report = ToleranceReport(total=total, bad=bad)
-    if bad > allow_errors_num and report.ratio > allow_errors_ratio:
+    if bad > 1 and report.ratio > 0.1:
         df.unpersist()
         raise TooManyErrors(
-            f"{bad}/{total} malformed rows exceed allow_errors_num="
-            f"{allow_errors_num} and allow_errors_ratio={allow_errors_ratio}")
+            f"{bad}/{total} malformed rows exceed both 1 row and 10%")
     return (df.filter(F.col(CORRUPT_COL).isNull()).drop(CORRUPT_COL),
             report)

@@ -41,12 +41,12 @@ this is the 100 TB training-data ingest gate run as a stream.
 
 from __future__ import annotations
 
-import glob
 import os
-import shutil
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from .replay import recover_generation, swap_generation
 
 
 class DedupStreamMaintainer:
@@ -58,31 +58,12 @@ class DedupStreamMaintainer:
         clean = m.survivors(spark)     # union of per-epoch survivors
     """
 
-    def __init__(self, root: str, text_col: str = "text",
-                 id_col: str = "doc_id", n: int = 3,
-                 threshold: float = 0.6,
-                 checkpoint_dir: str | None = None) -> None:
+    def __init__(self, root: str, checkpoint_dir: str | None = None) -> None:
         self.root = root
         self.index_path = os.path.join(root, "index")
         self.labels_path = os.path.join(root, "labels")
         self.survivors_path = os.path.join(root, "survivors")
-        self.text_col = text_col
-        self.id_col = id_col
-        self.n = n
-        self.threshold = threshold
         self.checkpoint_dir = checkpoint_dir
-
-    # -- crash recovery (a stranded .old generation renames back) ---------
-
-    def _recover_stranded(self) -> None:
-        if not os.path.isdir(self.labels_path):
-            stranded = sorted(glob.glob(f"{self.labels_path}.old*"),
-                              key=lambda p: int(p.rsplit(".old", 1)[1]))
-            if stranded:
-                os.rename(stranded[-1], self.labels_path)
-        for stale in glob.glob(f"{self.labels_path}.next*") + \
-                glob.glob(f"{self.labels_path}.old*"):
-            shutil.rmtree(stale, ignore_errors=True)
 
     # -- the handler -------------------------------------------------------
 
@@ -97,7 +78,7 @@ class DedupStreamMaintainer:
         # replayed fully-committed epoch short-circuits before paying
         # the isEmpty action — the at-least-once replay path becomes
         # job-free on the driver.
-        self._recover_stranded()
+        recover_generation(self.labels_path, ".next")
         marker = os.path.join(self.labels_path, "_epoch")
         if os.path.isfile(marker) and int(open(marker).read()) == epoch_id:
             return                       # fully-committed epoch replay
@@ -123,16 +104,13 @@ class DedupStreamMaintainer:
             # micro-batch — recomputing it is microseconds, the job is
             # not (the connected_components small-regime argument).
             pairs = incremental_neardup_pairs(
-                batch_df, spark, self.index_path, self.text_col,
-                self.id_col, self.n, self.threshold)
+                batch_df, spark, self.index_path)
             labels = update_cluster_labels(
                 spark.read.parquet(self.labels_path)
                 .select("doc_id", "cluster_id", "is_survivor"),
                 pairs, checkpoint_dir=self.checkpoint_dir)
         else:
-            pairs = minhash_lsh_pairs(batch_df, self.text_col,
-                                      id_col=self.id_col, n=self.n,
-                                      threshold=self.threshold)
+            pairs = minhash_lsh_pairs(batch_df)
             labels = connected_components(
                 pairs, checkpoint_dir=self.checkpoint_dir)
         # 1. labels beside (reads pre-state while writing; the ONE
@@ -156,15 +134,14 @@ class DedupStreamMaintainer:
         def _write_survivors():
             losers = (spark.read.parquet(tmp)
                       .filter(~F.col("is_survivor"))
-                      .select(F.col("doc_id").alias(self.id_col)))
-            (batch_df.join(F.broadcast(losers), self.id_col, "left_anti")
+                      .select("doc_id"))
+            (batch_df.join(F.broadcast(losers), "doc_id", "left_anti")
              .write.mode("overwrite")
              .parquet(os.path.join(self.survivors_path,
                                    f"epoch={epoch_id}")))
 
         def _append_index():
-            append_minhash_index(batch_df, self.index_path, self.text_col,
-                                 self.id_col, self.n, epoch=epoch_id)
+            append_minhash_index(batch_df, self.index_path, epoch=epoch_id)
 
         with ThreadPoolExecutor(max_workers=2) as pool:
             futs = [pool.submit(_write_survivors),
@@ -172,16 +149,12 @@ class DedupStreamMaintainer:
             for f in futs:
                 f.result()
         # 4. commit: swap labels, marker rides inside the new generation
-        old = f"{self.labels_path}.old{epoch_id}"
-        if os.path.isdir(self.labels_path):
-            os.rename(self.labels_path, old)
-        os.rename(tmp, self.labels_path)
-        shutil.rmtree(old, ignore_errors=True)
+        swap_generation(self.labels_path, tmp, epoch_id)
 
     # -- serve -------------------------------------------------------------
 
     def labels(self, spark) -> DataFrame:
-        self._recover_stranded()
+        recover_generation(self.labels_path, ".next")
         return spark.read.parquet(self.labels_path)
 
     def survivors(self, spark) -> DataFrame:

@@ -17,30 +17,63 @@ observed ``source file -> epoch id`` mapping; :func:`await_stream`
 awaits an availableNow query and fails loudly on timeout instead of
 letting the caller fold partial state (ADVICE r9: ``awaitTermination``
 returns False on timeout and the query keeps running).
+:func:`swap_generation` and :func:`recover_generation` are the
+whole-table generation swap that the non-idempotent maintainers
+(dedup labels, the SCD1 snapshot) commit an epoch with.
 """
 
 from __future__ import annotations
 
+import glob
 import os
+import shutil
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def await_stream(q, timeout: int = 900) -> None:
-    """Await an availableNow stream and FAIL LOUDLY on timeout.
+def await_stream(q) -> None:
+    """Await an availableNow stream and FAIL LOUDLY after 900 s.
 
     ``awaitTermination(timeout)`` returns False when the clock runs out
     with the query still running; ignoring that return lets the caller
     read PARTIAL maintainer state — a nondeterministic wrong answer.
     An exception is retryable; a silent half-fold is not."""
-    if not q.awaitTermination(timeout):
+    if not q.awaitTermination(900):
         try:
             q.stop()
         finally:
             raise RuntimeError(
                 f"stream {q.name or q.id} did not terminate within "
-                f"{timeout}s — refusing to read partial state")
+                "900s — refusing to read partial state")
+
+
+def swap_generation(path: str, tmp: str, epoch_id: int) -> None:
+    """Commit the generation written beside ``path`` at ``tmp``: two
+    renames (``path`` -> ``path.old{epoch_id}``, ``tmp`` -> ``path``),
+    then drop the superseded generation. A crash between the renames
+    strands the table in ``.old{epoch_id}``; :func:`recover_generation`
+    restores it."""
+    old = f"{path}.old{epoch_id}"
+    if os.path.isdir(path):
+        os.rename(path, old)
+    os.rename(tmp, path)
+    shutil.rmtree(old, ignore_errors=True)
+
+
+def recover_generation(path: str, scratch: str) -> None:
+    """Undo a crash inside :func:`swap_generation`. With ``path``
+    absent, the newest stranded ``.old*`` generation renames back —
+    without that the next trigger rebuilds from scratch and silently
+    drops every applied epoch. Then uncommitted ``path{scratch}*``
+    generations and superseded ``.old*`` ones are removed."""
+    if not os.path.isdir(path):
+        stranded = sorted(glob.glob(f"{path}.old*"),
+                          key=lambda p: int(p.rsplit(".old", 1)[1]))
+        if stranded:
+            os.rename(stranded[-1], path)
+    for stale in glob.glob(f"{path}{scratch}*") + glob.glob(f"{path}.old*"):
+        shutil.rmtree(stale, ignore_errors=True)
 
 
 class EpochRecorder:

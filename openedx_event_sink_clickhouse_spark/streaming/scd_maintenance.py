@@ -29,6 +29,8 @@ import shutil
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .replay import recover_generation, swap_generation
+
 
 class Scd2BucketedMaintainer:
     """``foreachBatch`` handler: folds each arriving log micro-batch into
@@ -192,34 +194,13 @@ class Scd1SnapshotMaintainer:
     same fold, per-bucket IO."""
 
     def __init__(self, path: str, key_col: str, seq_cols: list[str],
-                 update_cols: list[str], op_col: str = "op",
+                 update_cols: list[str],
                  seed: DataFrame | None = None) -> None:
         self.path = path
         self.key_col = key_col
         self.seq_cols = seq_cols
         self.update_cols = update_cols
-        self.op_col = op_col
         self._seed = seed
-
-    def _recover_stranded(self) -> None:
-        # Crash-atomicity: the swap
-        # below is two renames (path -> .old{e}, .gen{e} -> path). A
-        # crash between them leaves the whole snapshot stranded in
-        # .old{e} with path absent — without recovery the next trigger
-        # rebuilds from seed + one batch, silently dropping every
-        # previously applied change. Restore the newest stranded
-        # generation; drop uncommitted .gen* scratch and superseded
-        # .old* (path present).
-        import glob as _glob
-        if not os.path.isdir(self.path):
-            stranded = sorted(
-                _glob.glob(f"{self.path}.old*"),
-                key=lambda p: int(p.rsplit(".old", 1)[1]))
-            if stranded:
-                os.rename(stranded[-1], self.path)
-        for stale in _glob.glob(f"{self.path}.gen*") + \
-                _glob.glob(f"{self.path}.old*"):
-            shutil.rmtree(stale, ignore_errors=True)
 
     def _state(self, spark) -> DataFrame | None:
         if os.path.isdir(self.path):
@@ -234,15 +215,15 @@ class Scd1SnapshotMaintainer:
             # empty-snapshot materialization that would suppress the
             # seed path on the first real batch.
             return
-        self._recover_stranded()
+        recover_generation(self.path, ".gen")
         spark = batch.sparkSession
-        cols = [self.key_col, self.op_col, *self.seq_cols,
+        cols = [self.key_col, "op", *self.seq_cols,
                 *self.update_cols]
         state = self._state(spark)
         if state is None and self._seed is not None:
             # seed rows: op='U' at a sequence below any real change
             seed = self._seed.select(
-                F.col(self.key_col), F.lit("U").alias(self.op_col),
+                F.col(self.key_col), F.lit("U").alias("op"),
                 *[F.lit(None).cast(batch.schema[c].dataType).alias(c)
                   for c in self.seq_cols],
                 *[F.col(c) for c in self.update_cols])
@@ -256,11 +237,7 @@ class Scd1SnapshotMaintainer:
                   .filter(F.col("_rk") == 1).drop("_rk"))
         tmp = f"{self.path}.gen{epoch_id}"
         folded.write.mode("overwrite").parquet(tmp)
-        old = f"{self.path}.old{epoch_id}"
-        if os.path.isdir(self.path):
-            os.rename(self.path, old)
-        os.rename(tmp, self.path)
-        shutil.rmtree(old, ignore_errors=True)
+        swap_generation(self.path, tmp, epoch_id)
 
     def snapshot(self, spark, base: DataFrame | None = None) -> DataFrame:
         """Current state: tombstones filtered, one row per live key.
@@ -269,9 +246,9 @@ class Scd1SnapshotMaintainer:
         serve-time left join — the same projection
         ``operators.scd.apply_changelog`` produces (updated keys keep
         their base attributes, inserted keys get NULLs)."""
-        self._recover_stranded()
+        recover_generation(self.path, ".gen")
         live = (spark.read.parquet(self.path)
-                .filter(F.col(self.op_col) != "D")
+                .filter(F.col("op") != "D")
                 .select(self.key_col, *self.update_cols))
         if base is None:
             return live

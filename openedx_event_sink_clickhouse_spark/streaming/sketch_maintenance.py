@@ -304,9 +304,7 @@ class EpochPartitionedAppender:
 
 
 def cms_stream_maintainer(path: str, key_col: str, width: int = 1024,
-                          depth: int = 4,
-                          auto_compact_epochs: int | None = 64
-                          ) -> EpochPartitionedAppender:
+                          depth: int = 4) -> EpochPartitionedAppender:
     """CMS cells kept fresh by a stream: per-trigger cost is one narrow
     batch pass emitting ≤ depth·width cells; serving folds
     ≤ depth·width·epochs rows. Pair with ``heavyhitters.cms_estimate``
@@ -315,13 +313,10 @@ def cms_stream_maintainer(path: str, key_col: str, width: int = 1024,
 
     return EpochPartitionedAppender(
         path, lambda b: cms_sketch(b, key_col, width, depth),
-        ["d", "bucket"], ["c"], auto_compact_epochs=auto_compact_epochs)
+        ["d", "bucket"], ["c"], auto_compact_epochs=64)
 
 
-def hll_stream_maintainer(path: str, key_col: str = "user_id",
-                          ts_col: str = "ts", lg_k: int = 14,
-                          auto_compact_epochs: int | None = 64
-                          ) -> EpochPartitionedAppender:
+def hll_stream_maintainer(path: str) -> EpochPartitionedAppender:
     """HLL day-cells kept fresh by a stream: each trigger writes its
     batch's per-day sketches (``cardinality.daily_sketch_table`` shape);
     the fold UNIONS same-day cells — sketch bytes merge by
@@ -332,17 +327,16 @@ def hll_stream_maintainer(path: str, key_col: str = "user_id",
     from ..operators.cardinality import daily_sketch_table
 
     return EpochPartitionedAppender(
-        path, lambda b: daily_sketch_table(b, key_col, ts_col, lg_k),
+        path, lambda b: daily_sketch_table(b),
         ["day"], ["n_events", "sketch"],
         agg_exprs=[F.sum("n_events").alias("n_events"),
                    F.expr("hll_union_agg(sketch, true)").alias("sketch")],
-        auto_compact_epochs=auto_compact_epochs)
+        auto_compact_epochs=64)
 
 
 def histogram_stream_maintainer(path: str, value_col: str, lo: float,
-                                hi: float, n_bins: int,
-                                auto_compact_epochs: int | None = 64
-                                ) -> EpochPartitionedAppender:
+                                hi: float,
+                                n_bins: int) -> EpochPartitionedAppender:
     """Histogram-sketch cells (the mergeable-quantile summary,
     ``operators/quantiles.py``) kept fresh by a stream: each trigger
     appends its batch's ≤ n_bins + 2 bucket counts; ``fold()`` is the
@@ -353,12 +347,11 @@ def histogram_stream_maintainer(path: str, value_col: str, lo: float,
 
     return EpochPartitionedAppender(
         path, lambda b: histogram_sketch(b, value_col, lo, hi, n_bins),
-        ["bucket"], ["n_rows"], auto_compact_epochs=auto_compact_epochs)
+        ["bucket"], ["n_rows"], auto_compact_epochs=64)
 
 
-def expectations_stream_maintainer(path: str, expectations,
-                                   auto_compact_epochs: int | None = 64
-                                   ) -> EpochPartitionedAppender:
+def expectations_stream_maintainer(path: str,
+                                   expectations) -> EpochPartitionedAppender:
     """Data-contract counters kept fresh by a stream: each trigger
     appends its batch's per-expectation (violations, rows) counts —
     ``operators/quality_audit.expectation_suite`` run per micro-batch —
@@ -375,7 +368,7 @@ def expectations_stream_maintainer(path: str, expectations,
 
     return EpochPartitionedAppender(
         path, partials, ["expectation"], ["n_violations", "n_rows"],
-        auto_compact_epochs=auto_compact_epochs)
+        auto_compact_epochs=64)
 
 
 class SeasonalProfileMaintainer:
@@ -401,14 +394,13 @@ class SeasonalProfileMaintainer:
     expressions as the batch operator — so the streaming profile shares
     the batch query's oracle verbatim."""
 
-    def __init__(self, path: str, key_col: str = "event_type",
-                 ts_col: str = "ts") -> None:
-        self.key_col, self.ts_col = key_col, ts_col
-        bucket = F.date_trunc("hour", F.col(ts_col))
+    def __init__(self, path: str, key_col: str = "event_type") -> None:
+        self.key_col = key_col
+        bucket = F.date_trunc("hour", F.col("ts"))
 
         def count_partials(b: DataFrame) -> DataFrame:
             return (b.groupBy(F.col(key_col).alias("key"),
-                              F.hour(ts_col).alias("hod"))
+                              F.hour("ts").alias("hod"))
                     .agg(F.count("*").cast("long").alias("s")))
 
         def bound_partials(b: DataFrame) -> DataFrame:
@@ -479,10 +471,7 @@ class SeasonalProfileMaintainer:
                          .alias("seasonal_index")))
 
 
-def moments_stream_maintainer(path: str, group_col: str = "event_type",
-                              value_col: str = "value",
-                              auto_compact_epochs: int | None = 64
-                              ) -> EpochPartitionedAppender:
+def moments_stream_maintainer(path: str) -> EpochPartitionedAppender:
     """Per-group exact power sums (n, Σm..Σm⁴ — ``profile.moment_sums``)
     kept fresh by a stream: integer sums are the textbook mergeable
     partial, so the epoch-partition-overwrite replay protocol applies
@@ -494,6 +483,6 @@ def moments_stream_maintainer(path: str, group_col: str = "event_type",
     from ..operators.profile import moment_sums
 
     return EpochPartitionedAppender(
-        path, lambda b: moment_sums(b, group_col, value_col),
-        [group_col], ["n", "s1", "s2", "s3", "s4"],
-        auto_compact_epochs=auto_compact_epochs)
+        path, lambda b: moment_sums(b),
+        ["event_type"], ["n", "s1", "s2", "s3", "s4"],
+        auto_compact_epochs=64)

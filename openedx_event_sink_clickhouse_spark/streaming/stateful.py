@@ -46,10 +46,7 @@ WATERMARK_STATE = T.StructType([
 ])
 
 
-def incremental_dump_stream(events: DataFrame, key_col: str = "user_id",
-                            ts_col: str = "ts",
-                            output_schema: T.StructType = EVENT_SCHEMA,
-                            ) -> DataFrame:
+def incremental_dump_stream(events: DataFrame) -> DataFrame:
     """Streaming incremental-dump gate: keep only rows newer than their
     entity's stored high-water mark, advancing the mark per micro-batch.
 
@@ -59,13 +56,13 @@ def incremental_dump_stream(events: DataFrame, key_col: str = "user_id",
     survives in the state store between micro-batches instead of being
     recomputed from the sink.
     """
-    cols = [f.name for f in output_schema.fields]
+    cols = [f.name for f in EVENT_SCHEMA.fields]
 
     def gate(key, pdfs: Iterator[pd.DataFrame], state) -> Iterator[pd.DataFrame]:
         last = state.get[0] if state.exists else None
         max_seen = last
         for pdf in pdfs:
-            ts = pd.to_datetime(pdf[ts_col])
+            ts = pd.to_datetime(pdf["ts"])
             # strictly-newer-than-watermark filter; the mark is fixed for
             # the whole micro-batch (reference semantics: one watermark
             # read per dump decision, course_published.py:165)
@@ -79,10 +76,10 @@ def incremental_dump_stream(events: DataFrame, key_col: str = "user_id",
         if max_seen is not None:
             state.update((max_seen,))
 
-    return (events.groupBy(key_col)
+    return (events.groupBy("user_id")
             .applyInPandasWithState(
                 gate,
-                outputStructType=output_schema,
+                outputStructType=EVENT_SCHEMA,
                 stateStructType=WATERMARK_STATE,
                 outputMode="append",
                 timeoutConf="NoTimeout"))
@@ -103,13 +100,7 @@ TOUCH_STATE = T.StructType([
 ])
 
 
-def attribution_stream(events: DataFrame,
-                       conversion_type: str = "purchase",
-                       touch_types: tuple[str, ...] = ("click", "view"),
-                       user_col: str = "user_id", ts_col: str = "ts",
-                       type_col: str = "event_type",
-                       id_col: str = "event_id",
-                       value_col: str = "value") -> DataFrame:
+def attribution_stream(events: DataFrame) -> DataFrame:
     """Streaming-native last-touch attribution: the per-user "latest
     touch so far" lives in the state store, so each conversion is
     credited the moment it arrives — no window over history, no replay.
@@ -148,7 +139,7 @@ def attribution_stream(events: DataFrame,
             return
         pdf = (pd.concat(chunks, ignore_index=True)
                if len(chunks) > 1 else chunks[0])
-        pdf = pdf.sort_values([ts_col, id_col])
+        pdf = pdf.sort_values(["ts", "event_id"])
         # Vectorized last-touch carry (guide §4.2 — no per-row Python):
         # mark touch rows, forward-fill their (type, ts) down the sorted
         # frame, seed the leading gap from the carried state. A
@@ -157,31 +148,31 @@ def attribution_stream(events: DataFrame,
         # it in (ts, id) order — the same value the old itertuples loop
         # carried row by row (parity pinned by tests + the shared window
         # oracle).
-        is_touch = pdf[type_col].isin(touch_types)
-        run_ty = pdf[type_col].where(is_touch).ffill()
-        run_ts = pd.to_datetime(pdf[ts_col]).where(is_touch).ffill()
+        is_touch = pdf["event_type"].isin(("click", "view"))
+        run_ty = pdf["event_type"].where(is_touch).ffill()
+        run_ts = pd.to_datetime(pdf["ts"]).where(is_touch).ffill()
         if touched:
             run_ty = run_ty.fillna(t_ty)
             run_ts = run_ts.fillna(pd.Timestamp(t_ts))
-        conv = pdf[type_col] == conversion_type
+        conv = pdf["event_type"] == "purchase"
         if conv.any():
             frame = pd.DataFrame({
-                "event_id": pdf.loc[conv, id_col].to_numpy(),
-                "user_id": pdf.loc[conv, user_col].to_numpy(),
-                "conv_ts": pd.to_datetime(pdf.loc[conv, ts_col]).to_numpy(),
-                "conv_value": pdf.loc[conv, value_col].to_numpy(),
+                "event_id": pdf.loc[conv, "event_id"].to_numpy(),
+                "user_id": pdf.loc[conv, "user_id"].to_numpy(),
+                "conv_ts": pd.to_datetime(pdf.loc[conv, "ts"]).to_numpy(),
+                "conv_value": pdf.loc[conv, "value"].to_numpy(),
                 "touch_type": run_ty[conv].to_numpy(),
                 "touch_ts": run_ts[conv].to_numpy(),
             })
             yield frame
         if is_touch.any():
             last = is_touch[is_touch].index[-1]
-            t_ty, t_ts = pdf.at[last, type_col], pdf.at[last, ts_col]
+            t_ty, t_ts = pdf.at[last, "event_type"], pdf.at[last, "ts"]
             touched = True
         if touched:
             state.update((t_ty, t_ts))
 
-    return (events.groupBy(user_col)
+    return (events.groupBy("user_id")
             .applyInPandasWithState(attribute, ATTRIBUTION_SCHEMA,
                                     TOUCH_STATE, "append",
                                     "NoTimeout"))

@@ -23,12 +23,10 @@ def _maybe_watermark(events: DataFrame, ts_col: str, delay: str) -> DataFrame:
     return events.withWatermark(ts_col, delay) if events.isStreaming else events
 
 
-def tumbling_event_stats(events: DataFrame, ts_col: str = "ts",
-                         width: str = "1 hour",
-                         watermark_delay: str = "1 hour") -> DataFrame:
+def tumbling_event_stats(events: DataFrame) -> DataFrame:
     """Per (tumbling window, event_type): count + value sum."""
-    ev = _maybe_watermark(events, ts_col, watermark_delay)
-    win = F.window(F.col(ts_col), width)
+    ev = _maybe_watermark(events, "ts", "1 hour")
+    win = F.window(F.col("ts"), "1 hour")
     return (ev.groupBy(win.alias("w"), "event_type")
             .agg(F.count("*").alias("n_events"),
                  F.round(F.sum("value"), 6).alias("value_sum"))
@@ -36,44 +34,40 @@ def tumbling_event_stats(events: DataFrame, ts_col: str = "ts",
                     "n_events", "value_sum"))
 
 
-def sliding_event_stats(events: DataFrame, ts_col: str = "ts",
-                        width: str = "1 hour", slide: str = "30 minutes",
-                        watermark_delay: str = "1 hour") -> DataFrame:
+def sliding_event_stats(events: DataFrame) -> DataFrame:
     """Per (sliding window, event_type) event counts — each event lands in
-    width/slide overlapping windows."""
-    ev = _maybe_watermark(events, ts_col, watermark_delay)
-    win = F.window(F.col(ts_col), width, slide)
+    two overlapping 1-hour windows (30-minute slide)."""
+    ev = _maybe_watermark(events, "ts", "1 hour")
+    win = F.window(F.col("ts"), "1 hour", "30 minutes")
     return (ev.groupBy(win.alias("w"), "event_type")
             .agg(F.count("*").alias("n_events"))
             .select(F.col("w.start").alias("window_start"), "event_type",
                     "n_events"))
 
 
-def session_event_stats(events: DataFrame, ts_col: str = "ts",
-                        gap: str = "30 minutes",
-                        watermark_delay: str = "1 hour") -> DataFrame:
-    """Per-user session windows (gap-based): events / value sum / bounds.
+def session_event_stats(events: DataFrame) -> DataFrame:
+    """Per-user session windows (30-minute gap): events / value sum /
+    bounds.
 
     Streaming: ``session_window`` + watermark = Spark's stateful session
     operator. Batch: the same expression compiles to a sort-based
     aggregation — and equals the classic gaps-and-islands SQL, which is
     what the DuckDB oracle uses.
     """
-    ev = _maybe_watermark(events, ts_col, watermark_delay)
-    win = F.session_window(F.col(ts_col), gap)
+    ev = _maybe_watermark(events, "ts", "1 hour")
+    win = F.session_window(F.col("ts"), "30 minutes")
     return (ev.groupBy(win.alias("w"), "user_id")
             .agg(F.count("*").alias("n_events"),
                  F.round(F.sum("value"), 6).alias("value_sum"),
-                 F.min(ts_col).alias("first_event"),
-                 F.max(ts_col).alias("last_event"))
+                 F.min("ts").alias("first_event"),
+                 F.max("ts").alias("last_event"))
             .select("user_id", "first_event", "last_event", "n_events",
                     "value_sum"))
 
 
-def debounce_dedup(events: DataFrame, keys: list[str] | None = None,
-                   ts_col: str = "ts", bucket: str = "minute",
-                   watermark_delay: str = "1 hour") -> DataFrame:
-    """Debounce duplicate events: one row per (keys…, ts bucket).
+def debounce_dedup(events: DataFrame) -> DataFrame:
+    """Debounce duplicate events: one row per (user_id, event_type,
+    minute bucket).
 
     Streaming: ``dropDuplicatesWithinWatermark`` — Spark's bounded-state
     streaming dedup; state for a key is dropped once the watermark passes
@@ -85,11 +79,11 @@ def debounce_dedup(events: DataFrame, keys: list[str] | None = None,
     duplicate group is execution-order-dependent in both engines, so only
     the key set is deterministic and comparable.
     """
-    keys = keys or ["user_id", "event_type"]
-    keyed = events.select(*keys, F.date_trunc(bucket, F.col(ts_col))
+    keyed = events.select("user_id", "event_type",
+                          F.date_trunc("minute", F.col("ts"))
                           .alias("ts_bucket"))
     if keyed.isStreaming:
-        return keyed.withWatermark("ts_bucket", watermark_delay) \
+        return keyed.withWatermark("ts_bucket", "1 hour") \
                     .dropDuplicatesWithinWatermark()
     return keyed.dropDuplicates()
 

@@ -136,7 +136,7 @@ def test_kmv_set_ops_exact_when_sketches_fit(spark):
     b = spark.createDataFrame([(i,) for i in range(10, 50)], ["user_id"])
     from openedx_event_sink_clickhouse_spark.operators.cardinality import (
         kmv_set_ops)
-    r = kmv_set_ops(a, b, "user_id", k=64).collect()[0]
+    r = kmv_set_ops(a, b, "user_id").collect()[0]
     assert (r.n_a_kept, r.n_b_kept) == (30, 40)
     assert r.theta_norm == 1.0
     assert (r.union_est, r.inter_est) == (50.0, 20.0)
@@ -152,7 +152,7 @@ def test_kmv_set_ops_estimates_within_bound_when_full(spark):
                               ["user_id"])
     from openedx_event_sink_clickhouse_spark.operators.cardinality import (
         kmv_set_ops)
-    r = kmv_set_ops(a, b, "user_id", k=64).collect()[0]
+    r = kmv_set_ops(a, b, "user_id").collect()[0]
     assert r.theta_norm < 1.0
     assert abs(r.union_est - 1500) / 1500 < 0.5
     assert abs(r.inter_est - 500) / 500 < 0.5

@@ -345,7 +345,7 @@ def test_perplexity_filter_band_semantics(spark, sf_dir):
     from openedx_event_sink_clickhouse_spark.operators.curation import (
         perplexity_filter)
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    out = perplexity_filter(docs, low_q=0.05, high_q=0.9).collect()
+    out = perplexity_filter(docs).collect()
     assert len(out) == docs.count()
     kept = [r.unigram_ppl for r in out if r.keep == 1]
     dropped = [r.unigram_ppl for r in out if r.keep == 0]
@@ -427,7 +427,7 @@ def test_pack_by_counts_matches_budget_semantics(spark):
          (4, "b", 512)],
         "doc_id long, shard string, n_tokens long")
     out = {r.doc_id: (r.bin_id, r.bin_offset)
-           for r in pack_by_counts(counts, 512).collect()}
+           for r in pack_by_counts(counts).collect()}
     assert out[0] == (0, 0)
     assert out[1] == (0, 300)     # starts at 300, crosses into bin 1
     assert out[2] == (1, 88)      # start 600 -> bin 1 offset 88
@@ -471,7 +471,7 @@ def test_weighted_sample_is_pps_and_deterministic(spark):
     rows = [(i, 10 if i % 2 == 0 else 1) for i in range(2000)]
     rows += [(9000, 0), (9001, -5), (9002, None)]
     df = spark.createDataFrame(rows, "doc_id long, n_chars int")
-    got = weighted_sample(df, k=200, weight_col="n_chars").collect()
+    got = weighted_sample(df, k=200).collect()
     assert len(got) == 200
     assert sorted(r.sample_rank for r in got) == list(range(1, 201))
     ids = {r.doc_id for r in got}
@@ -480,7 +480,7 @@ def test_weighted_sample_is_pps_and_deterministic(spark):
     # E[heavy] ≈ 200·10/11 ≈ 182; uniform would be 100. Wide margin.
     assert heavy > 150
     again = {r.doc_id for r in
-             weighted_sample(df, k=200, weight_col="n_chars").collect()}
+             weighted_sample(df, k=200).collect()}
     assert again == ids
 
 
@@ -510,7 +510,7 @@ def test_weighted_sample_k_exceeding_population(spark):
         weighted_sample)
     df = spark.createDataFrame([(1, 5), (2, 5), (3, 0)],
                                "doc_id long, n_chars int")
-    got = weighted_sample(df, k=10, weight_col="n_chars").collect()
+    got = weighted_sample(df, k=10).collect()
     # only the 2 positive-weight rows exist; ranks stay dense 1..2
     assert sorted(r.doc_id for r in got) == [1, 2]
     assert sorted(r.sample_rank for r in got) == [1, 2]

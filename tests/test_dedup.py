@@ -202,7 +202,7 @@ def test_lsh_recall_report_counts_and_bounds(spark):
     c = " ".join(f"q{i}" for i in range(40))
     docs = spark.createDataFrame(
         [(1, a), (2, b), (3, c)], "doc_id long, text string")
-    row = lsh_recall_report(docs, threshold=0.6).collect()[0]
+    row = lsh_recall_report(docs).collect()[0]
     assert row.n_true_pairs == 1
     assert row.n_found_pairs == 1 and row.n_missed_pairs == 0
     assert row.recall == 1.0
@@ -220,7 +220,7 @@ def test_lsh_recall_report_vacuous_corpus_scores_one(spark):
         [(1, " ".join(f"a{i}" for i in range(20))),
          (2, " ".join(f"b{i}" for i in range(20)))],
         "doc_id long, text string")
-    row = lsh_recall_report(docs, threshold=0.6).collect()[0]
+    row = lsh_recall_report(docs).collect()[0]
     assert row.n_true_pairs == 0 and row.n_found_pairs == 0
     assert row.recall == 1.0
 

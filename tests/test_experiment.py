@@ -140,8 +140,8 @@ def test_conversion_ztest_empty_control_keeps_treatment_rows(spark):
     # only variant-1 units present: rows must still come back, with
     # NULL z/significant (the control row's own shape), never an empty
     # frame that silently hides the treatment stats
-    users = [u for u in range(200)
-             if _variant_map(spark, range(200))[u] == 1][:20]
+    vmap = _variant_map(spark, range(200))
+    users = [u for u in range(200) if vmap[u] == 1][:20]
     ev = spark.createDataFrame(
         [(i, POST, u, 1.0, "purchase") for i, u in enumerate(users)],
         "event_id long, ts timestamp, user_id long, value double, "
@@ -323,7 +323,7 @@ def test_jackknife_matches_closed_form_se(spark):
         eid += 1
     df = _events(spark, rows)
     got = {r.variant: r for r in
-           jackknife_ratio_ci(df, n_buckets=20).collect()}
+           jackknife_ratio_ci(df).collect()}
     vm = _variant_map(spark, list(vals))
     for variant in (0, 1):
         us = [vals[u] for u in vals if vm[u] == variant]

@@ -77,7 +77,7 @@ def test_top_paths_counts_and_order(spark):
         [(i, t, u, e) for i, t, u, e in rows],
         "event_id long, ts timestamp, user_id long, event_type string")
     got = [(r.step1, r.step2, r.step3, r.n_paths)
-           for r in top_paths(ev, n=3, k=10).collect()]
+           for r in top_paths(ev, k=10).collect()]
     assert got == [("a", "b", "a", 2), ("b", "a", "b", 1)]
 
 
@@ -89,7 +89,7 @@ def test_top_paths_never_crosses_users(spark):
         [(1, _ts(1, 1), 1, "a"), (2, _ts(1, 2), 1, "b"),
          (3, _ts(1, 3), 2, "c"), (4, _ts(1, 4), 2, "d")],
         "event_id long, ts timestamp, user_id long, event_type string")
-    assert top_paths(ev, n=3, k=10).count() == 0
+    assert top_paths(ev, k=10).count() == 0
 
 
 def test_last_touch_attribution_picks_latest_preceding_touch(spark):

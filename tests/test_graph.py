@@ -247,16 +247,16 @@ def test_kcore_peels_to_fixpoint(spark):
     edges = [(1, 2), (1, 3), (1, 4), (2, 3), (2, 4), (3, 4),
              (4, 5), (5, 6), (7, 8), (7, 9), (8, 9), (1, 7)]
     df = spark.createDataFrame(edges, "id_a long, id_b long")
-    got = {r.id: r.degree for r in kcore(df, k=3, rounds=8).collect()}
+    got = {r.id: r.degree for r in kcore(df, k=3).collect()}
     assert got == {1: 3, 2: 3, 3: 3, 4: 3}
     # k=2: the triangle survives too (and keeps its 1-7 bridge? no —
     # bridge endpoints have in-subgraph degree >= 2 each: 1 and 7 both
     # survive, so the edge stays and degrees count it)
-    got2 = {r.id: r.degree for r in kcore(df, k=2, rounds=8).collect()}
+    got2 = {r.id: r.degree for r in kcore(df, k=2).collect()}
     assert set(got2) == {1, 2, 3, 4, 7, 8, 9}
     assert got2[7] == 3 and got2[1] == 4
     # k larger than any density: empty
-    assert kcore(df, k=4, rounds=8).count() == 0
+    assert kcore(df, k=4).count() == 0
 
 
 def test_label_propagation_two_cliques_converge(spark):

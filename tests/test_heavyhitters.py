@@ -189,7 +189,7 @@ def test_cms_estimate_one_sided_and_certified(spark):
     assert all(est[k] >= exact[k] for k in exact)
     assert any(est[k] > exact[k] for k in exact)  # collisions real at w=16
     # the certified HH output carries the same guarantee per row
-    out = cms_heavy_hitters(df, "k", k=10, width=16, depth=4).collect()
+    out = cms_heavy_hitters(df, "k", k=10, width=16).collect()
     assert out and all(r.overcount >= 0 and
                        r.est_count == r.exact_count + r.overcount
                        for r in out)

@@ -27,7 +27,7 @@ def test_covariance_operator_matches_numpy(spark, sf_dir):
     m, _ = _np_matrix(spark, sf_dir)
     cov = np.cov(m[:, :8], rowvar=False)
     got = {(r["dim_i"], r["dim_j"]): r["cov"]
-           for r in embedding_covariance(_emb(spark, sf_dir), dims=8)
+           for r in embedding_covariance(_emb(spark, sf_dir))
            .collect()}
     assert len(got) == 36
     for (i, j), c in got.items():

@@ -308,7 +308,7 @@ def test_l_diversity_flags_homogeneous_class(spark):
     rows = [("A", "x")] * 4 + [("B", "x"), ("B", "y"), ("B", "z")]
     df = spark.createDataFrame(rows, ["qi", "sens"])
     out = {r.qi: r for r in
-           l_diversity_audit(df, ["qi"], "sens", l=3).collect()}
+           l_diversity_audit(df, ["qi"], "sens").collect()}
     a, b = out["A"], out["B"]
     assert (a.class_size, a.n_sensitive, a.violates_l) == (4, 1, 1)
     assert a.majority_share == 1.0
@@ -323,7 +323,7 @@ def test_bounded_contribution_caps_hyperactive_user(spark):
     df = spark.createDataFrame(rows, ["event_type", "user_id"])
     from openedx_event_sink_clickhouse_spark.operators.quality_audit import (
         bounded_contribution_counts)
-    r = bounded_contribution_counts(df, "event_type", cap=5).collect()[0]
+    r = bounded_contribution_counts(df, "event_type").collect()[0]
     assert (r.raw_count, r.capped_count) == (103, 8)
     assert (r.n_users, r.n_capped_users) == (4, 1)
     assert abs(r.mass_removed - 95 / 103) < 1e-6
@@ -338,7 +338,7 @@ def test_dp_release_noise_distribution_and_determinism(spark, sf_dir):
     from openedx_event_sink_clickhouse_spark.sources.tables import load_table
     ev = load_table(spark, "events", sf_dir)
     out = {r["event_type"]: r for r in
-           dp_laplace_release(ev, cap=5, epsilon=1.0).collect()}
+           dp_laplace_release(ev, epsilon=1.0).collect()}
     # reproduce one group's noise by hand from the md5 uniform
     import hashlib
     for et, r in out.items():
@@ -350,7 +350,7 @@ def test_dp_release_noise_distribution_and_determinism(spark, sf_dir):
         assert r["sensitivity"] == 5.0 and r["epsilon"] == 1.0
     # deterministic across reruns
     again = {r["event_type"]: r["noisy_count"]
-             for r in dp_laplace_release(ev, cap=5, epsilon=1.0).collect()}
+             for r in dp_laplace_release(ev, epsilon=1.0).collect()}
     assert again == {k: v["noisy_count"] for k, v in out.items()}
 
 
@@ -360,9 +360,9 @@ def test_dp_release_epsilon_scales_noise(spark, sf_dir):
     from openedx_event_sink_clickhouse_spark.sources.tables import load_table
     ev = load_table(spark, "events", sf_dir)
     tight = {r["event_type"]: r for r in
-             dp_laplace_release(ev, cap=5, epsilon=10.0).collect()}
+             dp_laplace_release(ev, epsilon=10.0).collect()}
     loose = {r["event_type"]: r for r in
-             dp_laplace_release(ev, cap=5, epsilon=0.1).collect()}
+             dp_laplace_release(ev, epsilon=0.1).collect()}
     for et in tight:
         noise_tight = abs(tight[et]["noisy_count"] - tight[et]["capped_count"])
         noise_loose = abs(loose[et]["noisy_count"] - loose[et]["capped_count"])

@@ -61,8 +61,7 @@ def test_hybrid_rrf_fuses_both_rankings(spark, sf_dir):
     docs = load_table(spark, "documents", sf_dir)
     emb = load_table(spark, "embeddings", sf_dir)
     terms = ["the", "data", "model"]
-    out = hybrid_rrf_topk(docs, emb, terms, probe_id=0, k=10,
-                          lex_pool=10, vec_pool=20).collect()
+    out = hybrid_rrf_topk(docs, emb, terms, probe_id=0).collect()
     assert len(out) == 10
     scores = [r.rrf_score for r in out]
     assert scores == sorted(scores, reverse=True)
@@ -99,9 +98,9 @@ def test_bm25_from_index_matches_scan_and_prunes(spark, sf_dir, tmp_path):
     from openedx_event_sink_clickhouse_spark.sources.tables import load_table
     docs = load_table(spark, "documents", sf_dir)
     path = str(tmp_path / "postings")
-    write_postings_index(docs, path, n_buckets=64)
+    write_postings_index(docs, path)
     terms = ["the", "data", "model"]
-    got = bm25_topk_from_index(spark, path, terms, k=10)
+    got = bm25_topk_from_index(spark, path, terms)
     want = bm25_topk(docs, terms, k=10)
     assert [tuple(r) for r in got.collect()] == \
         [tuple(r) for r in want.collect()]
@@ -129,7 +128,7 @@ def test_tfidf_cosine_ranks_exact_match_first(spark):
          (3, "data data data other words here")],
         ["doc_id", "text"])
     got = [(r.doc_id, r.tfidf_cosine) for r in
-           tfidf_cosine_topk(docs, ["data", "model"], k=10).collect()]
+           tfidf_cosine_topk(docs, ["data", "model"]).collect()]
     ids = [d for d, _ in got]
     assert ids[0] == 0
     assert 2 not in ids
@@ -151,10 +150,10 @@ def test_tfidf_from_index_matches_scan_and_prunes(spark, sf_dir, tmp_path):
     from openedx_event_sink_clickhouse_spark.sources.tables import load_table
     docs = load_table(spark, "documents", sf_dir)
     path = str(tmp_path / "postings")
-    write_postings_index(docs, path, n_buckets=64)
+    write_postings_index(docs, path)
     terms = ["the", "data", "model"]
-    got = tfidf_cosine_from_index(spark, path, terms, k=10)
-    want = tfidf_cosine_topk(docs, terms, k=10)
+    got = tfidf_cosine_from_index(spark, path, terms)
+    want = tfidf_cosine_topk(docs, terms)
     assert [tuple(r) for r in got.collect()] == \
         [tuple(r) for r in want.collect()]
     plan = got._jdf.queryExecution().executedPlan().toString()

@@ -28,7 +28,7 @@ def test_sessionize_gap_semantics(spark):
         (4, _ts(70), 7, 4.0),     # 20 min gap  -> same session
         (5, _ts(0), 8, 5.0),      # another user: own numbering
     ])
-    out = {r.event_id: r for r in sessionize(df, gap_s=1800).collect()}
+    out = {r.event_id: r for r in sessionize(df).collect()}
     assert [out[i].session_seq for i in (1, 2, 3, 4)] == [1, 1, 2, 2]
     assert [out[i].is_start for i in (1, 2, 3, 4)] == [1, 0, 1, 0]
     assert out[5].session_seq == 1 and out[5].is_start == 1
@@ -42,7 +42,7 @@ def test_sessionize_boundary_is_strict_greater(spark):
         (3, _ts(60, 1), 1, 0.0),      # 1801 s after event 2
     ])
     out = {r.event_id: r.session_seq
-           for r in sessionize(df, gap_s=1800).collect()}
+           for r in sessionize(df).collect()}
     assert out[1] == out[2] == 1 and out[3] == 2
 
 
@@ -53,7 +53,7 @@ def test_session_stats_rollup(spark):
         (3, _ts(50), 7, 4.0),
     ])
     rows = {(r.user_id, r.session_seq): r
-            for r in session_stats(df, gap_s=1800).collect()}
+            for r in session_stats(df).collect()}
     s1 = rows[(7, 1)]
     assert s1.n_events == 2 and s1.duration_s == 600
     assert s1.value_sum == 4.0

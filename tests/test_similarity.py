@@ -165,12 +165,12 @@ def test_kmeans_ivf_recall(spark, sf_dir):
     assert len(cents) == 16 and all(len(c) == 64 for c in cents)
     rec = _recall_at_k(
         emb, probes,
-        lambda p: ivf_topk(emb, p, k=10, n_centroids=16, nprobe=8,
+        lambda p: ivf_topk(emb, p, k=10, nprobe=8,
                            centroids=cents))
     assert rec >= 0.9, rec
     # ...while actually pruning: the nprobe=8 cells hold well under the
     # full corpus (recall at ~half the scan cost).
-    cand = ivf_topk(emb, 0, k=500, n_centroids=16, nprobe=8,
+    cand = ivf_topk(emb, 0, k=500, nprobe=8,
                     centroids=cents).count()
     assert cand < 0.6 * emb.count()
 
@@ -207,7 +207,7 @@ def test_kmeans_sample_fit_deterministic_and_recall_holds(spark, sf_dir):
                              sample_n=3 * n // 4)
     rec = _recall_at_k(
         emb, [0, 7, 123, 400],
-        lambda p: ivf_topk(emb, p, k=10, n_centroids=16, nprobe=10,
+        lambda p: ivf_topk(emb, p, k=10, nprobe=10,
                            centroids=s_rec))
     assert rec >= 0.9, rec
 
@@ -363,12 +363,12 @@ def test_ivf_partitioned_prunes_cells_and_matches_in_memory(
     from pyspark.sql import functions as F
     emb = load_table(spark, "embeddings", sf_dir)
     path = str(tmp_path / "ivf")
-    write_ivf_partitioned(emb, path, n_centroids=16)
+    write_ivf_partitioned(emb, path)
     model = [r.embedding for r in
              emb.filter(F.col("vec_id") < 16).orderBy("vec_id").collect()]
     got = ivf_topk_partitioned(spark, path, model[0], model, k=20,
-                               nprobe=1, exclude_id=0)
-    want = ivf_topk(emb, probe_id=0, k=20, n_centroids=16)
+                               exclude_id=0)
+    want = ivf_topk(emb, probe_id=0, k=20)
     assert [tuple(r) for r in got.collect()] == \
         [tuple(r) for r in want.collect()]
 
@@ -425,7 +425,7 @@ def test_hard_negative_mining_excludes_near_duplicates(spark, sf_dir):
         hard_negative_mining, multi_probe_topk)
     emb = _emb(spark, sf_dir)
     ceiling = 0.35
-    hard = hard_negative_mining(emb, n_probes=10, k=5,
+    hard = hard_negative_mining(emb,
                                 max_sim=ceiling).collect()
     assert len(hard) > 0
     by_probe: dict[int, list] = {}
@@ -593,7 +593,7 @@ def test_knn_graph_ranks_true_neighbors(spark):
     rows = [(i, v) for i, v in enumerate(a)] + \
         [(100 + i, v) for i, v in enumerate(b)]
     emb = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    g = knn_graph(emb, k=3, num_planes=4, num_tables=2, dim=4)
+    g = knn_graph(emb, k=3, num_planes=4, dim=4)
     out = {}
     for r in g.collect():
         out.setdefault(r.vec_id, []).append((r.knn_rank, r.neighbor_id,
@@ -650,11 +650,10 @@ def test_ivfpq_at_rest_prunes_cells_and_recall(spark, sf_dir, tmp_path):
     dim = len(emb.select("embedding").first()[0])
     cb = pq_codebooks_from_first_k(emb, m=8, n_centroids=16, dim=dim)
     path = str(tmp_path / "ivfpq")
-    write_ivfpq_codes(emb, path, cb, n_centroids=16)
+    write_ivfpq_codes(emb, path, cb)
     model = [r.embedding for r in
              emb.filter(F.col("vec_id") < 16).orderBy("vec_id").collect()]
     got = ivfpq_topk_at_rest(spark, path, model[0], model, cb, emb,
-                             k=10, nprobe=4, rescore_factor=5,
                              exclude_id=0)
     rows = got.collect()
     assert len(rows) == 10
@@ -756,7 +755,7 @@ def test_ivfpq_recall_full_probe_full_shortlist_is_one(spark, sf_dir,
     dim = len(emb.select("embedding").first()[0])
     cb = pq_codebooks_from_first_k(emb, m=8, n_centroids=16, dim=dim)
     path = str(tmp_path / "ivfpq")
-    write_ivfpq_codes(emb, path, cb, n_centroids=16)
+    write_ivfpq_codes(emb, path, cb)
     model = [r.embedding for r in
              emb.filter(F.col("vec_id") < 16).orderBy("vec_id").collect()]
     n = emb.count()

@@ -522,12 +522,12 @@ def test_release_corpus_runs_per_batch_via_foreach_batch(spark, sf_dir,
     bench = docs.filter(F.col("doc_id") < 5)
     docs.coalesce(1).write.parquet(str(tmp_path / "docs"))
     batch = sorted(tuple(r) for r in
-                   release_corpus(docs, bench, n=8, n_shards=8).collect())
+                   release_corpus(docs, bench, n_shards=8).collect())
     out: list = []
 
     def handle(bdf, epoch_id):
         out.extend(tuple(r) for r in
-                   release_corpus(bdf, bench, n=8, n_shards=8).collect())
+                   release_corpus(bdf, bench, n_shards=8).collect())
 
     src = (spark.readStream.schema(docs.schema)
            .parquet(str(tmp_path / "docs")))
@@ -691,7 +691,7 @@ def test_seasonal_profile_maintainer_gapfill_arithmetic(spark, tmp_path):
     from openedx_event_sink_clickhouse_spark.streaming.sketch_maintenance import (
         SeasonalProfileMaintainer)
     T = dt.datetime
-    m = SeasonalProfileMaintainer(str(tmp_path / "prof"), "k", "ts")
+    m = SeasonalProfileMaintainer(str(tmp_path / "prof"), "k")
     b0 = spark.createDataFrame(
         [("k", T(2024, 1, 1, 10, 5)), ("k", T(2024, 1, 1, 12, 30)),
          ("k", T(2024, 1, 1, 12, 40))], "k string, ts timestamp")
@@ -715,12 +715,8 @@ def test_seasonal_profile_maintainer_gapfill_arithmetic(spark, tmp_path):
     assert before == after
 
 
-def test_scd1_maintainer_recovers_stranded_generation(spark, tmp_path):
-    # Simulate a crash BETWEEN the two swap renames: state stranded in
-    # .old, path absent. snapshot()/next trigger must restore it, not
-    # silently rebuild from seed.
+def _scd1_maintainer(spark, tmp_path):
     import datetime as dt
-    import os
 
     from openedx_event_sink_clickhouse_spark.streaming.scd_maintenance import (
         Scd1SnapshotMaintainer)
@@ -733,10 +729,45 @@ def test_scd1_maintainer_recovers_stranded_generation(spark, tmp_path):
     b0 = spark.createDataFrame(
         [(1, T(2024, 1, 1), 1, "U", 42.0)],
         "k long, ts timestamp, eid long, op string, bal double")
-    m(b0, 0)
-    os.rename(m.path, m.path + ".old7")  # crash window simulated
-    snap = {r.k: r.bal for r in m.snapshot(spark, base=base).collect()}
-    assert snap == {1: 42.0}  # recovered, not seed-rebuilt
+
+    def read():
+        return {r.k: r.bal for r in m.snapshot(spark, base=base).collect()}
+    # 42.0: recovered, not seed-rebuilt (the seed holds 10.0)
+    return m, b0, m.path, ".gen", read, {1: 42.0}
+
+
+def _dedup_maintainer(spark, tmp_path):
+    from openedx_event_sink_clickhouse_spark.streaming.dedup_maintenance import (
+        DedupStreamMaintainer)
+    m = DedupStreamMaintainer(str(tmp_path / "dedup"))
+    docs = spark.createDataFrame(
+        [(0, "the quick brown fox jumps over the lazy dog"),
+         (1, "the quick brown fox jumps over the lazy dog"),
+         (2, "an entirely different sentence about something else")],
+        "doc_id long, text string")
+
+    def read():
+        return {(r.doc_id, r.cluster_id, r.is_survivor)
+                for r in m.labels(spark).collect()}
+    # doc 2 pairs with no other doc, so it has no label row
+    return m, docs, m.labels_path, ".next", read, {
+        (0, 0, True), (1, 0, False)}
+
+
+@pytest.mark.parametrize("make", [_scd1_maintainer, _dedup_maintainer],
+                         ids=["scd1", "dedup"])
+def test_maintainer_recovers_stranded_generation(spark, tmp_path, make):
+    # Simulate a crash BETWEEN the two swap renames: state stranded in
+    # .old, path absent, beside an uncommitted scratch generation. The
+    # next read must restore the committed state, not rebuild without
+    # it, and drop the debris.
+    m, batch, path, scratch, read, want = make(spark, tmp_path)
+    m(batch, 0)
+    os.rename(path, path + ".old7")  # crash window simulated
+    os.makedirs(path + scratch + "8")
+    assert read() == want
+    assert not os.path.exists(path + ".old7")
+    assert not os.path.exists(path + scratch + "8")
 
 
 def test_scd1_maintainer_empty_batch_is_noop(spark, tmp_path):
@@ -761,7 +792,7 @@ def test_seasonal_profile_maintainer_short_span_no_zero_slots(spark,
     from openedx_event_sink_clickhouse_spark.streaming.sketch_maintenance import (
         SeasonalProfileMaintainer)
     T = dt.datetime
-    m = SeasonalProfileMaintainer(str(tmp_path / "prof"), "k", "ts")
+    m = SeasonalProfileMaintainer(str(tmp_path / "prof"), "k")
     b = spark.createDataFrame(
         [("k", T(2024, 1, 1, 10, 5)), ("k", T(2024, 1, 1, 12, 30))],
         "k string, ts timestamp")

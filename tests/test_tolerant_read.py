@@ -75,5 +75,4 @@ def test_jsonl_tolerant_routes_malformed_lines(spark, tmp_path):
     many = [ "not json at all" ] * 5 + lines[:5]
     (tmp_path / "bad.jsonl").write_text("\n".join(many))
     with pytest.raises(TooManyErrors):
-        read_jsonl_tolerant(spark, str(tmp_path / "bad.jsonl"), schema,
-                            allow_errors_num=1, allow_errors_ratio=0.1)
+        read_jsonl_tolerant(spark, str(tmp_path / "bad.jsonl"), schema)

@@ -83,7 +83,7 @@ def main() -> None:
             # balance matches the base corpus at every size.
             write_ivf_partitioned(
                 spark.read.parquet(os.path.join(d, "emb")), ivf_dir,
-                n_centroids=16, centroids=model)
+                centroids=model)
         emb = spark.read.parquet(os.path.join(d, "emb"))
         codes = spark.read.parquet(os.path.join(d, "codes"))
         if pq_cb is None:
@@ -108,7 +108,7 @@ def main() -> None:
             emb, 0, k=10, rescore_factor=5, codes=codes,
             probe_vec=probe_vec).count())
         ti = best(lambda: ivf_topk_partitioned(
-            spark, ivf_dir, probe_vec, model, k=10, nprobe=1,
+            spark, ivf_dir, probe_vec, model, k=10,
             exclude_id=0).count())
         # File-level pruning win, measured in BYTES: an nprobe=1 search
         # opens only the probed cell directory; everything else is
